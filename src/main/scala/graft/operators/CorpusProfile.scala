@@ -80,66 +80,26 @@ object CorpusProfile {
       // Persisted so sketch READERS ([[overlap]]) can validate their k
       // against it: a larger k would mistake a full k-sized sketch for the
       // exact sub-k arm and mis-estimate badly; a smaller k would truncate.
-      buildK: Int = -1)
-
-  /** The manifest is a TableStore table whose versions hold ONE
-    * driver-written JSON file instead of parquet — the store's staging +
-    * CAS + atomic-swap machinery is file-format agnostic, and keeping
-    * the manifest out of Spark makes every manifest read/write a pure
-    * file op: an admission pays zero extra Spark jobs for its gate, and
-    * serving resolves its pins without a scan job. */
-  private def manifestFile = "manifest.json"
-
-  private def encodeManifest(m: ProfileManifest): String =
-    s"""{"kmv_v":${m.kmv.getOrElse(-1)},"lvl_v":${m.lvl.getOrElse(-1)},""" +
-      s""""cms_v":${m.cms.getOrElse(-1)},"last_batch_id":${m.lastBatchId},""" +
-      s""""build_k":${m.buildK}}"""
-
-  private def decodeManifest(s: String): ProfileManifest = {
-    def field(k: String): Long = {
-      val i = s.indexOf("\"" + k + "\":")
-      require(i >= 0, s"manifest missing $k: $s")
-      val from = i + k.length + 3
-      val end = s.indexWhere(c => c == ',' || c == '}', from)
-      s.substring(from, end).trim.toLong
-    }
-    def opt(k: String): Option[Int] = {
-      val v = field(k); if (v < 0) None else Some(v.toInt)
-    }
-    // build_k is absent from pre-r14 manifests — read as unknown (-1)
-    val bk = if (s.contains("\"build_k\":")) field("build_k").toInt else -1
-    ProfileManifest(opt("kmv_v"), opt("lvl_v"), opt("cms_v"),
-      field("last_batch_id"), bk)
+      buildK: Int = -1) extends IndexTier.Manifest {
+    def fields: Seq[(String, Any)] = Seq("kmv_v" -> kmv.getOrElse(-1),
+      "lvl_v" -> lvl.getOrElse(-1), "cms_v" -> cms.getOrElse(-1),
+      "last_batch_id" -> lastBatchId, "build_k" -> buildK)
   }
 
-  /** The manifest row and the manifest TABLE's version (the CAS anchor a
-    * later [[commitManifest]] must carry). The content is read from the
-    * v-dir of the version just resolved — NOT via `store.path`, which
-    * re-reads `_current`: a manifest commit landing between the two reads
-    * would pair v+1 content with CAS anchor v (safe, but every such
-    * mismatch is a spurious conflict and an orphan member version). */
+  /** The manifest row and the manifest TABLE's version (the CAS anchor of
+    * the commit that follows) — [[IndexTier.readManifest]]. The manifest
+    * is a TableStore table whose versions hold ONE JSON file written by
+    * the committing JVM instead of parquet, so an admission pays zero extra Spark jobs
+    * for its gate, and serving resolves its pins without a scan job. */
   private[graft] def readManifest(
-      spark: SparkSession, store: TableStore, name: String): Option[(ProfileManifest, Int)] =
-    store.currentVersion(manifestTable(name)).map { v =>
-      val f = java.nio.file.Paths.get(store.pathAt(manifestTable(name), v))
-        .resolve(manifestFile)
-      (decodeManifest(new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)), v)
+      store: TableStore, name: String): Option[(ProfileManifest, Int)] =
+    IndexTier.readManifest(store, manifestTable(name), "manifest") { f =>
+      ProfileManifest(f.pin("kmv_v"), f.pin("lvl_v"), f.pin("cms_v"),
+        f.long("last_batch_id"), f.longOr("build_k", -1L).toInt)
     }
 
-  /** The single commit point: swap the 1-row manifest (CAS against the
-    * version the caller read). Everything committed to member tables
-    * before this call is invisible until it succeeds. */
-  private def commitManifest(
-      spark: SparkSession, store: TableStore, name: String,
-      m: ProfileManifest, expected: Option[Int]): Unit =
-    store.commitFile(manifestTable(name), manifestFile,
-      encodeManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      expected)
-
-  private def requireManifest(
-      spark: SparkSession, store: TableStore, name: String): (ProfileManifest, Int) =
-    readManifest(spark, store, name).getOrElse(throw new IllegalStateException(
+  private def requireManifest(store: TableStore, name: String): (ProfileManifest, Int) =
+    readManifest(store, name).getOrElse(throw new IllegalStateException(
       s"profile $name has no manifest — build a tier first"))
 
   // -------------------------------------------------- admission concurrency
@@ -171,65 +131,21 @@ object CorpusProfile {
     * attempt re-reads the pins, rolls back the split-win orphans, and
     * refolds from committed-visible state. */
   private def retryOnConflict(
-      spark: SparkSession, store: TableStore, name: String,
-      stamp: Option[Long])(attempt: => Boolean): Boolean = {
+      store: TableStore, name: String, stamp: Option[Long])(
+      attempt: => Boolean): Boolean = {
     var n = 0
     while (true) {
       try return attempt
       catch {
         case e: VersionConflictException =>
           n += 1
-          if (stamp.isDefined && readManifest(spark, store, name)
+          if (stamp.isDefined && readManifest(store, name)
               .exists(_._1.lastBatchId >= stamp.get)) return false
           if (n >= MaxAdmissionAttempts) throw e
       }
     }
     throw new IllegalStateException("unreachable")
   }
-
-  /** Dedicated pool for the paired member-table commit jobs. These block
-    * on Spark actions for seconds; running them on the bounded global
-    * fork-join pool could starve it under many concurrent profile folds
-    * in one JVM (ADVICE r11). Daemon threads, cached: at most two live
-    * tasks per in-flight admission. */
-  private lazy val memberCommitEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-profile-member-commit")
-        t.setDaemon(true)
-        t
-      }))
-
-  /** Submit the two member commits concurrently and wait for BOTH to
-    * settle — per-batch wall time is the slower of the two, not their
-    * sum, and no commit is still in flight when the caller acts on a
-    * failure (a retry that rolled back a table while our own write was
-    * mid-commit would race ourselves). Prefers surfacing a
-    * [[VersionConflictException]] (retryable) over an incidental error. */
-  private def commitMembersPaired(kmv: => Int, lvl: => Int): (Int, Int) = {
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext = memberCommitEc
-    val kvF = Future(kmv)
-    val lvF = Future(lvl)
-    val inf = scala.concurrent.duration.Duration.Inf
-    val kvT = Await.ready(kvF, inf).value.get
-    val lvT = Await.ready(lvF, inf).value.get
-    (kvT, lvT) match {
-      case (scala.util.Success(kv), scala.util.Success(lv)) => (kv, lv)
-      case _ =>
-        val failures = Seq(kvT, lvT).collect { case scala.util.Failure(e) => e }
-        throw failures.find(_.isInstanceOf[VersionConflictException])
-          .getOrElse(failures.head)
-    }
-  }
-
-  /** [[OverlayLock.rollbackIfAhead]] — kept as a local alias; both guards
-    * matter in the degenerate repair states racing zombie admitters can
-    * leave (see [[admitBatch]]), where the caller's fresh write +
-    * manifest swap is itself the repair — [[rebuild]] goes through here,
-    * which is what makes it the universal repair path. */
-  private def rollbackIfAhead(store: TableStore, table: String, pin: Int): Unit =
-    OverlayLock.rollbackIfAhead(store, table, pin)
 
   private def pinnedRead(
       spark: SparkSession, store: TableStore, name: String,
@@ -413,8 +329,8 @@ object CorpusProfile {
       numCol: String, k: Int, b: Int, store: TableStore, name: String,
       stamp: Option[Long]): Boolean = withAdmissionLock(store, name) {
     val spark = df.sparkSession
-    retryOnConflict(spark, store, name, stamp) {
-      val prev = readManifest(spark, store, name)
+    retryOnConflict(store, name, stamp) {
+      val prev = readManifest(store, name)
       val base = prev.map(_._1).getOrElse(ProfileManifest(None, None, None, -1L))
       if (stamp.exists(_ <= base.lastBatchId)) false
       else if (stamp.isDefined && base.kmv.isDefined)
@@ -429,12 +345,13 @@ object CorpusProfile {
         // a crashed writer can have left orphan successors ABOVE the pins;
         // writing on top of them would let the commit's prune discard the
         // still-pinned versions under live readers — roll back first
-        base.kmv.foreach(rollbackIfAhead(store, kmvTable(name), _))
-        base.lvl.foreach(rollbackIfAhead(store, lvlTable(name), _))
-        val (kv, lv) = commitMembersPaired(
-          store.write(kmvRows(df, groupCol, distinctCol, k), kmvTable(name)),
-          store.write(lvlRows(df, groupCol, idCol, numCol, b), lvlTable(name)))
-        commitManifest(spark, store, name,
+        base.kmv.foreach(OverlayLock.rollbackIfAhead(store, kmvTable(name), _))
+        base.lvl.foreach(OverlayLock.rollbackIfAhead(store, lvlTable(name), _))
+        val Seq(kv, lv) = OverlayLock.inParallel(Seq(
+          () => store.write(kmvRows(df, groupCol, distinctCol, k), kmvTable(name)),
+          () => store.write(lvlRows(df, groupCol, idCol, numCol, b), lvlTable(name))))
+          .map(_.asInstanceOf[Int])
+        IndexTier.commitManifest(store, manifestTable(name),
           base.copy(kmv = Some(kv), lvl = Some(lv),
             lastBatchId = stamp.getOrElse(base.lastBatchId), buildK = k),
           prev.map(_._2))
@@ -478,7 +395,7 @@ object CorpusProfile {
       distinctCol: String, idCol: String, numCol: String, k: Int, b: Int,
       store: TableStore, name: String, stamp: Option[Long]): Boolean =
     withAdmissionLock(store, name) {
-      retryOnConflict(spark, store, name, stamp) {
+      retryOnConflict(store, name, stamp) {
         appendAttempt(spark, batch, groupCol, distinctCol, idCol, numCol,
           k, b, store, name, stamp)
       }
@@ -493,7 +410,7 @@ object CorpusProfile {
       spark: SparkSession, batch: DataFrame, groupCol: String,
       distinctCol: String, idCol: String, numCol: String, k: Int, b: Int,
       store: TableStore, name: String, stamp: Option[Long]): Boolean = {
-    val (m, mv) = requireManifest(spark, store, name)
+    val (m, mv) = requireManifest(store, name)
     if (stamp.exists(_ <= m.lastBatchId)) return false
     require(m.buildK < 0 || m.buildK == k,
       s"profile $name was built with k=${m.buildK}; folding a batch at k=$k " +
@@ -515,8 +432,8 @@ object CorpusProfile {
     }
     // recovery: discard orphan successor versions (a previous writer
     // crashed after a member commit, before its manifest swap)
-    rollbackIfAhead(store, kmvTable(name), kmvPin)
-    rollbackIfAhead(store, lvlTable(name), lvlPin)
+    OverlayLock.rollbackIfAhead(store, kmvTable(name), kmvPin)
+    OverlayLock.rollbackIfAhead(store, lvlTable(name), lvlPin)
 
     // KMV: stored hashes re-enter the same dedup top-k beside the batch's
     val kmvStored = store.snapshotAt(spark, kmvTable(name), kmvPin)
@@ -529,37 +446,24 @@ object CorpusProfile {
       .select(col("group"), explode(col("tk.neighbor_id")).as("hv"))
 
     // the two member commits touch independent tables (separate staging
-    // dirs, separate locks). The kmv commit is submitted FIRST so it
+    // dirs, separate locks), so they run concurrently: the kmv write
     // overlaps the level fold's canonical-level probe — foldLevelState
     // runs a driver-side collect job BEFORE its member write can even be
     // submitted, and serializing probe → paired-writes stacked that full
     // job latency onto every drain (§2.6: overlap independent jobs).
-    // Per-batch wall time is now max(kmv write, probe + lvl write), and
-    // as before no commit is still in flight when the caller acts on a
-    // failure (a retry that rolled back a table while our own write was
-    // mid-commit would race ourselves).
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext = memberCommitEc
-    val kvF = Future(store.write(kmvMerged, kmvTable(name), Some(kmvPin)))
-    val inf = scala.concurrent.duration.Duration.Inf
-    // level sample: re-derive the canonical minimal level over
-    // (stored survivors ∪ batch) — correctness argument in the scaladoc
-    val lvT = scala.util.Try {
-      val lvlStored = store.snapshotAt(spark, lvlTable(name), lvlPin)
-      val lvlMerged = foldLevelState(lvlStored,
-        levelInputRows(batch, groupCol, idCol, numCol), b)
-      store.write(lvlMerged, lvlTable(name), Some(lvlPin))
-    }
-    val kvT = Await.ready(kvF, inf).value.get
-    val (kv, lv) = (kvT, lvT) match {
-      case (scala.util.Success(a), scala.util.Success(bv)) => (a, bv)
-      case _ =>
-        val failures = Seq(kvT, lvT).collect { case scala.util.Failure(e) => e }
-        throw failures.find(_.isInstanceOf[VersionConflictException])
-          .getOrElse(failures.head)
-    }
+    // Per-batch wall time is max(kmv write, probe + lvl write), and no
+    // commit is still in flight when the caller acts on a failure
+    // ([[OverlayLock.inParallel]] waits for both).
+    val Seq(kv, lv) = OverlayLock.inParallel(Seq(
+      () => store.write(kmvMerged, kmvTable(name), Some(kmvPin)),
+      // level sample: re-derive the canonical minimal level over
+      // (stored survivors ∪ batch) — correctness argument in the scaladoc
+      () => store.write(
+        foldLevelState(store.snapshotAt(spark, lvlTable(name), lvlPin),
+          levelInputRows(batch, groupCol, idCol, numCol), b),
+        lvlTable(name), Some(lvlPin)))).map(_.asInstanceOf[Int])
 
-    commitManifest(spark, store, name,
+    IndexTier.commitManifest(store, manifestTable(name),
       m.copy(kmv = Some(kv), lvl = Some(lv),
         lastBatchId = stamp.getOrElse(m.lastBatchId), buildK = k),
       Some(mv))
@@ -590,7 +494,7 @@ object CorpusProfile {
       b: Int,
       store: TableStore,
       name: String): Unit = {
-    requireManifest(retained.sparkSession, store, name)
+    requireManifest(store, name)
     buildStamped(retained, groupCol, distinctCol, idCol, numCol, k, b,
       store, name, None)
   }
@@ -647,7 +551,7 @@ object CorpusProfile {
       b: Int,
       store: TableStore,
       name: String): Boolean = {
-    val prev = readManifest(spark, store, name)
+    val prev = readManifest(store, name)
     val last = prev.map(_._1.lastBatchId).getOrElse(-1L)
     if (batchId <= last) false
     else if (prev.exists(_._1.kmv.isDefined))
@@ -704,21 +608,21 @@ object CorpusProfile {
       width: Int,
       store: TableStore,
       name: String): Unit = withAdmissionLock(store, name) {
-    val spark = df.sparkSession
     // same lock + retry as the distinct/quantile path: the manifest is
     // shared across tiers, so a concurrent admitBatch swapping it would
     // otherwise conflict this commit's CAS
-    retryOnConflict(spark, store, name, None) {
-      val prev = readManifest(spark, store, name)
+    retryOnConflict(store, name, None) {
+      val prev = readManifest(store, name)
       val base = prev.map(_._1).getOrElse(ProfileManifest(None, None, None, -1L))
       // see buildStamped: orphan successors above the pin must go first,
       // or this commit's prune discards the still-pinned version
-      base.cms.foreach(rollbackIfAhead(store, cmsTable(name), _))
+      base.cms.foreach(OverlayLock.rollbackIfAhead(store, cmsTable(name), _))
       val cv = store.write(
         Sketches.cmsCells(df.select(col(groupCol).as("group"),
           col(valueCol).as("v")), Seq("group"), "v", depth, width, "cms"),
         cmsTable(name))
-      commitManifest(spark, store, name, base.copy(cms = Some(cv)), prev.map(_._2))
+      IndexTier.commitManifest(store, manifestTable(name),
+        base.copy(cms = Some(cv)), prev.map(_._2))
       true
     }
     ()
@@ -735,11 +639,11 @@ object CorpusProfile {
       width: Int,
       store: TableStore,
       name: String): Unit = withAdmissionLock(store, name) {
-    retryOnConflict(spark, store, name, None) {
-      val (m, mv) = requireManifest(spark, store, name)
+    retryOnConflict(store, name, None) {
+      val (m, mv) = requireManifest(store, name)
       val pin = m.cms.getOrElse(throw new IllegalStateException(
         s"profile $name has no frequency tier — build it first"))
-      rollbackIfAhead(store, cmsTable(name), pin)
+      OverlayLock.rollbackIfAhead(store, cmsTable(name), pin)
       val stored = store.snapshotAt(spark, cmsTable(name), pin)
       val merged = stored
         .unionByName(Sketches.cmsCells(batch.select(col(groupCol).as("group"),
@@ -747,7 +651,7 @@ object CorpusProfile {
         .groupBy(col("group"), col("_r"), col("_b"))
         .agg(sum(col("_c")).as("_c"))
       val cv = store.write(merged, cmsTable(name), Some(pin))
-      commitManifest(spark, store, name, m.copy(cms = Some(cv)), Some(mv))
+      IndexTier.commitManifest(store, manifestTable(name), m.copy(cms = Some(cv)), Some(mv))
       true
     }
     ()
@@ -772,11 +676,11 @@ object CorpusProfile {
       width: Int,
       store: TableStore,
       name: String): Unit = withAdmissionLock(store, name) {
-    retryOnConflict(spark, store, name, None) {
-      val (m, mv) = requireManifest(spark, store, name)
+    retryOnConflict(store, name, None) {
+      val (m, mv) = requireManifest(store, name)
       val pin = m.cms.getOrElse(throw new IllegalStateException(
         s"profile $name has no frequency tier — build it first"))
-      rollbackIfAhead(store, cmsTable(name), pin)
+      OverlayLock.rollbackIfAhead(store, cmsTable(name), pin)
       val stored = store.snapshotAt(spark, cmsTable(name), pin)
       val negated = Sketches.cmsCells(removed.select(col(groupCol).as("group"),
           col(valueCol).as("v")), Seq("group"), "v", depth, width, "cms")
@@ -786,7 +690,7 @@ object CorpusProfile {
         .agg(greatest(sum(col("_c")), lit(0L)).as("_c"))
         .filter(col("_c") > 0)
       val cv = store.write(merged, cmsTable(name), Some(pin))
-      commitManifest(spark, store, name, m.copy(cms = Some(cv)), Some(mv))
+      IndexTier.commitManifest(store, manifestTable(name), m.copy(cms = Some(cv)), Some(mv))
       true
     }
     ()
@@ -801,7 +705,7 @@ object CorpusProfile {
       queries: Seq[String],
       depth: Int,
       width: Int): DataFrame = {
-    val (m, _) = requireManifest(spark, store, name)
+    val (m, _) = requireManifest(store, name)
     Sketches.cmsEstimates(
       pinnedRead(spark, store, name, m.cms, cmsTable(name), "frequency"),
       Seq("group"), queries, depth, width, "cms")
@@ -819,7 +723,7 @@ object CorpusProfile {
       name: String,
       k: Int,
       qs: Seq[Double]): DataFrame = {
-    val (m, _) = requireManifest(spark, store, name)
+    val (m, _) = requireManifest(store, name)
     val kmv = pinnedRead(spark, store, name, m.kmv, kmvTable(name), "distinct")
       .groupBy(col("group"))
       .agg(count(lit(1)).cast("int").as("n_sketch"), max(col("hv")).as("_kth"))
@@ -879,7 +783,7 @@ object CorpusProfile {
   private def kmvSynopses(
       spark: SparkSession, store: TableStore, name: String, k: Int,
       tag: String): DataFrame = {
-    val (m, _) = requireManifest(spark, store, name)
+    val (m, _) = requireManifest(store, name)
     require(m.buildK < 0 || m.buildK == k,
       s"profile $name was built with k=${m.buildK}, not k=$k — a mismatched " +
         "k flips full sketches into the exact sub-k arm and mis-estimates")

@@ -57,7 +57,6 @@ object FrameIndex {
   // retirement drain from rewriting the whole frames member
   private def rmTable(name: String) = s"${name}_rm"
   private def manifestTable(name: String) = s"${name}_manifest"
-  private val manifestFile = "manifest.json"
 
   /** Default STARTING bucket counts: deliberately small — a screen's
     * pruned read opens one file per touched bucket, so oversized counts
@@ -66,12 +65,6 @@ object FrameIndex {
     * per-bucket byte target ([[OverlayLock.grownSpec]]). */
   val FrameBuckets: Int = 4
   val BandBuckets: Int = 8
-
-  /** Tombstone/delta-compaction policy — [[IvfIndex.OvlFrac]]'s rationale
-    * on the retired-id set's (and memtable's) bytes vs the frames
-    * member's. */
-  private val RmFloorBytes: Long = IvfIndex.OvlFloorBytes
-  private val RmFrac: Double = IvfIndex.OvlFrac
 
   /** Frames pin + both screening budgets + the admission gate; `rmFrames`
     * pins the tombstone member when a supersede/keeper fold has retired
@@ -85,34 +78,15 @@ object FrameIndex {
       frames: Int, maxHamming: Int, minContainment: Double,
       lastBatchId: Long = -1L, rmFrames: Option[Int] = None,
       hasQuality: Boolean = false,
-      band: Option[Int] = None, dlt: Option[Int] = None)
-
-  private def encodeManifest(m: FrameManifest): String =
-    s"""{"frames_v":${m.frames},"max_hamming":${m.maxHamming},""" +
-      s""""min_containment":${m.minContainment},""" +
-      s""""has_quality":${if (m.hasQuality) 1 else 0},""" +
-      s""""rm_frames_v":${m.rmFrames.getOrElse(-1)},""" +
-      s""""band_v":${m.band.getOrElse(-1)},""" +
-      s""""dlt_v":${m.dlt.getOrElse(-1)},""" +
-      s""""last_batch_id":${m.lastBatchId}}"""
-
-  private def decodeManifest(s: String): FrameManifest = {
-    def raw(k: String): String = {
-      val i = s.indexOf("\"" + k + "\":")
-      require(i >= 0, s"frame-index manifest missing $k: $s")
-      val from = i + k.length + 3
-      val end = s.indexWhere(c => c == ',' || c == '}', from)
-      s.substring(from, end).trim
-    }
-    // absent = pre-tombstone / pre-quality / pre-projection manifest
-    // (older persisted index)
-    def optAbsent(k: String): Option[Int] =
-      if (s.indexOf("\"" + k + "\":") < 0) None
-      else { val v = raw(k).toInt; if (v < 0) None else Some(v) }
-    val hasQ = s.indexOf("\"has_quality\":") >= 0 && raw("has_quality") != "0"
-    FrameManifest(raw("frames_v").toInt, raw("max_hamming").toInt,
-      raw("min_containment").toDouble, raw("last_batch_id").toLong,
-      optAbsent("rm_frames_v"), hasQ, optAbsent("band_v"), optAbsent("dlt_v"))
+      band: Option[Int] = None, dlt: Option[Int] = None) extends IndexTier.Manifest {
+    def fields: Seq[(String, Any)] = Seq("frames_v" -> frames,
+      "max_hamming" -> maxHamming, "min_containment" -> minContainment,
+      "has_quality" -> (if (hasQuality) 1 else 0),
+      "rm_frames_v" -> rmFrames.getOrElse(-1), "band_v" -> band.getOrElse(-1),
+      "dlt_v" -> dlt.getOrElse(-1), "last_batch_id" -> lastBatchId)
+    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
+      framesTable(name) -> Some(frames), bandTable(name) -> band,
+      rmTable(name) -> rmFrames, deltaTable(name) -> dlt)
   }
 
   private def requirePlain(m: FrameManifest, name: String, op: String): Unit =
@@ -125,46 +99,25 @@ object FrameIndex {
       s"frame index $name is a plain family — $op needs a " +
         "quality-carrying index; build it with buildWithQuality")
 
+  /** Absent keys predate the tombstone/quality/projection tiers (older
+    * persisted index): no tombstones, a plain family, the legacy
+    * full-derive layout. */
   private[graft] def readManifest(
       store: TableStore, name: String): Option[(FrameManifest, Int)] =
-    store.currentVersion(manifestTable(name)).map { v =>
-      val f = java.nio.file.Paths.get(store.pathAt(manifestTable(name), v))
-        .resolve(manifestFile)
-      (decodeManifest(new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)), v)
+    IndexTier.readManifest(store, manifestTable(name), "frame-index manifest") { f =>
+      FrameManifest(f.int("frames_v"), f.int("max_hamming"),
+        f.double("min_containment"), f.long("last_batch_id"), f.pin("rm_frames_v"),
+        f.flag("has_quality"), f.pin("band_v"), f.pin("dlt_v"))
     }
 
   private def requireManifest(store: TableStore, name: String): (FrameManifest, Int) =
     readManifest(store, name).getOrElse(throw new IllegalStateException(
       s"frame index $name has no manifest — build it first"))
 
-  private def commitManifest(
-      store: TableStore, name: String, m: FrameManifest, expected: Option[Int]): Unit =
-    store.commitFile(manifestTable(name), manifestFile,
-      encodeManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      expected)
-
   private def withLock[A](store: TableStore, name: String)(body: => A): A =
     OverlayLock.withLock(store, "frame", name)(body)
 
-  private def rollbackAll(store: TableStore, name: String, m: FrameManifest): Unit = {
-    OverlayLock.rollbackIfAhead(store, framesTable(name), m.frames)
-    m.band.foreach(OverlayLock.rollbackIfAhead(store, bandTable(name), _))
-    m.rmFrames.foreach(OverlayLock.rollbackIfAhead(store, rmTable(name), _))
-    m.dlt.foreach(OverlayLock.rollbackIfAhead(store, deltaTable(name), _))
-  }
-
   // ------------------------------------------------------------- projections
-
-  /** The chunk columns of [[Dedup.videoContainmentAgainst]]' frameless
-    * pigeonhole — the SAME bit slicing, so pruned candidates equal the
-    * ad-hoc screen's. */
-  private def chunkCols(maxHamming: Int): Seq[Column] = {
-    val chunks = maxHamming + 1
-    val bitsPer = 64 / chunks
-    (0 until chunks).map(c =>
-      shiftrightunsigned(col("sig"), c * bitsPer).bitwiseAND(lit((1L << bitsPer) - 1)))
-  }
 
   /** The per-video stats the directed screens need, DENORMALIZED onto
     * every frame row: `n_frames` = the video's DISTINCT frame count (the
@@ -179,120 +132,16 @@ object FrameIndex {
     rows.join(rows.groupBy(col("id")).agg(aggs.head, aggs.tail: _*), Seq("id"))
   }
 
-  /** The banding projection rows of a frames frame (per-video stats
-    * already attached): one row per (frame row, chunk). */
-  private def bandedOf(rowsWithStats: DataFrame, maxHamming: Int): DataFrame =
-    rowsWithStats.select(col("*"),
-      posexplode(array(chunkCols(maxHamming): _*)).as(Seq("chunk", "value")))
-
   /** Band-tier columns (quality families carry `_vq`). */
   private def bandCols(hasQ: Boolean): Seq[Column] =
     (Seq(col("id"), col("frame"), col("sig"), col("n_frames")) ++
       (if (hasQ) Seq(col("_vq")) else Nil)) ++ Seq(col("chunk"), col("value"))
 
-  private def frameSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(framesTable(name)).getOrElse(
-      BucketSpec(FrameBuckets, Seq("id"), sortCols = Seq("id")))
-  private def bandSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(bandTable(name)).getOrElse(
-      BucketSpec(BandBuckets, Seq("chunk", "value"), sortCols = Seq("chunk", "value")))
-
-  /** The buckets `keys` can hash into under `spec` — ONE narrow job,
-    * bounded by nBuckets (the [[SignatureIndex.touchedBuckets]] probe). */
-  private def touchedBuckets(spec: BucketSpec, keys: DataFrame): Seq[Int] =
-    keys.select(spec.bucketColumn.as("_b"))
-      .queryExecution.toRdd.mapPartitions { it =>
-        val s = new scala.collection.mutable.HashSet[Int]
-        it.foreach(r => s.add(r.getInt(0)))
-        s.iterator
-      }.collect().distinct.toSeq
-
-  /** BOTH tiers' touched buckets from ONE narrow job over the (pinned)
-    * batch's banding projection — the frames tier's id-buckets and the
-    * band tier's (chunk, value)-cell buckets fused, one probe round-trip
-    * per drain instead of two (the [[SignatureIndex.touchedBucketsPair]]
-    * discipline on the frame family). Probing from the PRE-anti-join
-    * batch is superset-safe: a wider bucket list reads whole extra
-    * cells, an unprobed cell produces no candidate pairs, and per-cell
-    * hot counts are exact for every read cell either way. */
-  private def touchedBucketsPair(
-      specA: BucketSpec, specB: BucketSpec, rows: DataFrame): (Seq[Int], Seq[Int]) = {
-    val both = rows.select(specA.bucketColumn.as("_a"), specB.bucketColumn.as("_b"))
-      .queryExecution.toRdd.mapPartitions { it =>
-        val a = new scala.collection.mutable.HashSet[Int]
-        val b = new scala.collection.mutable.HashSet[Int]
-        it.foreach { r => a.add(r.getInt(0)); b.add(r.getInt(1)) }
-        Iterator.single((a.toArray, b.toArray))
-      }.collect()
-    (both.flatMap(_._1).distinct.toSeq, both.flatMap(_._2).distinct.toSeq)
-  }
-
   /** The batch's banding projection keys — id + (chunk, value) — for the
     * fused probe. */
   private def probeRows(batch: DataFrame, maxHamming: Int): DataFrame =
     batch.select(col("id"),
-      posexplode(array(chunkCols(maxHamming): _*)).as(Seq("chunk", "value")))
-
-  /** ONE narrow count (per-partition size + driver sum); also
-    * materializes the frame's cache pin. */
-  private def narrowCount(df: DataFrame): Long =
-    df.select(lit(1).as("_one")).queryExecution.toRdd
-      .mapPartitions { it =>
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }
-        Iterator.single(n)
-      }.collect().sum
-
-  private def prunedAt(
-      spark: SparkSession, store: TableStore, table: String, pin: Int,
-      touched: Seq[Int]): DataFrame = {
-    val raw = store.snapshotRawAt(spark, table, pin)
-    (if (touched.isEmpty) raw.filter(lit(false))
-     else raw.filter(col("_bucket").isin(touched.map(Integer.valueOf): _*)))
-      .drop("_bucket")
-  }
-
-  private def deltaFrame(
-      spark: SparkSession, store: TableStore, name: String,
-      m: FrameManifest): Option[DataFrame] =
-    m.dlt.map(dv => store.snapshotAt(spark, deltaTable(name), dv))
-
-  /** A tier PRUNED to `touched` buckets INCLUDING the delta member's
-    * in-plan contribution (the [[PerceptualIndex]] discipline). */
-  private def prunedWithDelta(
-      spark: SparkSession, store: TableStore, name: String, m: FrameManifest,
-      table: String, pin: Int, spec: BucketSpec, touched: Seq[Int],
-      fromDelta: DataFrame => DataFrame): DataFrame = {
-    // legacy plain layout: no `_bucket` to prune on and the default
-    // spec's rule does not describe the stored files — serve the FULL
-    // pinned read (∪ unfiltered delta) until the next full rewrite
-    // (result-identical; the [[PerceptualIndex.prunedWithDelta]] note)
-    if (store.bucketSpec(table).isEmpty) {
-      val base = store.snapshotAt(spark, table, pin)
-      return deltaFrame(spark, store, name, m)
-        .map(d => base.unionByName(fromDelta(d))).getOrElse(base)
-    }
-    val base = prunedAt(spark, store, table, pin, touched)
-    deltaFrame(spark, store, name, m) match {
-      case None => base
-      case Some(d) =>
-        val derived = fromDelta(d)
-        base.unionByName(
-          if (touched.isEmpty) derived.filter(lit(false))
-          else derived.filter(
-            spec.bucketColumn.isin(touched.map(Integer.valueOf): _*)))
-    }
-  }
-
-  /** The broadcast tombstone-id subtraction every served read applies. */
-  private def minusRm(
-      spark: SparkSession, store: TableStore, name: String,
-      m: FrameManifest)(df: DataFrame): DataFrame =
-    m.rmFrames match {
-      case None => df
-      case Some(pin) => df.join(broadcast(
-          store.snapshotAt(spark, rmTable(name), pin).select(col("id"))),
-        Seq("id"), "left_anti")
-    }
+      posexplode(array(IndexTier.chunkCols(maxHamming): _*)).as(Seq("chunk", "value")))
 
   /** Indexed VIDEO ids of the batch's id-buckets (base ∪ delta, NO
     * tombstone subtraction — a retired id may not re-enter under its own
@@ -301,15 +150,16 @@ object FrameIndex {
       spark: SparkSession, store: TableStore, name: String, m: FrameManifest,
       ids: DataFrame): DataFrame =
     indexedIdsForBuckets(spark, store, name, m,
-      touchedBuckets(frameSpec(store, name), ids))
+      IndexTier.touchedBuckets(store, framesTable(name), m.frames, ids))
 
   /** [[indexedIdsForIds]] with the bucket probe already done (the
     * fused-probe callers pass their precomputed id-bucket list). */
   private def indexedIdsForBuckets(
       spark: SparkSession, store: TableStore, name: String, m: FrameManifest,
       touched: Seq[Int]): DataFrame =
-    prunedWithDelta(spark, store, name, m, framesTable(name), m.frames,
-      frameSpec(store, name), touched, identity).select(col("id"))
+    IndexTier.prunedWithDelta(spark, store, framesTable(name), m.frames, touched,
+      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), identity)
+      .select(col("id"))
 
   /** The SERVED frame corpus: (base ∪ delta) ∖ tombstoned VIDEO ids —
     * the manifest-consistent view folds and full reads derive from. */
@@ -317,8 +167,9 @@ object FrameIndex {
       spark: SparkSession, store: TableStore, name: String,
       m: FrameManifest): DataFrame = {
     val base = store.snapshotAt(spark, framesTable(name), m.frames)
-    minusRm(spark, store, name, m)(
-      deltaFrame(spark, store, name, m).map(base.unionByName(_)).getOrElse(base))
+    IndexTier.minusRm(spark, store, rmTable(name), m.rmFrames)(
+      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt)
+        .map(base.unionByName(_)).getOrElse(base))
   }
 
   /** The SERVED banding projection restricted to the batch's probe
@@ -331,18 +182,17 @@ object FrameIndex {
       spark: SparkSession, store: TableStore, name: String, m: FrameManifest,
       batchBanded: DataFrame, cellTouched: Option[Seq[Int]] = None): DataFrame = {
     def project(rows: DataFrame): DataFrame =
-      bandedOf(withVideoStats(rows, m.hasQuality), m.maxHamming)
+      IndexTier.bandedOf(withVideoStats(rows, m.hasQuality), m.maxHamming)
         .select(bandCols(m.hasQuality): _*)
     m.band match {
       case None => // legacy layout: derive from the full served view
         project(servedFramesAt(spark, store, name, m))
       case Some(pin) =>
-        val spec = bandSpec(store, name)
-        minusRm(spark, store, name, m)(
-          prunedWithDelta(spark, store, name, m, bandTable(name), pin, spec,
-            cellTouched.getOrElse(
-              touchedBuckets(spec, batchBanded.select(col("chunk"), col("value")))),
-            project))
+        IndexTier.minusRm(spark, store, rmTable(name), m.rmFrames)(
+          IndexTier.prunedWithDelta(spark, store, bandTable(name), pin,
+            cellTouched.getOrElse(IndexTier.touchedBuckets(store, bandTable(name), pin,
+              batchBanded.select(col("chunk"), col("value")))),
+            IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), project))
     }
   }
 
@@ -363,7 +213,7 @@ object FrameIndex {
       cellTouched: Option[Seq[Int]] = None)(
       implicit caches: CacheScope): DataFrame = {
     val sb = caches.pin(batchPinned.select(col("id"), col("frame"), col("sig"),
-      posexplode(array(chunkCols(m.maxHamming): _*)).as(Seq("chunk", "value"))))
+      posexplode(array(IndexTier.chunkCols(m.maxHamming): _*)).as(Seq("chunk", "value"))))
     val sc = caches.pin(servedBandForCells(spark, store, name, m, sb, cellTouched))
     def hotSide(s: DataFrame) = s.groupBy(col("chunk"), col("value"))
       .agg(count(lit(1)).as("c")).filter(col("c") > maxBucketSize)
@@ -472,16 +322,15 @@ object FrameIndex {
       frameBuckets: Int, bandBuckets: Int,
       expectedFrames: Option[Int], expectedBand: Option[Int]): (Int, Int) = {
     val fv = store.writeBucketed(rows, framesTable(name),
-      BucketSpec(frameBuckets, Seq("id"), sortCols = Seq("id")), expectedFrames)
+      IndexTier.keyed(frameBuckets, "id"), expectedFrames)
     // derive the projection from the COMMITTED frames (a parquet read) so
     // the caller's input chain runs once, not twice
     val committed = store.snapshotAt(spark, framesTable(name), fv)
     val bv = store.writeBucketed(
-      bandedOf(withVideoStats(committed, hasQ), maxHamming)
+      IndexTier.bandedOf(withVideoStats(committed, hasQ), maxHamming)
         .select(bandCols(hasQ): _*),
       bandTable(name),
-      BucketSpec(bandBuckets, Seq("chunk", "value"),
-        sortCols = Seq("chunk", "value")),
+      IndexTier.keyed(bandBuckets, "chunk", "value"),
       expectedBand.orElse(store.currentVersion(bandTable(name))))
     (fv, bv)
   }
@@ -504,14 +353,14 @@ object FrameIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => rollbackAll(store, name, m) }
+        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
         val spark = frames.sparkSession
         val (fv, bv) = buildTiers(spark, store, name, frameShape(frames),
           maxHamming, hasQ = false, frameBuckets, bandBuckets,
           prev.map(_._1.frames), prev.flatMap(_._1.band))
         // a rebuild replaces the corpus wholesale — prior retirements are
         // moot, the tombstone and memtable pins clear
-        commitManifest(store, name,
+        IndexTier.commitManifest(store, manifestTable(name),
           FrameManifest(fv, maxHamming, minContainment,
             prev.map(_._1.lastBatchId).getOrElse(-1L), band = Some(bv)),
           prev.map(_._2))
@@ -541,12 +390,12 @@ object FrameIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => rollbackAll(store, name, m) }
+        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
         val spark = frames.sparkSession
         val (fv, bv) = buildTiers(spark, store, name, frameQualityShape(frames),
           maxHamming, hasQ = true, frameBuckets, bandBuckets,
           prev.map(_._1.frames), prev.flatMap(_._1.band))
-        commitManifest(store, name,
+        IndexTier.commitManifest(store, manifestTable(name),
           FrameManifest(fv, maxHamming, minContainment,
             prev.map(_._1.lastBatchId).getOrElse(-1L),
             hasQuality = true, band = Some(bv)), prev.map(_._2))
@@ -577,25 +426,13 @@ object FrameIndex {
     * exercise folds at test scale. */
   private def foldDue(
       spark: SparkSession, store: TableStore, name: String,
-      m: FrameManifest): Boolean = {
-    val floor = spark.conf.getOption("spark.graft.foldFloorBytes")
-      .map(_.toLong).getOrElse(RmFloorBytes)
-    val baseBytes = store.byteSizeAt(framesTable(name), m.frames)
-    val pending = m.dlt.map(store.byteSizeAt(deltaTable(name), _)).getOrElse(0L) +
-      m.rmFrames.map(store.byteSizeAt(rmTable(name), _)).getOrElse(0L)
-    pending > math.max(floor.toDouble, RmFrac * baseBytes)
-  }
-
-  /** The memtable write — ONE plain O(batch) linked append. */
-  private def appendDelta(
-      spark: SparkSession, store: TableStore, name: String, m: FrameManifest,
-      fresh: DataFrame): Int =
-    m.dlt match {
-      case Some(pin) => OverlayLock.appendOrCompact(store, deltaTable(name), pin,
-        store.snapshotAt(spark, deltaTable(name), pin), fresh.coalesce(4))
-      case None => store.write(fresh.coalesce(4), deltaTable(name),
-        store.currentVersion(deltaTable(name)))
-    }
+      m: FrameManifest): Boolean =
+    IndexTier.foldDue(
+      m.dlt.map(store.byteSizeAt(deltaTable(name), _)).getOrElse(0L) +
+        m.rmFrames.map(store.byteSizeAt(rmTable(name), _)).getOrElse(0L),
+      store.byteSizeAt(framesTable(name), m.frames),
+      spark.conf.getOption("spark.graft.foldFloorBytes")
+        .map(_.toLong).getOrElse(IvfIndex.OvlFloorBytes))
 
   /** Amortized fold: rewrite the SERVED view — minus this batch's
     * retirements, plus its admissions — into both bucketed tiers
@@ -624,13 +461,16 @@ object FrameIndex {
         .getOrElse(0L) + grow * (m.maxHamming + 1)
       val Seq(fv, bv) = OverlayLock.inParallel(Seq(
         () => store.writeBucketed(kept, framesTable(name),
-          OverlayLock.grownSpec(spark2, frameSpec(store, name), frameBytes),
+          OverlayLock.grownSpec(spark2,
+            IndexTier.layout(store, framesTable(name), FrameBuckets, "id"), frameBytes),
           Some(m.frames)),
         () => store.writeBucketed(
-          bandedOf(withVideoStats(kept, m.hasQuality), m.maxHamming)
+          IndexTier.bandedOf(withVideoStats(kept, m.hasQuality), m.maxHamming)
             .select(bandCols(m.hasQuality): _*),
           bandTable(name),
-          OverlayLock.grownSpec(spark2, bandSpec(store, name), bandBytes),
+          OverlayLock.grownSpec(spark2,
+            IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
+            bandBytes),
           m.band.orElse(store.currentVersion(bandTable(name))))))
         .map(_.asInstanceOf[Int])
       m.copy(frames = fv, band = Some(bv), rmFrames = None, dlt = None)
@@ -661,22 +501,25 @@ object FrameIndex {
     val (m, mv) = requireManifest(store, name)
     requirePlain(m, name, "an insert-only fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     // the screen-then-admit fold: drop batch videos CONTAINED in the
     // stored corpus (the persisted budgets), admit the rest whole —
     // both halves read the SAME pinned stored version, so the loop is
     // one atomic decision. The shaped batch is pinned ONCE so the probe
     // and every later consumer share one materialization of the raw
     // input chain, and the probe job collects BOTH tiers' touched
-    // buckets in one round ([[touchedBucketsPair]]).
+    // buckets in one round ([[IndexTier.touchedBucketsPair]]).
     implicit val outer: CacheScope = new CacheScope
     try {
       val batch0 = outer.pin(frameShape(frames))
+      // (a legacy index has no band pin: -1 probes nothing real, and the
+      // full-derive screen ignores its cell list)
       val (idBuckets, cellBuckets) =
         if (screenFirst)
-          touchedBucketsPair(frameSpec(store, name), bandSpec(store, name),
-            probeRows(batch0, m.maxHamming))
-        else (touchedBuckets(frameSpec(store, name), batch0.select(col("id"))),
+          IndexTier.touchedBucketsPair(store, framesTable(name) -> m.frames,
+            bandTable(name) -> m.band.getOrElse(-1), probeRows(batch0, m.maxHamming))
+        else (IndexTier.touchedBuckets(store, framesTable(name), m.frames,
+            batch0.select(col("id"))),
           Seq.empty[Int])
       val batch =
         if (!screenFirst) batch0
@@ -710,8 +553,9 @@ object FrameIndex {
         val next =
           if (foldDue(spark, store, name, m))
             foldAllTiers(spark, store, name, m, fresh, None)
-          else m.copy(dlt = Some(appendDelta(spark, store, name, m, fresh)))
-        commitManifest(store, name,
+          else m.copy(dlt = Some(IndexTier.appendDelta(spark, store,
+            deltaTable(name), m.dlt, fresh)))
+        IndexTier.commitManifest(store, manifestTable(name),
           next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
         true
       } finally if (screenFirst) batch.unpersist()
@@ -731,7 +575,7 @@ object FrameIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val (m, mv) = requireManifest(store, name)
-        rollbackAll(store, name, m)
+        IndexTier.rollbackAll(store, m.tiers(name))
         val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
         val stored = servedFramesAt(spark, store, name, m)
         val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
@@ -743,14 +587,16 @@ object FrameIndex {
           // retirements + the memtable fold in here and the pins clear
           val Seq(fv, bv) = OverlayLock.inParallel(Seq(
             () => store.writeBucketed(kept, framesTable(name),
-              frameSpec(store, name), Some(m.frames)),
+              IndexTier.layout(store, framesTable(name), FrameBuckets, "id"),
+              Some(m.frames)),
             () => store.writeBucketed(
-              bandedOf(withVideoStats(kept, m.hasQuality), m.maxHamming)
+              IndexTier.bandedOf(withVideoStats(kept, m.hasQuality), m.maxHamming)
                 .select(bandCols(m.hasQuality): _*),
-              bandTable(name), bandSpec(store, name),
+              bandTable(name),
+              IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
               m.band.orElse(store.currentVersion(bandTable(name))))))
             .map(_.asInstanceOf[Int])
-          commitManifest(store, name,
+          IndexTier.commitManifest(store, manifestTable(name),
             m.copy(frames = fv, band = Some(bv), rmFrames = None, dlt = None),
             Some(mv))
           before - keptN
@@ -952,19 +798,19 @@ object FrameIndex {
     val (m, mv) = requireManifest(store, name)
     requirePlain(m, name, "a supersede fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     implicit val scope: CacheScope = new CacheScope
     // the shaped batch is pinned ONCE (probe + anti-join share one
     // materialization of the raw input chain) and the probe job collects
-    // BOTH tiers' touched buckets in one round ([[touchedBucketsPair]];
+    // BOTH tiers' touched buckets in one round ([[IndexTier.touchedBucketsPair]];
     // pre-anti-join cells are a superset — identical results);
     // insert-only against the INDEXED id set (base ∪ delta ⊇ retired ids
     // until the fold) + the in-batch (id, frame) canonicalization —
     // appendStamped's contracts; the id screen reads only the batch's
     // id-buckets
     val batch0pre = scope.pin(frameShape(frames))
-    val (idBuckets, cellBuckets) = touchedBucketsPair(
-      frameSpec(store, name), bandSpec(store, name),
+    val (idBuckets, cellBuckets) = IndexTier.touchedBucketsPair(store,
+      framesTable(name) -> m.frames, bandTable(name) -> m.band.getOrElse(-1),
       probeRows(batch0pre, m.maxHamming))
     val batch0 = batch0pre
       .join(indexedIdsForBuckets(spark, store, name, m, idBuckets),
@@ -1013,24 +859,12 @@ object FrameIndex {
                 // uncached pins inside a coalesced write (measured on
                 // the text keeper: fusing the gate into the commit
                 // branches cost +0.5 s/drain).
-                val rmEmpty = narrowCount(removedIds) == 0L
-                val results = OverlayLock.inParallel(Seq(
-                  () => appendDelta(spark, store, name, m, admitted)) ++
-                  (if (rmEmpty) Seq.empty
-                   else Seq(() => m.rmFrames match {
-                     case Some(p) => store.write(
-                       store.snapshotAt(spark, rmTable(name), p)
-                         .select(col("id"))
-                         .unionByName(removedIds).distinct().coalesce(4),
-                       rmTable(name), Some(p))
-                     case None => store.write(removedIds.coalesce(4),
-                       rmTable(name), store.currentVersion(rmTable(name)))
-                   })))
-                val rv = if (rmEmpty) m.rmFrames
-                  else Some(results.last.asInstanceOf[Int])
-                m.copy(dlt = Some(results.head.asInstanceOf[Int]), rmFrames = rv)
+                val (dv, rv) = IndexTier.commitDeltaAndRm(spark, store,
+                  deltaTable(name) -> m.dlt, rmTable(name) -> m.rmFrames, admitted,
+                  removedIds, noRetired = IndexTier.narrowCount(removedIds) == 0L)
+                m.copy(dlt = Some(dv), rmFrames = rv)
               }
-            commitManifest(store, name,
+            IndexTier.commitManifest(store, manifestTable(name),
               next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)),
               Some(mv))
             true
@@ -1124,7 +958,7 @@ object FrameIndex {
     val (m, mv) = requireManifest(store, name)
     requireQuality(m, name, "a replace-if-better fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     implicit val scope: CacheScope = new CacheScope
     // pinned shaped batch + ONE fused probe job (both tiers' touched
     // buckets — the [[supersedeStamped]] discipline); insert-only
@@ -1132,8 +966,8 @@ object FrameIndex {
     // (min sig; quality folds to the max per id — one score per video);
     // the id screen reads only the batch's id-buckets
     val batchPre = scope.pin(frameQualityShape(frames))
-    val (idBuckets, cellBuckets) = touchedBucketsPair(
-      frameSpec(store, name), bandSpec(store, name),
+    val (idBuckets, cellBuckets) = IndexTier.touchedBucketsPair(store,
+      framesTable(name) -> m.frames, bandTable(name) -> m.band.getOrElse(-1),
       probeRows(batchPre, m.maxHamming))
     val batch = batchPre
       .join(indexedIdsForBuckets(spark, store, name, m, idBuckets),
@@ -1181,24 +1015,12 @@ object FrameIndex {
                 // emptiness gate is ONE serial narrow count that
                 // materializes the pinned screen chain first (the
                 // [[supersedeStamped]] note)
-                val rmEmpty = narrowCount(removedIds) == 0L
-                val results = OverlayLock.inParallel(Seq(
-                  () => appendDelta(spark, store, name, m, admitted)) ++
-                  (if (rmEmpty) Seq.empty
-                   else Seq(() => m.rmFrames match {
-                     case Some(p) => store.write(
-                       store.snapshotAt(spark, rmTable(name), p)
-                         .select(col("id"))
-                         .unionByName(removedIds).distinct().coalesce(4),
-                       rmTable(name), Some(p))
-                     case None => store.write(removedIds.coalesce(4),
-                       rmTable(name), store.currentVersion(rmTable(name)))
-                   })))
-                val rv = if (rmEmpty) m.rmFrames
-                  else Some(results.last.asInstanceOf[Int])
-                m.copy(dlt = Some(results.head.asInstanceOf[Int]), rmFrames = rv)
+                val (dv, rv) = IndexTier.commitDeltaAndRm(spark, store,
+                  deltaTable(name) -> m.dlt, rmTable(name) -> m.rmFrames, admitted,
+                  removedIds, noRetired = IndexTier.narrowCount(removedIds) == 0L)
+                m.copy(dlt = Some(dv), rmFrames = rv)
               }
-            commitManifest(store, name,
+            IndexTier.commitManifest(store, manifestTable(name),
               next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)),
               Some(mv))
             true

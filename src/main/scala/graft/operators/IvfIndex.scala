@@ -62,8 +62,7 @@ object IvfIndex {
   private def ovlVectorsTable(name: String) = s"${name}_vectors_ovl"
   private def ovlQVectorsTable(name: String) = s"${name}_qvectors_ovl"
   private[operators] def ovlPqCodesTable(name: String) = s"${name}_pq_codes_ovl"
-  private def manifestTable(name: String) = s"${name}_manifest"
-  private val manifestFile = "manifest.json"
+  private[operators] def manifestTable(name: String) = s"${name}_manifest"
 
   /** Overlay-compaction policy: fold the overlay into the base tiers when
     * it exceeds `OvlFrac` of the base float tier's bytes AND the
@@ -83,13 +82,6 @@ object IvfIndex {
     * (`vectorsForCells`). Small start + [[OverlayLock.grownSpec]]
     * doubling at every wholesale rewrite — the standard sizing rule. */
   val VecBuckets: Int = 8
-
-  /** The float tier's recorded bucket layout; a legacy plain layout
-    * upgrades at its next full rewrite and serves full reads until
-    * then. */
-  private def vecSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(vectorsTable(name)).getOrElse(
-      BucketSpec(VecBuckets, Seq("cell"), sortCols = Seq("cell")))
 
   // ---------------------------------------------------------------- manifest
 
@@ -111,52 +103,30 @@ object IvfIndex {
       lastBatchId: Long = -1L,
       ovlVectors: Option[Int] = None,
       ovlQvectors: Option[Int] = None,
-      ovlPqCodes: Option[Int] = None)
-
-  private def encodeManifest(m: IvfManifest): String =
-    s"""{"centroids_v":${m.centroids},"vectors_v":${m.vectors},""" +
-      s""""qvectors_v":${m.qvectors.getOrElse(-1)},""" +
-      s""""pq_codebook_v":${m.pqCodebook.getOrElse(-1)},""" +
-      s""""pq_codes_v":${m.pqCodes.getOrElse(-1)},""" +
-      s""""ovl_vectors_v":${m.ovlVectors.getOrElse(-1)},""" +
-      s""""ovl_qvectors_v":${m.ovlQvectors.getOrElse(-1)},""" +
-      s""""ovl_pq_codes_v":${m.ovlPqCodes.getOrElse(-1)},""" +
-      s""""last_batch_id":${m.lastBatchId}}"""
-
-  private def decodeManifest(s: String): IvfManifest = {
-    def field(k: String): Long = {
-      val i = s.indexOf("\"" + k + "\":")
-      require(i >= 0, s"index manifest missing $k: $s")
-      val from = i + k.length + 3
-      val end = s.indexWhere(c => c == ',' || c == '}', from)
-      s.substring(from, end).trim.toLong
-    }
-    def opt(k: String): Option[Int] = {
-      val v = field(k); if (v < 0) None else Some(v.toInt)
-    }
-    // overlay pins absent = pre-overlay manifest (an index persisted by an
-    // earlier build, e.g. a tmpfs fixture surviving the upgrade): empty
-    // overlay, not an error
-    def optAbsent(k: String): Option[Int] =
-      if (s.indexOf("\"" + k + "\":") < 0) None else opt(k)
-    IvfManifest(field("centroids_v").toInt, field("vectors_v").toInt,
-      opt("qvectors_v"), opt("pq_codebook_v"), opt("pq_codes_v"),
-      field("last_batch_id"),
-      optAbsent("ovl_vectors_v"), optAbsent("ovl_qvectors_v"),
-      optAbsent("ovl_pq_codes_v"))
+      ovlPqCodes: Option[Int] = None) extends IndexTier.Manifest {
+    def fields: Seq[(String, Any)] = Seq("centroids_v" -> centroids,
+      "vectors_v" -> vectors, "qvectors_v" -> qvectors.getOrElse(-1),
+      "pq_codebook_v" -> pqCodebook.getOrElse(-1), "pq_codes_v" -> pqCodes.getOrElse(-1),
+      "ovl_vectors_v" -> ovlVectors.getOrElse(-1),
+      "ovl_qvectors_v" -> ovlQvectors.getOrElse(-1),
+      "ovl_pq_codes_v" -> ovlPqCodes.getOrElse(-1), "last_batch_id" -> lastBatchId)
+    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
+      centroidsTable(name) -> Some(centroids), vectorsTable(name) -> Some(vectors),
+      qVectorsTable(name) -> qvectors, PqIndex.codebookTableName(name) -> pqCodebook,
+      PqIndex.codesTableName(name) -> pqCodes, ovlVectorsTable(name) -> ovlVectors,
+      ovlQVectorsTable(name) -> ovlQvectors, ovlPqCodesTable(name) -> ovlPqCodes)
   }
 
   /** The manifest and the manifest TABLE's version (the CAS anchor a
-    * later [[commitManifest]] must carry). Content is read from the
-    * v-dir of the version just resolved, so content and anchor always
-    * agree (see [[CorpusProfile.readManifest]]). */
+    * later manifest commit must carry). Absent overlay pins = a
+    * pre-overlay manifest (an index persisted by an earlier build, e.g. a
+    * tmpfs fixture surviving the upgrade): empty overlay, not an error. */
   private[graft] def readManifest(
       store: TableStore, name: String): Option[(IvfManifest, Int)] =
-    store.currentVersion(manifestTable(name)).map { v =>
-      val f = java.nio.file.Paths.get(store.pathAt(manifestTable(name), v))
-        .resolve(manifestFile)
-      (decodeManifest(new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)), v)
+    IndexTier.readManifest(store, manifestTable(name), "index manifest") { f =>
+      IvfManifest(f.int("centroids_v"), f.int("vectors_v"), f.pin("qvectors_v"),
+        f.pin("pq_codebook_v"), f.pin("pq_codes_v"), f.long("last_batch_id"),
+        f.pin("ovl_vectors_v"), f.pin("ovl_qvectors_v"), f.pin("ovl_pq_codes_v"))
     }
 
   private[operators] def requireManifest(
@@ -164,51 +134,8 @@ object IvfIndex {
     readManifest(store, name).getOrElse(throw new IllegalStateException(
       s"index $name has no manifest — build it first"))
 
-  /** The single commit point: swap the manifest (CAS against the version
-    * the caller read). Member versions committed before this call are
-    * invisible until it succeeds. */
-  private[operators] def commitManifest(
-      store: TableStore, name: String, m: IvfManifest,
-      expected: Option[Int]): Unit =
-    store.commitFile(manifestTable(name), manifestFile,
-      encodeManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      expected)
-
   private def withIndexLock[A](store: TableStore, name: String)(body: => A): A =
     OverlayLock.withLock(store, "ivf", name)(body)
-
-  /** Roll every member table back to its manifest pin, discarding the
-    * orphan successors a crashed writer left — every mutation starts
-    * here so its member commits CAS cleanly against the pins. */
-  private def rollbackAll(store: TableStore, name: String, m: IvfManifest): Unit = {
-    OverlayLock.rollbackIfAhead(store, centroidsTable(name), m.centroids)
-    OverlayLock.rollbackIfAhead(store, vectorsTable(name), m.vectors)
-    m.qvectors.foreach(OverlayLock.rollbackIfAhead(store, qVectorsTable(name), _))
-    m.pqCodebook.foreach(
-      OverlayLock.rollbackIfAhead(store, PqIndex.codebookTableName(name), _))
-    m.pqCodes.foreach(
-      OverlayLock.rollbackIfAhead(store, PqIndex.codesTableName(name), _))
-    m.ovlVectors.foreach(OverlayLock.rollbackIfAhead(store, ovlVectorsTable(name), _))
-    m.ovlQvectors.foreach(OverlayLock.rollbackIfAhead(store, ovlQVectorsTable(name), _))
-    m.ovlPqCodes.foreach(OverlayLock.rollbackIfAhead(store, ovlPqCodesTable(name), _))
-  }
-
-  /** base ∖ overlay-ids ∪ overlay — the read-time merge every tier serves
-    * through: an id in the overlay shadows its base row (the replaced
-    * revision), ids only in the overlay are inserts. The overlay is
-    * compaction-bounded (≤ [[OvlFrac]] of the base + one batch), so its
-    * id set broadcasts into the anti-join — the merge costs the base scan
-    * it was already paying plus one broadcast, never a shuffle. */
-  private def mergedWithOverlay(
-      spark: SparkSession, store: TableStore, base: DataFrame,
-      ovlTable: String, ovlPin: Option[Int]): DataFrame =
-    ovlPin match {
-      case None => base
-      case Some(pin) =>
-        val ovl = store.snapshotAt(spark, ovlTable, pin)
-        base.join(broadcast(ovl.select(col("id")).distinct()), Seq("id"), "left_anti")
-          .unionByName(ovl)
-    }
 
   // ------------------------------------------------------------------ build
 
@@ -236,14 +163,14 @@ object IvfIndex {
       OverlayLock.retryOnConflict() {
         val spark = df.sparkSession
         val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => rollbackAll(store, name, m) }
+        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
         val fitted = KMeans.fit(df, idCol, vecCol, nCells, iterations)
         val cv = store.write(fitted, centroidsTable(name))
         // float tier CELL-bucketed so probes read only the probed cells'
         // buckets ([[vectorsForCells]])
         val vv = store.writeBucketed(
           assign(df, idCol, vecCol, centroidVectorsOf(fitted)), vectorsTable(name),
-          BucketSpec(vecBuckets, Seq("cell"), sortCols = Seq("cell")),
+          IndexTier.keyed(vecBuckets, "cell"),
           store.currentVersion(vectorsTable(name)))
         // sibling tiers re-derive from the COMMITTED new float rows (a
         // parquet read — the assignment pass is never recomputed per tier)
@@ -265,7 +192,7 @@ object IvfIndex {
         // the admission gate survives a rebuild: already-admitted batch
         // ids stay admitted, so a live admitStream resumes cleanly
         // against the refitted family
-        commitManifest(store, name, IvfManifest(cv, vv, qv, cbPin, pcV,
+        IndexTier.commitManifest(store, manifestTable(name), IvfManifest(cv, vv, qv, cbPin, pcV,
           prev.map(_._1.lastBatchId).getOrElse(-1L)), prev.map(_._2))
         fitted
       }
@@ -292,8 +219,8 @@ object IvfIndex {
   /** The served float tier: base ∖ overlay-ids ∪ overlay. */
   private[operators] def vectorsAt(
       spark: SparkSession, store: TableStore, name: String, m: IvfManifest): DataFrame =
-    mergedWithOverlay(spark, store, baseVectorsAt(spark, store, name, m),
-      ovlVectorsTable(name), m.ovlVectors)
+    IndexTier.mergedWithOverlay(spark, store, baseVectorsAt(spark, store, name, m),
+      ovlVectorsTable(name), m.ovlVectors, "id")
 
   /** The base float tier ONLY — the linked-append target; serving always
     * goes through [[vectorsAt]]. */
@@ -307,27 +234,14 @@ object IvfIndex {
     * base — bytes read ∝ the probed cells' buckets, never the corpus —
     * with the compaction-bounded revision overlay merged in unpruned
     * (rows outside the probed cells are dropped by the cell equi-join,
-    * so results are exact). Falls back to the full served read on a
-    * legacy plain layout. */
+    * so results are exact). A legacy plain layout serves the full read. */
   private def vectorsForCells(
       spark: SparkSession, store: TableStore, name: String, m: IvfManifest,
       probeCellRows: DataFrame): DataFrame =
-    store.bucketSpec(vectorsTable(name)) match {
-      case None => vectorsAt(spark, store, name, m) // legacy plain layout
-      case Some(spec) =>
-        val touched = probeCellRows.select(spec.bucketColumn.as("_b"))
-          .queryExecution.toRdd.mapPartitions { it =>
-            val s0 = new scala.collection.mutable.HashSet[Int]
-            it.foreach(r => s0.add(r.getInt(0)))
-            s0.iterator
-          }.collect().distinct.toSeq
-        val raw = store.snapshotRawAt(spark, vectorsTable(name), m.vectors)
-        val base = (if (touched.isEmpty) raw.filter(lit(false))
-          else raw.filter(col("_bucket").isin(touched.map(Integer.valueOf): _*)))
-          .drop("_bucket")
-        mergedWithOverlay(spark, store, base,
-          ovlVectorsTable(name), m.ovlVectors)
-    }
+    IndexTier.mergedWithOverlay(spark, store,
+      IndexTier.prunedAt(spark, store, vectorsTable(name), m.vectors,
+        IndexTier.touchedBuckets(store, vectorsTable(name), m.vectors, probeCellRows)),
+      ovlVectorsTable(name), m.ovlVectors, "id")
 
   private def centroidVectorsOf(fittedLongForm: DataFrame): DataFrame =
     KMeans.centroidVectors(fittedLongForm)
@@ -396,7 +310,7 @@ object IvfIndex {
       store: TableStore, name: String, stamp: Option[Long]): Boolean = {
     val (m, mv) = requireManifest(store, name)
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     // pinned: three tier commits below each consume the assignment —
     // unpinned, every tier would re-run the batch × broadcast(centroids)
     // argmax chain end-to-end (the PostingsIndex.appendStamped hygiene)
@@ -450,7 +364,7 @@ object IvfIndex {
       val vv = results.head.asInstanceOf[Int]
       val qv = m.qvectors.map(_ => results(1).asInstanceOf[Int])
       val pcV = m.pqCodes.map(_ => results.last.asInstanceOf[Int])
-      commitManifest(store, name,
+      IndexTier.commitManifest(store, manifestTable(name),
         m.copy(vectors = vv, qvectors = qv, pqCodes = pcV,
           lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
       true
@@ -636,7 +550,7 @@ object IvfIndex {
       store: TableStore, name: String, stamp: Option[Long]): (Boolean, Long) = {
     val (m, mv) = requireManifest(store, name)
     if (stamp.exists(_ <= m.lastBatchId)) return (false, 0L)
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     val assigned = assign(batch, idCol, vecCol, centroidsAt(spark, store, name, m))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -648,33 +562,16 @@ object IvfIndex {
       // fold-vs-overlay decided on the PRE-batch overlay size (two file-
       // metadata reads): past the policy bound this batch rides the
       // amortized fold into the base; below it, only overlay bytes commit
-      val overlayFull = m.ovlVectors.exists { pin =>
-        store.byteSizeAt(ovlVectorsTable(name), pin) > math.max(
-          OvlFloorBytes.toDouble,
-          OvlFrac * store.byteSizeAt(vectorsTable(name), m.vectors))
-      }
+      val overlayFull = m.ovlVectors.exists(pin => IndexTier.foldDue(
+        store.byteSizeAt(ovlVectorsTable(name), pin),
+        store.byteSizeAt(vectorsTable(name), m.vectors)))
       val next =
         if (overlayFull) foldTiers(spark, store, name, m, Some((assigned, batchIds)))
         else {
           // overlay rewrite: old overlay minus the batch's ids plus the
-          // batch — at most one row per id, so the read-time merge needs
-          // no recency bookkeeping. The overlay is policy-bounded small;
-          // rewriting it wholesale is O(overlay), not O(corpus).
-          def ovlWrite(
-              table: String, pin: Option[Int], rows: DataFrame): Int = {
-            val merged = pin match {
-              case Some(p) => store.snapshotAt(spark, table, p)
-                .join(batchIds, Seq("id"), "left_anti").unionByName(rows)
-              case None => rows
-            }
-            // few files per version: each batch rewrites the overlay, so
-            // inheriting the batch's shuffle partitioning would creep
-            // file counts for no scan benefit
-            pin match {
-              case Some(p) => store.write(merged.coalesce(8), table, Some(p))
-              case None => store.write(merged.coalesce(8), table)
-            }
-          }
+          // batch ([[IndexTier.overlayWrite]])
+          def ovlWrite(table: String, pin: Option[Int], rows: DataFrame): Int =
+            IndexTier.overlayWrite(spark, store, table, pin, batchIds, "id", rows)
           // materialize the pinned assignment once, then rewrite the
           // three independent overlay members concurrently (different
           // tables, no shared CAS — the [[OverlayLock.inParallel]]
@@ -702,7 +599,7 @@ object IvfIndex {
           m.copy(ovlVectors = Some(results.head.asInstanceOf[Int]),
             ovlQvectors = oqv, ovlPqCodes = opc)
         }
-      commitManifest(store, name,
+      IndexTier.commitManifest(store, manifestTable(name),
         next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
       (true, replaced)
     } finally assigned.unpersist()
@@ -731,7 +628,8 @@ object IvfIndex {
       foldOne(vectorsAt(spark, store, name, m),
         _.select(col("id"), col("v"), col("cell"))),
       vectorsTable(name),
-      OverlayLock.grownSpec(spark, vecSpec(store, name),
+      OverlayLock.grownSpec(spark,
+        IndexTier.layout(store, vectorsTable(name), VecBuckets, "cell"),
         store.byteSizeAt(vectorsTable(name), m.vectors) +
           m.ovlVectors.map(store.byteSizeAt(ovlVectorsTable(name), _))
             .getOrElse(0L)),
@@ -768,9 +666,9 @@ object IvfIndex {
         val (m, mv) = requireManifest(store, name)
         if (m.ovlVectors.isDefined || m.ovlQvectors.isDefined ||
             m.ovlPqCodes.isDefined) {
-          rollbackAll(store, name, m)
-          commitManifest(store, name, foldTiers(spark, store, name, m, None),
-            Some(mv))
+          IndexTier.rollbackAll(store, m.tiers(name))
+          IndexTier.commitManifest(store, manifestTable(name),
+            foldTiers(spark, store, name, m, None), Some(mv))
         }
       }
     }
@@ -835,7 +733,7 @@ object IvfIndex {
     withIndexLock(store, name) {
       OverlayLock.retryOnConflict() {
         val (m, mv) = requireManifest(store, name)
-        rollbackAll(store, name, m)
+        IndexTier.rollbackAll(store, m.tiers(name))
         val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
         // a takedown rewrites every corpus-sized tier anyway, so the
         // revision overlay folds in for free: each tier commits its
@@ -846,7 +744,8 @@ object IvfIndex {
         val before = stored.count()
         val keptN = kept.count()
         val vv = store.writeBucketed(kept, vectorsTable(name),
-          vecSpec(store, name), Some(m.vectors))
+          IndexTier.layout(store, vectorsTable(name), VecBuckets, "cell"),
+          Some(m.vectors))
         val qv = m.qvectors.map { qPin =>
           val qStored = qVectorsAt(spark, store, name, m)
           store.write(qStored.join(drop, qStored("id") === col("_rm_id"), "left_anti"),
@@ -857,7 +756,7 @@ object IvfIndex {
           store.write(codes.join(drop, codes("id") === col("_rm_id"), "left_anti"),
             PqIndex.codesTableName(name), Some(pin))
         }
-        commitManifest(store, name,
+        IndexTier.commitManifest(store, manifestTable(name),
           m.copy(vectors = vv, qvectors = qv, pqCodes = pcV,
             ovlVectors = None, ovlQvectors = None, ovlPqCodes = None), Some(mv))
         before - keptN
@@ -963,7 +862,7 @@ object IvfIndex {
     withIndexLock(store, name) {
       OverlayLock.retryOnConflict() {
         val (m, mv) = requireManifest(store, name)
-        rollbackAll(store, name, m)
+        IndexTier.rollbackAll(store, m.tiers(name))
         // siblings re-derive from the SERVED float view (base ∪ overlay),
         // so each rebuilt sibling is complete and its own overlay clears;
         // the float overlay itself is untouched — it keeps shadowing the
@@ -983,7 +882,7 @@ object IvfIndex {
           case _ => None
         }
         if (qv.isDefined || pcV.isDefined)
-          commitManifest(store, name,
+          IndexTier.commitManifest(store, manifestTable(name),
             m.copy(qvectors = qv.orElse(m.qvectors),
               pqCodes = pcV.orElse(m.pqCodes),
               ovlQvectors = if (qv.isDefined) None else m.ovlQvectors,
@@ -1036,7 +935,7 @@ object IvfIndex {
         val qv = store.write(
           stored.select(col("id"), col("cell"), scale.as("scale"), qvc.as("qv")),
           qVectorsTable(name))
-        commitManifest(store, name,
+        IndexTier.commitManifest(store, manifestTable(name),
           m.copy(qvectors = Some(qv), ovlQvectors = None), Some(mv))
       }
     }
@@ -1050,22 +949,22 @@ object IvfIndex {
 
   private def qVectorsAt(
       spark: SparkSession, store: TableStore, name: String, m: IvfManifest): DataFrame =
-    mergedWithOverlay(spark, store,
+    IndexTier.mergedWithOverlay(spark, store,
       store.snapshotAt(spark, qVectorsTable(name),
         m.qvectors.getOrElse(throw new IllegalStateException(
           s"index $name has no int8 tier — run quantizeStored first"))),
-      ovlQVectorsTable(name), m.ovlQvectors)
+      ovlQVectorsTable(name), m.ovlQvectors, "id")
 
   /** The served PQ-codes tier (base ∖ overlay-ids ∪ overlay) — the read
     * every PQ consumer shares ([[PqIndex.topKRefined]], [[remove]],
     * compaction). */
   private[operators] def pqCodesAt(
       spark: SparkSession, store: TableStore, name: String, m: IvfManifest): DataFrame =
-    mergedWithOverlay(spark, store,
+    IndexTier.mergedWithOverlay(spark, store,
       store.snapshotAt(spark, PqIndex.codesTableName(name),
         m.pqCodes.getOrElse(throw new IllegalStateException(
           s"index $name has no PQ tier — run PqIndex.buildStored first"))),
-      ovlPqCodesTable(name), m.ovlPqCodes)
+      ovlPqCodesTable(name), m.ovlPqCodes, "id")
 
   /** Dequantized view `(id, cell, v)` of [[quantizedVectors]] — the scoring
     * input. A nonzero vector's max component quantizes to ±127, so the
@@ -1105,7 +1004,7 @@ object IvfIndex {
     val probes = probeCells(q, probeCentroidsOf(centroidsAt(spark, store, name, m)),
         nProbe)
       .select(col("q_id"), col("q_v"), col("q_nrm"), col("cell"))
-    store.bucketSpec(vectorsTable(name)) match {
+    store.bucketSpecAt(vectorsTable(name), m.vectors) match {
       case None => // legacy plain layout: the old full-read join
         topKFromProbes(probes, vectorsAt(spark, store, name, m), k)
       case Some(_) =>

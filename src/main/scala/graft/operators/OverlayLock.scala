@@ -1,8 +1,12 @@
 package graft.operators
 
 /** Shared concurrency discipline for multi-table OVERLAYS — families of
-  * member tables whose visibility is governed by one pinned manifest
-  * ([[CorpusProfile]]'s sketch tiers, [[IvfIndex]]'s float/int8/PQ tiers).
+  * member tables whose visibility is governed by one pinned manifest:
+  * every persisted index family ([[SignatureIndex]], [[PerceptualIndex]],
+  * [[FrameIndex]], [[PostingsIndex]], [[IvfIndex]]) and [[CorpusProfile]].
+  * Their manifests and bucket-pruned tier reads live in ONE place,
+  * [[IndexTier]]; this object holds the locking, retry, parallel-commit
+  * and compaction policies those families share.
   *
   * Member tables commit as independent per-table CAS swaps, so two
   * in-process writers racing the same overlay can SPLIT the wins — each
@@ -94,7 +98,7 @@ private[graft] object OverlayLock {
       fresh: org.apache.spark.sql.DataFrame,
       maxFilesPerBucket: Int = 8): Int = {
     import org.apache.spark.sql.functions.col
-    val spec = store.bucketSpec(table).getOrElse(throw new IllegalStateException(
+    val spec = store.bucketSpecAt(table, pin).getOrElse(throw new IllegalStateException(
       s"$table is not bucketed — use appendOrCompact"))
     // rebucket-on-append: an APPEND-ONLY tier never passes through an
     // amortized fold, so [[grownSpec]]'s per-bucket byte invariant must
@@ -140,8 +144,11 @@ private[graft] object OverlayLock {
     * stacks fixed job latency onto every micro-batch drain; different
     * member tables never share a CAS or a commit lock, so their staging
     * writes compose. Waits for ALL tasks to settle before returning or
-    * throwing (first failure wins), so a failed attempt never leaves a
-    * straggler commit racing the caller's rollback-and-retry. */
+    * throwing, so a failed attempt never leaves a straggler commit racing
+    * the caller's rollback-and-retry. When several tasks fail, a
+    * [[VersionConflictException]] is rethrown in preference to any other
+    * error (else the first failure): every retry loop catches only that
+    * exception, so a conflict must not hide behind an incidental error. */
   private[graft] def inParallel(tasks: Seq[() => Any]): Seq[Any] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -149,7 +156,9 @@ private[graft] object OverlayLock {
     implicit val ec: scala.concurrent.ExecutionContext = commitPool
     val settled = Await.result(
       Future.sequence(tasks.map(t => Future(Try(t())))), Duration.Inf)
-    settled.collectFirst { case Failure(e) => e }.foreach(e => throw e)
+    val failures = settled.collect { case Failure(e) => e }
+    failures.find(_.isInstanceOf[VersionConflictException])
+      .orElse(failures.headOption).foreach(e => throw e)
     settled.map(_.get)
   }
 

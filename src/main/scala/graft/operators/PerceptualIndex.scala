@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted 64-bit perceptual-signature index — the pixel/audio-side
@@ -73,7 +73,6 @@ object PerceptualIndex {
   // replacement drain from rewriting the whole sigs member
   private def rmTable(name: String) = s"${name}_rm"
   private def manifestTable(name: String) = s"${name}_manifest"
-  private val manifestFile = "manifest.json"
 
   /** Default STARTING bucket counts: deliberately small — a screen's
     * pruned read opens one file per touched bucket, so oversized counts
@@ -84,11 +83,6 @@ object PerceptualIndex {
     * sizing. */
   val SigBuckets: Int = 4
   val BandBuckets: Int = 8
-
-  /** Tombstone/delta-compaction policy — [[IvfIndex.OvlFrac]]'s rationale
-    * on the retired-id set's (and memtable's) bytes vs the sigs member's. */
-  private val RmFloorBytes: Long = IvfIndex.OvlFloorBytes
-  private val RmFrac: Double = IvfIndex.OvlFrac
 
   /** Sigs pin + the screening budget + the admission gate. `hasQuality`
     * marks a KEEPER family ([[buildWithQuality]]): the sigs member
@@ -101,186 +95,32 @@ object PerceptualIndex {
   private[graft] final case class PercManifest(
       sigs: Int, maxHamming: Int, lastBatchId: Long = -1L,
       hasQuality: Boolean = false, rmSigs: Option[Int] = None,
-      band: Option[Int] = None, dlt: Option[Int] = None)
-
-  private def encodeManifest(m: PercManifest): String =
-    s"""{"sigs_v":${m.sigs},"max_hamming":${m.maxHamming},""" +
-      s""""has_quality":${if (m.hasQuality) 1 else 0},""" +
-      s""""rm_sigs_v":${m.rmSigs.getOrElse(-1)},""" +
-      s""""band_v":${m.band.getOrElse(-1)},""" +
-      s""""dlt_v":${m.dlt.getOrElse(-1)},""" +
-      s""""last_batch_id":${m.lastBatchId}}"""
-
-  private def decodeManifest(s: String): PercManifest = {
-    def field(k: String): Long = {
-      val i = s.indexOf("\"" + k + "\":")
-      require(i >= 0, s"perceptual-index manifest missing $k: $s")
-      val from = i + k.length + 3
-      val end = s.indexWhere(c => c == ',' || c == '}', from)
-      s.substring(from, end).trim.toLong
-    }
-    // absent = pre-quality/pre-tombstone/pre-projection manifest (older
-    // persisted index)
-    def optAbsent(k: String): Option[Int] =
-      if (s.indexOf("\"" + k + "\":") < 0) None
-      else { val v = field(k); if (v < 0) None else Some(v.toInt) }
-    val hasQ = s.indexOf("\"has_quality\":") >= 0 && field("has_quality") != 0L
-    PercManifest(field("sigs_v").toInt, field("max_hamming").toInt,
-      field("last_batch_id"), hasQ, optAbsent("rm_sigs_v"),
-      optAbsent("band_v"), optAbsent("dlt_v"))
+      band: Option[Int] = None, dlt: Option[Int] = None) extends IndexTier.Manifest {
+    def fields: Seq[(String, Any)] = Seq("sigs_v" -> sigs,
+      "max_hamming" -> maxHamming, "has_quality" -> (if (hasQuality) 1 else 0),
+      "rm_sigs_v" -> rmSigs.getOrElse(-1), "band_v" -> band.getOrElse(-1),
+      "dlt_v" -> dlt.getOrElse(-1), "last_batch_id" -> lastBatchId)
+    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
+      sigsTable(name) -> Some(sigs), bandTable(name) -> band,
+      rmTable(name) -> rmSigs, deltaTable(name) -> dlt)
   }
 
+  /** Absent keys predate the quality/tombstone/projection tiers (older
+    * persisted index): a plain family, no tombstones, the legacy
+    * full-derive layout. */
   private[graft] def readManifest(
       store: TableStore, name: String): Option[(PercManifest, Int)] =
-    store.currentVersion(manifestTable(name)).map { v =>
-      val f = java.nio.file.Paths.get(store.pathAt(manifestTable(name), v))
-        .resolve(manifestFile)
-      (decodeManifest(new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)), v)
+    IndexTier.readManifest(store, manifestTable(name), "perceptual-index manifest") { f =>
+      PercManifest(f.int("sigs_v"), f.int("max_hamming"), f.long("last_batch_id"),
+        f.flag("has_quality"), f.pin("rm_sigs_v"), f.pin("band_v"), f.pin("dlt_v"))
     }
 
   private def requireManifest(store: TableStore, name: String): (PercManifest, Int) =
     readManifest(store, name).getOrElse(throw new IllegalStateException(
       s"perceptual index $name has no manifest — build it first"))
 
-  private def commitManifest(
-      store: TableStore, name: String, m: PercManifest, expected: Option[Int]): Unit =
-    store.commitFile(manifestTable(name), manifestFile,
-      encodeManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      expected)
-
   private def withLock[A](store: TableStore, name: String)(body: => A): A =
     OverlayLock.withLock(store, "perc", name)(body)
-
-  private def rollbackAll(store: TableStore, name: String, m: PercManifest): Unit = {
-    OverlayLock.rollbackIfAhead(store, sigsTable(name), m.sigs)
-    m.band.foreach(OverlayLock.rollbackIfAhead(store, bandTable(name), _))
-    m.rmSigs.foreach(OverlayLock.rollbackIfAhead(store, rmTable(name), _))
-    m.dlt.foreach(OverlayLock.rollbackIfAhead(store, deltaTable(name), _))
-  }
-
-  // ------------------------------------------------------------- projections
-
-  /** The chunk columns of [[Dedup.hammingBandedPairs]]' pigeonhole — the
-    * SAME bit slicing, so pruned candidates equal the ad-hoc screen's. */
-  private def chunkCols(maxHamming: Int): Seq[Column] = {
-    val chunks = maxHamming + 1
-    val bitsPer = 64 / chunks
-    (0 until chunks).map(c =>
-      shiftrightunsigned(col("sig"), c * bitsPer).bitwiseAND(lit((1L << bitsPer) - 1)))
-  }
-
-  /** The banding projection `(…, chunk, value)` of a sigs frame — the
-    * persisted tier's rows, also derived IN-PLAN from the small delta
-    * member so screens see base ∪ delta exactly as a fold-merged tier. */
-  private def bandedOf(sigs: DataFrame, maxHamming: Int): DataFrame =
-    sigs.select(col("*"),
-      posexplode(array(chunkCols(maxHamming): _*)).as(Seq("chunk", "value")))
-
-  private def sigSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(sigsTable(name)).getOrElse(
-      BucketSpec(SigBuckets, Seq("id"), sortCols = Seq("id")))
-  private def bandSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(bandTable(name)).getOrElse(
-      BucketSpec(BandBuckets, Seq("chunk", "value"), sortCols = Seq("chunk", "value")))
-
-  /** The buckets `keys` can hash into under `spec` — ONE narrow job,
-    * bounded by nBuckets (the [[SignatureIndex.touchedBuckets]] probe). */
-  private def touchedBuckets(spec: BucketSpec, keys: DataFrame): Seq[Int] =
-    keys.select(spec.bucketColumn.as("_b"))
-      .queryExecution.toRdd.mapPartitions { it =>
-        val s = new scala.collection.mutable.HashSet[Int]
-        it.foreach(r => s.add(r.getInt(0)))
-        s.iterator
-      }.collect().distinct.toSeq
-
-  /** BOTH tiers' touched buckets from ONE narrow job over the (pinned)
-    * batch's banding projection — id-buckets and (chunk, value)-cell
-    * buckets fused, one probe round-trip per drain instead of two (the
-    * [[SignatureIndex.touchedBucketsPair]] discipline). Probing from the
-    * PRE-anti-join batch is superset-safe: wider bucket lists read whole
-    * extra cells, unprobed cells produce no candidate pairs, and per-cell
-    * hot counts are exact for every read cell either way. */
-  private def touchedBucketsPair(
-      specA: BucketSpec, specB: BucketSpec, rows: DataFrame): (Seq[Int], Seq[Int]) = {
-    val both = rows.select(specA.bucketColumn.as("_a"), specB.bucketColumn.as("_b"))
-      .queryExecution.toRdd.mapPartitions { it =>
-        val a = new scala.collection.mutable.HashSet[Int]
-        val b = new scala.collection.mutable.HashSet[Int]
-        it.foreach { r => a.add(r.getInt(0)); b.add(r.getInt(1)) }
-        Iterator.single((a.toArray, b.toArray))
-      }.collect()
-    (both.flatMap(_._1).distinct.toSeq, both.flatMap(_._2).distinct.toSeq)
-  }
-
-  /** ONE narrow count (per-partition size + driver sum); also
-    * materializes the frame's cache pin. */
-  private def narrowCount(df: DataFrame): Long =
-    df.select(lit(1).as("_one")).queryExecution.toRdd
-      .mapPartitions { it =>
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }
-        Iterator.single(n)
-      }.collect().sum
-
-  /** A member tier PRUNED to `touched` buckets (directory-level pruning —
-    * unread buckets are never opened). */
-  private def prunedAt(
-      spark: SparkSession, store: TableStore, table: String, pin: Int,
-      touched: Seq[Int]): DataFrame = {
-    val raw = store.snapshotRawAt(spark, table, pin)
-    (if (touched.isEmpty) raw.filter(lit(false))
-     else raw.filter(col("_bucket").isin(touched.map(Integer.valueOf): _*)))
-      .drop("_bucket")
-  }
-
-  /** The delta member's full (small) frame, when one is pinned. */
-  private def deltaFrame(
-      spark: SparkSession, store: TableStore, name: String,
-      m: PercManifest): Option[DataFrame] =
-    m.dlt.map(dv => store.snapshotAt(spark, deltaTable(name), dv))
-
-  /** A tier PRUNED to `touched` buckets INCLUDING the delta member's
-    * contribution, filtered by the identical bucket rule — readers see
-    * precisely the rows a fold-merged tier would hold in those buckets
-    * (hot-cell exactness included: a cell's base and delta rows share one
-    * bucket id). */
-  private def prunedWithDelta(
-      spark: SparkSession, store: TableStore, name: String, m: PercManifest,
-      table: String, pin: Int, spec: BucketSpec, touched: Seq[Int],
-      fromDelta: DataFrame => DataFrame): DataFrame = {
-    // legacy plain layout (tier written unbucketed by an older version):
-    // no `_bucket` column exists to prune on, and the default spec's
-    // bucket rule does not describe the stored files — serve the FULL
-    // pinned read (∪ the unfiltered delta projection) until the next
-    // full rewrite upgrades the layout; pruning is an optimization, so
-    // the full read is result-identical
-    if (store.bucketSpec(table).isEmpty) {
-      val base = store.snapshotAt(spark, table, pin)
-      return deltaFrame(spark, store, name, m)
-        .map(d => base.unionByName(fromDelta(d))).getOrElse(base)
-    }
-    val base = prunedAt(spark, store, table, pin, touched)
-    deltaFrame(spark, store, name, m) match {
-      case None => base
-      case Some(d) =>
-        val derived = fromDelta(d)
-        base.unionByName(
-          if (touched.isEmpty) derived.filter(lit(false))
-          else derived.filter(
-            spec.bucketColumn.isin(touched.map(Integer.valueOf): _*)))
-    }
-  }
-
-  /** The broadcast tombstone-id subtraction every served read applies. */
-  private def minusRm(
-      spark: SparkSession, store: TableStore, name: String,
-      m: PercManifest)(df: DataFrame): DataFrame =
-    m.rmSigs match {
-      case None => df
-      case Some(pin) => df.join(broadcast(
-          store.snapshotAt(spark, rmTable(name), pin).select(col("id"))),
-        Seq("id"), "left_anti")
-    }
 
   /** Indexed sigs rows of the batch's id-buckets (base ∪ delta, NO
     * tombstone subtraction — a retired id may not re-enter under its own
@@ -289,15 +129,15 @@ object PerceptualIndex {
       spark: SparkSession, store: TableStore, name: String, m: PercManifest,
       ids: DataFrame): DataFrame =
     indexedSigsForBuckets(spark, store, name, m,
-      touchedBuckets(sigSpec(store, name), ids))
+      IndexTier.touchedBuckets(store, sigsTable(name), m.sigs, ids))
 
   /** [[indexedSigsForIds]] with the bucket probe already done (the
     * fused-probe callers pass their precomputed id-bucket list). */
   private def indexedSigsForBuckets(
       spark: SparkSession, store: TableStore, name: String, m: PercManifest,
       touched: Seq[Int]): DataFrame =
-    prunedWithDelta(spark, store, name, m, sigsTable(name), m.sigs,
-      sigSpec(store, name), touched, identity)
+    IndexTier.prunedWithDelta(spark, store, sigsTable(name), m.sigs, touched,
+      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), identity)
 
   /** The SERVED signature corpus: (base ∪ delta) ∖ tombstoned ids — the
     * manifest-consistent view folds and full reads derive from. */
@@ -305,8 +145,9 @@ object PerceptualIndex {
       spark: SparkSession, store: TableStore, name: String,
       m: PercManifest): DataFrame = {
     val base = store.snapshotAt(spark, sigsTable(name), m.sigs)
-    minusRm(spark, store, name, m)(
-      deltaFrame(spark, store, name, m).map(base.unionByName(_)).getOrElse(base))
+    IndexTier.minusRm(spark, store, rmTable(name), m.rmSigs)(
+      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt)
+        .map(base.unionByName(_)).getOrElse(base))
   }
 
   /** The SERVED banding projection restricted to the batch's probe cells:
@@ -321,14 +162,14 @@ object PerceptualIndex {
       batchBanded: DataFrame, cellTouched: Option[Seq[Int]] = None): DataFrame =
     m.band match {
       case None => // legacy layout: derive from the full served view
-        bandedOf(servedSigsAt(spark, store, name, m), m.maxHamming)
+        IndexTier.bandedOf(servedSigsAt(spark, store, name, m), m.maxHamming)
       case Some(pin) =>
-        val spec = bandSpec(store, name)
-        minusRm(spark, store, name, m)(
-          prunedWithDelta(spark, store, name, m, bandTable(name), pin, spec,
-            cellTouched.getOrElse(touchedBuckets(spec,
+        IndexTier.minusRm(spark, store, rmTable(name), m.rmSigs)(
+          IndexTier.prunedWithDelta(spark, store, bandTable(name), pin,
+            cellTouched.getOrElse(IndexTier.touchedBuckets(store, bandTable(name), pin,
               batchBanded.select(col("chunk"), col("value")))),
-            d => bandedOf(d, m.maxHamming)))
+            IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt),
+            d => IndexTier.bandedOf(d, m.maxHamming)))
     }
 
   // -------------------------------------------------------- pruned screens
@@ -347,7 +188,7 @@ object PerceptualIndex {
       batch: DataFrame, maxBucketSize: Int,
       carryQ: Boolean, cellTouched: Option[Seq[Int]] = None)(
       implicit caches: CacheScope): DataFrame = {
-    val sb = caches.pin(bandedOf(batch.select(col("id"), col("sig")), m.maxHamming))
+    val sb = caches.pin(IndexTier.bandedOf(batch.select(col("id"), col("sig")), m.maxHamming))
     val storedCols =
       if (carryQ) Seq(col("id"), col("sig"), col("q"), col("chunk"), col("value"))
       else Seq(col("id"), col("sig"), col("chunk"), col("value"))
@@ -407,13 +248,12 @@ object PerceptualIndex {
       sigBuckets: Int, bandBuckets: Int, expectedSigs: Option[Int],
       expectedBand: Option[Int]): (Int, Int) = {
     val sv = store.writeBucketed(rows, sigsTable(name),
-      BucketSpec(sigBuckets, Seq("id"), sortCols = Seq("id")), expectedSigs)
+      IndexTier.keyed(sigBuckets, "id"), expectedSigs)
     // derive the projection from the COMMITTED sigs (a parquet read) so
     // the caller's input chain runs once, not twice
     val committed = store.snapshotAt(spark, sigsTable(name), sv)
-    val bv = store.writeBucketed(bandedOf(committed, maxHamming), bandTable(name),
-      BucketSpec(bandBuckets, Seq("chunk", "value"),
-        sortCols = Seq("chunk", "value")), expectedBand)
+    val bv = store.writeBucketed(IndexTier.bandedOf(committed, maxHamming), bandTable(name),
+      IndexTier.keyed(bandBuckets, "chunk", "value"), expectedBand)
     (sv, bv)
   }
 
@@ -434,12 +274,12 @@ object PerceptualIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => rollbackAll(store, name, m) }
+        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
         val spark = sigs.sparkSession
         val (sv, bv) = buildTiers(spark, store, name, sigShape(sigs),
           maxHamming, sigBuckets, bandBuckets,
           prev.map(_._1.sigs), prev.flatMap(_._1.band))
-        commitManifest(store, name,
+        IndexTier.commitManifest(store, manifestTable(name),
           PercManifest(sv, maxHamming,
             prev.map(_._1.lastBatchId).getOrElse(-1L), band = Some(bv)),
           prev.map(_._2))
@@ -466,12 +306,12 @@ object PerceptualIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => rollbackAll(store, name, m) }
+        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
         val spark = sigs.sparkSession
         val (sv, bv) = buildTiers(spark, store, name, sigQualityShape(sigs),
           maxHamming, sigBuckets, bandBuckets,
           prev.map(_._1.sigs), prev.flatMap(_._1.band))
-        commitManifest(store, name,
+        IndexTier.commitManifest(store, manifestTable(name),
           PercManifest(sv, maxHamming,
             prev.map(_._1.lastBatchId).getOrElse(-1L), hasQuality = true,
             band = Some(bv)),
@@ -500,27 +340,13 @@ object PerceptualIndex {
     * per-file overhead from dominating tiny tiers. */
   private def foldDue(
       spark: SparkSession, store: TableStore, name: String,
-      m: PercManifest): Boolean = {
-    val floor = spark.conf.getOption("spark.graft.foldFloorBytes")
-      .map(_.toLong).getOrElse(RmFloorBytes)
-    val baseBytes = store.byteSizeAt(sigsTable(name), m.sigs)
-    val pending = m.dlt.map(store.byteSizeAt(deltaTable(name), _)).getOrElse(0L) +
-      m.rmSigs.map(store.byteSizeAt(rmTable(name), _)).getOrElse(0L)
-    pending > math.max(floor.toDouble, RmFrac * baseBytes)
-  }
-
-  /** The memtable write: commit `fresh` to the delta member as ONE plain
-    * linked append — no shuffle, no bucketing, O(batch) bytes — instead
-    * of two bucketed tier appends per drain. */
-  private def appendDelta(
-      spark: SparkSession, store: TableStore, name: String, m: PercManifest,
-      fresh: DataFrame): Int =
-    m.dlt match {
-      case Some(pin) => OverlayLock.appendOrCompact(store, deltaTable(name), pin,
-        store.snapshotAt(spark, deltaTable(name), pin), fresh.coalesce(4))
-      case None => store.write(fresh.coalesce(4), deltaTable(name),
-        store.currentVersion(deltaTable(name)))
-    }
+      m: PercManifest): Boolean =
+    IndexTier.foldDue(
+      m.dlt.map(store.byteSizeAt(deltaTable(name), _)).getOrElse(0L) +
+        m.rmSigs.map(store.byteSizeAt(rmTable(name), _)).getOrElse(0L),
+      store.byteSizeAt(sigsTable(name), m.sigs),
+      spark.conf.getOption("spark.graft.foldFloorBytes")
+        .map(_.toLong).getOrElse(IvfIndex.OvlFloorBytes))
 
   /** Amortized fold: rewrite the SERVED view — minus this batch's
     * retirements, plus its admissions — into both bucketed tiers
@@ -550,10 +376,13 @@ object PerceptualIndex {
         .getOrElse(0L) + grow * (m.maxHamming + 1)
       val Seq(sv, bv) = OverlayLock.inParallel(Seq(
         () => store.writeBucketed(kept, sigsTable(name),
-          OverlayLock.grownSpec(spark2, sigSpec(store, name), sigBytes),
+          OverlayLock.grownSpec(spark2,
+            IndexTier.layout(store, sigsTable(name), SigBuckets, "id"), sigBytes),
           Some(m.sigs)),
-        () => store.writeBucketed(bandedOf(kept, m.maxHamming), bandTable(name),
-          OverlayLock.grownSpec(spark2, bandSpec(store, name), bandBytes),
+        () => store.writeBucketed(IndexTier.bandedOf(kept, m.maxHamming), bandTable(name),
+          OverlayLock.grownSpec(spark2,
+            IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
+            bandBytes),
           m.band.orElse(
             store.currentVersion(bandTable(name)))))).map(_.asInstanceOf[Int])
       m.copy(sigs = sv, band = Some(bv), rmSigs = None, dlt = None)
@@ -562,8 +391,8 @@ object PerceptualIndex {
 
   /** Fold a signature batch into committed state — INSERT-ONLY by id
     * (re-sent ids are no-ops), ONE plain O(batch) memtable commit
-    * ([[appendDelta]]), one manifest swap; the bucketed tiers absorb the
-    * memtable at the amortized fold. */
+    * ([[IndexTier.appendDelta]]), one manifest swap; the bucketed tiers
+    * absorb the memtable at the amortized fold. */
   def append(
       spark: SparkSession,
       sigs: DataFrame,
@@ -585,22 +414,25 @@ object PerceptualIndex {
     val (m, mv) = requireManifest(store, name)
     requirePlain(m, name, "an insert-only fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     // the screen-then-admit fold: drop batch items within the persisted
     // budget of ANY stored signature, admit the rest — both halves read
     // the SAME pinned stored version, so the loop is one atomic decision.
     // The shaped batch is pinned ONCE (probe + anti-join share one
     // materialization of the raw input chain), and the probe job collects
-    // BOTH tiers' touched buckets in one round ([[touchedBucketsPair]]).
+    // BOTH tiers' touched buckets in one round
+    // ([[IndexTier.touchedBucketsPair]]).
     implicit val outer: CacheScope = new CacheScope
     try {
     val batch0 = outer.pin(sigShape(sigs))
+    // (a legacy index has no band pin: -1 probes nothing real, and the
+    // full-derive screen ignores its cell list)
     val (idBuckets, cellBuckets) =
       if (screenFirst)
-        touchedBucketsPair(sigSpec(store, name), bandSpec(store, name),
-          bandedOf(batch0, m.maxHamming))
-      else (touchedBuckets(sigSpec(store, name), batch0.select(col("id"))),
-        Seq.empty[Int])
+        IndexTier.touchedBucketsPair(store, sigsTable(name) -> m.sigs,
+          bandTable(name) -> m.band.getOrElse(-1), IndexTier.bandedOf(batch0, m.maxHamming))
+      else (IndexTier.touchedBuckets(store, sigsTable(name), m.sigs,
+          batch0.select(col("id"))), Seq.empty[Int])
     val batch =
       if (!screenFirst) batch0
       else {
@@ -648,8 +480,9 @@ object PerceptualIndex {
       val next =
         if (foldDue(spark, store, name, m))
           foldAllTiers(spark, store, name, m, fresh, None)
-        else m.copy(dlt = Some(appendDelta(spark, store, name, m, fresh)))
-      commitManifest(store, name,
+        else m.copy(dlt = Some(IndexTier.appendDelta(spark, store,
+          deltaTable(name), m.dlt, fresh)))
+      IndexTier.commitManifest(store, manifestTable(name),
         next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
       true
     } finally if (screenFirst) batch.unpersist()
@@ -669,7 +502,7 @@ object PerceptualIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val (m, mv) = requireManifest(store, name)
-        rollbackAll(store, name, m)
+        IndexTier.rollbackAll(store, m.tiers(name))
         val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
         // the takedown rewrite serves double duty: the SERVED view minus
         // the dropped ids folds keeper tombstones + the memtable into the
@@ -682,11 +515,13 @@ object PerceptualIndex {
           val keptN = kept.count()
           val Seq(sv, bv) = OverlayLock.inParallel(Seq(
             () => store.writeBucketed(kept, sigsTable(name),
-              sigSpec(store, name), Some(m.sigs)),
-            () => store.writeBucketed(bandedOf(kept, m.maxHamming), bandTable(name),
-              bandSpec(store, name), m.band.orElse(
+              IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
+              Some(m.sigs)),
+            () => store.writeBucketed(IndexTier.bandedOf(kept, m.maxHamming), bandTable(name),
+              IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
+              m.band.orElse(
                 store.currentVersion(bandTable(name)))))).map(_.asInstanceOf[Int])
-          commitManifest(store, name,
+          IndexTier.commitManifest(store, manifestTable(name),
             m.copy(sigs = sv, band = Some(bv), rmSigs = None, dlt = None),
             Some(mv))
           before - keptN
@@ -839,7 +674,7 @@ object PerceptualIndex {
     val (m, mv) = requireManifest(store, name)
     requireQuality(m, name, "a replace-if-better fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     implicit val scope: CacheScope = new CacheScope
     // in-batch id duplicates: highest quality wins, ties to smallest sig
     // (deterministic under any partitioning); a re-sent EXISTING id is a
@@ -852,9 +687,9 @@ object PerceptualIndex {
     // buckets — the [[appendStamped]] discipline; pre-anti-join cells are
     // a superset, identical results)
     val batch0pre = scope.pin(sigQualityShape(sigs))
-    val (idBuckets, cellBuckets) = touchedBucketsPair(
-      sigSpec(store, name), bandSpec(store, name),
-      bandedOf(batch0pre.select(col("id"), col("sig")), m.maxHamming))
+    val (idBuckets, cellBuckets) = IndexTier.touchedBucketsPair(store,
+      sigsTable(name) -> m.sigs, bandTable(name) -> m.band.getOrElse(-1),
+      IndexTier.bandedOf(batch0pre.select(col("id"), col("sig")), m.maxHamming))
     val batch0 = batch0pre
       .join(indexedSigsForBuckets(spark, store, name, m, idBuckets)
         .select(col("id")), Seq("id"), "left_anti")
@@ -918,24 +753,12 @@ object PerceptualIndex {
               // materializes the pinned screen chain at full drain width
               // first, so the commits read the cache (the
               // [[FrameIndex.supersedeStamped]] note)
-              val rmEmpty = narrowCount(removedIds) == 0L
-              val results = OverlayLock.inParallel(Seq(
-                () => appendDelta(spark, store, name, m, admitted)) ++
-                (if (rmEmpty) Seq.empty
-                 else Seq(() => m.rmSigs match {
-                   case Some(p) => store.write(
-                     store.snapshotAt(spark, rmTable(name), p)
-                       .select(col("id"))
-                       .unionByName(removedIds).distinct().coalesce(4),
-                     rmTable(name), Some(p))
-                   case None => store.write(removedIds.coalesce(4),
-                     rmTable(name), store.currentVersion(rmTable(name)))
-                 })))
-              val rv = if (rmEmpty) m.rmSigs
-                else Some(results.last.asInstanceOf[Int])
-              m.copy(dlt = Some(results.head.asInstanceOf[Int]), rmSigs = rv)
+              val (dv, rv) = IndexTier.commitDeltaAndRm(spark, store,
+                deltaTable(name) -> m.dlt, rmTable(name) -> m.rmSigs, admitted,
+                removedIds, noRetired = IndexTier.narrowCount(removedIds) == 0L)
+              m.copy(dlt = Some(dv), rmSigs = rv)
             }
-          commitManifest(store, name,
+          IndexTier.commitManifest(store, manifestTable(name),
             next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)),
             Some(mv))
           true

@@ -82,12 +82,6 @@ object PostingsIndex {
   // `_termstats` was ∝ vocabulary, not ∝ batch)
   private def dltTermStatsTable(name: String) = s"${name}_termstats_dlt"
   private def manifestTable(name: String) = s"${name}_manifest"
-  private val manifestFile = "manifest.json"
-
-  /** Overlay-compaction policy — [[IvfIndex.OvlFrac]]'s rationale on the
-    * postings tier's bytes. */
-  private val OvlFloorBytes: Long = IvfIndex.OvlFloorBytes
-  private val OvlFrac: Double = IvfIndex.OvlFrac
 
   /** Default STARTING doc_id-hash bucket count for the docs tier —
     * deliberately small (a keyed read opens one file per touched
@@ -105,26 +99,11 @@ object PostingsIndex {
     * wide batch defeats row-group stats anyway). */
   val MaxIdPushdown: Long = 512L
 
-  /** The docs tier's recorded bucket layout (doc_id-hash buckets, rows
-    * SORTED by doc_id within each written file so keyed predicates
-    * prune at the row-group level); a pre-r16 plain layout upgrades to
-    * the default at its next full rewrite. */
-  private def docSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(docsTable(name)).getOrElse(
-      BucketSpec(DocBuckets, Seq("doc_id"), sortCols = Seq("doc_id")))
-
   /** Default STARTING term-hash bucket count for the termstats tier —
     * the same grow-at-fold rule as [[DocBuckets]], keyed by term so a
     * serve read prunes to the QUERY's term buckets
     * ([[termDfForTerms]]). */
   val TermBuckets: Int = 8
-
-  /** The termstats tier's recorded bucket layout (term-hash buckets,
-    * term-sorted within files); a legacy plain layout upgrades at its
-    * next full rewrite. */
-  private def termSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(termStatsTable(name)).getOrElse(
-      BucketSpec(TermBuckets, Seq("term"), sortCols = Seq("term")))
 
   /** Default STARTING term-hash bucket count for the POSTINGS tier
     * itself — the termstats treatment applied to the corpus-sized
@@ -136,13 +115,6 @@ object PostingsIndex {
     * Doc-keyed mutations (remove, the upsert fold) rewrite the tier
     * wholesale anyway, so the term layout costs them nothing extra. */
   val PostBuckets: Int = 8
-
-  /** The postings tier's recorded bucket layout; a legacy plain layout
-    * (pre-term-bucketing index) upgrades at its next full rewrite and
-    * serves full-scan reads until then. */
-  private def postSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(postingsTable(name)).getOrElse(
-      BucketSpec(PostBuckets, Seq("term"), sortCols = Seq("term")))
 
   // ---------------------------------------------------------------- manifest
 
@@ -158,36 +130,16 @@ object PostingsIndex {
       postings: Int, docs: Int, termStats: Int,
       nDocs: Long, sumDl: Long, lastBatchId: Long = -1L,
       ovlPostings: Option[Int] = None, ovlDocs: Option[Int] = None,
-      dltTermStats: Option[Int] = None)
-
-  private def encodeManifest(m: BmManifest): String =
-    s"""{"postings_v":${m.postings},"docs_v":${m.docs},""" +
-      s""""termstats_v":${m.termStats},"n_docs":${m.nDocs},""" +
-      s""""sum_dl":${m.sumDl},""" +
-      s""""ovl_postings_v":${m.ovlPostings.getOrElse(-1)},""" +
-      s""""ovl_docs_v":${m.ovlDocs.getOrElse(-1)},""" +
-      s""""dlt_termstats_v":${m.dltTermStats.getOrElse(-1)},""" +
-      s""""last_batch_id":${m.lastBatchId}}"""
-
-  private def decodeManifest(s: String): BmManifest = {
-    def field(k: String): Long = {
-      val i = s.indexOf("\"" + k + "\":")
-      require(i >= 0, s"postings manifest missing $k: $s")
-      val from = i + k.length + 3
-      val end = s.indexWhere(c => c == ',' || c == '}', from)
-      s.substring(from, end).trim.toLong
-    }
-    // overlay pins absent = pre-overlay manifest (older persisted index):
-    // empty overlay, not an error
-    def optAbsent(k: String): Option[Int] = {
-      if (s.indexOf("\"" + k + "\":") < 0) None
-      else { val v = field(k); if (v < 0) None else Some(v.toInt) }
-    }
-    BmManifest(field("postings_v").toInt, field("docs_v").toInt,
-      field("termstats_v").toInt, field("n_docs"), field("sum_dl"),
-      field("last_batch_id"),
-      optAbsent("ovl_postings_v"), optAbsent("ovl_docs_v"),
-      optAbsent("dlt_termstats_v"))
+      dltTermStats: Option[Int] = None) extends IndexTier.Manifest {
+    def fields: Seq[(String, Any)] = Seq("postings_v" -> postings,
+      "docs_v" -> docs, "termstats_v" -> termStats, "n_docs" -> nDocs,
+      "sum_dl" -> sumDl, "ovl_postings_v" -> ovlPostings.getOrElse(-1),
+      "ovl_docs_v" -> ovlDocs.getOrElse(-1),
+      "dlt_termstats_v" -> dltTermStats.getOrElse(-1), "last_batch_id" -> lastBatchId)
+    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
+      postingsTable(name) -> Some(postings), docsTable(name) -> Some(docs),
+      termStatsTable(name) -> Some(termStats), ovlPostingsTable(name) -> ovlPostings,
+      ovlDocsTable(name) -> ovlDocs, dltTermStatsTable(name) -> dltTermStats)
   }
 
   /** `(count, Σdl)` of a `(doc_id, dl, ...)` frame — one tiny aggregate,
@@ -197,66 +149,37 @@ object PostingsIndex {
     (r.getLong(0), r.getLong(1))
   }
 
+  /** Absent overlay/delta pins = a pre-overlay manifest (older persisted
+    * index): empty overlay, not an error. */
   private[graft] def readManifest(
       store: TableStore, name: String): Option[(BmManifest, Int)] =
-    store.currentVersion(manifestTable(name)).map { v =>
-      val f = java.nio.file.Paths.get(store.pathAt(manifestTable(name), v))
-        .resolve(manifestFile)
-      (decodeManifest(new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)), v)
+    IndexTier.readManifest(store, manifestTable(name), "postings manifest") { f =>
+      BmManifest(f.int("postings_v"), f.int("docs_v"), f.int("termstats_v"),
+        f.long("n_docs"), f.long("sum_dl"), f.long("last_batch_id"),
+        f.pin("ovl_postings_v"), f.pin("ovl_docs_v"), f.pin("dlt_termstats_v"))
     }
 
   private def requireManifest(store: TableStore, name: String): (BmManifest, Int) =
     readManifest(store, name).getOrElse(throw new IllegalStateException(
       s"postings index $name has no manifest — build it first"))
 
-  private def commitManifest(
-      store: TableStore, name: String, m: BmManifest, expected: Option[Int]): Unit =
-    store.commitFile(manifestTable(name), manifestFile,
-      encodeManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      expected)
-
   private def withLock[A](store: TableStore, name: String)(body: => A): A =
     OverlayLock.withLock(store, "bm25", name)(body)
-
-  private def rollbackAll(store: TableStore, name: String, m: BmManifest): Unit = {
-    OverlayLock.rollbackIfAhead(store, postingsTable(name), m.postings)
-    OverlayLock.rollbackIfAhead(store, docsTable(name), m.docs)
-    OverlayLock.rollbackIfAhead(store, termStatsTable(name), m.termStats)
-    m.ovlPostings.foreach(OverlayLock.rollbackIfAhead(store, ovlPostingsTable(name), _))
-    m.ovlDocs.foreach(OverlayLock.rollbackIfAhead(store, ovlDocsTable(name), _))
-    m.dltTermStats.foreach(OverlayLock.rollbackIfAhead(store, dltTermStatsTable(name), _))
-  }
-
-  /** base ∖ overlay-doc_ids ∪ overlay — the read-time merge both
-    * corpus-sized tiers serve through. The overlay is compaction-bounded,
-    * so its doc_id set broadcasts into the anti-join. */
-  private def mergedWithOverlay(
-      spark: SparkSession, store: TableStore, base: DataFrame,
-      ovlTable: String, ovlPin: Option[Int]): DataFrame =
-    ovlPin match {
-      case None => base
-      case Some(pin) =>
-        val ovl = store.snapshotAt(spark, ovlTable, pin)
-        base.join(broadcast(ovl.select(col("doc_id")).distinct()),
-            Seq("doc_id"), "left_anti")
-          .unionByName(ovl)
-    }
 
   /** The served postings `(doc_id, dl, term, tf)`: base ∖ overlay ∪
     * overlay. */
   private def postingsAt(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest): DataFrame =
-    mergedWithOverlay(spark, store,
+    IndexTier.mergedWithOverlay(spark, store,
       store.snapshotAt(spark, postingsTable(name), m.postings),
-      ovlPostingsTable(name), m.ovlPostings)
+      ovlPostingsTable(name), m.ovlPostings, "doc_id")
 
   /** The served docs `(doc_id, dl, terms)`. */
   private def docsAt(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest): DataFrame =
-    mergedWithOverlay(spark, store,
+    IndexTier.mergedWithOverlay(spark, store,
       store.snapshotAt(spark, docsTable(name), m.docs),
-      ovlDocsTable(name), m.ovlDocs)
+      ovlDocsTable(name), m.ovlDocs, "doc_id")
 
   /** Raw `(term, df)` rows of base ∪ delta, UNMERGED and UNCLAMPED — the
     * single source every served/folded df view groups and clamps ONCE
@@ -293,77 +216,32 @@ object PostingsIndex {
     * every served term's df is exact, and the vocabulary-sized
     * base⊕delta merge never runs at query time. At 100 TB the
     * vocabulary is billions of terms (Heaps' law); this keeps the last
-    * per-query vocab-sized read off the serve path. `touched = None` ⇔
-    * legacy plain layout ⇒ full merge. */
+    * per-query vocab-sized read off the serve path. A legacy plain layout
+    * serves the full merge. */
   private def termDfForBuckets(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
-      touchedOpt: Option[Seq[Int]]): DataFrame =
-    touchedOpt match {
-      case None => termDfAt(spark, store, name, m) // legacy plain layout
-      case Some(touched) =>
-        val spec = termSpec(store, name)
-        val raw = store.snapshotRawAt(spark, termStatsTable(name), m.termStats)
-        val base = (if (touched.isEmpty) raw.filter(lit(false))
-          else raw.filter(col("_bucket").isin(touched.map(Integer.valueOf): _*)))
-          .drop("_bucket")
-        m.dltTermStats match {
-          case None => base
-          case Some(pin) =>
-            val d0 = store.snapshotAt(spark, dltTermStatsTable(name), pin)
-            val d = if (touched.isEmpty) d0.filter(lit(false))
-              else d0.filter(
-                spec.bucketColumn.isin(touched.map(Integer.valueOf): _*))
-            base.unionByName(d)
-              .groupBy(col("term")).agg(greatest(sum(col("df")), lit(0L)).as("df"))
-              .filter(col("df") > 0)
-        }
-    }
+      touched: Seq[Int]): DataFrame = {
+    val rows = IndexTier.prunedWithDelta(spark, store, termStatsTable(name),
+      m.termStats, touched,
+      IndexTier.deltaFrame(spark, store, dltTermStatsTable(name), m.dltTermStats),
+      identity)
+    if (m.dltTermStats.isEmpty) rows
+    else rows.groupBy(col("term")).agg(greatest(sum(col("df")), lit(0L)).as("df"))
+      .filter(col("df") > 0)
+  }
 
   /** The served POSTINGS pruned to the buckets in `touched` (the query
     * terms' postings buckets): the base read opens only those buckets —
     * never Σ dl rows per probe batch — and the compaction-bounded
     * revision overlay merges in unpruned (small by policy; rows outside
-    * the query's terms are dropped by the scoring join). `touched =
-    * None` ⇔ legacy plain layout ⇒ full merged read. */
+    * the query's terms are dropped by the scoring join). A legacy plain
+    * layout serves the full merged read. */
   private def postingsForBuckets(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
-      touchedOpt: Option[Seq[Int]]): DataFrame =
-    touchedOpt match {
-      case None => postingsAt(spark, store, name, m) // legacy plain layout
-      case Some(touched) =>
-        val raw = store.snapshotRawAt(spark, postingsTable(name), m.postings)
-        val base = (if (touched.isEmpty) raw.filter(lit(false))
-          else raw.filter(col("_bucket").isin(touched.map(Integer.valueOf): _*)))
-          .drop("_bucket")
-        mergedWithOverlay(spark, store, base,
-          ovlPostingsTable(name), m.ovlPostings)
-    }
-
-  /** BOTH term-keyed tiers' touched buckets from ONE narrow job over the
-    * query's normalized term keys — the serve-side probe fused (the
-    * [[SignatureIndex.touchedBucketsPair]] discipline); None per side ⇔
-    * that tier is a legacy plain layout. */
-  private def touchedTermBuckets(
-      store: TableStore, name: String, termKeys: DataFrame)
-      : (Option[Seq[Int]], Option[Seq[Int]]) =
-    (store.bucketSpec(termStatsTable(name)),
-      store.bucketSpec(postingsTable(name))) match {
-      case (None, None) => (None, None)
-      case (tsSpec, postSpec) =>
-        // both specs key by `term`; compute each present side's bucket
-        // column in one pass (a missing side rides a dummy column)
-        val a = tsSpec.map(_.bucketColumn).getOrElse(lit(0)).as("_a")
-        val b = postSpec.map(_.bucketColumn).getOrElse(lit(0)).as("_b")
-        val both = termKeys.select(a, b)
-          .queryExecution.toRdd.mapPartitions { it =>
-            val sa = new scala.collection.mutable.HashSet[Int]
-            val sb = new scala.collection.mutable.HashSet[Int]
-            it.foreach { r => sa.add(r.getInt(0)); sb.add(r.getInt(1)) }
-            Iterator.single((sa.toArray, sb.toArray))
-          }.collect()
-        (tsSpec.map(_ => both.flatMap(_._1).distinct.toSeq),
-          postSpec.map(_ => both.flatMap(_._2).distinct.toSeq))
-    }
+      touched: Seq[Int]): DataFrame =
+    IndexTier.mergedWithOverlay(spark, store,
+      IndexTier.prunedAt(spark, store, postingsTable(name), m.postings, touched),
+      ovlPostingsTable(name), m.ovlPostings, "doc_id")
 
   /** Commit a per-term df adjustment (`delta` — positive and/or negative
     * rows, already grouped by term) under the overlay discipline: the
@@ -376,11 +254,9 @@ object PostingsIndex {
   private def commitTermDelta(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
       delta: DataFrame): (Int, Option[Int]) = {
-    val deltaFull = m.dltTermStats.exists { pin =>
-      store.byteSizeAt(dltTermStatsTable(name), pin) > math.max(
-        OvlFloorBytes.toDouble,
-        OvlFrac * store.byteSizeAt(termStatsTable(name), m.termStats))
-    }
+    val deltaFull = m.dltTermStats.exists(pin => IndexTier.foldDue(
+      store.byteSizeAt(dltTermStatsTable(name), pin),
+      store.byteSizeAt(termStatsTable(name), m.termStats)))
     if (deltaFull) {
       // fold from the RAW base ∪ delta ∪ batch union with ONE final
       // clamp — clamping the served view first and again after the batch
@@ -397,7 +273,8 @@ object PostingsIndex {
           .groupBy(col("term")).agg(greatest(sum(col("df")), lit(0L)).as("df"))
           .filter(col("df") > 0),
         termStatsTable(name),
-        OverlayLock.grownSpec(spark, termSpec(store, name), projected),
+        OverlayLock.grownSpec(spark,
+          IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"), projected),
         Some(m.termStats))
       (tv, None)
     } else {
@@ -415,20 +292,6 @@ object PostingsIndex {
     }
   }
 
-  /** The batch's bucket list under `spec` — a bounded collect, at most
-    * nBuckets distinct values (the [[IvfIndex.balance]] class of
-    * control-plane read). ONE narrow job — per-partition dedup +
-    * driver-side union instead of a distinct exchange (the
-    * [[SignatureIndex]] probe rationale: each partition contributes at
-    * most nBuckets ints, so the merge is bounded at any batch size). */
-  private def touchedBuckets(spec: BucketSpec, keys: DataFrame): Seq[Int] =
-    keys.select(spec.bucketColumn.as("_b"))
-      .queryExecution.toRdd.mapPartitions { it =>
-        val s = new scala.collection.mutable.HashSet[Int]
-        it.foreach(r => s.add(r.getInt(0)))
-        s.iterator
-      }.collect().distinct.toSeq
-
   /** Base docs rows PRUNED to the buckets `keys` can hash into — the
     * keyed read every per-batch bookkeeping path goes through:
     * `_bucket isin(...)` prunes at the directory level, so unread
@@ -438,39 +301,25 @@ object PostingsIndex {
   private def baseDocsForKeys(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
       keys: DataFrame): DataFrame =
-    store.bucketSpec(docsTable(name)) match {
-      case Some(spec) =>
-        val touched = touchedBuckets(spec, keys)
-        val raw = store.snapshotRawAt(spark, docsTable(name), m.docs)
-        (if (touched.isEmpty) raw.filter(lit(false))
-         else raw.filter(col("_bucket").isin(touched.map(Integer.valueOf): _*)))
-          .drop("_bucket")
-      case None => store.snapshotAt(spark, docsTable(name), m.docs)
-    }
+    IndexTier.prunedAt(spark, store, docsTable(name), m.docs,
+      IndexTier.touchedBuckets(store, docsTable(name), m.docs, keys))
 
   /** SERVED (overlay-merged) docs rows of exactly `batchIds`' ids — ONE
     * bucket-pruned keyed read feeding both the replaced-doc counters and
     * the exact-df subtraction. `touched` is the batch's precomputed
-    * bucket list (None on a plain pre-r16 layout → full scan);
+    * bucket list (ignored by a plain pre-r16 layout's full scan);
     * `idPredicate` is the batch's pushed key predicate (an In set or a
     * min-max range — superset-safe, so applying it before the semi-join
     * only prunes), which the sorted-within-bucket layout turns into
     * parquet row-group skips. */
   private def servedDocsForIds(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
-      batchIds: DataFrame, touched: Option[Seq[Int]],
+      batchIds: DataFrame, touched: Seq[Int],
       idPredicate: Option[org.apache.spark.sql.Column]): DataFrame = {
-    val base = touched match {
-      case Some(bs) =>
-        val raw = store.snapshotRawAt(spark, docsTable(name), m.docs)
-        (if (bs.isEmpty) raw.filter(lit(false))
-         else raw.filter(col("_bucket").isin(bs.map(Integer.valueOf): _*)))
-          .drop("_bucket")
-      case None => store.snapshotAt(spark, docsTable(name), m.docs)
-    }
-    mergedWithOverlay(spark, store,
+    val base = IndexTier.prunedAt(spark, store, docsTable(name), m.docs, touched)
+    IndexTier.mergedWithOverlay(spark, store,
       idPredicate.map(base.filter).getOrElse(base),
-      ovlDocsTable(name), m.ovlDocs)
+      ovlDocsTable(name), m.ovlDocs, "doc_id")
       .join(batchIds, Seq("doc_id"), "left_semi")
   }
 
@@ -533,7 +382,7 @@ object PostingsIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => rollbackAll(store, name, m) }
+        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
         val spark = df.sparkSession
         // pinned: the docs write and the postings write would otherwise
         // each re-run the tokenize + dedupe chain end-to-end
@@ -541,19 +390,18 @@ object PostingsIndex {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val dv = store.writeBucketed(docRowsOf(tok), docsTable(name),
-            BucketSpec(docBuckets, Seq("doc_id"), sortCols = Seq("doc_id")))
+            IndexTier.keyed(docBuckets, "doc_id"))
           // postings are TERM-bucketed so serve reads prune to the
           // query's term buckets ([[postingsForTerms]])
           val pv = store.writeBucketed(postingsOf(tok), postingsTable(name),
-            BucketSpec(PostBuckets, Seq("term"), sortCols = Seq("term")))
+            IndexTier.keyed(PostBuckets, "term"))
           // derive df from the COMMITTED postings (a parquet read) so the
           // tokenize+explode chain is never recomputed for the third table
           val tv = store.writeBucketed(
             termStatsOf(store.snapshotAt(spark, postingsTable(name), pv)),
-            termStatsTable(name),
-            BucketSpec(TermBuckets, Seq("term"), sortCols = Seq("term")))
+            termStatsTable(name), IndexTier.keyed(TermBuckets, "term"))
           val (n, sdl) = docCounters(store.snapshotAt(spark, docsTable(name), dv))
-          commitManifest(store, name,
+          IndexTier.commitManifest(store, manifestTable(name),
             BmManifest(pv, dv, tv, n, sdl,
               prev.map(_._1.lastBatchId).getOrElse(-1L)),
             prev.map(_._2))
@@ -586,7 +434,7 @@ object PostingsIndex {
       store: TableStore, name: String, stamp: Option[Long]): Boolean = {
     val (m, mv) = requireManifest(store, name)
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     // insert-only against the SERVED id set: base docs AND the revision
     // overlay's (an id living only in the overlay must not re-enter the
     // base, or the overlay's shadow would hide the stale re-append)
@@ -638,7 +486,7 @@ object PostingsIndex {
       val dv = dvA.asInstanceOf[Int]
       val pv = pvA.asInstanceOf[Int]
       val (tv, dltv) = tvA.asInstanceOf[(Int, Option[Int])]
-      commitManifest(store, name,
+      IndexTier.commitManifest(store, manifestTable(name),
         m.copy(postings = pv, docs = dv, termStats = tv, dltTermStats = dltv,
           nDocs = m.nDocs + dn, sumDl = m.sumDl + dsdl,
           lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
@@ -690,20 +538,20 @@ object PostingsIndex {
       store: TableStore, name: String, stamp: Option[Long]): (Boolean, Long) = {
     val (m, mv) = requireManifest(store, name)
     if (stamp.exists(_ <= m.lastBatchId)) return (false, 0L)
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     val fresh = tokenized(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val batchIds = broadcast(fresh.select(col("doc_id")).distinct())
       // one control-plane action over the (pinned) batch: its counters
       // AND its bucket list — collect_set is bounded by the bucket count
-      val bucketExpr = store.bucketSpec(docsTable(name)).map(_.bucketColumn)
+      val bucketExpr = store.bucketSpecAt(docsTable(name), m.docs).map(_.bucketColumn)
       val freshStats = fresh.agg(
         count(lit(1)), coalesce(sum(col("dl")), lit(0L)),
         collect_set(bucketExpr.getOrElse(lit(-1))),
         min(col("doc_id")), max(col("doc_id"))).head()
       val (addN, addSdl) = (freshStats.getLong(0), freshStats.getLong(1))
-      val touched = bucketExpr.map(_ => freshStats.getSeq[Int](2))
+      val touched = freshStats.getSeq[Int](2)
       // the batch's pushed key predicate: a bounded-collect In set for
       // small batches (Spark plants it — or its min-max rewrite — in the
       // parquet scan, where the sorted-within-bucket layout skips row
@@ -741,11 +589,9 @@ object PostingsIndex {
         .groupBy(col("term")).agg(sum(col("df")).as("df"))
       // fold-vs-overlay on the PRE-batch overlay size (file-metadata
       // reads) — the IvfIndex.upsertStamped policy on the postings tier
-      val overlayFull = m.ovlPostings.exists { pin =>
-        store.byteSizeAt(ovlPostingsTable(name), pin) > math.max(
-          OvlFloorBytes.toDouble,
-          OvlFrac * store.byteSizeAt(postingsTable(name), m.postings))
-      }
+      val overlayFull = m.ovlPostings.exists(pin => IndexTier.foldDue(
+        store.byteSizeAt(ovlPostingsTable(name), pin),
+        store.byteSizeAt(postingsTable(name), m.postings)))
       // the termstats-delta commit and the two postings/docs-tier commits
       // are independent tables (no shared CAS) — run each branch's three
       // member commits concurrently instead of stacking their fixed job
@@ -766,7 +612,8 @@ object PostingsIndex {
                 .join(batchIds, Seq("doc_id"), "left_anti")
                 .unionByName(freshPostings),
               postingsTable(name),
-              OverlayLock.grownSpec(spark, postSpec(store, name),
+              OverlayLock.grownSpec(spark,
+                IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
                 store.byteSizeAt(postingsTable(name), m.postings) +
                   m.ovlPostings.map(store.byteSizeAt(ovlPostingsTable(name), _))
                     .getOrElse(0L)),
@@ -778,7 +625,8 @@ object PostingsIndex {
               docsTable(name),
               // rebucket-at-fold (OverlayLock.grownSpec): hold the
               // per-bucket byte target as the corpus grows
-              OverlayLock.grownSpec(spark, docSpec(store, name),
+              OverlayLock.grownSpec(spark,
+                IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"),
                 store.byteSizeAt(docsTable(name), m.docs) +
                   m.ovlDocs.map(store.byteSizeAt(ovlDocsTable(name), _))
                     .getOrElse(0L)),
@@ -789,18 +637,9 @@ object PostingsIndex {
             termStats = tv, dltTermStats = dltv)
         } else {
           // overlay rewrite: old overlay minus the batch's ids plus the
-          // batch — at most one row-set per doc_id, O(overlay) bytes
-          def ovlWrite(table: String, pin: Option[Int], rows: DataFrame): Int = {
-            val merged = pin match {
-              case Some(p) => store.snapshotAt(spark, table, p)
-                .join(batchIds, Seq("doc_id"), "left_anti").unionByName(rows)
-              case None => rows
-            }
-            pin match {
-              case Some(p) => store.write(merged.coalesce(8), table, Some(p))
-              case None => store.write(merged.coalesce(8), table)
-            }
-          }
+          // batch ([[IndexTier.overlayWrite]]), O(overlay) bytes
+          def ovlWrite(table: String, pin: Option[Int], rows: DataFrame): Int =
+            IndexTier.overlayWrite(spark, store, table, pin, batchIds, "doc_id", rows)
           val Seq(tvA, opvA, odvA) = OverlayLock.inParallel(Seq(
             () => commitTermDelta(spark, store, name, m, termDelta),
             () => ovlWrite(ovlPostingsTable(name), m.ovlPostings, freshPostings),
@@ -810,7 +649,7 @@ object PostingsIndex {
             ovlDocs = Some(odvA.asInstanceOf[Int]),
             termStats = tv, dltTermStats = dltv)
         }
-      commitManifest(store, name,
+      IndexTier.commitManifest(store, manifestTable(name),
         next.copy(
           nDocs = m.nDocs + addN - rmN, sumDl = m.sumDl + addSdl - rmSdl,
           lastBatchId = stamp.getOrElse(m.lastBatchId)),
@@ -830,20 +669,25 @@ object PostingsIndex {
         val (m, mv) = requireManifest(store, name)
         if (m.ovlPostings.isDefined || m.ovlDocs.isDefined ||
             m.dltTermStats.isDefined) {
-          rollbackAll(store, name, m)
+          IndexTier.rollbackAll(store, m.tiers(name))
           val pv =
             if (m.ovlPostings.isEmpty) m.postings
             else store.writeBucketed(postingsAt(spark, store, name, m),
-              postingsTable(name), postSpec(store, name), Some(m.postings))
+              postingsTable(name),
+              IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
+              Some(m.postings))
           val dv =
             if (m.ovlDocs.isEmpty) m.docs
             else store.writeBucketed(docsAt(spark, store, name, m),
-              docsTable(name), docSpec(store, name), Some(m.docs))
+              docsTable(name),
+              IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"), Some(m.docs))
           val tv =
             if (m.dltTermStats.isEmpty) m.termStats
             else store.writeBucketed(termDfAt(spark, store, name, m),
-              termStatsTable(name), termSpec(store, name), Some(m.termStats))
-          commitManifest(store, name,
+              termStatsTable(name),
+              IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
+              Some(m.termStats))
+          IndexTier.commitManifest(store, manifestTable(name),
             m.copy(postings = pv, docs = dv, termStats = tv,
               ovlPostings = None, ovlDocs = None, dltTermStats = None),
             Some(mv))
@@ -865,7 +709,7 @@ object PostingsIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val (m, mv) = requireManifest(store, name)
-        rollbackAll(store, name, m)
+        IndexTier.rollbackAll(store, m.tiers(name))
         val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
         // a takedown rewrites the corpus-sized tiers anyway, so the
         // revision overlay folds in for free: each tier commits its
@@ -876,11 +720,13 @@ object PostingsIndex {
           docsStored("doc_id") === col("_rm_id"), "left_semi")
         val (rmN, rmSdl) = docCounters(removedDocs)
         val dv = store.writeBucketed(keptDocs, docsTable(name),
-          docSpec(store, name), Some(m.docs))
+          IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"), Some(m.docs))
         val postStored = postingsAt(spark, store, name, m)
         val pv = store.writeBucketed(
           postStored.join(drop, postStored("doc_id") === col("_rm_id"), "left_anti"),
-          postingsTable(name), postSpec(store, name), Some(m.postings))
+          postingsTable(name),
+          IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
+          Some(m.postings))
         // df subtraction from the removed docs' stored term lists — a
         // takedown rewrites the authoritative table anyway, so the
         // termstats delta folds in here and its pin clears; merged from
@@ -893,8 +739,10 @@ object PostingsIndex {
               .withColumn("df", -col("df")))
             .groupBy(col("term")).agg(greatest(sum(col("df")), lit(0L)).as("df"))
             .filter(col("df") > 0),
-          termStatsTable(name), termSpec(store, name), Some(m.termStats))
-        commitManifest(store, name,
+          termStatsTable(name),
+          IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
+          Some(m.termStats))
+        IndexTier.commitManifest(store, manifestTable(name),
           m.copy(postings = pv, docs = dv, termStats = tv,
             nDocs = m.nDocs - rmN, sumDl = m.sumDl - rmSdl,
             ovlPostings = None, ovlDocs = None, dltTermStats = None), Some(mv))
@@ -1034,7 +882,8 @@ object PostingsIndex {
     val termKeys = probes.select(explode(col(probeTermsCol)).as("term"))
       .select(lower(col("term")).as("term"))
       .filter(length(col("term")) > 0)
-    val (tsTouched, postTouched) = touchedTermBuckets(store, name, termKeys)
+    val (tsTouched, postTouched) = IndexTier.touchedBucketsPair(store,
+      termStatsTable(name) -> m.termStats, postingsTable(name) -> m.postings, termKeys)
     val post = postingsForBuckets(spark, store, name, m, postTouched)
       .select(col("doc_id"), col("dl").as("_dl"), col("term"), col("tf").as("_tf"))
     // corpus stats come from the MANIFEST counters — zero Spark jobs; the

@@ -106,7 +106,7 @@ object PqIndex {
         val pcV = store.write(
           arr.join(unit.select(col("id"), col("cell")), Seq("id"))
             .select(col("id"), col("cell"), col("n_codes")), codesTableName(name))
-        IvfIndex.commitManifest(store, name,
+        IndexTier.commitManifest(store, IvfIndex.manifestTable(name),
           man.copy(pqCodebook = Some(cbV), pqCodes = Some(pcV),
             ovlPqCodes = None), Some(mv))
       }

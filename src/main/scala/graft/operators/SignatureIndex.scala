@@ -80,7 +80,6 @@ object SignatureIndex {
   private def rmTable(name: String) = s"${name}_rm"
   private def deltaTable(name: String) = s"${name}_delta"
   private def manifestTable(name: String) = s"${name}_manifest"
-  private val manifestFile = "manifest.json"
 
   /** Default STARTING bucket counts: deliberately small — a screen's
     * pruned read opens one file per touched bucket, so oversized counts
@@ -112,38 +111,16 @@ object SignatureIndex {
       shingleN: Int, numHashes: Int, bands: Int,
       nLive: Long, nRm: Long, lastBatchId: Long = -1L,
       rm: Option[Int] = None, hasQuality: Boolean = false,
-      dlt: Option[Int] = None, nDelta: Long = 0L) {
+      dlt: Option[Int] = None, nDelta: Long = 0L) extends IndexTier.Manifest {
     def params: Params = Params(shingleN, numHashes, bands)
-  }
-
-  private def encodeManifest(m: SigManifest): String =
-    s"""{"sigs_v":${m.sigs},"pos_v":${m.pos},"band_v":${m.band},""" +
-      s""""rm_v":${m.rm.getOrElse(-1)},"dlt_v":${m.dlt.getOrElse(-1)},""" +
-      s""""shingle_n":${m.shingleN},""" +
-      s""""num_hashes":${m.numHashes},"bands":${m.bands},""" +
-      s""""has_quality":${if (m.hasQuality) 1 else 0},""" +
-      s""""n_live":${m.nLive},"n_rm":${m.nRm},"n_dlt":${m.nDelta},""" +
-      s""""last_batch_id":${m.lastBatchId}}"""
-
-  private def decodeManifest(s: String): SigManifest = {
-    def field(k: String): Long = {
-      val i = s.indexOf("\"" + k + "\":")
-      require(i >= 0, s"signature-index manifest missing $k: $s")
-      val from = i + k.length + 3
-      val end = s.indexWhere(c => c == ',' || c == '}', from)
-      s.substring(from, end).trim.toLong
-    }
-    def optField(k: String, dflt: Long): Long =
-      if (s.indexOf("\"" + k + "\":") >= 0) field(k) else dflt
-    val rm = { val v = field("rm_v"); if (v < 0) None else Some(v.toInt) }
-    // absent = pre-delta manifest (older persisted index): no delta member
-    val dlt = { val v = optField("dlt_v", -1L); if (v < 0) None else Some(v.toInt) }
-    // absent = pre-quality manifest (older persisted index): plain family
-    val hasQ = s.indexOf("\"has_quality\":") >= 0 && field("has_quality") != 0L
-    SigManifest(field("sigs_v").toInt, field("pos_v").toInt, field("band_v").toInt,
-      field("shingle_n").toInt, field("num_hashes").toInt, field("bands").toInt,
-      field("n_live"), field("n_rm"), field("last_batch_id"), rm, hasQ,
-      dlt, optField("n_dlt", 0L))
+    def fields: Seq[(String, Any)] = Seq("sigs_v" -> sigs, "pos_v" -> pos,
+      "band_v" -> band, "rm_v" -> rm.getOrElse(-1), "dlt_v" -> dlt.getOrElse(-1),
+      "shingle_n" -> shingleN, "num_hashes" -> numHashes, "bands" -> bands,
+      "has_quality" -> (if (hasQuality) 1 else 0), "n_live" -> nLive,
+      "n_rm" -> nRm, "n_dlt" -> nDelta, "last_batch_id" -> lastBatchId)
+    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
+      sigsTable(name) -> Some(sigs), posTable(name) -> Some(pos),
+      bandTable(name) -> Some(band), rmTable(name) -> rm, deltaTable(name) -> dlt)
   }
 
   private def requirePlain(m: SigManifest, name: String, op: String): Unit =
@@ -156,13 +133,15 @@ object SignatureIndex {
       s"signature index $name is a plain family — $op needs a " +
         "quality-carrying index; build it with buildWithQuality")
 
+  /** Absent keys: `dlt_v`/`n_dlt` predate the delta member (no memtable),
+    * `has_quality` predates keeper families (a plain family). */
   private[graft] def readManifest(
       store: TableStore, name: String): Option[(SigManifest, Int)] =
-    store.currentVersion(manifestTable(name)).map { v =>
-      val f = java.nio.file.Paths.get(store.pathAt(manifestTable(name), v))
-        .resolve(manifestFile)
-      (decodeManifest(new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)), v)
+    IndexTier.readManifest(store, manifestTable(name), "signature-index manifest") { f =>
+      SigManifest(f.int("sigs_v"), f.int("pos_v"), f.int("band_v"),
+        f.int("shingle_n"), f.int("num_hashes"), f.int("bands"),
+        f.long("n_live"), f.long("n_rm"), f.long("last_batch_id"), f.pin("rm_v"),
+        f.flag("has_quality"), f.pin("dlt_v"), f.longOr("n_dlt", 0L))
     }
 
   /** MIGRATION NOTE: indexes persisted by the pre-manifest layout (a bare
@@ -181,22 +160,8 @@ object SignatureIndex {
             "rebuild from the corpus text with build())"
          else "")))
 
-  private def commitManifest(
-      store: TableStore, name: String, m: SigManifest, expected: Option[Int]): Unit =
-    store.commitFile(manifestTable(name), manifestFile,
-      encodeManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      expected)
-
   private def withLock[A](store: TableStore, name: String)(body: => A): A =
     OverlayLock.withLock(store, "sig", name)(body)
-
-  private def rollbackAll(store: TableStore, name: String, m: SigManifest): Unit = {
-    OverlayLock.rollbackIfAhead(store, sigsTable(name), m.sigs)
-    OverlayLock.rollbackIfAhead(store, posTable(name), m.pos)
-    OverlayLock.rollbackIfAhead(store, bandTable(name), m.band)
-    m.rm.foreach(OverlayLock.rollbackIfAhead(store, rmTable(name), _))
-    m.dlt.foreach(OverlayLock.rollbackIfAhead(store, deltaTable(name), _))
-  }
 
   // ------------------------------------------------------------- projections
 
@@ -238,116 +203,16 @@ object SignatureIndex {
         .as(Seq("band", "bucket")))
   }
 
-  private def sigSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(sigsTable(name)).getOrElse(
-      BucketSpec(SigBuckets, Seq("id"), sortCols = Seq("id")))
-  private def posSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(posTable(name)).getOrElse(
-      BucketSpec(PosBuckets, Seq("i", "v"), sortCols = Seq("i", "v")))
-  private def bandSpec(store: TableStore, name: String): BucketSpec =
-    store.bucketSpec(bandTable(name)).getOrElse(
-      BucketSpec(BandBuckets, Seq("band", "bucket"), sortCols = Seq("band", "bucket")))
-
-  /** The buckets `keys` can hash into under `spec` — a bounded collect,
-    * at most nBuckets distinct values (the [[IvfIndex.balance]] class of
-    * control-plane read). ONE narrow job: per-partition dedup via
-    * `mapPartitions` + driver-side union, instead of `distinct().collect()`
-    * — the distinct's exchange costs a drain two extra stage launches per
-    * probe, and each partition can contribute at most nBuckets ints, so
-    * the driver merge is bounded no matter the batch size. */
-  private def touchedBuckets(spec: BucketSpec, keys: DataFrame): Seq[Int] =
-    keys.select(spec.bucketColumn.as("_b"))
-      .queryExecution.toRdd.mapPartitions { it =>
-        val s = new scala.collection.mutable.HashSet[Int]
-        it.foreach(r => s.add(r.getInt(0)))
-        s.iterator
-      }.collect().distinct.toSeq
-
-  /** BOTH tiers' touched buckets from ONE narrow job over a (pinned)
-    * batch projection exposing the key columns of both specs — the
-    * drain's two leading probes fused: each saved probe is a saved
-    * job round-trip on every micro-batch, and each partition still
-    * contributes at most nBuckets ints per side. */
-  private def touchedBucketsPair(
-      specA: BucketSpec, specB: BucketSpec, rows: DataFrame): (Seq[Int], Seq[Int]) = {
-    val both = rows.select(specA.bucketColumn.as("_a"), specB.bucketColumn.as("_b"))
-      .queryExecution.toRdd.mapPartitions { it =>
-        val a = new scala.collection.mutable.HashSet[Int]
-        val b = new scala.collection.mutable.HashSet[Int]
-        it.foreach { r => a.add(r.getInt(0)); b.add(r.getInt(1)) }
-        Iterator.single((a.toArray, b.toArray))
-      }.collect()
-    (both.flatMap(_._1).distinct.toSeq, both.flatMap(_._2).distinct.toSeq)
-  }
-
-  /** A member tier PRUNED to `touched` buckets: `_bucket isin(...)`
-    * prunes at the directory level, so unread buckets are never opened
-    * and the bytes read are ∝ the batch's probe keys, never the corpus
-    * ([[graft.PrunedScreenSpec]] measures it). */
-  private def prunedAt(
-      spark: SparkSession, store: TableStore, table: String, pin: Int,
-      touched: Seq[Int]): DataFrame = {
-    val raw = store.snapshotRawAt(spark, table, pin)
-    (if (touched.isEmpty) raw.filter(lit(false))
-     else raw.filter(col("_bucket").isin(touched.map(Integer.valueOf): _*)))
-      .drop("_bucket")
-  }
-
-  /** The broadcast tombstone-id subtraction every projection read applies:
-    * the tiers keep retired ids' rows until the amortized fold, and the
-    * screens must count and join exactly what a served-view projection
-    * would hold (hot-cell counts included — a cell's rows all live in one
-    * bucket, so a bucket-pruned read sees every cell it reads EXACTLY). */
-  private def minusRm(
-      spark: SparkSession, store: TableStore, name: String,
-      m: SigManifest)(df: DataFrame): DataFrame =
-    m.rm match {
-      case None => df
-      case Some(pin) => df.join(broadcast(
-          store.snapshotAt(spark, rmTable(name), pin).select(col("id"))),
-        Seq("id"), "left_anti")
-    }
-
-  /** The delta member's full (small) frame, when one is pinned — the
-    * index's LSM memtable: per-drain admissions land here as ONE plain
-    * append, and the bucketed tiers absorb it at the amortized fold. */
-  private def deltaFrame(
-      spark: SparkSession, store: TableStore, name: String,
-      m: SigManifest): Option[DataFrame] =
-    m.dlt.map(dv => store.snapshotAt(spark, deltaTable(name), dv))
-
-  /** A projection tier PRUNED to `touched` buckets, INCLUDING the delta
-    * member's contribution: the pruned base read unioned with the same
-    * projection derived IN-PLAN from the small delta and filtered by the
-    * exact bucket rule the directory pruning applied — readers see
-    * precisely the rows a fold-merged tier would hold in those buckets
-    * (hot-cell exactness included: a cell's base and delta rows share
-    * one bucket id). No extra job: the delta is a one-to-few-file scan
-    * inside the same plan. */
-  private def prunedWithDelta(
+  /** A projection tier of the SERVED view pruned to `touched` buckets: the
+    * pruned base read ∪ the same projection derived in-plan from the delta
+    * member, minus tombstoned ids ([[IndexTier.prunedWithDelta]]). */
+  private def servedTier(
       spark: SparkSession, store: TableStore, name: String, m: SigManifest,
-      table: String, pin: Int, spec: BucketSpec, touched: Seq[Int],
-      fromDelta: DataFrame => DataFrame): DataFrame = {
-    // legacy plain layout: no `_bucket` to prune on and the default
-    // spec's rule does not describe the stored files — serve the FULL
-    // pinned read (∪ unfiltered delta) until the next full rewrite
-    // (result-identical; the [[PerceptualIndex.prunedWithDelta]] note)
-    if (store.bucketSpec(table).isEmpty) {
-      val base = store.snapshotAt(spark, table, pin)
-      return deltaFrame(spark, store, name, m)
-        .map(d => base.unionByName(fromDelta(d))).getOrElse(base)
-    }
-    val base = prunedAt(spark, store, table, pin, touched)
-    deltaFrame(spark, store, name, m) match {
-      case None => base
-      case Some(d) =>
-        val derived = fromDelta(d)
-        base.unionByName(
-          if (touched.isEmpty) derived.filter(lit(false))
-          else derived.filter(
-            spec.bucketColumn.isin(touched.map(Integer.valueOf): _*)))
-    }
-  }
+      table: String, pin: Int, touched: Seq[Int],
+      fromDelta: DataFrame => DataFrame): DataFrame =
+    IndexTier.minusRm(spark, store, rmTable(name), m.rm)(
+      IndexTier.prunedWithDelta(spark, store, table, pin, touched,
+        IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), fromDelta))
 
   /** Indexed sigs rows (base ∪ delta, NO tombstone subtraction — a
     * retired id may not re-enter under its own name until the fold
@@ -355,19 +220,17 @@ object SignatureIndex {
     * read behind the insert-only screen and the candidate fetch-back. */
   private def indexedSigsForIds(
       spark: SparkSession, store: TableStore, name: String, m: SigManifest,
-      ids: DataFrame): DataFrame = {
-    val spec = sigSpec(store, name)
-    indexedSigsForBuckets(spark, store, name, m, touchedBuckets(spec, ids))
-  }
+      ids: DataFrame): DataFrame =
+    indexedSigsForBuckets(spark, store, name, m,
+      IndexTier.touchedBuckets(store, sigsTable(name), m.sigs, ids))
 
   /** [[indexedSigsForIds]] with the bucket probe already done — the
-    * fused-probe callers ([[touchedBucketsPair]]) pass their
-    * precomputed id-bucket list. */
+    * fused-probe callers pass their precomputed id-bucket list. */
   private def indexedSigsForBuckets(
       spark: SparkSession, store: TableStore, name: String, m: SigManifest,
       touched: Seq[Int]): DataFrame =
-    prunedWithDelta(spark, store, name, m, sigsTable(name), m.sigs,
-      sigSpec(store, name), touched, identity)
+    IndexTier.prunedWithDelta(spark, store, sigsTable(name), m.sigs, touched,
+      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), identity)
 
   // ------------------------------------------------------------------ build
 
@@ -389,20 +252,19 @@ object SignatureIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => rollbackAll(store, name, m) }
+        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
         val spark = df.sparkSession
         val sv = store.writeBucketed(signaturesOf(df, idCol, textCol, p),
-          sigsTable(name), BucketSpec(sigBuckets, Seq("id"), sortCols = Seq("id")))
+          sigsTable(name), IndexTier.keyed(sigBuckets, "id"))
         // derive the projections from the COMMITTED sigs (a parquet read)
         // so the shingle+hash chain runs once, not three times
         val committed = store.snapshotAt(spark, sigsTable(name), sv)
         val pv = store.writeBucketed(positionsOf(committed), posTable(name),
-          BucketSpec(posBuckets, Seq("i", "v"), sortCols = Seq("i", "v")))
+          IndexTier.keyed(posBuckets, "i", "v"))
         val bv = store.writeBucketed(bandedOf(committed, p), bandTable(name),
-          BucketSpec(bandBuckets, Seq("band", "bucket"),
-            sortCols = Seq("band", "bucket")))
+          IndexTier.keyed(bandBuckets, "band", "bucket"))
         val n = committed.count()
-        commitManifest(store, name,
+        IndexTier.commitManifest(store, manifestTable(name),
           SigManifest(sv, pv, bv, p.shingleN, p.numHashes, p.bands, n, 0L,
             prev.map(_._1.lastBatchId).getOrElse(-1L)), prev.map(_._2))
       }
@@ -426,19 +288,18 @@ object SignatureIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => rollbackAll(store, name, m) }
+        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
         val spark = df.sparkSession
         val sv = store.writeBucketed(
           signaturesOfQ(df, idCol, textCol, qCol, p),
-          sigsTable(name), BucketSpec(sigBuckets, Seq("id"), sortCols = Seq("id")))
+          sigsTable(name), IndexTier.keyed(sigBuckets, "id"))
         val committed = store.snapshotAt(spark, sigsTable(name), sv)
         val pv = store.writeBucketed(positionsOf(committed), posTable(name),
-          BucketSpec(posBuckets, Seq("i", "v"), sortCols = Seq("i", "v")))
+          IndexTier.keyed(posBuckets, "i", "v"))
         val bv = store.writeBucketed(bandedOf(committed, p), bandTable(name),
-          BucketSpec(bandBuckets, Seq("band", "bucket"),
-            sortCols = Seq("band", "bucket")))
+          IndexTier.keyed(bandBuckets, "band", "bucket"))
         val n = committed.count()
-        commitManifest(store, name,
+        IndexTier.commitManifest(store, manifestTable(name),
           SigManifest(sv, pv, bv, p.shingleN, p.numHashes, p.bands, n, 0L,
             prev.map(_._1.lastBatchId).getOrElse(-1L),
             hasQuality = true), prev.map(_._2))
@@ -463,30 +324,15 @@ object SignatureIndex {
       spark: SparkSession, store: TableStore, name: String,
       m: SigManifest): DataFrame = {
     val base = store.snapshotAt(spark, sigsTable(name), m.sigs)
-    minusRm(spark, store, name, m)(
-      deltaFrame(spark, store, name, m).map(base.unionByName(_)).getOrElse(base))
+    IndexTier.minusRm(spark, store, rmTable(name), m.rm)(
+      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt)
+        .map(base.unionByName(_)).getOrElse(base))
   }
 
   /** When accumulated memtable/tombstone rows have earned their amortized
     * rewrite — the manifest-counter-priced policy shared by every drain
     * face (no corpus-sized count job ever runs). */
   private def foldBound(m: SigManifest): Long = math.max(1024L, m.nLive / 8)
-
-  /** The memtable write: commit `fresh` to the delta member as ONE plain
-    * linked append — no shuffle, no bucketing, O(batch) bytes — instead
-    * of three bucketed tier appends per drain. Past the file bound the
-    * append folds into a small rewrite ([[OverlayLock.appendOrCompact]]);
-    * past [[foldBound]] rows the CALLER folds the whole delta into the
-    * bucketed tiers ([[foldAllTiers]]). */
-  private def appendDelta(
-      spark: SparkSession, store: TableStore, name: String, m: SigManifest,
-      fresh: DataFrame): Int =
-    m.dlt match {
-      case Some(pin) => OverlayLock.appendOrCompact(store, deltaTable(name), pin,
-        store.snapshotAt(spark, deltaTable(name), pin), fresh.coalesce(4))
-      case None => store.write(fresh.coalesce(4), deltaTable(name),
-        store.currentVersion(deltaTable(name)))
-    }
 
   /** Amortized fold: rewrite the SERVED view of the ALREADY-COMMITTED
     * next member state (`mNew` carries the drain's new delta/rm pins and
@@ -518,17 +364,20 @@ object SignatureIndex {
         store.byteSizeAt(table, pin) + grow * mult
       val Seq(sv, pv, bv) = OverlayLock.inParallel(Seq(
         () => store.writeBucketed(kept, sigsTable(name),
-          OverlayLock.grownSpec(spark, sigSpec(store, name),
+          OverlayLock.grownSpec(spark,
+            IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
             projected(sigsTable(name), mNew.sigs, 1L)), Some(mNew.sigs)),
         () => store.writeBucketed(positionsOf(kept), posTable(name),
-          OverlayLock.grownSpec(spark, posSpec(store, name),
+          OverlayLock.grownSpec(spark,
+            IndexTier.layout(store, posTable(name), PosBuckets, "i", "v"),
             projected(posTable(name), mNew.pos, p.numHashes.toLong)),
           Some(mNew.pos)),
         () => store.writeBucketed(bandedOf(kept, p), bandTable(name),
-          OverlayLock.grownSpec(spark, bandSpec(store, name),
+          OverlayLock.grownSpec(spark,
+            IndexTier.layout(store, bandTable(name), BandBuckets, "band", "bucket"),
             projected(bandTable(name), mNew.band, p.bands.toLong)),
           Some(mNew.band)))).map(_.asInstanceOf[Int])
-      commitManifest(store, name,
+      IndexTier.commitManifest(store, manifestTable(name),
         mNew.copy(sigs = sv, pos = pv, band = bv,
           nRm = 0L, rm = None, dlt = None, nDelta = 0L), Some(mv))
     } finally kept.unpersist()
@@ -566,7 +415,7 @@ object SignatureIndex {
     val (m, mv) = requireManifest(store, name)
     requirePlain(m, name, "an insert-only fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     // pinned: the probe job and the delta write both consume the
     // shingle+hash chain
     val batchSigs = signaturesOf(batch, idCol, textCol, m.params)
@@ -593,14 +442,15 @@ object SignatureIndex {
         val n = fresh.count()
         // O(batch): ONE plain linked append into the delta member — the
         // projection tiers are served union-style until the fold
-        val mNew = m.copy(dlt = Some(appendDelta(spark, store, name, m, fresh)),
+        val mNew = m.copy(dlt = Some(IndexTier.appendDelta(spark, store,
+            deltaTable(name), m.dlt, fresh)),
           nDelta = m.nDelta + n, nLive = m.nLive + n,
           lastBatchId = stamp.getOrElse(m.lastBatchId))
         if (mNew.nDelta > foldBound(m))
           // the memtable earned its rewrite: absorb the (just-committed)
           // delta into the bucketed tiers, clearing delta and tombstones
           foldServed(spark, store, name, mNew, mv)
-        else commitManifest(store, name, mNew, Some(mv))
+        else IndexTier.commitManifest(store, manifestTable(name), mNew, Some(mv))
         true
       } finally fresh.unpersist()
     } finally batchSigs.unpersist()
@@ -637,13 +487,13 @@ object SignatureIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val (m, mv) = requireManifest(store, name)
-        rollbackAll(store, name, m)
+        IndexTier.rollbackAll(store, m.tiers(name))
         val sv = store.compact(spark, sigsTable(name), maxFilesPerBucket)
         val pv = store.compact(spark, posTable(name), maxFilesPerBucket)
         val bv = store.compact(spark, bandTable(name), maxFilesPerBucket)
         val dv = m.dlt.flatMap(_ => store.compactPlain(spark, deltaTable(name)))
         if (sv.isDefined || pv.isDefined || bv.isDefined || dv.isDefined)
-          commitManifest(store, name,
+          IndexTier.commitManifest(store, manifestTable(name),
             m.copy(sigs = sv.getOrElse(m.sigs), pos = pv.getOrElse(m.pos),
               band = bv.getOrElse(m.band),
               dlt = dv.orElse(m.dlt)), Some(mv))
@@ -665,7 +515,7 @@ object SignatureIndex {
     withLock(store, name) {
       OverlayLock.retryOnConflict() {
         val (m, mv) = requireManifest(store, name)
-        rollbackAll(store, name, m)
+        IndexTier.rollbackAll(store, m.tiers(name))
         val served = servedView(spark, store, name, m)
         // cast the drop list to the STORED id type before any bucket math:
         // equality joins would survive a type mismatch via implicit casts,
@@ -675,7 +525,7 @@ object SignatureIndex {
         val drop = broadcast(
           ids.select(col(ids.columns.head).cast(idType).as("_rm_id")).distinct())
         // the dropped-count read is keyed: only the drop list's buckets
-        val removed = minusRm(spark, store, name, m)(
+        val removed = IndexTier.minusRm(spark, store, rmTable(name), m.rm)(
           indexedSigsForIds(spark, store, name, m, drop.select(col("_rm_id").as("id"))))
           .join(drop, col("id") === col("_rm_id"), "left_semi")
           .count()
@@ -685,12 +535,15 @@ object SignatureIndex {
           kept.count() // materialize once; the three rewrites read the cache
           val Seq(sv, pv, bv) = OverlayLock.inParallel(Seq(
             () => store.writeBucketed(kept, sigsTable(name),
-              sigSpec(store, name), Some(m.sigs)),
+              IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
+              Some(m.sigs)),
             () => store.writeBucketed(positionsOf(kept), posTable(name),
-              posSpec(store, name), Some(m.pos)),
+              IndexTier.layout(store, posTable(name), PosBuckets, "i", "v"),
+              Some(m.pos)),
             () => store.writeBucketed(bandedOf(kept, m.params), bandTable(name),
-              bandSpec(store, name), Some(m.band)))).map(_.asInstanceOf[Int])
-          commitManifest(store, name,
+              IndexTier.layout(store, bandTable(name), BandBuckets, "band", "bucket"),
+              Some(m.band)))).map(_.asInstanceOf[Int])
+          IndexTier.commitManifest(store, manifestTable(name),
             m.copy(sigs = sv, pos = pv, band = bv,
               nLive = m.nLive - removed, nRm = 0L, rm = None,
               dlt = None, nDelta = 0L), Some(mv))
@@ -733,11 +586,11 @@ object SignatureIndex {
     val p = m.params
     val batchSigs = caches.pin(signaturesOf(batch, idCol, textCol, p))
     val sb = caches.pin(bandedOf(batchSigs, p))
-    val bandSp = bandSpec(store, name)
-    val storedBand = caches.pin(minusRm(spark, store, name, m)(
-      prunedWithDelta(spark, store, name, m, bandTable(name), m.band, bandSp,
-        touchedBuckets(bandSp, sb.select(col("band"), col("bucket"))),
-        d => bandedOf(d, p))))
+    val storedBand = caches.pin(servedTier(spark, store, name, m,
+      bandTable(name), m.band,
+      IndexTier.touchedBuckets(store, bandTable(name), m.band,
+        sb.select(col("band"), col("bucket"))),
+      d => bandedOf(d, p)))
     val hot = hotCells(sb, Seq("band", "bucket"), maxBucketSize)
       .union(hotCells(storedBand, Seq("band", "bucket"), maxBucketSize)).distinct()
     val coldB = sb.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
@@ -817,12 +670,10 @@ object SignatureIndex {
       posTouched: Option[Seq[Int]] = None)(
       implicit caches: CacheScope): DataFrame = {
     val pb = caches.pin(positionsOf(batchSigs))
-    val posSp = posSpec(store, name)
-    val ps = caches.pin(minusRm(spark, store, name, m)(
-      prunedWithDelta(spark, store, name, m, posTable(name), m.pos, posSp,
-        posTouched.getOrElse(
-          touchedBuckets(posSp, pb.select(col("i"), col("v")))),
-        d => positionsOf(d))))
+    val ps = caches.pin(servedTier(spark, store, name, m, posTable(name), m.pos,
+      posTouched.getOrElse(IndexTier.touchedBuckets(store, posTable(name), m.pos,
+        pb.select(col("i"), col("v")))),
+      d => positionsOf(d)))
     val cand = caches.pin(candidatePairs(pb, ps, maxBucketSize))
     val storedSigs = indexedSigsForIds(spark, store, name, m,
       cand.select(col("stored_id").as("id")))
@@ -906,14 +757,8 @@ object SignatureIndex {
     * pins (+0.5 s/drain on q144) — so the count round stays. */
   private def countAdmittedRetired(
       admitted: DataFrame, retired: DataFrame): (Long, Long) = {
-    def narrowCount(df: DataFrame): Long =
-      df.select(lit(1).as("_one")).queryExecution.toRdd
-        .mapPartitions { it =>
-          var n = 0L; while (it.hasNext) { it.next(); n += 1 }
-          Iterator.single(n)
-        }.collect().sum
     val Seq(a, r) = OverlayLock.inParallel(Seq(
-      () => narrowCount(admitted), () => narrowCount(retired)))
+      () => IndexTier.narrowCount(admitted), () => IndexTier.narrowCount(retired)))
     (a.asInstanceOf[Long], r.asInstanceOf[Long])
   }
 
@@ -933,48 +778,20 @@ object SignatureIndex {
       m: SigManifest, mv: Int,
       admitted: DataFrame, retired: DataFrame,
       admittedN: Long, retiredN: Long, stamp: Option[Long]): Unit = {
-    // fold policy priced from the MANIFEST counters (no corpus jobs)
-    if (m.nRm + retiredN > foldBound(m) || m.nDelta + admittedN > foldBound(m)) {
-      val mNew = m.copy(nDelta = m.nDelta + admittedN,
-        nLive = m.nLive + admittedN - retiredN, nRm = m.nRm + retiredN,
-        dlt = Some(appendDelta(spark, store, name, m, admitted)),
-        rm = if (retiredN == 0L) m.rm
-          else Some(m.rm match {
-            case Some(pin) => store.write(
-              store.snapshotAt(spark, rmTable(name), pin).select(col("id"))
-                .unionByName(retired).distinct().coalesce(4),
-              rmTable(name), Some(pin))
-            case None => store.write(retired.coalesce(4),
-              rmTable(name), store.currentVersion(rmTable(name)))
-          }),
-        lastBatchId = stamp.getOrElse(m.lastBatchId))
+    // O(batch ∪ tombstones): admissions ride ONE plain linked append into
+    // the delta member, retirements merge into the small tombstone member
+    // — independent tables, committed CONCURRENTLY
+    val (dv, rv) = IndexTier.commitDeltaAndRm(spark, store,
+      deltaTable(name) -> m.dlt, rmTable(name) -> m.rm, admitted, retired,
+      noRetired = retiredN == 0L)
+    val mNew = m.copy(dlt = Some(dv), nDelta = m.nDelta + admittedN,
+      nLive = m.nLive + admittedN - retiredN, nRm = m.nRm + retiredN, rm = rv,
+      lastBatchId = stamp.getOrElse(m.lastBatchId))
+    // fold policy priced from the MANIFEST counters (no corpus jobs); ONE
+    // manifest swap publishes either way
+    if (m.nRm + retiredN > foldBound(m) || m.nDelta + admittedN > foldBound(m))
       foldServed(spark, store, name, mNew, mv)
-    } else {
-      // O(batch ∪ tombstones): admissions ride ONE plain linked append
-      // into the delta member, retirements merge into the small
-      // tombstone member; the two member commits are independent tables,
-      // so they run CONCURRENTLY, and ONE manifest swap publishes both
-      val rvThunk: () => Any = () =>
-        if (retiredN == 0L) m.rm
-        else Some(m.rm match {
-          case Some(pin) => store.write(
-            store.snapshotAt(spark, rmTable(name), pin).select(col("id"))
-              .unionByName(retired).distinct().coalesce(4),
-            rmTable(name), Some(pin))
-          case None => store.write(retired.coalesce(4),
-            rmTable(name), store.currentVersion(rmTable(name)))
-        })
-      val res = OverlayLock.inParallel(Seq(
-        () => appendDelta(spark, store, name, m, admitted),
-        rvThunk))
-      val dv = res(0).asInstanceOf[Int]
-      val rv = res(1).asInstanceOf[Option[Int]]
-      commitManifest(store, name,
-        m.copy(dlt = Some(dv), nDelta = m.nDelta + admittedN,
-          nLive = m.nLive + admittedN - retiredN,
-          nRm = m.nRm + retiredN, rm = rv,
-          lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
-    }
+    else IndexTier.commitManifest(store, manifestTable(name), mNew, Some(mv))
   }
 
   /** SUPERSEDE admission — the text keeper, [[FrameIndex
@@ -1035,18 +852,18 @@ object SignatureIndex {
       OverlayLock.retryOnConflict() {
         val (m, mv) = requireManifest(store, name)
         requirePlain(m, name, "a supersede fold")
-        rollbackAll(store, name, m)
+        IndexTier.rollbackAll(store, m.tiers(name))
         val p = m.params
         // ONE probe job over the batch's pinned signatures: the sigs
         // tier's id-buckets AND the position tier's (i, v)-cell buckets
-        // fused ([[touchedBucketsPair]]). Probing cells from the
+        // fused ([[IndexTier.touchedBucketsPair]]). Probing cells from the
         // PRE-anti-join signatures is superset-safe: a wider bucket list
         // reads whole extra cells, a cell the (anti-joined) batch never
         // probes produces no candidate pairs, and per-cell hot counts
         // are exact for every read cell either way — results identical.
         val sigAll = caches.pin(signaturesOf(batch, idCol, textCol, p))
-        val (idBuckets, posBuckets) = touchedBucketsPair(
-          sigSpec(store, name), posSpec(store, name), positionsOf(sigAll))
+        val (idBuckets, posBuckets) = IndexTier.touchedBucketsPair(store,
+          sigsTable(name) -> m.sigs, posTable(name) -> m.pos, positionsOf(sigAll))
         // insert-only against the INDEXED id set (base ∪ delta, ⊇
         // tombstoned ids until the fold — a retired id can never re-enter
         // under its own name and be hidden by the subtraction), read from
@@ -1165,15 +982,15 @@ object SignatureIndex {
     val p = m.params
     if (stamp.exists(_ <= m.lastBatchId))
       return batch.filter(lit(false)) // replayed batchId: nothing folds
-    rollbackAll(store, name, m)
+    IndexTier.rollbackAll(store, m.tiers(name))
     // ONE probe job over the batch's pinned signatures: id-buckets and
-    // band-cell buckets fused ([[touchedBucketsPair]]); probing cells
+    // band-cell buckets fused ([[IndexTier.touchedBucketsPair]]); probing cells
     // from the PRE-anti-join signatures is superset-safe (the
     // [[supersede]] note — extra whole cells never pair, hot counts
     // exact per read cell)
     val sigAll = caches.pin(signaturesOfQ(batch, idCol, textCol, qCol, p))
-    val (idBuckets, bandBuckets) = touchedBucketsPair(
-      sigSpec(store, name), bandSpec(store, name), bandedOf(sigAll, p))
+    val (idBuckets, bandBuckets) = IndexTier.touchedBucketsPair(store,
+      sigsTable(name) -> m.sigs, bandTable(name) -> m.band, bandedOf(sigAll, p))
     // insert-only against the INDEXED id set (base ∪ delta); in-batch
     // duplicate ids fold to the (highest-quality, smallest-hash) row —
     // deterministic under any partitioning
@@ -1190,10 +1007,8 @@ object SignatureIndex {
     // banding), pruned to the batch's cells; stored (sig, q) fetch-back
     // from the candidates' id-buckets
     val sb = caches.pin(bandedOf(batchSigs, p))
-    val bandSp = bandSpec(store, name)
-    val storedBand = caches.pin(minusRm(spark, store, name, m)(
-      prunedWithDelta(spark, store, name, m, bandTable(name), m.band, bandSp,
-        bandBuckets, d => bandedOf(d, p))))
+    val storedBand = caches.pin(servedTier(spark, store, name, m,
+      bandTable(name), m.band, bandBuckets, d => bandedOf(d, p)))
     val hot = hotCells(sb, Seq("band", "bucket"), maxBucketSize)
       .union(hotCells(storedBand, Seq("band", "bucket"), maxBucketSize))
       .distinct()

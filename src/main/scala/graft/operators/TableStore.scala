@@ -47,7 +47,8 @@ final class VersionConflictException(msg: String) extends IllegalStateException(
   *
   * Layout: `<root>/<table>/v<N>/` parquet dirs + `<root>/<table>/_current`
   * manifest holding the live version number (and, for bucketed tables, the
-  * [[BucketSpec]]). Writers produce the next version's files fully in a
+  * [[BucketSpec]]; each version dir also keeps the spec it was written
+  * with, [[bucketSpecAt]]). Writers produce the next version's files fully in a
   * private `.staging-*` dir, then commit under a per-table lock: the
   * staging dir is renamed to `v(N+1)` and the manifest repointed with
   * temp-write + atomic rename — readers resolve the manifest first, so
@@ -101,7 +102,22 @@ class TableStore(val root: String) {
   /** The bucketing recorded for this table, if any (manifest line 2:
     * `buckets=<n>;pks=<a,b>`). */
   def bucketSpec(name: String): Option[BucketSpec] =
-    manifestLines(name).drop(1).headOption.collect {
+    manifestLines(name).drop(1).headOption.flatMap(parseSpec)
+
+  /** The bucketing version `v` was WRITTEN with — the layout a reader
+    * pinned at `v` must prune with, which a later rebucket or rollback
+    * does not change. Each commit records it as `v<N>/_spec` (empty for a
+    * plain version); a version committed before that file existed falls
+    * back to the table's current manifest line. */
+  def bucketSpecAt(name: String, v: Int): Option[BucketSpec] = {
+    val f = versionPath(name, v).resolve("_spec")
+    if (Files.exists(f))
+      parseSpec(new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim)
+    else bucketSpec(name)
+  }
+
+  private def parseSpec(line: String): Option[BucketSpec] =
+    Some(line).collect {
       case s if s.startsWith("buckets=") =>
         val parts = s.split(";").map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
         BucketSpec(parts("buckets").toInt, parts("pks").split(",").toSeq,
@@ -252,7 +268,7 @@ class TableStore(val root: String) {
         throw new IllegalStateException(
           s"table $name cannot roll back to pruned version v$version")
       val tmp = tableDir(name).resolve("_current.tmp")
-      val body = version.toString + bucketSpec(name)
+      val body = version.toString + bucketSpecAt(name, version)
         .map("\n" + _.manifestLine).getOrElse("")
       Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
       Files.move(tmp, manifest(name), StandardCopyOption.ATOMIC_MOVE,
@@ -699,6 +715,9 @@ class TableStore(val root: String) {
       // a crashed pre-CAS writer can have left a dead v(next) dir; it was
       // never committed (manifest still points at `expected`), so clear it
       if (Files.exists(dest)) deleteRecursively(dest)
+      // the version's own layout travels with its files ([[bucketSpecAt]])
+      Files.write(staging.resolve("_spec"),
+        spec.map(_.manifestLine).getOrElse("").getBytes(StandardCharsets.UTF_8))
       Files.move(staging, dest, StandardCopyOption.ATOMIC_MOVE)
       val tmp = tableDir(name).resolve("_current.tmp")
       val body = next.toString +

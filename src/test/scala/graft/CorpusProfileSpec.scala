@@ -306,7 +306,7 @@ class CorpusProfileSpec extends SparkSpec {
     val store = new PausingStore(freshRoot())
     CorpusProfile.admitBatch(spark, docs(1 to 300), 0L,
       "grp", "txt", "id", "num", 32, 64, store, "p")
-    val (m0, _) = CorpusProfile.readManifest(spark, store, "p").get
+    val (m0, _) = CorpusProfile.readManifest(store, "p").get
     val lvlPin = m0.lvl.get
     store.armed = true
     val task = new java.util.concurrent.FutureTask[Boolean](() =>

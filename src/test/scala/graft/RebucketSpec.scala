@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{CacheScope, PerceptualIndex, TableStore}
+import graft.operators.{BucketSpec, CacheScope, PerceptualIndex, TableStore}
 
 /** Rebucket-at-fold ([[graft.operators.OverlayLock.grownSpec]]): the
   * constant-per-bucket-bytes rule as CODE — bucket counts are pinned at
@@ -112,5 +112,18 @@ class RebucketSpec extends SparkSpec {
       assert(graft.operators.PostingsIndex
         .postings(spark, store, "bm").select("doc_id").distinct().count() >= 420)
     }
+  }
+
+  test("rollbackTo across a rebucket restores the pinned version's layout") {
+    // v1 written with 4 buckets, v2 rebucketed to 8: rolling back to v1
+    // must record v1's layout, or every later pruned read of v1's files
+    // hashes keys into buckets v1 never wrote
+    val s = spark; import s.implicits._
+    val store = new TableStore(tmpDir("rebucket-rollback"))
+    val rows = (0 until 200).map(i => (i, s"p$i")).toDF("id", "payload")
+    store.writeBucketed(rows, "t", BucketSpec(4, Seq("id")))
+    store.writeBucketed(rows, "t", BucketSpec(8, Seq("id")))
+    store.rollbackTo("t", 1)
+    assert(store.bucketSpec("t").map(_.nBuckets) === Some(4))
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
-import graft.operators.{TableStore, VersionConflictException}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import graft.operators.{BucketSpec, IndexTier, TableStore, VersionConflictException}
 import graft.streaming.CdcStream
 
 /** Round-6 concurrency hardening (ADVICE r5): CAS anchored at READ time,
@@ -240,5 +241,23 @@ class TableStoreSnapshotSpec extends SparkSpec {
       s"file count must be bounded by the compaction fold, got ${store.fileCount("t")}")
     val rows = store.read(spark, "t").count()
     assert(rows === 7, "compaction must preserve every appended row exactly once")
+  }
+
+  test("a reader pinned at v1 prunes with v1's bucket layout across a rebucket") {
+    // v1 holds 200 keys in 4 buckets; v2 rebuckets them to 8. A reader
+    // pinned at v1 must probe and prune with v1's layout: under v2's,
+    // half the keys hash to buckets v1 never wrote and vanish
+    val store = new TableStore(tmpDir("spec-at"))
+    val rows = (0 until 200).map(i => (i, s"p$i")).toDF("id", "payload")
+    store.writeBucketed(rows, "t", BucketSpec(4, Seq("id")))
+    store.writeBucketed(rows, "t", BucketSpec(8, Seq("id")))
+    // point reads, batched: keys grouped by their bucket in the CURRENT layout
+    val found = (0 until 8).flatMap { g =>
+      val keys = rows.select(col("id")).filter(pmod(hash(col("id")), lit(8)) === g)
+      IndexTier.prunedAt(spark, store, "t", 1,
+        IndexTier.touchedBuckets(store, "t", 1, keys))
+        .join(keys, Seq("id"), "left_semi").select(col("id")).as[Int].collect().toSeq
+    }
+    assert(found.sorted === (0 until 200))
   }
 }
