@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.functions.VectorFunctions
 import graft.operators.{ChangeApplier, Dedup, Similarity}
+import graft.streaming.AdmissionStream
 
 /** Driver contract — the declared operator surface (SURVEY §2) as named,
   * DuckDB-oracle-checked queries over the driver's parquet test tables.
@@ -112,7 +113,7 @@ object SparkEntry {
     * `% 10 == 9` slice staged as three single-file parquet micro-batches
     * under `<root>/stage`. The QUERY copies the seed index to a fresh
     * run root and drains the staged files through
-    * [[graft.operators.IvfIndex.admitStream]] — the measured operation
+    * [[graft.operators.IvfIndex.admitBatch]] — the measured operation
     * is the exactly-once streaming admission itself, on top of a
     * pre-built model (seed-then-stream, the production shape). */
   /** The q131 video fixture: 30 groups × 6 midpoint-sampled frames, each
@@ -269,27 +270,10 @@ object SparkEntry {
       // stage the streamed slice as three deterministic single-file
       // batches (flat dir; maxFilesPerTrigger=1 makes each its own
       // micro-batch through the admission gate)
-      val stageDir = java.nio.file.Paths.get(root, "stage")
-      java.nio.file.Files.createDirectories(stageDir)
-      for (k <- 0 until 3) {
-        val part = s"$root/_part$k"
+      stageDrains(root, (0 until 3).map(k =>
         emb.filter(pmod(col("vec_id"), lit(10)) === 9 &&
             pmod(col("vec_id"), lit(3)) === k)
-          .select(col("vec_id"), col("embedding"))
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+          .select(col("vec_id"), col("embedding"))))
       root
     })
 
@@ -333,7 +317,7 @@ object SparkEntry {
     * under `<root>/stage` — the q110 seed-then-stream shape applied to the
     * LEXICAL index. The query copies the seed to a fresh run root and
     * drains the staged files through [[graft.operators.PostingsIndex
-    * .admitStream]]; the measured operation is the exactly-once streaming
+    * .admitBatch]]; the measured operation is the exactly-once streaming
     * admission itself, on top of pre-built postings. */
   private val q113SeedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def q113SeedRoot(s: SparkSession, dir: String): String =
@@ -344,27 +328,10 @@ object SparkEntry {
       graft.operators.PostingsIndex.build(
         docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
         "doc_id", "text", store, "bm_idx")
-      val stageDir = java.nio.file.Paths.get(root, "stage")
-      java.nio.file.Files.createDirectories(stageDir)
-      for (k <- 0 until 3) {
-        val part = s"$root/_part$k"
+      stageDrains(root, (0 until 3).map(k =>
         docs.filter(pmod(col("doc_id"), lit(10)) === 0 &&
             pmod(col("doc_id"), lit(3)) === k)
-          .select(col("doc_id"), col("text"))
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+          .select(col("doc_id"), col("text"))))
       root
     })
 
@@ -382,6 +349,31 @@ object SparkEntry {
         try java.nio.file.Files.createLink(q, p)
         catch { case _: Exception => java.nio.file.Files.copy(p, q) }
     } finally stream.close()
+  }
+
+  /** Stage `drains`, in order, as deterministic single-file parquet
+    * micro-batches `<root>/stage/b<k>.parquet` (flat dir; a reader with
+    * maxFilesPerTrigger=1 makes each its own micro-batch through the
+    * admission gate). Each drain is written `coalesce(1)` to the temp dir
+    * `<root>/_part<k>`, whose one part file moves into place before the
+    * temp dir is deleted. */
+  private def stageDrains(root: String, drains: Seq[DataFrame]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val stageDir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(root, "stage"))
+    drains.zipWithIndex.foreach { case (d, k) =>
+      val part = s"$root/_part$k"
+      d.coalesce(1).write.mode("overwrite").parquet(part)
+      val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
+      try f.iterator().forEachRemaining { p =>
+        if (p.getFileName.toString.startsWith("part-"))
+          java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
+      } finally f.close()
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
+      try w.iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+      finally w.close()
+    }
   }
 
   /** The staged event-stream fixture q78/q80 drain: the events table split
@@ -558,25 +550,7 @@ object SparkEntry {
         bases.filter(col("gi").between(33, 38))
           .unionByName(pert.filter(col("gi").between(27, 29)))
           .unionByName(pert.filter(col("gi") === 1)))
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      drains.zipWithIndex.foreach { case (d, k) =>
-        val part = s"$root/_part$k"
-        d.select(col("id"), col("sig"))
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, drains.map(_.select(col("id"), col("sig"))))
       root
     })
 
@@ -598,25 +572,8 @@ object SparkEntry {
         allStored.join(seedIds, Seq("id"), "left_semi"),
         maxHamming = 6, store, "img_idx")
       val rest = allStored.join(seedIds, Seq("id"), "left_anti")
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      for (k <- 0 until 3) {
-        val part = s"$root/_part$k"
-        rest.filter(pmod(col("id"), lit(3)) === k)
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, (0 until 3).map(k =>
+        rest.filter(pmod(col("id"), lit(3)) === k)))
       root
     })
 
@@ -643,27 +600,10 @@ object SparkEntry {
         stored.join(seedIds, Seq("id"), "left_semi"),
         maxHamming = 6, minContainment = 0.99, store, "vid_idx")
       val rest = stored.join(seedIds, Seq("id"), "left_anti")
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      for (k <- 0 until 3) {
-        val part = s"$root/_part$k"
+      stageDrains(root, (0 until 3).map(k =>
         // split by VIDEO id so each video's frame set stays whole in one
         // drain (frame sets are atomic per delivery)
-        rest.filter(pmod(expr("id div 10"), lit(3)) === k)
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+        rest.filter(pmod(expr("id div 10"), lit(3)) === k)))
       root
     })
 
@@ -703,24 +643,7 @@ object SparkEntry {
           .unionByName(slice(2, 1, 1)),
         slice(0, 26, 30).unionByName(slice(1, 21, 22))
           .unionByName(slice(2, 2, 2)))
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      drains.zipWithIndex.foreach { case (d, k) =>
-        val part = s"$root/_part$k"
-        d.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, drains)
       root
     })
 
@@ -762,24 +685,7 @@ object SparkEntry {
         slice(2, 1, 3).unionByName(slice(1, 21, 22)),
         slice(2, 21, 22).unionByName(slice(0, 26, 30))
           .unionByName(slice(2, 10, 10)))
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      drains.zipWithIndex.foreach { case (d, k) =>
-        val part = s"$root/_part$k"
-        d.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, drains)
       root
     })
 
@@ -826,24 +732,7 @@ object SparkEntry {
         slice(0, 8, 9).unionByName(slice(0, 18, 18))
           .unionByName(slice(1, 10, 10, maxFrame = 2))
           .unionByName(slice(3, 12, 12)))
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      drains.zipWithIndex.foreach { case (d, k) =>
-        val part = s"$root/_part$k"
-        d.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, drains)
       root
     })
 
@@ -888,24 +777,7 @@ object SparkEntry {
           .unionByName(slice(0, 15, 15, q = 10.0)),
         slice(2, 1, 1, q = 25.0).unionByName(slice(1, 7, 7, q = 20.0))
           .unionByName(slice(1, 8, 8, q = 10.0)))
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      drains.zipWithIndex.foreach { case (d, k) =>
-        val part = s"$root/_part$k"
-        d.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, drains)
       root
     })
 
@@ -970,24 +842,7 @@ object SparkEntry {
           .unionByName(pick(1, 1, 2, "full_text")),
         pick(6, 7, 0, "full_text").unionByName(pick(15, 15, 0, "full_text"))
           .unionByName(pick(8, 8, 3, "snip_text")).unionByName(overlap))
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      drains.zipWithIndex.foreach { case (d, k) =>
-        val part = s"$root/_part$k"
-        d.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, drains)
       root
     })
 
@@ -1041,24 +896,7 @@ object SparkEntry {
           .unionByName(flips(0, 3000000L)), // copy of a drain-1 admission
         flips(2, 2000000L)
           .unionByName(flips(1, 3000000L))) // copy of a drain-2 admission
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      drains.zipWithIndex.foreach { case (d, k) =>
-        val part = s"$root/_part$k"
-        d.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, drains)
       root
     })
 
@@ -1102,24 +940,7 @@ object SparkEntry {
         pick(4, "keeperepsilon", 1, 1, q = 25.0)
           .unionByName(pick(1, "keeperalpha", 7, 7, q = 20.0))
           .unionByName(pick(2, "keeperbeta", 8, 8, q = 10.0)))
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      drains.zipWithIndex.foreach { case (d, k) =>
-        val part = s"$root/_part$k"
-        d.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, drains)
       root
     })
 
@@ -1133,28 +954,11 @@ object SparkEntry {
       val store = new graft.operators.TableStore(s"$root/idx")
       val docs = t(s, dir, "documents")
       graft.operators.PostingsIndex.build(docs, "doc_id", "text", store, "bm_idx")
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
-      for (k <- 0 until 3) {
-        val part = s"$root/_part$k"
+      stageDrains(root, (0 until 3).map(k =>
         docs.filter(pmod(col("doc_id"), lit(10)) === 0 &&
             pmod(col("doc_id"), lit(3)) === k)
           .select(col("doc_id"),
-            concat(col("text"), lit(" revised edition")).as("text"))
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+            concat(col("text"), lit(" revised edition")).as("text"))))
       root
     })
 
@@ -1216,8 +1020,6 @@ object SparkEntry {
     q127StageCache.computeIfAbsent(dir, _ => {
       import graft.functions.VectorFunctions.{l2Norm, toDouble}
       val root = newTmpDir("graft_q127stage").toString
-      val stageDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root, "stage"))
       val rev = t(s, dir, "embeddings")
         .filter(pmod(col("vec_id"), lit(10)) === 9)
         .select(col("vec_id"), toDouble(col("embedding")).as("embedding"))
@@ -1225,23 +1027,8 @@ object SparkEntry {
         .withColumn("embedding", transform(col("embedding"),
           (x, i) => when(i === 0, x + lit(0.5)).otherwise(x)))
         .select(col("vec_id"), col("embedding"))
-      for (k <- 0 until 3) {
-        val part = s"$root/_part$k"
-        rev.filter(pmod(col("vec_id"), lit(3)) === k)
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-        try f.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith("part-"))
-            java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-        } finally f.close()
-        locally {
-          import scala.jdk.CollectionConverters._
-          val w = java.nio.file.Files.walk(java.nio.file.Paths.get(part))
-          try w.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally w.close()
-        }
-      }
+      stageDrains(root, (0 until 3).map(k =>
+        rev.filter(pmod(col("vec_id"), lit(3)) === k)))
       root
     })
 
@@ -1855,10 +1642,11 @@ object SparkEntry {
         .filter(col("event_type") =!= "flush")
         .withColumn("user_day", concat(col("user_id").cast("string"),
           lit(":"), date_format(col("ts"), "yyyy-MM-dd")))
-      graft.operators.CorpusProfile.admitStream(stream,
+      AdmissionStream.drain(stream, s"$root/chk") { (batch, id) =>
+        graft.operators.CorpusProfile.admitBatch(batch.sparkSession, batch, id,
           "event_type", "user_day", "event_id", "value",
-          k = 64, b = 128, store, "ev", s"$root/chk")
-        .awaitTermination()
+          k = 64, b = 128, store, "ev")
+      }.awaitTermination()
       graft.operators.CorpusProfile.profile(s, store, "ev",
           k = 64, qs = Seq(0.5, 0.9))
         .withColumnRenamed("group", "event_type")
@@ -2635,8 +2423,10 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.IvfIndex.admitStream(stream, "vec_id", "embedding",
-        store, "emb_idx", s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.IvfIndex.admitBatch(b.sparkSession, b, id,
+          "vec_id", "embedding", store, "emb_idx")
+      }.awaitTermination()
       val batch = t(s, dir, "embeddings").filter(pmod(col("vec_id"), lit(10)) === 0)
       graft.operators.IvfIndex.topK(s, batch, "vec_id", "embedding",
           store, "emb_idx", k = 3, nProbe = 2)
@@ -2665,8 +2455,10 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.IvfIndex.admitStream(stream, "vec_id", "embedding",
-        store, "emb_idx", s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.IvfIndex.admitBatch(b.sparkSession, b, id,
+          "vec_id", "embedding", store, "emb_idx")
+      }.awaitTermination()
       val batch = t(s, dir, "embeddings").filter(pmod(col("vec_id"), lit(10)) === 0)
       graft.operators.IvfIndex.topK(s, batch, "vec_id", "embedding",
           store, "emb_idx", k = 3, nProbe = 6)
@@ -3307,8 +3099,10 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.PostingsIndex.admitStream(stream, "doc_id", "text",
-        store, "bm_idx", s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.PostingsIndex.admitBatch(b.sparkSession, b, id,
+          "doc_id", "text", store, "bm_idx")
+      }.awaitTermination()
       val probes = t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("probe_id"),
           slice(filter(graft.functions.TextFunctions.tokens(col("text")),
@@ -3321,7 +3115,7 @@ object SparkEntry {
     // sink, composing r14's single-swap upsert with the streaming gate:
     // the postings index is built over the FULL corpus, then the
     // %10==0 docs arrive RE-CRAWLED (' revised edition' appended) as
-    // three micro-batches through admitUpsertStream. Insert-only
+    // three micro-batches through admitUpsertBatch. Insert-only
     // admission (q113) would silently keep the stale text — the ids
     // already exist; here each drain replaces its docs across all
     // tiers in one swap that also records the batchId, so a
@@ -3338,8 +3132,10 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.PostingsIndex.admitUpsertStream(stream, "doc_id", "text",
-        store, "bm_idx", s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.PostingsIndex.admitUpsertBatch(b.sparkSession, b, id,
+          "doc_id", "text", store, "bm_idx")
+      }.awaitTermination()
       // probes read the REVISED corpus (same CASE as the oracle's d CTE)
       val revised = when(pmod(col("doc_id"), lit(10)) === 0,
         concat(col("text"), lit(" revised edition"))).otherwise(col("text"))
@@ -3354,7 +3150,7 @@ object SparkEntry {
     // ext: q126's VECTOR-SIDE twin — streamed upsert admission into the
     // persisted IVF family: the %10==9 slice arrives RE-EMBEDDED
     // (dimension 0 shifted +0.5 in double space) as three micro-batches
-    // through IvfIndex.admitUpsertStream against a copy of the q60
+    // through IvfIndex.admitUpsertBatch against a copy of the q60
     // index. Every tier (float/int8/PQ) replaces the revised ids in one
     // swap per batch; the model is untouched (refit-free maintenance),
     // so the oracle is q60's chain with centroids fit on the ORIGINAL
@@ -3370,8 +3166,10 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$stageRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$stageRoot/stage")
-      graft.operators.IvfIndex.admitUpsertStream(stream, "vec_id", "embedding",
-        store, "emb_idx", s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.IvfIndex.admitUpsertBatch(b.sparkSession, b, id,
+          "vec_id", "embedding", store, "emb_idx")
+      }.awaitTermination()
       val batch = t(s, dir, "embeddings").filter(pmod(col("vec_id"), lit(10)) === 0)
       graft.operators.IvfIndex.topK(s, batch, "vec_id", "embedding",
           store, "emb_idx", k = 3, nProbe = 2)
@@ -3615,8 +3413,9 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.PerceptualIndex.admitStream(stream, store, "img_idx",
-        s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.PerceptualIndex.admitBatch(b.sparkSession, b, id, store, "img_idx")
+      }.awaitTermination()
       def hashed(n: Int, vs: Seq[Int]) =
         graft.operators.Multimodal.dHashes(perceptualCards(s, dir, n, vs))
       val storedIds = graft.operators.PerceptualIndex
@@ -3658,7 +3457,7 @@ object SparkEntry {
 
     // ext: THE ADMISSION LOOP AS ONE EXACTLY-ONCE FOLD — screen against
     // committed state, admit only the novel, record the batchId, one
-    // swap (admitNovelStream): the daily crawl loop with EVOLVING state.
+    // swap (admitNovelBatch): the daily crawl loop with EVOLVING state.
     // Three drains prove the evolution: drain-2 copies of items admitted
     // in drain 1 are rejected BY that admission (not by the seed), and
     // drain-3 copies of drain-2 admissions likewise — per-item admission
@@ -3672,8 +3471,9 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.PerceptualIndex.admitNovelStream(stream, store, "img_idx",
-        s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.PerceptualIndex.admitNovelBatch(b.sparkSession, b, id, store, "img_idx")
+      }.awaitTermination()
       val staged = s.read.parquet(s"$seedRoot/stage").select(col("id"))
       val finalIds = graft.operators.PerceptualIndex
         .signatures(s, store, "img_idx").select(col("id").as("_in_id"))
@@ -3745,7 +3545,7 @@ object SparkEntry {
     // signatures live in a managed FrameIndex (manifest pins the
     // per-frame hamming budget AND the containment threshold), seeded
     // with 15 originals and grown to all 30 through three exactly-once
-    // screen-then-admit drains (admitNovelStream — the managed loop the
+    // screen-then-admit drains (admitNovelBatch — the managed loop the
     // bare q138 frame couldn't run: no pinned budget, no batchId gate,
     // no takedown). The final screen is q138's function of the same
     // video universe, so the oracle is q138's SQL verbatim.
@@ -3757,8 +3557,9 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.FrameIndex.admitNovelStream(stream, store, "vid_idx",
-        s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.FrameIndex.admitNovelBatch(b.sparkSession, b, id, store, "vid_idx")
+      }.awaitTermination()
       val sigs = graft.operators.Multimodal.dHashes(videoFrameCards(s, dir))
         .select(expr("item_id div 10").as("id"),
           pmod(col("item_id"), lit(10)).cast("int").as("frame"),
@@ -3798,8 +3599,9 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.PerceptualIndex.admitNovelStream(stream, store, "sfp_idx",
-        s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.PerceptualIndex.admitNovelBatch(b.sparkSession, b, id, store, "sfp_idx")
+      }.awaitTermination()
       val staged = s.read.parquet(s"$seedRoot/stage").select(col("id"))
       val finalIds = graft.operators.PerceptualIndex
         .signatures(s, store, "sfp_idx").select(col("id").as("_in_id"))
@@ -3810,7 +3612,7 @@ object SparkEntry {
     }),
 
     // ext: KEEPER-AWARE ADMISSION — q137's keeper rule composed with
-    // q139's loop in ONE exactly-once fold (admitKeepBestStream): an
+    // q139's loop in ONE exactly-once fold (admitKeepBestBatch): an
     // arrival matching stored items within the budget REPLACES them
     // when its REAL decoded width×height is strictly higher (the
     // RefinedWeb pixels rule applied at the gate), rejects otherwise —
@@ -3827,8 +3629,10 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.PerceptualIndex.admitKeepBestStream(stream, store,
-        "keep_idx", s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.PerceptualIndex.admitKeepBestBatch(b.sparkSession, b, id,
+          store, "keep_idx")
+      }.awaitTermination()
       val seeds = t(s, dir, "documents").select(col("doc_id").as("g"))
         .orderBy(col("g")).limit(30)
         .withColumn("gi", row_number().over(
@@ -3866,8 +3670,9 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.FrameIndex.admitSupersedeStream(stream, store, "sup_idx",
-        s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.FrameIndex.admitSupersedeBatch(b.sparkSession, b, id, store, "sup_idx")
+      }.awaitTermination()
       val seeds = t(s, dir, "documents").select(col("doc_id").as("g"))
         .orderBy(col("g")).limit(30)
         .withColumn("gi", row_number().over(
@@ -3907,7 +3712,7 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.streaming.AdmissionStream.startSupersede(stream,
+      AdmissionStream.startSupersede(stream,
         "doc_id", "text", store, "txt_idx", minContainment = 0.75,
         s"$root/chk", _ => ()).awaitTermination()
       val derived = q144Derived(s, dir)
@@ -3927,7 +3732,7 @@ object SparkEntry {
     }),
 
     // ext: SEMANTIC ADMISSION LOOP — q139's managed screen-then-admit
-    // for the EMBEDDING family (IvfIndex.admitNovelStream), closing the
+    // for the EMBEDDING family (IvfIndex.admitNovelBatch), closing the
     // gap where every other modality had a novelty gate but the vector
     // tier had only the ad-hoc q68 screen: per drain, probe the
     // persisted cells, reject arrivals whose best stored neighbour
@@ -3944,9 +3749,10 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.IvfIndex.admitNovelStream(stream, "vec_id", "embedding",
-        store, "emb_idx", s"$root/chk", threshold = 0.95, nProbe = 2)
-        .awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.IvfIndex.admitNovelBatch(b.sparkSession, b, id,
+          "vec_id", "embedding", store, "emb_idx", threshold = 0.95, nProbe = 2)
+      }.awaitTermination()
       val staged = s.read.parquet(s"$seedRoot/stage").select(col("vec_id"))
       val finalIds = graft.operators.IvfIndex
         .vectors(s, store, "emb_idx").select(col("id").as("_in_id"))
@@ -3958,7 +3764,7 @@ object SparkEntry {
 
     // ext: VIDEO KEEPER ADMISSION — q142's replace-if-better rule
     // composed with q143's containment evidence on the FRAME family
-    // (FrameIndex.admitKeepBestStream): a MUTUALLY-contained arrival (a
+    // (FrameIndex.admitKeepBestBatch): a MUTUALLY-contained arrival (a
     // re-encode of the same cut) replaces its stored match when its
     // quality score is strictly higher, rejects otherwise (ties keep
     // the incumbent); an arrival strictly CONTAINED in a stored video
@@ -3975,8 +3781,9 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.FrameIndex.admitKeepBestStream(stream, store, "keep_idx",
-        s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        graft.operators.FrameIndex.admitKeepBestBatch(b.sparkSession, b, id, store, "keep_idx")
+      }.awaitTermination()
       val seeds = t(s, dir, "documents").select(col("doc_id").as("g"))
         .orderBy(col("g")).limit(30)
         .withColumn("gi", row_number().over(
@@ -3995,7 +3802,7 @@ object SparkEntry {
     }),
 
     // ext: TEXT KEEPER ADMISSION — q142's replace-if-better rule on the
-    // TEXT family (SignatureIndex.admitKeepBestStream), completing the
+    // TEXT family (SignatureIndex.admitKeepBestBatch), completing the
     // novelty/keeper/supersede matrix: arrivals screen against the
     // pinned stored state with the JACCARD near-dup rule (q117's
     // keep-best, managed — a keeper ranks interchangeable copies, where
@@ -4015,9 +3822,15 @@ object SparkEntry {
       val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
       val stream = s.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      graft.operators.SignatureIndex.admitKeepBestStream(stream,
-        "doc_id", "text", "q", store, "keep_idx", threshold = 0.5,
-        s"$root/chk").awaitTermination()
+      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
+        // the fold commits EAGERLY inside admitKeepBestBatch; its returned
+        // pass-through rows are for callers with a sink — this loop has
+        // none, so evaluating them would re-scan the batch for nothing
+        implicit val scope: graft.operators.CacheScope = new graft.operators.CacheScope
+        try graft.operators.SignatureIndex.admitKeepBestBatch(b.sparkSession, b, id,
+          "doc_id", "text", "q", store, "keep_idx", threshold = 0.5)
+        finally scope.release()
+      }.awaitTermination()
       val seedIds = t(s, dir, "documents")
         .filter(size(split(col("text"), " ")) >= 40)
         .select(col("doc_id").as("g"))

@@ -104,7 +104,7 @@ object CorpusProfile {
 
   // -------------------------------------------------- admission concurrency
 
-  /** Per-(store-root, profile) admission mutex — see [[OverlayLock]]:
+  /** Per-(store-root, profile) admission gate — see [[OverlayLock]]:
     * the kmv and lvl member tables commit as two INDEPENDENT per-table
     * CAS swaps, so two in-process admitters racing the same profile can
     * split the wins — A takes the kmv CAS, B takes the lvl CAS — and
@@ -112,40 +112,13 @@ object CorpusProfile {
     * by neither (the round-11 livelock, CorpusProfileSpec's
     * `Vector(conflict, conflict)`). Serializing in-process admitters
     * closes that schedule outright; the manifest CAS stays in force as
-    * the cross-process backstop, where [[retryOnConflict]] turns a
-    * split-win into a refold instead of an abort. Reentrant because a
-    * stale build decision delegates build → append under the same lock. */
-  private def withAdmissionLock[A](store: TableStore, name: String)(body: => A): A =
-    OverlayLock.withLock(store, "profile", name)(body)
-
-  /** Attempts per admission before a conflict is rethrown. Cross-process
-    * races are rare (one streaming admitter per profile is the designed
-    * deployment) and the streaming gate redelivers on failure, so a small
-    * bound beats looping forever against a livelocking peer. */
-  private val MaxAdmissionAttempts = 3
-
-  /** Run one fold attempt, retrying on [[VersionConflictException]]: a
-    * conflict means another admitter moved a member table or the manifest
-    * under us. Re-read the manifest — if it shows `stamp` admitted, the
-    * peer won and this is a skip (exactly-once holds); otherwise the next
-    * attempt re-reads the pins, rolls back the split-win orphans, and
-    * refolds from committed-visible state. */
-  private def retryOnConflict(
-      store: TableStore, name: String, stamp: Option[Long])(
-      attempt: => Boolean): Boolean = {
-    var n = 0
-    while (true) {
-      try return attempt
-      catch {
-        case e: VersionConflictException =>
-          n += 1
-          if (stamp.isDefined && readManifest(store, name)
-              .exists(_._1.lastBatchId >= stamp.get)) return false
-          if (n >= MaxAdmissionAttempts) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+    * the cross-process backstop, where [[OverlayLock.retryOnConflict]]
+    * turns a split-win into a refold instead of an abort — each attempt
+    * re-reads the manifest, so a peer that admitted this very stamp makes
+    * the next attempt a skip. Reentrant because a stale build decision
+    * delegates build → append under the same lock. */
+  private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
+    OverlayLock.mutate(store, "profile", name)(attempt)
 
   private def pinnedRead(
       spark: SparkSession, store: TableStore, name: String,
@@ -327,36 +300,34 @@ object CorpusProfile {
   private[graft] def buildStamped(
       df: DataFrame, groupCol: String, distinctCol: String, idCol: String,
       numCol: String, k: Int, b: Int, store: TableStore, name: String,
-      stamp: Option[Long]): Boolean = withAdmissionLock(store, name) {
+      stamp: Option[Long]): Boolean = mutate(store, name) {
     val spark = df.sparkSession
-    retryOnConflict(store, name, stamp) {
-      val prev = readManifest(store, name)
-      val base = prev.map(_._1).getOrElse(ProfileManifest(None, None, None, -1L))
-      if (stamp.exists(_ <= base.lastBatchId)) false
-      else if (stamp.isDefined && base.kmv.isDefined)
-        // the caller's build-vs-append decision was made from a STALE read:
-        // a concurrent admitter built the first tiers since. Building here
-        // would overwrite (and silently discard) that admitted data — fold
-        // this batch on top instead (append fails actionably if the pin
-        // has no backing files).
-        appendStamped(spark, df, groupCol, distinctCol, idCol, numCol, k, b,
-          store, name, stamp)
-      else {
-        // a crashed writer can have left orphan successors ABOVE the pins;
-        // writing on top of them would let the commit's prune discard the
-        // still-pinned versions under live readers — roll back first
-        base.kmv.foreach(OverlayLock.rollbackIfAhead(store, kmvTable(name), _))
-        base.lvl.foreach(OverlayLock.rollbackIfAhead(store, lvlTable(name), _))
-        val Seq(kv, lv) = OverlayLock.inParallel(Seq(
-          () => store.write(kmvRows(df, groupCol, distinctCol, k), kmvTable(name)),
-          () => store.write(lvlRows(df, groupCol, idCol, numCol, b), lvlTable(name))))
-          .map(_.asInstanceOf[Int])
-        IndexTier.commitManifest(store, manifestTable(name),
-          base.copy(kmv = Some(kv), lvl = Some(lv),
-            lastBatchId = stamp.getOrElse(base.lastBatchId), buildK = k),
-          prev.map(_._2))
-        true
-      }
+    val prev = readManifest(store, name)
+    val base = prev.map(_._1).getOrElse(ProfileManifest(None, None, None, -1L))
+    if (stamp.exists(_ <= base.lastBatchId)) false
+    else if (stamp.isDefined && base.kmv.isDefined)
+      // the caller's build-vs-append decision was made from a STALE read:
+      // a concurrent admitter built the first tiers since. Building here
+      // would overwrite (and silently discard) that admitted data — fold
+      // this batch on top instead (append fails actionably if the pin
+      // has no backing files).
+      appendStamped(spark, df, groupCol, distinctCol, idCol, numCol, k, b,
+        store, name, stamp)
+    else {
+      // a crashed writer can have left orphan successors ABOVE the pins;
+      // writing on top of them would let the commit's prune discard the
+      // still-pinned versions under live readers — roll back first
+      base.kmv.foreach(OverlayLock.rollbackIfAhead(store, kmvTable(name), _))
+      base.lvl.foreach(OverlayLock.rollbackIfAhead(store, lvlTable(name), _))
+      val Seq(kv, lv) = OverlayLock.inParallel(Seq(
+        () => store.write(kmvRows(df, groupCol, distinctCol, k), kmvTable(name)),
+        () => store.write(lvlRows(df, groupCol, idCol, numCol, b), lvlTable(name))))
+        .map(_.asInstanceOf[Int])
+      IndexTier.commitManifest(store, manifestTable(name),
+        base.copy(kmv = Some(kv), lvl = Some(lv),
+          lastBatchId = stamp.getOrElse(base.lastBatchId), buildK = k),
+        prev.map(_._2))
+      true
     }
   }
 
@@ -389,16 +360,14 @@ object CorpusProfile {
     *         by re-reading the manifest — skip when the peer admitted
     *         this stamp, refold from the fresh pins otherwise. Never
     *         double-folds; a conflict escapes only after
-    *         [[MaxAdmissionAttempts]] straight losses. */
+    *         [[OverlayLock.retryOnConflict]]'s bounded straight losses. */
   private[graft] def appendStamped(
       spark: SparkSession, batch: DataFrame, groupCol: String,
       distinctCol: String, idCol: String, numCol: String, k: Int, b: Int,
       store: TableStore, name: String, stamp: Option[Long]): Boolean =
-    withAdmissionLock(store, name) {
-      retryOnConflict(store, name, stamp) {
-        appendAttempt(spark, batch, groupCol, distinctCol, idCol, numCol,
-          k, b, store, name, stamp)
-      }
+    mutate(store, name) {
+      appendAttempt(spark, batch, groupCol, distinctCol, idCol, numCol,
+        k, b, store, name, stamp)
     }
 
   /** One fold attempt: derive from the manifest-pinned versions, commit
@@ -478,7 +447,7 @@ object CorpusProfile {
     * from `retained`, committed as member versions, and ONE manifest
     * swap repoints both pins while PRESERVING the frequency-tier pin and
     * the admission gate's `last_batch_id` (already-admitted batch ids
-    * stay admitted, so a live [[admitStream]] resumes cleanly against
+    * stay admitted, so a live [[admitBatch]] drain resumes cleanly against
     * the rebuilt state). Compose with [[removeFreq]] for the frequency
     * tier, whose cell sums support exact subtraction instead.
     *
@@ -562,37 +531,6 @@ object CorpusProfile {
         store, name, Some(batchId))
   }
 
-  /** Streaming admission: every micro-batch of `stream` is folded into
-    * the committed profile through the [[admitBatch]] gate — the profile
-    * as a live sink. `availableNow = true` (default) drains what is
-    * queued and stops (a bounded stage); `false` leaves the query
-    * running continuously against a live feed. */
-  def admitStream(
-      stream: DataFrame,
-      groupCol: String,
-      distinctCol: String,
-      idCol: String,
-      numCol: String,
-      k: Int,
-      b: Int,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitBatch(batch.sparkSession, batch, batchId,
-            groupCol, distinctCol, idCol, numCol, k, b, store, name)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
-
   // ------------------------------------------------------------ frequency tier
 
   /** Build the FREQUENCY tier: CMS cells over `valueCol` (typically an
@@ -607,25 +545,21 @@ object CorpusProfile {
       depth: Int,
       width: Int,
       store: TableStore,
-      name: String): Unit = withAdmissionLock(store, name) {
+      name: String): Unit = mutate(store, name) {
     // same lock + retry as the distinct/quantile path: the manifest is
     // shared across tiers, so a concurrent admitBatch swapping it would
     // otherwise conflict this commit's CAS
-    retryOnConflict(store, name, None) {
-      val prev = readManifest(store, name)
-      val base = prev.map(_._1).getOrElse(ProfileManifest(None, None, None, -1L))
-      // see buildStamped: orphan successors above the pin must go first,
-      // or this commit's prune discards the still-pinned version
-      base.cms.foreach(OverlayLock.rollbackIfAhead(store, cmsTable(name), _))
-      val cv = store.write(
-        Sketches.cmsCells(df.select(col(groupCol).as("group"),
-          col(valueCol).as("v")), Seq("group"), "v", depth, width, "cms"),
-        cmsTable(name))
-      IndexTier.commitManifest(store, manifestTable(name),
-        base.copy(cms = Some(cv)), prev.map(_._2))
-      true
-    }
-    ()
+    val prev = readManifest(store, name)
+    val base = prev.map(_._1).getOrElse(ProfileManifest(None, None, None, -1L))
+    // see buildStamped: orphan successors above the pin must go first,
+    // or this commit's prune discards the still-pinned version
+    base.cms.foreach(OverlayLock.rollbackIfAhead(store, cmsTable(name), _))
+    val cv = store.write(
+      Sketches.cmsCells(df.select(col(groupCol).as("group"),
+        col(valueCol).as("v")), Seq("group"), "v", depth, width, "cms"),
+      cmsTable(name))
+    IndexTier.commitManifest(store, manifestTable(name),
+      base.copy(cms = Some(cv)), prev.map(_._2))
   }
 
   /** Fold a batch's cells into the committed frequency tier (manifest
@@ -638,23 +572,19 @@ object CorpusProfile {
       depth: Int,
       width: Int,
       store: TableStore,
-      name: String): Unit = withAdmissionLock(store, name) {
-    retryOnConflict(store, name, None) {
-      val (m, mv) = requireManifest(store, name)
-      val pin = m.cms.getOrElse(throw new IllegalStateException(
-        s"profile $name has no frequency tier — build it first"))
-      OverlayLock.rollbackIfAhead(store, cmsTable(name), pin)
-      val stored = store.snapshotAt(spark, cmsTable(name), pin)
-      val merged = stored
-        .unionByName(Sketches.cmsCells(batch.select(col(groupCol).as("group"),
-          col(valueCol).as("v")), Seq("group"), "v", depth, width, "cms"))
-        .groupBy(col("group"), col("_r"), col("_b"))
-        .agg(sum(col("_c")).as("_c"))
-      val cv = store.write(merged, cmsTable(name), Some(pin))
-      IndexTier.commitManifest(store, manifestTable(name), m.copy(cms = Some(cv)), Some(mv))
-      true
-    }
-    ()
+      name: String): Unit = mutate(store, name) {
+    val (m, mv) = requireManifest(store, name)
+    val pin = m.cms.getOrElse(throw new IllegalStateException(
+      s"profile $name has no frequency tier — build it first"))
+    OverlayLock.rollbackIfAhead(store, cmsTable(name), pin)
+    val stored = store.snapshotAt(spark, cmsTable(name), pin)
+    val merged = stored
+      .unionByName(Sketches.cmsCells(batch.select(col(groupCol).as("group"),
+        col(valueCol).as("v")), Seq("group"), "v", depth, width, "cms"))
+      .groupBy(col("group"), col("_r"), col("_b"))
+      .agg(sum(col("_c")).as("_c"))
+    val cv = store.write(merged, cmsTable(name), Some(pin))
+    IndexTier.commitManifest(store, manifestTable(name), m.copy(cms = Some(cv)), Some(mv))
   }
 
   /** Takedown for the FREQUENCY tier: subtract a removed batch's cells
@@ -675,25 +605,21 @@ object CorpusProfile {
       depth: Int,
       width: Int,
       store: TableStore,
-      name: String): Unit = withAdmissionLock(store, name) {
-    retryOnConflict(store, name, None) {
-      val (m, mv) = requireManifest(store, name)
-      val pin = m.cms.getOrElse(throw new IllegalStateException(
-        s"profile $name has no frequency tier — build it first"))
-      OverlayLock.rollbackIfAhead(store, cmsTable(name), pin)
-      val stored = store.snapshotAt(spark, cmsTable(name), pin)
-      val negated = Sketches.cmsCells(removed.select(col(groupCol).as("group"),
-          col(valueCol).as("v")), Seq("group"), "v", depth, width, "cms")
-        .withColumn("_c", -col("_c"))
-      val merged = stored.unionByName(negated)
-        .groupBy(col("group"), col("_r"), col("_b"))
-        .agg(greatest(sum(col("_c")), lit(0L)).as("_c"))
-        .filter(col("_c") > 0)
-      val cv = store.write(merged, cmsTable(name), Some(pin))
-      IndexTier.commitManifest(store, manifestTable(name), m.copy(cms = Some(cv)), Some(mv))
-      true
-    }
-    ()
+      name: String): Unit = mutate(store, name) {
+    val (m, mv) = requireManifest(store, name)
+    val pin = m.cms.getOrElse(throw new IllegalStateException(
+      s"profile $name has no frequency tier — build it first"))
+    OverlayLock.rollbackIfAhead(store, cmsTable(name), pin)
+    val stored = store.snapshotAt(spark, cmsTable(name), pin)
+    val negated = Sketches.cmsCells(removed.select(col(groupCol).as("group"),
+        col(valueCol).as("v")), Seq("group"), "v", depth, width, "cms")
+      .withColumn("_c", -col("_c"))
+    val merged = stored.unionByName(negated)
+      .groupBy(col("group"), col("_r"), col("_b"))
+      .agg(greatest(sum(col("_c")), lit(0L)).as("_c"))
+      .filter(col("_c") > 0)
+    val cv = store.write(merged, cmsTable(name), Some(pin))
+    IndexTier.commitManifest(store, manifestTable(name), m.copy(cms = Some(cv)), Some(mv))
   }
 
   /** Serve frequency estimates for `queries` from the committed cells

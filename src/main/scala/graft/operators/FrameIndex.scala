@@ -114,8 +114,8 @@ object FrameIndex {
     readManifest(store, name).getOrElse(throw new IllegalStateException(
       s"frame index $name has no manifest — build it first"))
 
-  private def withLock[A](store: TableStore, name: String)(body: => A): A =
-    OverlayLock.withLock(store, "frame", name)(body)
+  private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
+    OverlayLock.mutate(store, "frame", name)(attempt)
 
   // ------------------------------------------------------------- projections
 
@@ -350,21 +350,19 @@ object FrameIndex {
       s"maxHamming must be in [1, 31], got $maxHamming")
     require(minContainment > 0.0 && minContainment <= 1.0,
       s"minContainment must be in (0, 1], got $minContainment")
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-        val spark = frames.sparkSession
-        val (fv, bv) = buildTiers(spark, store, name, frameShape(frames),
-          maxHamming, hasQ = false, frameBuckets, bandBuckets,
-          prev.map(_._1.frames), prev.flatMap(_._1.band))
-        // a rebuild replaces the corpus wholesale — prior retirements are
-        // moot, the tombstone and memtable pins clear
-        IndexTier.commitManifest(store, manifestTable(name),
-          FrameManifest(fv, maxHamming, minContainment,
-            prev.map(_._1.lastBatchId).getOrElse(-1L), band = Some(bv)),
-          prev.map(_._2))
-      }
+    mutate(store, name) {
+      val prev = readManifest(store, name)
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      val spark = frames.sparkSession
+      val (fv, bv) = buildTiers(spark, store, name, frameShape(frames),
+        maxHamming, hasQ = false, frameBuckets, bandBuckets,
+        prev.map(_._1.frames), prev.flatMap(_._1.band))
+      // a rebuild replaces the corpus wholesale — prior retirements are
+      // moot, the tombstone and memtable pins clear
+      IndexTier.commitManifest(store, manifestTable(name),
+        FrameManifest(fv, maxHamming, minContainment,
+          prev.map(_._1.lastBatchId).getOrElse(-1L), band = Some(bv)),
+        prev.map(_._2))
     }
   }
 
@@ -387,19 +385,17 @@ object FrameIndex {
       s"maxHamming must be in [1, 31], got $maxHamming")
     require(minContainment > 0.0 && minContainment <= 1.0,
       s"minContainment must be in (0, 1], got $minContainment")
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-        val spark = frames.sparkSession
-        val (fv, bv) = buildTiers(spark, store, name, frameQualityShape(frames),
-          maxHamming, hasQ = true, frameBuckets, bandBuckets,
-          prev.map(_._1.frames), prev.flatMap(_._1.band))
-        IndexTier.commitManifest(store, manifestTable(name),
-          FrameManifest(fv, maxHamming, minContainment,
-            prev.map(_._1.lastBatchId).getOrElse(-1L),
-            hasQuality = true, band = Some(bv)), prev.map(_._2))
-      }
+    mutate(store, name) {
+      val prev = readManifest(store, name)
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      val spark = frames.sparkSession
+      val (fv, bv) = buildTiers(spark, store, name, frameQualityShape(frames),
+        maxHamming, hasQ = true, frameBuckets, bandBuckets,
+        prev.map(_._1.frames), prev.flatMap(_._1.band))
+      IndexTier.commitManifest(store, manifestTable(name),
+        FrameManifest(fv, maxHamming, minContainment,
+          prev.map(_._1.lastBatchId).getOrElse(-1L),
+          hasQuality = true, band = Some(bv)), prev.map(_._2))
     }
   }
 
@@ -486,11 +482,8 @@ object FrameIndex {
       frames: DataFrame,
       store: TableStore,
       name: String): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, frames, store, name, None)
-      }
-      ()
+    mutate(store, name) {
+      appendStamped(spark, frames, store, name, None)
     }
 
   private def appendStamped(
@@ -572,36 +565,34 @@ object FrameIndex {
       ids: DataFrame,
       store: TableStore,
       name: String): Long =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        IndexTier.rollbackAll(store, m.tiers(name))
-        val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
-        val stored = servedFramesAt(spark, store, name, m)
-        val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val before = stored.select(col("id")).distinct().count()
-          val keptN = kept.select(col("id")).distinct().count()
-          // the rewrite serves from the SERVED view, so pending
-          // retirements + the memtable fold in here and the pins clear
-          val Seq(fv, bv) = OverlayLock.inParallel(Seq(
-            () => store.writeBucketed(kept, framesTable(name),
-              IndexTier.layout(store, framesTable(name), FrameBuckets, "id"),
-              Some(m.frames)),
-            () => store.writeBucketed(
-              IndexTier.bandedOf(withVideoStats(kept, m.hasQuality), m.maxHamming)
-                .select(bandCols(m.hasQuality): _*),
-              bandTable(name),
-              IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
-              m.band.orElse(store.currentVersion(bandTable(name))))))
-            .map(_.asInstanceOf[Int])
-          IndexTier.commitManifest(store, manifestTable(name),
-            m.copy(frames = fv, band = Some(bv), rmFrames = None, dlt = None),
-            Some(mv))
-          before - keptN
-        } finally kept.unpersist()
-      }
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      IndexTier.rollbackAll(store, m.tiers(name))
+      val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
+      val stored = servedFramesAt(spark, store, name, m)
+      val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val before = stored.select(col("id")).distinct().count()
+        val keptN = kept.select(col("id")).distinct().count()
+        // the rewrite serves from the SERVED view, so pending
+        // retirements + the memtable fold in here and the pins clear
+        val Seq(fv, bv) = OverlayLock.inParallel(Seq(
+          () => store.writeBucketed(kept, framesTable(name),
+            IndexTier.layout(store, framesTable(name), FrameBuckets, "id"),
+            Some(m.frames)),
+          () => store.writeBucketed(
+            IndexTier.bandedOf(withVideoStats(kept, m.hasQuality), m.maxHamming)
+              .select(bandCols(m.hasQuality): _*),
+            bandTable(name),
+            IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
+            m.band.orElse(store.currentVersion(bandTable(name))))))
+          .map(_.asInstanceOf[Int])
+        IndexTier.commitManifest(store, manifestTable(name),
+          m.copy(frames = fv, band = Some(bv), rmFrames = None, dlt = None),
+          Some(mv))
+        before - keptN
+      } finally kept.unpersist()
     }
 
   // --------------------------------------------------------------- admission
@@ -615,10 +606,8 @@ object FrameIndex {
       batchId: Long,
       store: TableStore,
       name: String): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, frames, store, name, Some(batchId))
-      }
+    mutate(store, name) {
+      appendStamped(spark, frames, store, name, Some(batchId))
     }
 
   /** The video admission loop as ONE exactly-once fold
@@ -638,53 +627,10 @@ object FrameIndex {
       store: TableStore,
       name: String,
       maxBucketSize: Int = 200): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, frames, store, name, Some(batchId),
-          screenFirst = true, maxBucketSize = maxBucketSize)
-      }
+    mutate(store, name) {
+      appendStamped(spark, frames, store, name, Some(batchId),
+        screenFirst = true, maxBucketSize = maxBucketSize)
     }
-
-  /** [[admitNovelBatch]] as a live sink — the managed video admission
-    * loop. `availableNow = true` (default) drains and stops. */
-  def admitNovelStream(
-      stream: DataFrame,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitNovelBatch(batch.sparkSession, batch, batchId, store, name)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
-
-  /** Streaming admission without the screen (insert-only gated folds). */
-  def admitStream(
-      stream: DataFrame,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitBatch(batch.sparkSession, batch, batchId, store, name)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
 
   /** Admission screen, served from committed state: per (arriving
     * video, stored video), the arrival-side containment at the INDEX'S
@@ -747,11 +693,9 @@ object FrameIndex {
       name: String,
       maxBucketSize: Int = 200,
       preDedupBatch: Boolean = false): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        supersedeStamped(spark, frames, store, name, Some(batchId),
-          maxBucketSize, preDedupBatch)
-      }
+    mutate(store, name) {
+      supersedeStamped(spark, frames, store, name, Some(batchId),
+        maxBucketSize, preDedupBatch)
     }
 
   /** [[admitSupersedeBatch]] without the gate — the ad-hoc fold. */
@@ -762,12 +706,9 @@ object FrameIndex {
       name: String,
       maxBucketSize: Int = 200,
       preDedupBatch: Boolean = false): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        supersedeStamped(spark, frames, store, name, None, maxBucketSize,
-          preDedupBatch)
-      }
-      ()
+    mutate(store, name) {
+      supersedeStamped(spark, frames, store, name, None, maxBucketSize,
+        preDedupBatch)
     }
 
   /** Within-batch directed-containment losers (the opt-in face of
@@ -874,29 +815,6 @@ object FrameIndex {
     } finally { batch0.unpersist(); scope.release() }
   }
 
-  /** [[admitSupersedeBatch]] as a live sink — the video keeper loop.
-    * `preDedupBatch` as in [[admitSupersedeBatch]]. */
-  def admitSupersedeStream(
-      stream: DataFrame,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true,
-      preDedupBatch: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitSupersedeBatch(batch.sparkSession, batch, batchId, store, name,
-            preDedupBatch = preDedupBatch)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
-
   // ------------------------------------------------------------------ keeper
 
   /** KEEPER-AWARE admission for the frame family —
@@ -931,10 +849,8 @@ object FrameIndex {
       store: TableStore,
       name: String,
       maxBucketSize: Int = 200): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        keepBestStamped(spark, frames, store, name, Some(batchId), maxBucketSize)
-      }
+    mutate(store, name) {
+      keepBestStamped(spark, frames, store, name, Some(batchId), maxBucketSize)
     }
 
   /** [[admitKeepBestBatch]] without the gate — the ad-hoc fold. */
@@ -944,11 +860,8 @@ object FrameIndex {
       store: TableStore,
       name: String,
       maxBucketSize: Int = 200): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        keepBestStamped(spark, frames, store, name, None, maxBucketSize)
-      }
-      ()
+    mutate(store, name) {
+      keepBestStamped(spark, frames, store, name, None, maxBucketSize)
     }
 
   private def keepBestStamped(
@@ -1028,26 +941,5 @@ object FrameIndex {
         } finally admitted.unpersist()
       } finally directed.unpersist()
     } finally { batch.unpersist(); scope.release() }
-  }
-
-  /** [[admitKeepBestBatch]] as a live sink — the video quality-keeper
-    * loop. */
-  def admitKeepBestStream(
-      stream: DataFrame,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitKeepBestBatch(batch.sparkSession, batch, batchId, store, name)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
   }
 }

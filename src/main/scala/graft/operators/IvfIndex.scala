@@ -134,8 +134,8 @@ object IvfIndex {
     readManifest(store, name).getOrElse(throw new IllegalStateException(
       s"index $name has no manifest — build it first"))
 
-  private def withIndexLock[A](store: TableStore, name: String)(body: => A): A =
-    OverlayLock.withLock(store, "ivf", name)(body)
+  private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
+    OverlayLock.mutate(store, "ivf", name)(attempt)
 
   // ------------------------------------------------------------------ build
 
@@ -159,43 +159,41 @@ object IvfIndex {
       store: TableStore,
       name: String,
       vecBuckets: Int = VecBuckets)(implicit caches: CacheScope): DataFrame =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val spark = df.sparkSession
-        val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-        val fitted = KMeans.fit(df, idCol, vecCol, nCells, iterations)
-        val cv = store.write(fitted, centroidsTable(name))
-        // float tier CELL-bucketed so probes read only the probed cells'
-        // buckets ([[vectorsForCells]])
-        val vv = store.writeBucketed(
-          assign(df, idCol, vecCol, centroidVectorsOf(fitted)), vectorsTable(name),
-          IndexTier.keyed(vecBuckets, "cell"),
-          store.currentVersion(vectorsTable(name)))
-        // sibling tiers re-derive from the COMMITTED new float rows (a
-        // parquet read — the assignment pass is never recomputed per tier)
-        val storedNew = store.snapshotAt(spark, vectorsTable(name), vv)
-        val qv = prev.flatMap(_._1.qvectors).map { _ =>
-          val (scale, qvc) = quantizeCols(col("v"))
-          store.write(storedNew.select(col("id"), col("cell"),
-            scale.as("scale"), qvc.as("qv")), qVectorsTable(name))
-        }
-        val (cbPin, pcV) = prev.map(_._1) match {
-          case Some(m) if m.pqCodebook.isDefined && m.pqCodes.isDefined =>
-            val cbRows = store.snapshotAt(spark,
-              PqIndex.codebookTableName(name), m.pqCodebook.get)
-            (m.pqCodebook, Some(store.write(
-              PqIndex.encodeAssigned(spark, storedNew, cbRows),
-              PqIndex.codesTableName(name))))
-          case _ => (None, None)
-        }
-        // the admission gate survives a rebuild: already-admitted batch
-        // ids stay admitted, so a live admitStream resumes cleanly
-        // against the refitted family
-        IndexTier.commitManifest(store, manifestTable(name), IvfManifest(cv, vv, qv, cbPin, pcV,
-          prev.map(_._1.lastBatchId).getOrElse(-1L)), prev.map(_._2))
-        fitted
+    mutate(store, name) {
+      val spark = df.sparkSession
+      val prev = readManifest(store, name)
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      val fitted = KMeans.fit(df, idCol, vecCol, nCells, iterations)
+      val cv = store.write(fitted, centroidsTable(name))
+      // float tier CELL-bucketed so probes read only the probed cells'
+      // buckets ([[vectorsForCells]])
+      val vv = store.writeBucketed(
+        assign(df, idCol, vecCol, centroidVectorsOf(fitted)), vectorsTable(name),
+        IndexTier.keyed(vecBuckets, "cell"),
+        store.currentVersion(vectorsTable(name)))
+      // sibling tiers re-derive from the COMMITTED new float rows (a
+      // parquet read — the assignment pass is never recomputed per tier)
+      val storedNew = store.snapshotAt(spark, vectorsTable(name), vv)
+      val qv = prev.flatMap(_._1.qvectors).map { _ =>
+        val (scale, qvc) = quantizeCols(col("v"))
+        store.write(storedNew.select(col("id"), col("cell"),
+          scale.as("scale"), qvc.as("qv")), qVectorsTable(name))
       }
+      val (cbPin, pcV) = prev.map(_._1) match {
+        case Some(m) if m.pqCodebook.isDefined && m.pqCodes.isDefined =>
+          val cbRows = store.snapshotAt(spark,
+            PqIndex.codebookTableName(name), m.pqCodebook.get)
+          (m.pqCodebook, Some(store.write(
+            PqIndex.encodeAssigned(spark, storedNew, cbRows),
+            PqIndex.codesTableName(name))))
+        case _ => (None, None)
+      }
+      // the admission gate survives a rebuild: already-admitted batch
+      // ids stay admitted, so a live admitBatch drain resumes cleanly
+      // against the refitted family
+      IndexTier.commitManifest(store, manifestTable(name), IvfManifest(cv, vv, qv, cbPin, pcV,
+        prev.map(_._1.lastBatchId).getOrElse(-1L)), prev.map(_._2))
+      fitted
     }
 
   /** The stored model re-assembled as `(cell, c_v)` vectors
@@ -292,11 +290,8 @@ object IvfIndex {
       vecCol: String,
       store: TableStore,
       name: String): Unit =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, batch, idCol, vecCol, store, name, None)
-      }
-      ()
+    mutate(store, name) {
+      appendStamped(spark, batch, idCol, vecCol, store, name, None)
     }
 
   /** One gated fold attempt: derive from the manifest pins, commit every
@@ -397,38 +392,9 @@ object IvfIndex {
       vecCol: String,
       store: TableStore,
       name: String): Boolean =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, batch, idCol, vecCol, store, name, Some(batchId))
-      }
+    mutate(store, name) {
+      appendStamped(spark, batch, idCol, vecCol, store, name, Some(batchId))
     }
-
-  /** Streaming admission: every micro-batch of `stream` folds into the
-    * persisted index family through the [[admitBatch]] gate — the index
-    * as a live sink (the seventh streaming face, beside the profile's
-    * [[CorpusProfile.admitStream]]). `availableNow = true` (default)
-    * drains what is queued and stops — a bounded stage; `false` leaves
-    * the query running continuously against a live feed. */
-  def admitStream(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitBatch(batch.sparkSession, batch, batchId, idCol, vecCol, store, name)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
 
   /** The SEMANTIC screen-then-admit loop as ONE exactly-once fold — the
     * embedding-side [[PerceptualIndex.admitNovelBatch]], closing the gap
@@ -459,51 +425,23 @@ object IvfIndex {
       name: String,
       threshold: Double,
       nProbe: Int): Boolean =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, _) = requireManifest(store, name)
-        if (batchId <= m.lastBatchId) false
-        else {
-          // the screen reads manifest-PINNED member versions, so orphan
-          // successors from a prior crash cannot leak in; pinned because
-          // appendStamped's tier commits would otherwise re-run the
-          // probe join per tier
-          val novel = dedupAgainstIndex(spark, batch, idCol, vecCol,
-              store, name, threshold, nProbe)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            novel.count()
-            appendStamped(spark, novel, idCol, vecCol, store, name, Some(batchId))
-          } finally novel.unpersist()
-        }
+    mutate(store, name) {
+      val (m, _) = requireManifest(store, name)
+      if (batchId <= m.lastBatchId) false
+      else {
+        // the screen reads manifest-PINNED member versions, so orphan
+        // successors from a prior crash cannot leak in; pinned because
+        // appendStamped's tier commits would otherwise re-run the
+        // probe join per tier
+        val novel = dedupAgainstIndex(spark, batch, idCol, vecCol,
+            store, name, threshold, nProbe)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          novel.count()
+          appendStamped(spark, novel, idCol, vecCol, store, name, Some(batchId))
+        } finally novel.unpersist()
       }
     }
-
-  /** [[admitNovelBatch]] as a live sink — the semantic admission loop
-    * ([[admitStream]] with the SemDeDup screen in front). */
-  def admitNovelStream(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      threshold: Double,
-      nProbe: Int,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitNovelBatch(batch.sparkSession, batch, batchId, idCol, vecCol,
-            store, name, threshold, nProbe)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
 
   /** UPSERT: replace-or-insert the batch's ids across every tier in ONE
     * manifest swap. [[remove]]-then-[[append]] has two commit points,
@@ -520,7 +458,7 @@ object IvfIndex {
     *
     * Cost shape: committed bytes are O(batch ∪ overlay), NEVER
     * O(corpus) — the corpus-sized tiers are untouched, so a live
-    * revision stream ([[admitUpsertStream]]) writes only what it admits.
+    * revision stream ([[admitUpsertBatch]]) writes only what it admits.
     * When the overlay outgrows the [[OvlFrac]]/[[OvlFloorBytes]] policy
     * it folds into the base tiers (the one amortized corpus rewrite,
     * still a single swap). Returns how many ids were replaced (present
@@ -533,10 +471,8 @@ object IvfIndex {
       vecCol: String,
       store: TableStore,
       name: String): Long =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        upsertStamped(spark, batch, idCol, vecCol, store, name, None)._2
-      }
+    mutate(store, name) {
+      upsertStamped(spark, batch, idCol, vecCol, store, name, None)._2
     }
 
   /** The gated fold behind [[upsert]] and [[admitUpsertBatch]]:
@@ -661,15 +597,13 @@ object IvfIndex {
     * automatic policy — e.g. before a planned probe-latency-sensitive
     * window. No-op when the overlay is empty. */
   def compactOverlay(spark: SparkSession, store: TableStore, name: String): Unit =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        if (m.ovlVectors.isDefined || m.ovlQvectors.isDefined ||
-            m.ovlPqCodes.isDefined) {
-          IndexTier.rollbackAll(store, m.tiers(name))
-          IndexTier.commitManifest(store, manifestTable(name),
-            foldTiers(spark, store, name, m, None), Some(mv))
-        }
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      if (m.ovlVectors.isDefined || m.ovlQvectors.isDefined ||
+          m.ovlPqCodes.isDefined) {
+        IndexTier.rollbackAll(store, m.tiers(name))
+        IndexTier.commitManifest(store, manifestTable(name),
+          foldTiers(spark, store, name, m, None), Some(mv))
       }
     }
 
@@ -688,34 +622,9 @@ object IvfIndex {
       vecCol: String,
       store: TableStore,
       name: String): Boolean =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        upsertStamped(spark, batch, idCol, vecCol, store, name, Some(batchId))._1
-      }
+    mutate(store, name) {
+      upsertStamped(spark, batch, idCol, vecCol, store, name, Some(batchId))._1
     }
-
-  /** [[admitStream]] with upsert folds — the live-revision sink for the
-    * vector index family. */
-  def admitUpsertStream(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitUpsertBatch(batch.sparkSession, batch, batchId, idCol, vecCol, store, name)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
 
   /** Takedown: commit a next version of every tier WITHOUT the given ids
     * — the removal path an index must have at scale (a handful of
@@ -730,37 +639,35 @@ object IvfIndex {
       ids: DataFrame,
       store: TableStore,
       name: String): Long =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        IndexTier.rollbackAll(store, m.tiers(name))
-        val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
-        // a takedown rewrites every corpus-sized tier anyway, so the
-        // revision overlay folds in for free: each tier commits its
-        // SERVED view minus the dropped ids, and the swap clears the
-        // overlay pins
-        val stored = vectorsAt(spark, store, name, m)
-        val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
-        val before = stored.count()
-        val keptN = kept.count()
-        val vv = store.writeBucketed(kept, vectorsTable(name),
-          IndexTier.layout(store, vectorsTable(name), VecBuckets, "cell"),
-          Some(m.vectors))
-        val qv = m.qvectors.map { qPin =>
-          val qStored = qVectorsAt(spark, store, name, m)
-          store.write(qStored.join(drop, qStored("id") === col("_rm_id"), "left_anti"),
-            qVectorsTable(name), Some(qPin))
-        }
-        val pcV = m.pqCodes.map { pin =>
-          val codes = pqCodesAt(spark, store, name, m)
-          store.write(codes.join(drop, codes("id") === col("_rm_id"), "left_anti"),
-            PqIndex.codesTableName(name), Some(pin))
-        }
-        IndexTier.commitManifest(store, manifestTable(name),
-          m.copy(vectors = vv, qvectors = qv, pqCodes = pcV,
-            ovlVectors = None, ovlQvectors = None, ovlPqCodes = None), Some(mv))
-        before - keptN
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      IndexTier.rollbackAll(store, m.tiers(name))
+      val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
+      // a takedown rewrites every corpus-sized tier anyway, so the
+      // revision overlay folds in for free: each tier commits its
+      // SERVED view minus the dropped ids, and the swap clears the
+      // overlay pins
+      val stored = vectorsAt(spark, store, name, m)
+      val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
+      val before = stored.count()
+      val keptN = kept.count()
+      val vv = store.writeBucketed(kept, vectorsTable(name),
+        IndexTier.layout(store, vectorsTable(name), VecBuckets, "cell"),
+        Some(m.vectors))
+      val qv = m.qvectors.map { qPin =>
+        val qStored = qVectorsAt(spark, store, name, m)
+        store.write(qStored.join(drop, qStored("id") === col("_rm_id"), "left_anti"),
+          qVectorsTable(name), Some(qPin))
       }
+      val pcV = m.pqCodes.map { pin =>
+        val codes = pqCodesAt(spark, store, name, m)
+        store.write(codes.join(drop, codes("id") === col("_rm_id"), "left_anti"),
+          PqIndex.codesTableName(name), Some(pin))
+      }
+      IndexTier.commitManifest(store, manifestTable(name),
+        m.copy(vectors = vv, qvectors = qv, pqCodes = pcV,
+          ovlVectors = None, ovlQvectors = None, ovlPqCodes = None), Some(mv))
+      before - keptN
     }
 
   /** Per-cell occupancy of the stored corpus — the index's health metric,
@@ -859,36 +766,34 @@ object IvfIndex {
     * narrow pass per sibling: int8 re-quantizes, PQ re-encodes against
     * the committed codebook); converges from any tier state. */
   def repairTiers(spark: SparkSession, store: TableStore, name: String): Unit =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        IndexTier.rollbackAll(store, m.tiers(name))
-        // siblings re-derive from the SERVED float view (base ∪ overlay),
-        // so each rebuilt sibling is complete and its own overlay clears;
-        // the float overlay itself is untouched — it keeps shadowing the
-        // float base, and the rebuilt siblings already contain its rows
-        val stored = vectorsAt(spark, store, name, m)
-        val qv = m.qvectors.map { _ =>
-          val (scale, qvc) = quantizeCols(col("v"))
-          store.write(stored.select(col("id"), col("cell"),
-            scale.as("scale"), qvc.as("qv")), qVectorsTable(name))
-        }
-        val pcV = (m.pqCodebook, m.pqCodes) match {
-          case (Some(cbPin), Some(_)) =>
-            val cbRows = store.snapshotAt(spark,
-              PqIndex.codebookTableName(name), cbPin)
-            Some(store.write(PqIndex.encodeAssigned(spark, stored, cbRows),
-              PqIndex.codesTableName(name)))
-          case _ => None
-        }
-        if (qv.isDefined || pcV.isDefined)
-          IndexTier.commitManifest(store, manifestTable(name),
-            m.copy(qvectors = qv.orElse(m.qvectors),
-              pqCodes = pcV.orElse(m.pqCodes),
-              ovlQvectors = if (qv.isDefined) None else m.ovlQvectors,
-              ovlPqCodes = if (pcV.isDefined) None else m.ovlPqCodes),
-            Some(mv))
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      IndexTier.rollbackAll(store, m.tiers(name))
+      // siblings re-derive from the SERVED float view (base ∪ overlay),
+      // so each rebuilt sibling is complete and its own overlay clears;
+      // the float overlay itself is untouched — it keeps shadowing the
+      // float base, and the rebuilt siblings already contain its rows
+      val stored = vectorsAt(spark, store, name, m)
+      val qv = m.qvectors.map { _ =>
+        val (scale, qvc) = quantizeCols(col("v"))
+        store.write(stored.select(col("id"), col("cell"),
+          scale.as("scale"), qvc.as("qv")), qVectorsTable(name))
       }
+      val pcV = (m.pqCodebook, m.pqCodes) match {
+        case (Some(cbPin), Some(_)) =>
+          val cbRows = store.snapshotAt(spark,
+            PqIndex.codebookTableName(name), cbPin)
+          Some(store.write(PqIndex.encodeAssigned(spark, stored, cbRows),
+            PqIndex.codesTableName(name)))
+        case _ => None
+      }
+      if (qv.isDefined || pcV.isDefined)
+        IndexTier.commitManifest(store, manifestTable(name),
+          m.copy(qvectors = qv.orElse(m.qvectors),
+            pqCodes = pcV.orElse(m.pqCodes),
+            ovlQvectors = if (qv.isDefined) None else m.ovlQvectors,
+            ovlPqCodes = if (pcV.isDefined) None else m.ovlPqCodes),
+          Some(mv))
     }
 
   // -------------------------------------------------------------------
@@ -922,22 +827,20 @@ object IvfIndex {
     * ([[topKQuantized]]). From here on, [[append]]/[[remove]]/[[build]]
     * keep the tier in lockstep automatically. */
   def quantizeStored(spark: SparkSession, store: TableStore, name: String): Unit =
-    withIndexLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        m.qvectors.foreach(OverlayLock.rollbackIfAhead(store, qVectorsTable(name), _))
-        m.ovlQvectors.foreach(
-          OverlayLock.rollbackIfAhead(store, ovlQVectorsTable(name), _))
-        // quantize the SERVED float view: the fresh int8 base then covers
-        // any revision-overlay floats, so the int8 overlay clears
-        val stored = vectorsAt(spark, store, name, m)
-        val (scale, qvc) = quantizeCols(col("v"))
-        val qv = store.write(
-          stored.select(col("id"), col("cell"), scale.as("scale"), qvc.as("qv")),
-          qVectorsTable(name))
-        IndexTier.commitManifest(store, manifestTable(name),
-          m.copy(qvectors = Some(qv), ovlQvectors = None), Some(mv))
-      }
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      m.qvectors.foreach(OverlayLock.rollbackIfAhead(store, qVectorsTable(name), _))
+      m.ovlQvectors.foreach(
+        OverlayLock.rollbackIfAhead(store, ovlQVectorsTable(name), _))
+      // quantize the SERVED float view: the fresh int8 base then covers
+      // any revision-overlay floats, so the int8 overlay clears
+      val stored = vectorsAt(spark, store, name, m)
+      val (scale, qvc) = quantizeCols(col("v"))
+      val qv = store.write(
+        stored.select(col("id"), col("cell"), scale.as("scale"), qvc.as("qv")),
+        qVectorsTable(name))
+      IndexTier.commitManifest(store, manifestTable(name),
+        m.copy(qvectors = Some(qv), ovlQvectors = None), Some(mv))
     }
 
   /** The quantized corpus as stored: `(id, cell, scale, qv)`

@@ -6,7 +6,9 @@ package graft.operators
   * [[FrameIndex]], [[PostingsIndex]], [[IvfIndex]]) and [[CorpusProfile]].
   * Their manifests and bucket-pruned tier reads live in ONE place,
   * [[IndexTier]]; this object holds the locking, retry, parallel-commit
-  * and compaction policies those families share.
+  * and compaction policies those families share. [[mutate]] is the
+  * families' single write discipline: every overlay mutation runs
+  * through it, under the in-process lock and the bounded retry.
   *
   * Member tables commit as independent per-table CAS swaps, so two
   * in-process writers racing the same overlay can SPLIT the wins — each
@@ -22,34 +24,59 @@ private[graft] object OverlayLock {
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.locks.ReentrantLock]()
 
-  /** Run `body` under the JVM-wide mutation mutex for (`scope`, overlay
-    * `name`) in `store`. Keyed by the store ROOT (not instance), so two
-    * store handles over one directory share the mutex. Reentrant: overlay
-    * operations delegate to one another (e.g. a stale build decision
-    * falls through to append) under the same lock. */
-  def withLock[A](store: TableStore, scope: String, name: String)(body: => A): A = {
+  /** The families' single write discipline: run one overlay mutation
+    * under the JVM-wide mutation mutex for (`scope`, overlay `name`) in
+    * `store`, redoing it through [[retryOnConflict]]. Every mutating entry
+    * point of every overlay family goes through here, each under its
+    * family's `scope` string. The mutex is keyed by the store ROOT (not
+    * instance), so two store handles over one directory share it, and is
+    * reentrant: overlay operations delegate to one another (e.g. a stale
+    * build decision falls through to append) under the same lock. */
+  def mutate[A](store: TableStore, scope: String, name: String)(attempt: => A): A = {
     val lock = locks.computeIfAbsent(
       scope + "#" + store.root + "#" + name,
       _ => new java.util.concurrent.locks.ReentrantLock())
     lock.lock()
-    try body finally lock.unlock()
+    try retryOnConflict(attempt) finally lock.unlock()
   }
 
-  /** Run one overlay mutation attempt, redoing it on
-    * [[VersionConflictException]]: a conflict means a cross-process peer
+  /** Attempts per mutation before a conflict is rethrown. */
+  private val MaxAttempts = 3
+
+  /** The one conflict-retry loop: run `attempt`, redoing it on
+    * [[VersionConflictException]] up to [[MaxAttempts]] times in total and
+    * rethrowing the last conflict. A conflict means a cross-process peer
     * moved a member table or the manifest under us — the next attempt
     * re-reads the manifest, rolls back the split-win orphans, and
     * re-derives from committed-visible state. Bounded: overlay writers
     * are designed to be singular per deployment, so a persistent loser
-    * should fail loudly rather than loop against a livelocking peer. */
-  def retryOnConflict[A](maxAttempts: Int = 3)(attempt: => A): A = {
+    * should fail loudly rather than loop against a livelocking peer.
+    *
+    * A FileNotFoundException anywhere in the failure's cause chain is the
+    * SAME conflict wearing a different face (ADVICE r5): the staged scan
+    * was reading a version a concurrent winner's commit pruned out from
+    * under it. TableStore retains one superseded version to narrow that
+    * window, but a writer more than one commit behind can still hit it —
+    * re-reading and retrying is exactly the right recovery. */
+  def retryOnConflict[A](attempt: => A): A = {
+    def prunedUnderneath(t: Throwable): Boolean = {
+      var cur = t
+      var depth = 0
+      while (cur != null && depth < 16) {
+        if (cur.isInstanceOf[java.io.FileNotFoundException] ||
+            cur.getClass.getSimpleName.contains("FileNotFound")) return true
+        cur = cur.getCause
+        depth += 1
+      }
+      false
+    }
     var n = 0
     while (true) {
       try return attempt
       catch {
-        case e: VersionConflictException =>
+        case e: Throwable if e.isInstanceOf[VersionConflictException] || prunedUnderneath(e) =>
           n += 1
-          if (n >= maxAttempts) throw e
+          if (n >= MaxAttempts) throw e
       }
     }
     throw new IllegalStateException("unreachable")

@@ -119,8 +119,8 @@ object PerceptualIndex {
     readManifest(store, name).getOrElse(throw new IllegalStateException(
       s"perceptual index $name has no manifest — build it first"))
 
-  private def withLock[A](store: TableStore, name: String)(body: => A): A =
-    OverlayLock.withLock(store, "perc", name)(body)
+  private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
+    OverlayLock.mutate(store, "perc", name)(attempt)
 
   /** Indexed sigs rows of the batch's id-buckets (base ∪ delta, NO
     * tombstone subtraction — a retired id may not re-enter under its own
@@ -271,19 +271,17 @@ object PerceptualIndex {
       bandBuckets: Int = BandBuckets): Unit = {
     require(maxHamming >= 1 && maxHamming <= 31,
       s"maxHamming must be in [1, 31], got $maxHamming")
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-        val spark = sigs.sparkSession
-        val (sv, bv) = buildTiers(spark, store, name, sigShape(sigs),
-          maxHamming, sigBuckets, bandBuckets,
-          prev.map(_._1.sigs), prev.flatMap(_._1.band))
-        IndexTier.commitManifest(store, manifestTable(name),
-          PercManifest(sv, maxHamming,
-            prev.map(_._1.lastBatchId).getOrElse(-1L), band = Some(bv)),
-          prev.map(_._2))
-      }
+    mutate(store, name) {
+      val prev = readManifest(store, name)
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      val spark = sigs.sparkSession
+      val (sv, bv) = buildTiers(spark, store, name, sigShape(sigs),
+        maxHamming, sigBuckets, bandBuckets,
+        prev.map(_._1.sigs), prev.flatMap(_._1.band))
+      IndexTier.commitManifest(store, manifestTable(name),
+        PercManifest(sv, maxHamming,
+          prev.map(_._1.lastBatchId).getOrElse(-1L), band = Some(bv)),
+        prev.map(_._2))
     }
   }
 
@@ -303,20 +301,18 @@ object PerceptualIndex {
       bandBuckets: Int = BandBuckets): Unit = {
     require(maxHamming >= 1 && maxHamming <= 31,
       s"maxHamming must be in [1, 31], got $maxHamming")
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-        val spark = sigs.sparkSession
-        val (sv, bv) = buildTiers(spark, store, name, sigQualityShape(sigs),
-          maxHamming, sigBuckets, bandBuckets,
-          prev.map(_._1.sigs), prev.flatMap(_._1.band))
-        IndexTier.commitManifest(store, manifestTable(name),
-          PercManifest(sv, maxHamming,
-            prev.map(_._1.lastBatchId).getOrElse(-1L), hasQuality = true,
-            band = Some(bv)),
-          prev.map(_._2))
-      }
+    mutate(store, name) {
+      val prev = readManifest(store, name)
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      val spark = sigs.sparkSession
+      val (sv, bv) = buildTiers(spark, store, name, sigQualityShape(sigs),
+        maxHamming, sigBuckets, bandBuckets,
+        prev.map(_._1.sigs), prev.flatMap(_._1.band))
+      IndexTier.commitManifest(store, manifestTable(name),
+        PercManifest(sv, maxHamming,
+          prev.map(_._1.lastBatchId).getOrElse(-1L), hasQuality = true,
+          band = Some(bv)),
+        prev.map(_._2))
     }
   }
 
@@ -398,11 +394,8 @@ object PerceptualIndex {
       sigs: DataFrame,
       store: TableStore,
       name: String): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, sigs, store, name, None)
-      }
-      ()
+    mutate(store, name) {
+      appendStamped(spark, sigs, store, name, None)
     }
 
   private def appendStamped(
@@ -499,34 +492,32 @@ object PerceptualIndex {
       ids: DataFrame,
       store: TableStore,
       name: String): Long =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        IndexTier.rollbackAll(store, m.tiers(name))
-        val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
-        // the takedown rewrite serves double duty: the SERVED view minus
-        // the dropped ids folds keeper tombstones + the memtable into the
-        // base, and the swap clears the pins
-        val stored = servedSigsAt(spark, store, name, m)
-        val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val before = stored.count()
-          val keptN = kept.count()
-          val Seq(sv, bv) = OverlayLock.inParallel(Seq(
-            () => store.writeBucketed(kept, sigsTable(name),
-              IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
-              Some(m.sigs)),
-            () => store.writeBucketed(IndexTier.bandedOf(kept, m.maxHamming), bandTable(name),
-              IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
-              m.band.orElse(
-                store.currentVersion(bandTable(name)))))).map(_.asInstanceOf[Int])
-          IndexTier.commitManifest(store, manifestTable(name),
-            m.copy(sigs = sv, band = Some(bv), rmSigs = None, dlt = None),
-            Some(mv))
-          before - keptN
-        } finally kept.unpersist()
-      }
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      IndexTier.rollbackAll(store, m.tiers(name))
+      val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
+      // the takedown rewrite serves double duty: the SERVED view minus
+      // the dropped ids folds keeper tombstones + the memtable into the
+      // base, and the swap clears the pins
+      val stored = servedSigsAt(spark, store, name, m)
+      val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val before = stored.count()
+        val keptN = kept.count()
+        val Seq(sv, bv) = OverlayLock.inParallel(Seq(
+          () => store.writeBucketed(kept, sigsTable(name),
+            IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
+            Some(m.sigs)),
+          () => store.writeBucketed(IndexTier.bandedOf(kept, m.maxHamming), bandTable(name),
+            IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
+            m.band.orElse(
+              store.currentVersion(bandTable(name)))))).map(_.asInstanceOf[Int])
+        IndexTier.commitManifest(store, manifestTable(name),
+          m.copy(sigs = sv, band = Some(bv), rmSigs = None, dlt = None),
+          Some(mv))
+        before - keptN
+      } finally kept.unpersist()
     }
 
   // --------------------------------------------------------------- admission
@@ -541,10 +532,8 @@ object PerceptualIndex {
       batchId: Long,
       store: TableStore,
       name: String): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, sigs, store, name, Some(batchId))
-      }
+    mutate(store, name) {
+      appendStamped(spark, sigs, store, name, Some(batchId))
     }
 
   /** The daily loop as ONE exactly-once fold: SCREEN the batch against
@@ -574,36 +563,11 @@ object PerceptualIndex {
       name: String,
       maxBucketSize: Int = 200,
       preDedupBatch: Boolean = false): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, sigs, store, name, Some(batchId),
-          screenFirst = true, maxBucketSize = maxBucketSize,
-          preDedupBatch = preDedupBatch)
-      }
+    mutate(store, name) {
+      appendStamped(spark, sigs, store, name, Some(batchId),
+        screenFirst = true, maxBucketSize = maxBucketSize,
+        preDedupBatch = preDedupBatch)
     }
-
-  /** [[admitStream]] with the screen-then-admit fold — the admission
-    * loop as a live sink. `preDedupBatch` as in [[admitNovelBatch]]. */
-  def admitNovelStream(
-      stream: DataFrame,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true,
-      preDedupBatch: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitNovelBatch(batch.sparkSession, batch, batchId, store, name,
-            preDedupBatch = preDedupBatch)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
 
   /** KEEPER-AWARE admission — replace-if-better, the composition of
     * q137's keeper rule with the admission gate that the separate
@@ -644,11 +608,9 @@ object PerceptualIndex {
       name: String,
       maxBucketSize: Int = 200,
       preDedupBatch: Boolean = false): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        keepBestStamped(spark, sigs, store, name, Some(batchId), maxBucketSize,
-          preDedupBatch)
-      }
+    mutate(store, name) {
+      keepBestStamped(spark, sigs, store, name, Some(batchId), maxBucketSize,
+        preDedupBatch)
     }
 
   /** [[admitKeepBestBatch]] without the gate — the ad-hoc fold. */
@@ -659,12 +621,9 @@ object PerceptualIndex {
       name: String,
       maxBucketSize: Int = 200,
       preDedupBatch: Boolean = false): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        keepBestStamped(spark, sigs, store, name, None, maxBucketSize,
-          preDedupBatch)
-      }
-      ()
+    mutate(store, name) {
+      keepBestStamped(spark, sigs, store, name, None, maxBucketSize,
+        preDedupBatch)
     }
 
   private def keepBestStamped(
@@ -768,50 +727,6 @@ object PerceptualIndex {
       if (preDedupBatch) batch.unpersist()
       batch0.unpersist(); scope.release()
     }
-  }
-
-  /** [[admitKeepBestBatch]] as a live sink — the keeper admission loop.
-    * `preDedupBatch` as in [[admitKeepBestBatch]]. */
-  def admitKeepBestStream(
-      stream: DataFrame,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true,
-      preDedupBatch: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitKeepBestBatch(batch.sparkSession, batch, batchId, store, name,
-            preDedupBatch = preDedupBatch)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
-
-  /** Streaming admission: the perceptual index as a live sink (the same
-    * face as [[IvfIndex.admitStream]], for the signature tier). */
-  def admitStream(
-      stream: DataFrame,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitBatch(batch.sparkSession, batch, batchId, store, name)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
   }
 
   /** Admission screen, served from committed state: every (batch item,

@@ -163,8 +163,8 @@ object PostingsIndex {
     readManifest(store, name).getOrElse(throw new IllegalStateException(
       s"postings index $name has no manifest — build it first"))
 
-  private def withLock[A](store: TableStore, name: String)(body: => A): A =
-    OverlayLock.withLock(store, "bm25", name)(body)
+  private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
+    OverlayLock.mutate(store, "bm25", name)(attempt)
 
   /** The served postings `(doc_id, dl, term, tf)`: base ∖ overlay ∪
     * overlay. */
@@ -379,34 +379,32 @@ object PostingsIndex {
       store: TableStore,
       name: String,
       docBuckets: Int = DocBuckets): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-        val spark = df.sparkSession
-        // pinned: the docs write and the postings write would otherwise
-        // each re-run the tokenize + dedupe chain end-to-end
-        val tok = tokenized(df, idCol, textCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val dv = store.writeBucketed(docRowsOf(tok), docsTable(name),
-            IndexTier.keyed(docBuckets, "doc_id"))
-          // postings are TERM-bucketed so serve reads prune to the
-          // query's term buckets ([[postingsForTerms]])
-          val pv = store.writeBucketed(postingsOf(tok), postingsTable(name),
-            IndexTier.keyed(PostBuckets, "term"))
-          // derive df from the COMMITTED postings (a parquet read) so the
-          // tokenize+explode chain is never recomputed for the third table
-          val tv = store.writeBucketed(
-            termStatsOf(store.snapshotAt(spark, postingsTable(name), pv)),
-            termStatsTable(name), IndexTier.keyed(TermBuckets, "term"))
-          val (n, sdl) = docCounters(store.snapshotAt(spark, docsTable(name), dv))
-          IndexTier.commitManifest(store, manifestTable(name),
-            BmManifest(pv, dv, tv, n, sdl,
-              prev.map(_._1.lastBatchId).getOrElse(-1L)),
-            prev.map(_._2))
-        } finally tok.unpersist()
-      }
+    mutate(store, name) {
+      val prev = readManifest(store, name)
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      val spark = df.sparkSession
+      // pinned: the docs write and the postings write would otherwise
+      // each re-run the tokenize + dedupe chain end-to-end
+      val tok = tokenized(df, idCol, textCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val dv = store.writeBucketed(docRowsOf(tok), docsTable(name),
+          IndexTier.keyed(docBuckets, "doc_id"))
+        // postings are TERM-bucketed so serve reads prune to the
+        // query's term buckets ([[postingsForTerms]])
+        val pv = store.writeBucketed(postingsOf(tok), postingsTable(name),
+          IndexTier.keyed(PostBuckets, "term"))
+        // derive df from the COMMITTED postings (a parquet read) so the
+        // tokenize+explode chain is never recomputed for the third table
+        val tv = store.writeBucketed(
+          termStatsOf(store.snapshotAt(spark, postingsTable(name), pv)),
+          termStatsTable(name), IndexTier.keyed(TermBuckets, "term"))
+        val (n, sdl) = docCounters(store.snapshotAt(spark, docsTable(name), dv))
+        IndexTier.commitManifest(store, manifestTable(name),
+          BmManifest(pv, dv, tv, n, sdl,
+            prev.map(_._1.lastBatchId).getOrElse(-1L)),
+          prev.map(_._2))
+      } finally tok.unpersist()
     }
 
   // ----------------------------------------------------------- append/remove
@@ -422,11 +420,8 @@ object PostingsIndex {
       textCol: String,
       store: TableStore,
       name: String): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, batch, idCol, textCol, store, name, None)
-      }
-      ()
+    mutate(store, name) {
+      appendStamped(spark, batch, idCol, textCol, store, name, None)
     }
 
   private def appendStamped(
@@ -521,10 +516,8 @@ object PostingsIndex {
       textCol: String,
       store: TableStore,
       name: String): Long =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        upsertStamped(spark, batch, idCol, textCol, store, name, None)._2
-      }
+    mutate(store, name) {
+      upsertStamped(spark, batch, idCol, textCol, store, name, None)._2
     }
 
   /** The gated fold behind [[upsert]] and [[admitUpsertBatch]] — same
@@ -664,34 +657,32 @@ object PostingsIndex {
     * regardless of the automatic policies. Counters already describe the
     * served view. No-op when both overlays are empty. */
   def compactOverlay(spark: SparkSession, store: TableStore, name: String): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        if (m.ovlPostings.isDefined || m.ovlDocs.isDefined ||
-            m.dltTermStats.isDefined) {
-          IndexTier.rollbackAll(store, m.tiers(name))
-          val pv =
-            if (m.ovlPostings.isEmpty) m.postings
-            else store.writeBucketed(postingsAt(spark, store, name, m),
-              postingsTable(name),
-              IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
-              Some(m.postings))
-          val dv =
-            if (m.ovlDocs.isEmpty) m.docs
-            else store.writeBucketed(docsAt(spark, store, name, m),
-              docsTable(name),
-              IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"), Some(m.docs))
-          val tv =
-            if (m.dltTermStats.isEmpty) m.termStats
-            else store.writeBucketed(termDfAt(spark, store, name, m),
-              termStatsTable(name),
-              IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
-              Some(m.termStats))
-          IndexTier.commitManifest(store, manifestTable(name),
-            m.copy(postings = pv, docs = dv, termStats = tv,
-              ovlPostings = None, ovlDocs = None, dltTermStats = None),
-            Some(mv))
-        }
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      if (m.ovlPostings.isDefined || m.ovlDocs.isDefined ||
+          m.dltTermStats.isDefined) {
+        IndexTier.rollbackAll(store, m.tiers(name))
+        val pv =
+          if (m.ovlPostings.isEmpty) m.postings
+          else store.writeBucketed(postingsAt(spark, store, name, m),
+            postingsTable(name),
+            IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
+            Some(m.postings))
+        val dv =
+          if (m.ovlDocs.isEmpty) m.docs
+          else store.writeBucketed(docsAt(spark, store, name, m),
+            docsTable(name),
+            IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"), Some(m.docs))
+        val tv =
+          if (m.dltTermStats.isEmpty) m.termStats
+          else store.writeBucketed(termDfAt(spark, store, name, m),
+            termStatsTable(name),
+            IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
+            Some(m.termStats))
+        IndexTier.commitManifest(store, manifestTable(name),
+          m.copy(postings = pv, docs = dv, termStats = tv,
+            ovlPostings = None, ovlDocs = None, dltTermStats = None),
+          Some(mv))
       }
     }
 
@@ -706,48 +697,46 @@ object PostingsIndex {
       ids: DataFrame,
       store: TableStore,
       name: String): Long =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        IndexTier.rollbackAll(store, m.tiers(name))
-        val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
-        // a takedown rewrites the corpus-sized tiers anyway, so the
-        // revision overlay folds in for free: each tier commits its
-        // SERVED view minus the dropped ids, and the swap clears the pins
-        val docsStored = docsAt(spark, store, name, m)
-        val keptDocs = docsStored.join(drop, docsStored("doc_id") === col("_rm_id"), "left_anti")
-        val removedDocs = docsStored.join(drop,
-          docsStored("doc_id") === col("_rm_id"), "left_semi")
-        val (rmN, rmSdl) = docCounters(removedDocs)
-        val dv = store.writeBucketed(keptDocs, docsTable(name),
-          IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"), Some(m.docs))
-        val postStored = postingsAt(spark, store, name, m)
-        val pv = store.writeBucketed(
-          postStored.join(drop, postStored("doc_id") === col("_rm_id"), "left_anti"),
-          postingsTable(name),
-          IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
-          Some(m.postings))
-        // df subtraction from the removed docs' stored term lists — a
-        // takedown rewrites the authoritative table anyway, so the
-        // termstats delta folds in here and its pin clears; merged from
-        // the RAW base ∪ delta union with ONE final clamp (the
-        // commitTermDelta fold rationale)
-        val tv = store.writeBucketed(
-          rawTermRows(spark, store, name, m)
-            .unionByName(removedDocs.select(explode(col("terms")).as("term"))
-              .groupBy(col("term")).agg(count(lit(1)).as("df"))
-              .withColumn("df", -col("df")))
-            .groupBy(col("term")).agg(greatest(sum(col("df")), lit(0L)).as("df"))
-            .filter(col("df") > 0),
-          termStatsTable(name),
-          IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
-          Some(m.termStats))
-        IndexTier.commitManifest(store, manifestTable(name),
-          m.copy(postings = pv, docs = dv, termStats = tv,
-            nDocs = m.nDocs - rmN, sumDl = m.sumDl - rmSdl,
-            ovlPostings = None, ovlDocs = None, dltTermStats = None), Some(mv))
-        rmN
-      }
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      IndexTier.rollbackAll(store, m.tiers(name))
+      val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
+      // a takedown rewrites the corpus-sized tiers anyway, so the
+      // revision overlay folds in for free: each tier commits its
+      // SERVED view minus the dropped ids, and the swap clears the pins
+      val docsStored = docsAt(spark, store, name, m)
+      val keptDocs = docsStored.join(drop, docsStored("doc_id") === col("_rm_id"), "left_anti")
+      val removedDocs = docsStored.join(drop,
+        docsStored("doc_id") === col("_rm_id"), "left_semi")
+      val (rmN, rmSdl) = docCounters(removedDocs)
+      val dv = store.writeBucketed(keptDocs, docsTable(name),
+        IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"), Some(m.docs))
+      val postStored = postingsAt(spark, store, name, m)
+      val pv = store.writeBucketed(
+        postStored.join(drop, postStored("doc_id") === col("_rm_id"), "left_anti"),
+        postingsTable(name),
+        IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
+        Some(m.postings))
+      // df subtraction from the removed docs' stored term lists — a
+      // takedown rewrites the authoritative table anyway, so the
+      // termstats delta folds in here and its pin clears; merged from
+      // the RAW base ∪ delta union with ONE final clamp (the
+      // commitTermDelta fold rationale)
+      val tv = store.writeBucketed(
+        rawTermRows(spark, store, name, m)
+          .unionByName(removedDocs.select(explode(col("terms")).as("term"))
+            .groupBy(col("term")).agg(count(lit(1)).as("df"))
+            .withColumn("df", -col("df")))
+          .groupBy(col("term")).agg(greatest(sum(col("df")), lit(0L)).as("df"))
+          .filter(col("df") > 0),
+        termStatsTable(name),
+        IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
+        Some(m.termStats))
+      IndexTier.commitManifest(store, manifestTable(name),
+        m.copy(postings = pv, docs = dv, termStats = tv,
+          nDocs = m.nDocs - rmN, sumDl = m.sumDl - rmSdl,
+          ovlPostings = None, ovlDocs = None, dltTermStats = None), Some(mv))
+      rmN
     }
 
   // --------------------------------------------------------------- admission
@@ -765,10 +754,8 @@ object PostingsIndex {
       textCol: String,
       store: TableStore,
       name: String): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, batch, idCol, textCol, store, name, Some(batchId))
-      }
+    mutate(store, name) {
+      appendStamped(spark, batch, idCol, textCol, store, name, Some(batchId))
     }
 
   /** Exactly-once micro-batch UPSERT admission — [[admitBatch]]'s gate
@@ -787,58 +774,9 @@ object PostingsIndex {
       textCol: String,
       store: TableStore,
       name: String): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        upsertStamped(spark, batch, idCol, textCol, store, name, Some(batchId))._1
-      }
+    mutate(store, name) {
+      upsertStamped(spark, batch, idCol, textCol, store, name, Some(batchId))._1
     }
-
-  /** [[admitStream]] with upsert folds — the live-revision sink. */
-  def admitUpsertStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitUpsertBatch(batch.sparkSession, batch, batchId, idCol, textCol, store, name)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
-
-  /** Streaming admission: the retrieval index as a live sink (the same
-    * face as [[IvfIndex.admitStream]], for the lexical tier).
-    * `availableNow = true` (default) drains and stops; `false` runs
-    * continuously against a live feed. */
-  def admitStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      store: TableStore,
-      name: String,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          admitBatch(batch.sparkSession, batch, batchId, idCol, textCol, store, name)
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
-  }
 
   // ----------------------------------------------------------------- serving
 

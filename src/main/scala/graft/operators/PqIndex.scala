@@ -80,36 +80,34 @@ object PqIndex {
       m: Int,
       nCodes: Int,
       iterations: Int)(implicit caches: CacheScope): Unit =
-    OverlayLock.withLock(store, "ivf", name) {
-      OverlayLock.retryOnConflict() {
-        val (man, mv) = IvfIndex.requireManifest(store, name)
-        man.pqCodebook.foreach(
-          OverlayLock.rollbackIfAhead(store, codebookTableName(name), _))
-        man.pqCodes.foreach(
-          OverlayLock.rollbackIfAhead(store, codesTableName(name), _))
-        man.ovlPqCodes.foreach(
-          OverlayLock.rollbackIfAhead(store, IvfIndex.ovlPqCodesTable(name), _))
-        // train + encode over the SERVED float view: revision-overlay rows
-        // are first-class corpus, and the fresh codes tier covering them
-        // lets its own overlay clear in the same swap
-        val stored = IvfIndex.vectorsAt(spark, store, name, man)
-        val dim = stored.select(size(col("v"))).head().getInt(0)
-        require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-        val subDim = dim / m
-        val unit = unitized(stored)
-        val (subs, cb) = Pq.trainCodebooks(unit.select(col("id"), col("u")),
-          m, subDim, nCodes, iterations)
-        val cbDf = Pq.codebookFrame(spark, cb)
-        val cbV = store.write(cbDf.select(col("sub"), col("code"), col("c_v")),
-          codebookTableName(name))
-        val arr = Pq.codesToArray(Pq.assignCodes(subs, broadcast(cbDf)))
-        val pcV = store.write(
-          arr.join(unit.select(col("id"), col("cell")), Seq("id"))
-            .select(col("id"), col("cell"), col("n_codes")), codesTableName(name))
-        IndexTier.commitManifest(store, IvfIndex.manifestTable(name),
-          man.copy(pqCodebook = Some(cbV), pqCodes = Some(pcV),
-            ovlPqCodes = None), Some(mv))
-      }
+    OverlayLock.mutate(store, "ivf", name) {
+      val (man, mv) = IvfIndex.requireManifest(store, name)
+      man.pqCodebook.foreach(
+        OverlayLock.rollbackIfAhead(store, codebookTableName(name), _))
+      man.pqCodes.foreach(
+        OverlayLock.rollbackIfAhead(store, codesTableName(name), _))
+      man.ovlPqCodes.foreach(
+        OverlayLock.rollbackIfAhead(store, IvfIndex.ovlPqCodesTable(name), _))
+      // train + encode over the SERVED float view: revision-overlay rows
+      // are first-class corpus, and the fresh codes tier covering them
+      // lets its own overlay clear in the same swap
+      val stored = IvfIndex.vectorsAt(spark, store, name, man)
+      val dim = stored.select(size(col("v"))).head().getInt(0)
+      require(dim % m == 0, s"dim $dim must divide into $m subspaces")
+      val subDim = dim / m
+      val unit = unitized(stored)
+      val (subs, cb) = Pq.trainCodebooks(unit.select(col("id"), col("u")),
+        m, subDim, nCodes, iterations)
+      val cbDf = Pq.codebookFrame(spark, cb)
+      val cbV = store.write(cbDf.select(col("sub"), col("code"), col("c_v")),
+        codebookTableName(name))
+      val arr = Pq.codesToArray(Pq.assignCodes(subs, broadcast(cbDf)))
+      val pcV = store.write(
+        arr.join(unit.select(col("id"), col("cell")), Seq("id"))
+          .select(col("id"), col("cell"), col("n_codes")), codesTableName(name))
+      IndexTier.commitManifest(store, IvfIndex.manifestTable(name),
+        man.copy(pqCodebook = Some(cbV), pqCodes = Some(pcV),
+          ovlPqCodes = None), Some(mv))
     }
 
   /** `(id, cell, u)` unit forms of a stored-shape `(id, v, cell)` frame.

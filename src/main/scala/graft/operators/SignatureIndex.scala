@@ -160,8 +160,8 @@ object SignatureIndex {
             "rebuild from the corpus text with build())"
          else "")))
 
-  private def withLock[A](store: TableStore, name: String)(body: => A): A =
-    OverlayLock.withLock(store, "sig", name)(body)
+  private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
+    OverlayLock.mutate(store, "sig", name)(attempt)
 
   // ------------------------------------------------------------- projections
 
@@ -249,25 +249,23 @@ object SignatureIndex {
       sigBuckets: Int = SigBuckets,
       posBuckets: Int = PosBuckets,
       bandBuckets: Int = BandBuckets): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-        val spark = df.sparkSession
-        val sv = store.writeBucketed(signaturesOf(df, idCol, textCol, p),
-          sigsTable(name), IndexTier.keyed(sigBuckets, "id"))
-        // derive the projections from the COMMITTED sigs (a parquet read)
-        // so the shingle+hash chain runs once, not three times
-        val committed = store.snapshotAt(spark, sigsTable(name), sv)
-        val pv = store.writeBucketed(positionsOf(committed), posTable(name),
-          IndexTier.keyed(posBuckets, "i", "v"))
-        val bv = store.writeBucketed(bandedOf(committed, p), bandTable(name),
-          IndexTier.keyed(bandBuckets, "band", "bucket"))
-        val n = committed.count()
-        IndexTier.commitManifest(store, manifestTable(name),
-          SigManifest(sv, pv, bv, p.shingleN, p.numHashes, p.bands, n, 0L,
-            prev.map(_._1.lastBatchId).getOrElse(-1L)), prev.map(_._2))
-      }
+    mutate(store, name) {
+      val prev = readManifest(store, name)
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      val spark = df.sparkSession
+      val sv = store.writeBucketed(signaturesOf(df, idCol, textCol, p),
+        sigsTable(name), IndexTier.keyed(sigBuckets, "id"))
+      // derive the projections from the COMMITTED sigs (a parquet read)
+      // so the shingle+hash chain runs once, not three times
+      val committed = store.snapshotAt(spark, sigsTable(name), sv)
+      val pv = store.writeBucketed(positionsOf(committed), posTable(name),
+        IndexTier.keyed(posBuckets, "i", "v"))
+      val bv = store.writeBucketed(bandedOf(committed, p), bandTable(name),
+        IndexTier.keyed(bandBuckets, "band", "bucket"))
+      val n = committed.count()
+      IndexTier.commitManifest(store, manifestTable(name),
+        SigManifest(sv, pv, bv, p.shingleN, p.numHashes, p.bands, n, 0L,
+          prev.map(_._1.lastBatchId).getOrElse(-1L)), prev.map(_._2))
     }
 
   /** [[build]] for a KEEPER family: the sigs tier carries `(id, sig,
@@ -285,25 +283,23 @@ object SignatureIndex {
       sigBuckets: Int = SigBuckets,
       posBuckets: Int = PosBuckets,
       bandBuckets: Int = BandBuckets): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val prev = readManifest(store, name)
-        prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-        val spark = df.sparkSession
-        val sv = store.writeBucketed(
-          signaturesOfQ(df, idCol, textCol, qCol, p),
-          sigsTable(name), IndexTier.keyed(sigBuckets, "id"))
-        val committed = store.snapshotAt(spark, sigsTable(name), sv)
-        val pv = store.writeBucketed(positionsOf(committed), posTable(name),
-          IndexTier.keyed(posBuckets, "i", "v"))
-        val bv = store.writeBucketed(bandedOf(committed, p), bandTable(name),
-          IndexTier.keyed(bandBuckets, "band", "bucket"))
-        val n = committed.count()
-        IndexTier.commitManifest(store, manifestTable(name),
-          SigManifest(sv, pv, bv, p.shingleN, p.numHashes, p.bands, n, 0L,
-            prev.map(_._1.lastBatchId).getOrElse(-1L),
-            hasQuality = true), prev.map(_._2))
-      }
+    mutate(store, name) {
+      val prev = readManifest(store, name)
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      val spark = df.sparkSession
+      val sv = store.writeBucketed(
+        signaturesOfQ(df, idCol, textCol, qCol, p),
+        sigsTable(name), IndexTier.keyed(sigBuckets, "id"))
+      val committed = store.snapshotAt(spark, sigsTable(name), sv)
+      val pv = store.writeBucketed(positionsOf(committed), posTable(name),
+        IndexTier.keyed(posBuckets, "i", "v"))
+      val bv = store.writeBucketed(bandedOf(committed, p), bandTable(name),
+        IndexTier.keyed(bandBuckets, "band", "bucket"))
+      val n = committed.count()
+      IndexTier.commitManifest(store, manifestTable(name),
+        SigManifest(sv, pv, bv, p.shingleN, p.numHashes, p.bands, n, 0L,
+          prev.map(_._1.lastBatchId).getOrElse(-1L),
+          hasQuality = true), prev.map(_._2))
     }
 
   /** The index's model parameters, as persisted in the manifest. */
@@ -402,11 +398,8 @@ object SignatureIndex {
       textCol: String,
       store: TableStore,
       name: String): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, batch, idCol, textCol, store, name, None)
-      }
-      ()
+    mutate(store, name) {
+      appendStamped(spark, batch, idCol, textCol, store, name, None)
     }
 
   private def appendStamped(
@@ -467,10 +460,8 @@ object SignatureIndex {
       textCol: String,
       store: TableStore,
       name: String): Boolean =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        appendStamped(spark, batch, idCol, textCol, store, name, Some(batchId))
-      }
+    mutate(store, name) {
+      appendStamped(spark, batch, idCol, textCol, store, name, Some(batchId))
     }
 
   /** Bound the members' per-bucket file counts — the maintenance call a
@@ -484,20 +475,18 @@ object SignatureIndex {
       store: TableStore,
       name: String,
       maxFilesPerBucket: Int = 8): Unit =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        IndexTier.rollbackAll(store, m.tiers(name))
-        val sv = store.compact(spark, sigsTable(name), maxFilesPerBucket)
-        val pv = store.compact(spark, posTable(name), maxFilesPerBucket)
-        val bv = store.compact(spark, bandTable(name), maxFilesPerBucket)
-        val dv = m.dlt.flatMap(_ => store.compactPlain(spark, deltaTable(name)))
-        if (sv.isDefined || pv.isDefined || bv.isDefined || dv.isDefined)
-          IndexTier.commitManifest(store, manifestTable(name),
-            m.copy(sigs = sv.getOrElse(m.sigs), pos = pv.getOrElse(m.pos),
-              band = bv.getOrElse(m.band),
-              dlt = dv.orElse(m.dlt)), Some(mv))
-      }
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      IndexTier.rollbackAll(store, m.tiers(name))
+      val sv = store.compact(spark, sigsTable(name), maxFilesPerBucket)
+      val pv = store.compact(spark, posTable(name), maxFilesPerBucket)
+      val bv = store.compact(spark, bandTable(name), maxFilesPerBucket)
+      val dv = m.dlt.flatMap(_ => store.compactPlain(spark, deltaTable(name)))
+      if (sv.isDefined || pv.isDefined || bv.isDefined || dv.isDefined)
+        IndexTier.commitManifest(store, manifestTable(name),
+          m.copy(sigs = sv.getOrElse(m.sigs), pos = pv.getOrElse(m.pos),
+            band = bv.getOrElse(m.band),
+            dlt = dv.orElse(m.dlt)), Some(mv))
     }
 
   /** Takedown: commit next versions of every tier WITHOUT the given ids
@@ -512,44 +501,42 @@ object SignatureIndex {
       ids: DataFrame,
       store: TableStore,
       name: String): Long =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        IndexTier.rollbackAll(store, m.tiers(name))
-        val served = servedView(spark, store, name, m)
-        // cast the drop list to the STORED id type before any bucket math:
-        // equality joins would survive a type mismatch via implicit casts,
-        // but Murmur3 bucket hashes differ by input type, so an uncast
-        // drop list silently prunes to the wrong buckets and under-counts
-        val idType = served.schema("id").dataType
-        val drop = broadcast(
-          ids.select(col(ids.columns.head).cast(idType).as("_rm_id")).distinct())
-        // the dropped-count read is keyed: only the drop list's buckets
-        val removed = IndexTier.minusRm(spark, store, rmTable(name), m.rm)(
-          indexedSigsForIds(spark, store, name, m, drop.select(col("_rm_id").as("id"))))
-          .join(drop, col("id") === col("_rm_id"), "left_semi")
-          .count()
-        val kept = served.join(drop, served("id") === col("_rm_id"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          kept.count() // materialize once; the three rewrites read the cache
-          val Seq(sv, pv, bv) = OverlayLock.inParallel(Seq(
-            () => store.writeBucketed(kept, sigsTable(name),
-              IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
-              Some(m.sigs)),
-            () => store.writeBucketed(positionsOf(kept), posTable(name),
-              IndexTier.layout(store, posTable(name), PosBuckets, "i", "v"),
-              Some(m.pos)),
-            () => store.writeBucketed(bandedOf(kept, m.params), bandTable(name),
-              IndexTier.layout(store, bandTable(name), BandBuckets, "band", "bucket"),
-              Some(m.band)))).map(_.asInstanceOf[Int])
-          IndexTier.commitManifest(store, manifestTable(name),
-            m.copy(sigs = sv, pos = pv, band = bv,
-              nLive = m.nLive - removed, nRm = 0L, rm = None,
-              dlt = None, nDelta = 0L), Some(mv))
-          removed
-        } finally kept.unpersist()
-      }
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      IndexTier.rollbackAll(store, m.tiers(name))
+      val served = servedView(spark, store, name, m)
+      // cast the drop list to the STORED id type before any bucket math:
+      // equality joins would survive a type mismatch via implicit casts,
+      // but Murmur3 bucket hashes differ by input type, so an uncast
+      // drop list silently prunes to the wrong buckets and under-counts
+      val idType = served.schema("id").dataType
+      val drop = broadcast(
+        ids.select(col(ids.columns.head).cast(idType).as("_rm_id")).distinct())
+      // the dropped-count read is keyed: only the drop list's buckets
+      val removed = IndexTier.minusRm(spark, store, rmTable(name), m.rm)(
+        indexedSigsForIds(spark, store, name, m, drop.select(col("_rm_id").as("id"))))
+        .join(drop, col("id") === col("_rm_id"), "left_semi")
+        .count()
+      val kept = served.join(drop, served("id") === col("_rm_id"), "left_anti")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        kept.count() // materialize once; the three rewrites read the cache
+        val Seq(sv, pv, bv) = OverlayLock.inParallel(Seq(
+          () => store.writeBucketed(kept, sigsTable(name),
+            IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
+            Some(m.sigs)),
+          () => store.writeBucketed(positionsOf(kept), posTable(name),
+            IndexTier.layout(store, posTable(name), PosBuckets, "i", "v"),
+            Some(m.pos)),
+          () => store.writeBucketed(bandedOf(kept, m.params), bandTable(name),
+            IndexTier.layout(store, bandTable(name), BandBuckets, "band", "bucket"),
+            Some(m.band)))).map(_.asInstanceOf[Int])
+        IndexTier.commitManifest(store, manifestTable(name),
+          m.copy(sigs = sv, pos = pv, band = bv,
+            nLive = m.nLive - removed, nRm = 0L, rm = None,
+            dlt = None, nDelta = 0L), Some(mv))
+        removed
+      } finally kept.unpersist()
     }
 
   // ---------------------------------------------------------------- screens
@@ -848,66 +835,64 @@ object SignatureIndex {
       minContainment: Double,
       maxBucketSize: Int = 200,
       preDedupBatch: Boolean = false)(implicit caches: CacheScope): DataFrame =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        val (m, mv) = requireManifest(store, name)
-        requirePlain(m, name, "a supersede fold")
-        IndexTier.rollbackAll(store, m.tiers(name))
-        val p = m.params
-        // ONE probe job over the batch's pinned signatures: the sigs
-        // tier's id-buckets AND the position tier's (i, v)-cell buckets
-        // fused ([[IndexTier.touchedBucketsPair]]). Probing cells from the
-        // PRE-anti-join signatures is superset-safe: a wider bucket list
-        // reads whole extra cells, a cell the (anti-joined) batch never
-        // probes produces no candidate pairs, and per-cell hot counts
-        // are exact for every read cell either way — results identical.
-        val sigAll = caches.pin(signaturesOf(batch, idCol, textCol, p))
-        val (idBuckets, posBuckets) = IndexTier.touchedBucketsPair(store,
-          sigsTable(name) -> m.sigs, posTable(name) -> m.pos, positionsOf(sigAll))
-        // insert-only against the INDEXED id set (base ∪ delta, ⊇
-        // tombstoned ids until the fold — a retired id can never re-enter
-        // under its own name and be hidden by the subtraction), read from
-        // the batch's id-buckets only; in-batch duplicate ids fold to the
-        // smallest-hash signature
-        val batchSigs0 = caches.pin(
-          sigAll
-            .join(indexedSigsForBuckets(spark, store, name, m, idBuckets)
-              .select(col("id")), Seq("id"), "left_anti")
-            .groupBy(col("id"))
-            .agg(min_by(struct(col("sig"), col("n_sh")),
-              xxhash64(col("sig"))).as("_w"))
-            .select(col("id"), col("_w.sig").as("sig"), col("_w.n_sh").as("n_sh")))
-        val batchSigs =
-          if (!preDedupBatch) batchSigs0
-          else caches.pin(batchSigs0.join(
-            broadcast(inBatchContainmentLosers(batchSigs0, p, minContainment,
-              maxBucketSize)), Seq("id"), "left_anti"))
-        val pairs = caches.pin(containmentAgainstStored(spark, store, name, m,
-          batchSigs, minContainment, maxBucketSize, Some(posBuckets)))
-        val rejected = pairs
-          .filter(col("containment_batch") >= minContainment)
-          .select(col("batch_id").as("id")).distinct()
-        val admitted = caches.pin(
-          batchSigs.join(broadcast(rejected), Seq("id"), "left_anti"))
-        // stored docs subsumed by an ADMITTED arrival retire in the swap
-        val retired = caches.pin(pairs
-          .filter(col("containment_stored") >= minContainment)
-          .join(admitted.select(col("id").as("batch_id")), Seq("batch_id"),
-            "left_semi")
-          .select(col("stored_id").as("id")).distinct())
-        val (admittedN, retiredN) = countAdmittedRetired(admitted, retired)
-        commitScreenFold(spark, store, name, m, mv, admitted, retired,
-          admittedN, retiredN, stamp = None)
-        // admitted rows pass through with their original columns; docs
-        // too short to shingle never entered the gate — pass them too
-        val keptIds = admitted.select(col("id").as("_adm_id"))
-        val shingleable = batch
-          .filter(size(hashedShingleSet(col(textCol), p.shingleN)) > 0)
-        shingleable
-          .join(broadcast(keptIds), shingleable(idCol) === col("_adm_id"), "left_semi")
-          .unionByName(batch.filter(
-            size(hashedShingleSet(col(textCol), p.shingleN)) <= 0))
-      }
+    mutate(store, name) {
+      val (m, mv) = requireManifest(store, name)
+      requirePlain(m, name, "a supersede fold")
+      IndexTier.rollbackAll(store, m.tiers(name))
+      val p = m.params
+      // ONE probe job over the batch's pinned signatures: the sigs
+      // tier's id-buckets AND the position tier's (i, v)-cell buckets
+      // fused ([[IndexTier.touchedBucketsPair]]). Probing cells from the
+      // PRE-anti-join signatures is superset-safe: a wider bucket list
+      // reads whole extra cells, a cell the (anti-joined) batch never
+      // probes produces no candidate pairs, and per-cell hot counts
+      // are exact for every read cell either way — results identical.
+      val sigAll = caches.pin(signaturesOf(batch, idCol, textCol, p))
+      val (idBuckets, posBuckets) = IndexTier.touchedBucketsPair(store,
+        sigsTable(name) -> m.sigs, posTable(name) -> m.pos, positionsOf(sigAll))
+      // insert-only against the INDEXED id set (base ∪ delta, ⊇
+      // tombstoned ids until the fold — a retired id can never re-enter
+      // under its own name and be hidden by the subtraction), read from
+      // the batch's id-buckets only; in-batch duplicate ids fold to the
+      // smallest-hash signature
+      val batchSigs0 = caches.pin(
+        sigAll
+          .join(indexedSigsForBuckets(spark, store, name, m, idBuckets)
+            .select(col("id")), Seq("id"), "left_anti")
+          .groupBy(col("id"))
+          .agg(min_by(struct(col("sig"), col("n_sh")),
+            xxhash64(col("sig"))).as("_w"))
+          .select(col("id"), col("_w.sig").as("sig"), col("_w.n_sh").as("n_sh")))
+      val batchSigs =
+        if (!preDedupBatch) batchSigs0
+        else caches.pin(batchSigs0.join(
+          broadcast(inBatchContainmentLosers(batchSigs0, p, minContainment,
+            maxBucketSize)), Seq("id"), "left_anti"))
+      val pairs = caches.pin(containmentAgainstStored(spark, store, name, m,
+        batchSigs, minContainment, maxBucketSize, Some(posBuckets)))
+      val rejected = pairs
+        .filter(col("containment_batch") >= minContainment)
+        .select(col("batch_id").as("id")).distinct()
+      val admitted = caches.pin(
+        batchSigs.join(broadcast(rejected), Seq("id"), "left_anti"))
+      // stored docs subsumed by an ADMITTED arrival retire in the swap
+      val retired = caches.pin(pairs
+        .filter(col("containment_stored") >= minContainment)
+        .join(admitted.select(col("id").as("batch_id")), Seq("batch_id"),
+          "left_semi")
+        .select(col("stored_id").as("id")).distinct())
+      val (admittedN, retiredN) = countAdmittedRetired(admitted, retired)
+      commitScreenFold(spark, store, name, m, mv, admitted, retired,
+        admittedN, retiredN, stamp = None)
+      // admitted rows pass through with their original columns; docs
+      // too short to shingle never entered the gate — pass them too
+      val keptIds = admitted.select(col("id").as("_adm_id"))
+      val shingleable = batch
+        .filter(size(hashedShingleSet(col(textCol), p.shingleN)) > 0)
+      shingleable
+        .join(broadcast(keptIds), shingleable(idCol) === col("_adm_id"), "left_semi")
+        .unionByName(batch.filter(
+          size(hashedShingleSet(col(textCol), p.shingleN)) <= 0))
     }
 
   // ------------------------------------------------------------------ keeper
@@ -945,11 +930,9 @@ object SignatureIndex {
       name: String,
       threshold: Double,
       maxBucketSize: Int = 200)(implicit caches: CacheScope): DataFrame =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        keepBestStamped(spark, batch, idCol, textCol, qCol, store, name,
-          threshold, maxBucketSize, Some(batchId))
-      }
+    mutate(store, name) {
+      keepBestStamped(spark, batch, idCol, textCol, qCol, store, name,
+        threshold, maxBucketSize, Some(batchId))
     }
 
   /** [[admitKeepBestBatch]] without the gate — the ad-hoc fold. */
@@ -963,11 +946,9 @@ object SignatureIndex {
       name: String,
       threshold: Double,
       maxBucketSize: Int = 200)(implicit caches: CacheScope): DataFrame =
-    withLock(store, name) {
-      OverlayLock.retryOnConflict() {
-        keepBestStamped(spark, batch, idCol, textCol, qCol, store, name,
-          threshold, maxBucketSize, None)
-      }
+    mutate(store, name) {
+      keepBestStamped(spark, batch, idCol, textCol, qCol, store, name,
+        threshold, maxBucketSize, None)
     }
 
   private def keepBestStamped(
@@ -1052,37 +1033,5 @@ object SignatureIndex {
       .join(broadcast(keptIds), shingleable(idCol) === col("_adm_id"), "left_semi")
       .unionByName(batch.filter(
         size(hashedShingleSet(col(textCol), p.shingleN)) <= 0))
-  }
-
-  /** [[admitKeepBestBatch]] as a live sink — the text quality-keeper
-    * loop. */
-  def admitKeepBestStream(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      qCol: String,
-      store: TableStore,
-      name: String,
-      threshold: Double,
-      checkpoint: String,
-      availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DrainConf.withDrainConf(batch.sparkSession) {
-          implicit val scope: CacheScope = new CacheScope
-          // the fold commits EAGERLY inside admitKeepBestBatch; the
-          // returned pass-through rows are for callers with a sink — this
-          // loop has none, so evaluating them would re-scan the batch for
-          // nothing
-          try admitKeepBestBatch(batch.sparkSession, batch, batchId,
-            idCol, textCol, qCol, store, name, threshold)
-          finally scope.release()
-        }
-        ()
-      }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
   }
 }

@@ -229,7 +229,7 @@ class TableStore(val root: String) {
     * always readable. */
   def snapshotAt(spark: SparkSession, name: String, version: Int): DataFrame = {
     val df = parquetAt(spark, name, version)
-    if (bucketSpec(name).isDefined) df.drop("_bucket") else df
+    if (bucketSpecAt(name, version).isDefined) df.drop("_bucket") else df
   }
 
   /** [[snapshotAt]] keeping the `_bucket` layout column — the versioned
@@ -813,7 +813,7 @@ class TableStore(val root: String) {
     * (ADVICE r5). One retained version bounds the storage overhead at ≤2×
     * the live table while closing the window for any writer that started
     * within one commit of the head; older stragglers are handled by
-    * [[graft.streaming.CdcStream.withConflictRetry]] treating a missing
+    * [[OverlayLock.retryOnConflict]] treating a missing
     * input file during a staged write as a retryable conflict.
     *
     * Also sweeps `.staging-*` dirs untouched for [[StaleStagingMs]] — the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.operators.{CacheScope, Dedup, SignatureIndex, TableStore}
+import graft.operators.{CacheScope, Dedup, DrainConf, SignatureIndex, TableStore}
 
 /** Continuous corpus admission with DURABLE cross-batch dedup state — the
   * streaming composition of [[SignatureIndex]]:
@@ -34,6 +34,33 @@ import graft.operators.{CacheScope, Dedup, SignatureIndex, TableStore}
   */
 object AdmissionStream {
 
+  /** The one admission drain: run `fold(batch, batchId)` for every
+    * micro-batch of `stream` — the single `foreachBatch` every overlay
+    * family's admission loop goes through, with the family's gated
+    * `admit*Batch` as the fold. Each fold runs at the drain shuffle width
+    * ([[graft.operators.DrainConf.withDrainConf]]: its jobs are pure batch
+    * queries, and a fixed small width beats per-stage AQE re-plans here).
+    * `availableNow = true` (default) drains what is queued and stops — a
+    * bounded stage; `false` leaves the query running continuously against
+    * a live feed.
+    *
+    * {{{
+    * AdmissionStream.drain(stream, checkpoint) { (b, id) =>
+    *   IvfIndex.admitBatch(b.sparkSession, b, id, "id", "vec", store, "idx")
+    * }.awaitTermination()
+    * }}}
+    */
+  def drain(stream: DataFrame, checkpoint: String, availableNow: Boolean = true)(
+      fold: (DataFrame, Long) => Any): StreamingQuery = {
+    val writer = stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        DrainConf.withDrainConf(batch.sparkSession)(fold(batch, batchId))
+        ()
+      }
+    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+  }
+
   def start(
       stream: DataFrame,
       idCol: String,
@@ -43,37 +70,26 @@ object AdmissionStream {
       threshold: Double,
       checkpointDir: String,
       sink: DataFrame => Unit,
-      availableNow: Boolean = true): StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the drain’s jobs are pure batch queries — run them at the drain shuffle width
-        // (see DrainConf: fixed small partitions beat per-stage AQE re-plans here)
-        graft.operators.DrainConf.withDrainConf(batch.sparkSession) {
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          implicit val scope: CacheScope = new CacheScope
-          try {
-            val p = SignatureIndex.params(spark, store, indexName)
-            // within-batch near-dedup under the INDEX's own parameters:
-            // mutual near-dups arriving together collapse to the min id
-            // before the index sees either
-            val internal = Dedup.nearDedupApprox(batch, idCol, textCol,
-              p.shingleN, threshold, p.numHashes, p.bands)
-            // admitted rows feed the index append AND the sink — pin once
-            val admitted = scope.pin(SignatureIndex.screen(spark, internal,
-              idCol, textCol, store, indexName, threshold))
-            CdcStream.withConflictRetry(maxAttempts = 3) {
-              SignatureIndex.append(spark, admitted, idCol, textCol, store, indexName)
-            }
-            sink(admitted)
-          } finally scope.release()
-        }
-        }
-        ()
+      availableNow: Boolean = true): StreamingQuery =
+    drain(stream, checkpointDir, availableNow) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        implicit val scope: CacheScope = new CacheScope
+        try {
+          val p = SignatureIndex.params(spark, store, indexName)
+          // within-batch near-dedup under the INDEX's own parameters:
+          // mutual near-dups arriving together collapse to the min id
+          // before the index sees either
+          val internal = Dedup.nearDedupApprox(batch, idCol, textCol,
+            p.shingleN, threshold, p.numHashes, p.bands)
+          // admitted rows feed the index append AND the sink — pin once
+          val admitted = scope.pin(SignatureIndex.screen(spark, internal,
+            idCol, textCol, store, indexName, threshold))
+          SignatureIndex.append(spark, admitted, idCol, textCol, store, indexName)
+          sink(admitted)
+        } finally scope.release()
       }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+    }
 
   /** [[SignatureIndex.supersede]] as a live sink — the TEXT keeper loop:
     * per micro-batch, one containment screen-then-supersede fold (the
@@ -95,26 +111,16 @@ object AdmissionStream {
       checkpointDir: String,
       sink: DataFrame => Unit,
       availableNow: Boolean = true,
-      preDedupBatch: Boolean = false): StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // pure-batch drain jobs at the drain shuffle width (see DrainConf)
-        graft.operators.DrainConf.withDrainConf(batch.sparkSession) {
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          implicit val scope: CacheScope = new CacheScope
-          try {
-            val admitted = scope.pin(CdcStream.withConflictRetry(maxAttempts = 3) {
-              SignatureIndex.supersede(spark, batch, idCol, textCol, store,
-                indexName, minContainment, preDedupBatch = preDedupBatch)
-            })
-            sink(admitted)
-          } finally scope.release()
-        }
-        }
-        ()
+      preDedupBatch: Boolean = false): StreamingQuery =
+    drain(stream, checkpointDir, availableNow) { (batch, _) =>
+      if (!batch.isEmpty) {
+        implicit val scope: CacheScope = new CacheScope
+        try {
+          val admitted = scope.pin(SignatureIndex.supersede(batch.sparkSession,
+            batch, idCol, textCol, store, indexName, minContainment,
+            preDedupBatch = preDedupBatch))
+          sink(admitted)
+        } finally scope.release()
       }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+    }
 }

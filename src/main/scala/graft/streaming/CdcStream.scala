@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.operators.{ChangeApplier, TableStore}
+import graft.operators.{ChangeApplier, OverlayLock, TableStore}
 
 /** Structured-Streaming realization of the reference's polling micro-batch
   * CDC pipeline (SURVEY §2.9): the cron-scheduled root task + watermark
@@ -95,51 +95,12 @@ object CdcStream {
           // commit's CAS throw; applyBatch re-reads the table's current
           // state on entry, so the retry merges against the winner's
           // version — the micro-batch is latest-per-PK, hence idempotent.
-          withConflictRetry(maxAttempts = 3) {
+          OverlayLock.retryOnConflict {
             graft.operators.IncrementalMerge.applyBatch(spark, store, tableName, latest, pks)
           }
         }
         ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
-
-  /** Re-run `body` on [[graft.operators.VersionConflictException]] up to
-    * `maxAttempts` times (total), rethrowing the last conflict — losing a
-    * CAS race is transient by construction (somebody else committed), but
-    * a table that NEVER stops moving deserves the loud failure.
-    *
-    * A FileNotFoundException anywhere in the failure's cause chain is the
-    * SAME conflict wearing a different face (ADVICE r5): the staged scan
-    * was reading a version a concurrent winner's commit pruned out from
-    * under it. TableStore retains one superseded version to narrow that
-    * window, but a writer more than one commit behind can still hit it —
-    * re-reading and retrying is exactly the right recovery, so treat it
-    * as retryable rather than failing the micro-batch. */
-  private[graft] def withConflictRetry[A](maxAttempts: Int)(body: => A): A = {
-    def prunedUnderneath(t: Throwable): Boolean = {
-      var cur = t
-      var depth = 0
-      while (cur != null && depth < 16) {
-        if (cur.isInstanceOf[java.io.FileNotFoundException] ||
-            cur.getClass.getSimpleName.contains("FileNotFound")) return true
-        cur = cur.getCause
-        depth += 1
-      }
-      false
-    }
-    var attempt = 1
-    while (true) {
-      try return body
-      catch {
-        case e: graft.operators.VersionConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-        case e: Throwable if prunedUnderneath(e) =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 }

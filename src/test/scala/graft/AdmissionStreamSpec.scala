@@ -13,6 +13,32 @@ class AdmissionStreamSpec extends SparkSpec {
 
   private val p = SignatureIndex.Params(shingleN = 2, numHashes = 32, bands = 16)
 
+  test("drain runs every fold at the drain width and leaves the caller's conf alone") {
+    val s = spark; import s.implicits._
+    implicit val sq = spark.sqlContext
+    val callerWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    // a drain width that differs from the default of 8
+    spark.conf.set("spark.graft.drainShufflePartitions", "3")
+    try {
+      val seen = scala.collection.mutable.ArrayBuffer[(Long, String, String)]()
+      val input = MemoryStream[Doc]
+      val chk = tmpDir("drain-chk")
+      // two AvailableNow cycles over one checkpoint: batchIds 0 then 1
+      Seq(Doc(1L, "first"), Doc(2L, "second")).foreach { d =>
+        input.addData(d)
+        AdmissionStream.drain(input.toDF(), chk) { (b, id) =>
+          val conf = b.sparkSession.conf
+          seen.synchronized {
+            seen += ((id, conf.get("spark.sql.shuffle.partitions"),
+              conf.get("spark.sql.adaptive.enabled")))
+          }
+        }.awaitTermination()
+      }
+      assert(seen.toSeq === Seq((0L, "3", "false"), (1L, "3", "false")))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === callerWidth)
+    } finally spark.conf.unset("spark.graft.drainShufflePartitions")
+  }
+
   test("admission: per-batch screen + append makes later batches see earlier admissions") {
     val s = spark; import s.implicits._
     implicit val sq = spark.sqlContext

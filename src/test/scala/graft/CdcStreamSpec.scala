@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import graft.operators.TableStore
+import graft.operators.{OverlayLock, TableStore}
 import graft.streaming.CdcStream
 
 /** Structured-Streaming CDC path: change files stream in, each micro-batch
@@ -73,7 +73,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("conflict retry: transient CAS losses re-run the merge, persistent ones rethrow") {
     var calls = 0
-    val result = CdcStream.withConflictRetry(maxAttempts = 3) {
+    val result = OverlayLock.retryOnConflict {
       calls += 1
       if (calls < 3) throw new graft.operators.VersionConflictException("moved")
       "merged"
@@ -82,7 +82,7 @@ class CdcStreamSpec extends SparkSpec {
 
     var always = 0
     intercept[graft.operators.VersionConflictException] {
-      CdcStream.withConflictRetry(maxAttempts = 3) {
+      OverlayLock.retryOnConflict {
         always += 1
         throw new graft.operators.VersionConflictException("still moving")
       }
@@ -92,7 +92,7 @@ class CdcStreamSpec extends SparkSpec {
     // non-conflict failures are NOT retried
     var other = 0
     intercept[IllegalStateException] {
-      CdcStream.withConflictRetry(maxAttempts = 3) {
+      OverlayLock.retryOnConflict {
         other += 1
         throw new IllegalStateException("schema drift")
       }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CacheScope, Dedup, FrameIndex, TableStore}
+import graft.streaming.AdmissionStream
 
 /** The managed FRAME-signature store (VERDICT r15 #2): the video
   * admission loop run managed — build / append / remove / screen under
@@ -188,10 +189,12 @@ class FrameIndexSpec extends SparkSpec {
       } finally f.close()
     }
     val schema = spark.read.parquet(stageDir.toString).schema
-    FrameIndex.admitNovelStream(
+    AdmissionStream.drain(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(stageDir.toString),
-      store, "vid", s"$root/chk").awaitTermination()
+      s"$root/chk") { (b, id) =>
+      FrameIndex.admitNovelBatch(b.sparkSession, b, id, store, "vid")
+    }.awaitTermination()
     val got = FrameIndex.frames(spark, store, "vid")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val clean = new TableStore(tmpDir("frame-stream-clean"))
@@ -296,10 +299,12 @@ class FrameIndexSpec extends SparkSpec {
       } finally f.close()
     }
     val schema = spark.read.parquet(stageDir.toString).schema
-    FrameIndex.admitSupersedeStream(
+    AdmissionStream.drain(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(stageDir.toString),
-      store, "vid", s"$root/chk").awaitTermination()
+      s"$root/chk") { (b, id) =>
+      FrameIndex.admitSupersedeBatch(b.sparkSession, b, id, store, "vid")
+    }.awaitTermination()
     val got = FrameIndex.frames(spark, store, "vid")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val clean = new TableStore(tmpDir("frame-sup-stream-clean"))

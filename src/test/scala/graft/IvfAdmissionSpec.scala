@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.{CacheScope, IvfIndex, PqIndex, TableStore}
+import graft.streaming.AdmissionStream
 
 /** Exactly-once streaming admission into the persisted IVF index family
   * (q110): the batchId gate rides in the family manifest, so replayed
@@ -118,8 +119,9 @@ class IvfAdmissionSpec extends SparkSpec {
     val input = MemoryStream[Vec]
     val chk = tmpDir("ivfadm-chk")
     def drain(): Unit =
-      IvfIndex.admitStream(input.toDF(), "vec_id", "embedding",
-        store, "emb", chk).awaitTermination()
+      AdmissionStream.drain(input.toDF(), chk) { (b, id) =>
+        IvfIndex.admitBatch(b.sparkSession, b, id, "vec_id", "embedding", store, "emb")
+      }.awaitTermination()
     // two AvailableNow cycles over one checkpoint — separate query
     // lifecycles, batchIds continue
     input.addData(rows(201 to 230): _*)

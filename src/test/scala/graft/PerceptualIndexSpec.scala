@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CacheScope, Dedup, PerceptualIndex, TableStore}
+import graft.streaming.AdmissionStream
 
 /** The managed perceptual-signature store (VERDICT r14 #2): build /
   * append / remove / screen under manifest discipline, the exactly-once
@@ -336,10 +337,12 @@ class PerceptualIndexSpec extends SparkSpec {
       } finally f.close()
     }
     val schema = spark.read.parquet(stageDir.toString).schema
-    PerceptualIndex.admitKeepBestStream(
+    AdmissionStream.drain(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(stageDir.toString),
-      store, "img", s"$root/chk").awaitTermination()
+      s"$root/chk") { (b, id) =>
+      PerceptualIndex.admitKeepBestBatch(b.sparkSession, b, id, store, "img")
+    }.awaitTermination()
     val got = PerceptualIndex.signatures(spark, store, "img")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val clean = new TableStore(tmpDir("perc-keeper-clean"))
@@ -373,10 +376,12 @@ class PerceptualIndexSpec extends SparkSpec {
       } finally f.close()
     }
     val schema = spark.read.parquet(stageDir.toString).schema
-    PerceptualIndex.admitStream(
+    AdmissionStream.drain(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(stageDir.toString),
-      store, "img", s"$root/chk").awaitTermination()
+      s"$root/chk") { (b, id) =>
+      PerceptualIndex.admitBatch(b.sparkSession, b, id, store, "img")
+    }.awaitTermination()
     val got = PerceptualIndex.signatures(spark, store, "img")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val clean = new TableStore(tmpDir("perc-stream-clean"))

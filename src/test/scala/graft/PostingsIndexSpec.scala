@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.{CacheScope, PostingsIndex, Retrieval, TableStore}
+import graft.streaming.AdmissionStream
 
 /** Top-level so Spark can derive its encoder without an outer scope. */
 case class PostingsDoc(doc_id: Long, text: String)
@@ -214,8 +215,9 @@ class PostingsIndexSpec extends SparkSpec {
     val input = MemoryStream[PostingsDoc]
     val chk = tmpDir("pidx-chk")
     def drain(): Unit =
-      PostingsIndex.admitStream(input.toDF(), "doc_id", "text",
-        store, "bm", chk).awaitTermination()
+      AdmissionStream.drain(input.toDF(), chk) { (b, id) =>
+        PostingsIndex.admitBatch(b.sparkSession, b, id, "doc_id", "text", store, "bm")
+      }.awaitTermination()
     input.addData(docRows(91 to 105): _*)
     input.addData(docRows(106 to 120): _*)
     drain()

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-import graft.operators.{BucketSpec, IndexTier, TableStore, VersionConflictException}
+import graft.operators.{BucketSpec, IndexTier, OverlayLock, TableStore, VersionConflictException}
 import graft.streaming.CdcStream
 
 /** Round-6 concurrency hardening (ADVICE r5): CAS anchored at READ time,
@@ -128,7 +128,7 @@ class TableStoreSnapshotSpec extends SparkSpec {
 
   test("withConflictRetry treats a pruned-file FileNotFound as retryable") {
     var calls = 0
-    val out = CdcStream.withConflictRetry(maxAttempts = 3) {
+    val out = OverlayLock.retryOnConflict {
       calls += 1
       if (calls == 1)
         throw new RuntimeException("job aborted",
@@ -139,7 +139,7 @@ class TableStoreSnapshotSpec extends SparkSpec {
     assert(calls === 2)
     // but an unrelated failure still propagates untouched
     intercept[IllegalArgumentException] {
-      CdcStream.withConflictRetry(maxAttempts = 3) {
+      OverlayLock.retryOnConflict {
         throw new IllegalArgumentException("not a conflict")
       }
     }
@@ -259,5 +259,16 @@ class TableStoreSnapshotSpec extends SparkSpec {
         .join(keys, Seq("id"), "left_semi").select(col("id")).as[Int].collect().toSeq
     }
     assert(found.sorted === (0 until 200))
+  }
+
+  test("snapshotAt drops _bucket by the pinned version's layout after a plain rewrite") {
+    // v1 is bucketed, v2 rewrites the table plain: the current layout has
+    // no bucketing, but a reader pinned at v1 must still get only the
+    // logical columns, not the internal _bucket layout column
+    val store = new TableStore(tmpDir("spec-at-plain"))
+    val rows = (0 until 20).map(i => (i, s"p$i")).toDF("id", "payload")
+    store.writeBucketed(rows, "t", BucketSpec(4, Seq("id")))
+    store.write(rows, "t")
+    assert(store.snapshotAt(spark, "t", 1).columns.toSeq === Seq("id", "payload"))
   }
 }
