@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BucketSpec, CacheScope, PerceptualIndex, TableStore}
+import graft.operators.{BucketSpec, CacheScope, FrameIndex, PerceptualIndex, TableStore}
 
 /** Rebucket-at-fold ([[graft.operators.OverlayLock.grownSpec]]): the
   * constant-per-bucket-bytes rule as CODE — bucket counts are pinned at
@@ -112,6 +112,86 @@ class RebucketSpec extends SparkSpec {
       assert(graft.operators.PostingsIndex
         .postings(spark, store, "bm").select("doc_id").distinct().count() >= 420)
     }
+  }
+
+  test("retiring drains serve the same state whether they fold or commit to the memtable") {
+    // a zero fold floor makes the second drain of each run fold the
+    // pending delta + tombstones into the tiers (the frame runs' second
+    // drains retire stored videos in the fold itself); the default floor
+    // never folds at this scale. Both must serve the same rows, and a
+    // fold must clear both small pins.
+    val s = spark; import s.implicits._
+    def q(rows: Seq[(Long, Long, Double)]) = rows.toDF("id", "sig", "q")
+    def fsig(g: Int, f: Int, perturb: Int = 0): Long =
+      (0x9E3779B97F4A7C15L * (g * 31 + f * 7 + 1)) & ~0x3FL | (perturb.toLong & 0x3FL)
+    def video(g: Int, id: Long, perturb: Int = 0, n: Int = 4) =
+      (0 until n).map(f => (id, f, fsig(g, f, perturb)))
+    def frames(rows: Seq[(Long, Int, Long)]) = rows.toDF("id", "frame", "sig")
+    def qframes(rows: Seq[(Long, Int, Long)], qv: Double) =
+      rows.map { case (id, f, sg) => (id, f, sg, qv) }.toDF("id", "frame", "sig", "q")
+    // each run: (served rows as strings, per-drain (dlt, rm) pins)
+    type Run = (Set[String], Seq[(Option[Int], Option[Int])])
+    def percKeeper(tag: String): Run = {
+      val store = new TableStore(tmpDir(s"fold-perc-$tag"))
+      PerceptualIndex.buildWithQuality(
+        q((0 until 5).map(g => (g * 10L, sig(g), 10.0))), maxHamming = 6, store, "img")
+      val pins = Seq(
+        q(Seq((300L, sig(2, 1), 50.0), (301L, sig(61), 4.0))),
+        q(Seq((310L, sig(2, 3), 20.0))),
+        q(Seq((320L, sig(2, 4), 90.0)))).zipWithIndex.map { case (d, k) =>
+        assert(PerceptualIndex.admitKeepBestBatch(spark, d, k.toLong, store, "img"))
+        val m = PerceptualIndex.readManifest(store, "img").get._1
+        (m.dlt, m.rmSigs)
+      }
+      (PerceptualIndex.signatures(spark, store, "img").collect().map(_.toString).toSet, pins)
+    }
+    def frameRuns(tag: String): (Run, Run) = {
+      val sup = new TableStore(tmpDir(s"fold-frame-sup-$tag"))
+      FrameIndex.build(frames(video(7, 70L, n = 2) ++ video(8, 80L, n = 2) ++ video(9, 90L)),
+        maxHamming = 6, minContainment = 0.99, sup, "vid")
+      val supPins = Seq(
+        frames(video(7, 700L)),
+        frames(video(8, 710L, perturb = 1) ++ video(9, 711L, perturb = 2)),
+        frames(video(85, 720L))).zipWithIndex.map { case (d, k) =>
+        assert(FrameIndex.admitSupersedeBatch(spark, d, k.toLong, sup, "vid"))
+        val m = FrameIndex.readManifest(sup, "vid").get._1
+        (m.dlt, m.rmFrames)
+      }
+      val keep = new TableStore(tmpDir(s"fold-frame-keep-$tag"))
+      FrameIndex.buildWithQuality(qframes((1 to 4).flatMap(g => video(g, g * 10L)), 10.0),
+        maxHamming = 6, minContainment = 0.99, keep, "vid")
+      val keepPins = Seq(
+        qframes(video(1, 900L, perturb = 1), 20.0)
+          .unionByName(qframes(video(2, 901L, perturb = 2), 5.0))
+          .unionByName(qframes(video(3, 902L, perturb = 3), 10.0))
+          .unionByName(qframes(video(4, 903L, perturb = 1, n = 2), 50.0))
+          .unionByName(qframes(video(80, 904L), 10.0)),
+        qframes(video(1, 910L, perturb = 4), 30.0)
+          .unionByName(qframes(video(80, 911L, perturb = 1), 5.0))).zipWithIndex.map {
+        case (d, k) =>
+          assert(FrameIndex.admitKeepBestBatch(spark, d, k.toLong, keep, "vid"))
+          val m = FrameIndex.readManifest(keep, "vid").get._1
+          (m.dlt, m.rmFrames)
+      }
+      def served(st: TableStore) =
+        FrameIndex.frames(spark, st, "vid").collect().map(_.toString).toSet
+      ((served(sup), supPins), (served(keep), keepPins))
+    }
+    val (perc0, (sup0, keep0)) = withConf("spark.graft.foldFloorBytes" -> "0") {
+      (percKeeper("zero"), frameRuns("zero"))
+    }
+    val (perc1, (sup1, keep1)) = (percKeeper("dflt"), frameRuns("dflt"))
+    for (((folded, memtable), what) <- Seq(
+        (perc0, perc1) -> "perceptual keeper", (sup0, sup1) -> "frame supersede",
+        (keep0, keep1) -> "frame keeper")) {
+      assert(folded._1 === memtable._1, s"$what: a fold serves the memtable path's rows")
+      assert(folded._2(1) === ((None, None)), s"$what: the second drain folds and clears dlt/rm")
+      assert(memtable._2.forall(_._1.isDefined), s"$what: the default floor never folds here")
+    }
+    def ids(run: Run) = run._1.map(_.split(",")(0).stripPrefix("[").toLong)
+    assert(ids(perc0) === Set(0L, 10L, 30L, 40L, 301L, 320L))
+    assert(ids(sup0) === Set(90L, 700L, 710L, 720L))
+    assert(ids(keep0) === Set(20L, 30L, 40L, 904L, 910L))
   }
 
   test("rollbackTo across a rebucket restores the pinned version's layout") {
