@@ -357,7 +357,7 @@ object SparkEntry {
     * admission gate). Each drain is written `coalesce(1)` to the temp dir
     * `<root>/_part<k>`, whose one part file moves into place before the
     * temp dir is deleted. */
-  private def stageDrains(root: String, drains: Seq[DataFrame]): Unit = {
+  private[graft] def stageDrains(root: String, drains: Seq[DataFrame]): Unit = {
     import scala.jdk.CollectionConverters._
     val stageDir = java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(root, "stage"))

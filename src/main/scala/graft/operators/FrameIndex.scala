@@ -89,16 +89,6 @@ object FrameIndex {
       rmTable(name) -> rmFrames, deltaTable(name) -> dlt)
   }
 
-  private def requirePlain(m: FrameManifest, name: String, op: String): Unit =
-    require(!m.hasQuality,
-      s"frame index $name is a KEEPER family (quality-carrying) — " +
-        s"$op would drop its quality column; use admitKeepBestBatch/Stream")
-
-  private def requireQuality(m: FrameManifest, name: String, op: String): Unit =
-    require(m.hasQuality,
-      s"frame index $name is a plain family — $op needs a " +
-        "quality-carrying index; build it with buildWithQuality")
-
   /** Absent keys predate the tombstone/quality/projection tiers (older
     * persisted index): no tombstones, a plain family, the legacy
     * full-derive layout. */
@@ -143,58 +133,22 @@ object FrameIndex {
     batch.select(col("id"),
       posexplode(array(IndexTier.chunkCols(maxHamming): _*)).as(Seq("chunk", "value")))
 
-  /** Indexed VIDEO ids of the batch's id-buckets (base ∪ delta, NO
-    * tombstone subtraction — a retired id may not re-enter under its own
-    * name until the fold forgets it): the insert-only screen's read. */
-  private def indexedIdsForIds(
-      spark: SparkSession, store: TableStore, name: String, m: FrameManifest,
-      ids: DataFrame): DataFrame =
-    indexedIdsForBuckets(spark, store, name, m,
-      IndexTier.touchedBuckets(store, framesTable(name), m.frames, ids))
+  /** The frames base tier, its chunk-band projection (`(id, frame, sig,
+    * n_frames[, _vq], chunk, value)` — the per-video stats re-derived over
+    * whatever rows it derives from, so a delta's projection is
+    * batch-sized), the memtable and the VIDEO-id tombstones, at `m`'s
+    * pins. */
+  private def lsm(name: String, m: FrameManifest): IndexTier.Lsm = IndexTier.Lsm(
+    IndexTier.Tier(framesTable(name), Some(m.frames), FrameBuckets, Seq("id")),
+    Seq(IndexTier.Tier(bandTable(name), m.band, BandBuckets, Seq("chunk", "value"),
+      rows => IndexTier.bandedOf(withVideoStats(rows, m.hasQuality), m.maxHamming)
+        .select(bandCols(m.hasQuality): _*), m.maxHamming + 1L)),
+    deltaTable(name) -> m.dlt, rmTable(name) -> m.rmFrames)
 
-  /** [[indexedIdsForIds]] with the bucket probe already done (the
-    * fused-probe callers pass their precomputed id-bucket list). */
-  private def indexedIdsForBuckets(
-      spark: SparkSession, store: TableStore, name: String, m: FrameManifest,
-      touched: Seq[Int]): DataFrame =
-    IndexTier.prunedWithDelta(spark, store, framesTable(name), m.frames, touched,
-      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), identity)
-      .select(col("id"))
-
-  /** The SERVED frame corpus: (base ∪ delta) ∖ tombstoned VIDEO ids —
-    * the manifest-consistent view folds and full reads derive from. */
-  private def servedFramesAt(
-      spark: SparkSession, store: TableStore, name: String,
-      m: FrameManifest): DataFrame = {
-    val base = store.snapshotAt(spark, framesTable(name), m.frames)
-    IndexTier.minusRm(spark, store, rmTable(name), m.rmFrames)(
-      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt)
-        .map(base.unionByName(_)).getOrElse(base))
-  }
-
-  /** The SERVED banding projection restricted to the batch's probe
-    * cells: bucket-pruned base band read ∪ the delta's in-plan
-    * projection (per-video stats re-derived over the small delta),
-    * tombstones subtracted — exactly the rows a fold-merged tier would
-    * hold in those buckets. Falls back to the full served derive on a
-    * legacy pre-projection layout. */
-  private def servedBandForCells(
-      spark: SparkSession, store: TableStore, name: String, m: FrameManifest,
-      batchBanded: DataFrame, cellTouched: Option[Seq[Int]] = None): DataFrame = {
-    def project(rows: DataFrame): DataFrame =
-      IndexTier.bandedOf(withVideoStats(rows, m.hasQuality), m.maxHamming)
-        .select(bandCols(m.hasQuality): _*)
-    m.band match {
-      case None => // legacy layout: derive from the full served view
-        project(servedFramesAt(spark, store, name, m))
-      case Some(pin) =>
-        IndexTier.minusRm(spark, store, rmTable(name), m.rmFrames)(
-          IndexTier.prunedWithDelta(spark, store, bandTable(name), pin,
-            cellTouched.getOrElse(IndexTier.touchedBuckets(store, bandTable(name), pin,
-              batchBanded.select(col("chunk"), col("value")))),
-            IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), project))
-    }
-  }
+  /** `m` at the pins of `l`. */
+  private def pinned(m: FrameManifest, l: IndexTier.Lsm): FrameManifest =
+    m.copy(frames = l.base.pin.get, band = l.projections.head.pin, dlt = l.delta._2,
+      rmFrames = l.rm._2)
 
   // -------------------------------------------------------- pruned screens
 
@@ -214,7 +168,10 @@ object FrameIndex {
       implicit caches: CacheScope): DataFrame = {
     val sb = caches.pin(batchPinned.select(col("id"), col("frame"), col("sig"),
       posexplode(array(IndexTier.chunkCols(m.maxHamming): _*)).as(Seq("chunk", "value"))))
-    val sc = caches.pin(servedBandForCells(spark, store, name, m, sb, cellTouched))
+    val l = lsm(name, m)
+    val band = l.projections.head
+    val sc = caches.pin(l.projected(spark, store, band,
+      cellTouched.getOrElse(band.probe(store, sb.select(col("chunk"), col("value"))))))
     def hotSide(s: DataFrame) = s.groupBy(col("chunk"), col("value"))
       .agg(count(lit(1)).as("c")).filter(col("c") > maxBucketSize)
       .select("chunk", "value")
@@ -316,25 +273,6 @@ object FrameIndex {
 
   // ------------------------------------------------------------------ build
 
-  private def buildTiers(
-      spark: SparkSession, store: TableStore, name: String,
-      rows: DataFrame, maxHamming: Int, hasQ: Boolean,
-      frameBuckets: Int, bandBuckets: Int,
-      expectedFrames: Option[Int], expectedBand: Option[Int]): (Int, Int) = {
-    val fv = store.writeBucketed(rows, framesTable(name),
-      IndexTier.keyed(frameBuckets, "id"), expectedFrames)
-    // derive the projection from the COMMITTED frames (a parquet read) so
-    // the caller's input chain runs once, not twice
-    val committed = store.snapshotAt(spark, framesTable(name), fv)
-    val bv = store.writeBucketed(
-      IndexTier.bandedOf(withVideoStats(committed, hasQ), maxHamming)
-        .select(bandCols(hasQ): _*),
-      bandTable(name),
-      IndexTier.keyed(bandBuckets, "chunk", "value"),
-      expectedBand.orElse(store.currentVersion(bandTable(name))))
-    (fv, bv)
-  }
-
   /** Persist `(id, frame, sig)` rows (first three columns, any names)
     * and the screening budgets. Rebuilding replaces the corpus; the
     * admission gate survives, as in every family here. */
@@ -345,26 +283,9 @@ object FrameIndex {
       store: TableStore,
       name: String,
       frameBuckets: Int = FrameBuckets,
-      bandBuckets: Int = BandBuckets): Unit = {
-    require(maxHamming >= 1 && maxHamming <= 31,
-      s"maxHamming must be in [1, 31], got $maxHamming")
-    require(minContainment > 0.0 && minContainment <= 1.0,
-      s"minContainment must be in (0, 1], got $minContainment")
-    mutate(store, name) {
-      val prev = readManifest(store, name)
-      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-      val spark = frames.sparkSession
-      val (fv, bv) = buildTiers(spark, store, name, frameShape(frames),
-        maxHamming, hasQ = false, frameBuckets, bandBuckets,
-        prev.map(_._1.frames), prev.flatMap(_._1.band))
-      // a rebuild replaces the corpus wholesale — prior retirements are
-      // moot, the tombstone and memtable pins clear
-      IndexTier.commitManifest(store, manifestTable(name),
-        FrameManifest(fv, maxHamming, minContainment,
-          prev.map(_._1.lastBatchId).getOrElse(-1L), band = Some(bv)),
-        prev.map(_._2))
-    }
-  }
+      bandBuckets: Int = BandBuckets): Unit =
+    buildFamily(frameShape(frames), maxHamming, minContainment, store, name,
+      frameBuckets, bandBuckets, quality = false)
 
   /** [[build]] for a KEEPER family: persist `(id, frame, sig, quality)`
     * rows (first four columns, any names) — the quality score is whatever
@@ -380,7 +301,13 @@ object FrameIndex {
       store: TableStore,
       name: String,
       frameBuckets: Int = FrameBuckets,
-      bandBuckets: Int = BandBuckets): Unit = {
+      bandBuckets: Int = BandBuckets): Unit =
+    buildFamily(frameQualityShape(frames), maxHamming, minContainment, store, name,
+      frameBuckets, bandBuckets, quality = true)
+
+  private def buildFamily(
+      rows: DataFrame, maxHamming: Int, minContainment: Double, store: TableStore,
+      name: String, frameBuckets: Int, bandBuckets: Int, quality: Boolean): Unit = {
     require(maxHamming >= 1 && maxHamming <= 31,
       s"maxHamming must be in [1, 31], got $maxHamming")
     require(minContainment > 0.0 && minContainment <= 1.0,
@@ -388,14 +315,13 @@ object FrameIndex {
     mutate(store, name) {
       val prev = readManifest(store, name)
       prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-      val spark = frames.sparkSession
-      val (fv, bv) = buildTiers(spark, store, name, frameQualityShape(frames),
-        maxHamming, hasQ = true, frameBuckets, bandBuckets,
-        prev.map(_._1.frames), prev.flatMap(_._1.band))
-      IndexTier.commitManifest(store, manifestTable(name),
-        FrameManifest(fv, maxHamming, minContainment,
-          prev.map(_._1.lastBatchId).getOrElse(-1L),
-          hasQuality = true, band = Some(bv)), prev.map(_._2))
+      // a rebuild replaces the corpus wholesale — prior retirements are
+      // moot, the tombstone and memtable pins clear
+      val fresh = FrameManifest(-1, maxHamming, minContainment,
+        prev.map(_._1.lastBatchId).getOrElse(-1L), hasQuality = quality)
+      IndexTier.commitManifest(store, manifestTable(name), pinned(fresh,
+        lsm(name, fresh).build(rows.sparkSession, store, rows, Seq(frameBuckets, bandBuckets))),
+        prev.map(_._2))
     }
   }
 
@@ -403,7 +329,7 @@ object FrameIndex {
     * supersede retirements subtracted). */
   def frames(spark: SparkSession, store: TableStore, name: String): DataFrame = {
     val (m, _) = requireManifest(store, name)
-    servedFramesAt(spark, store, name, m)
+    lsm(name, m).served(spark, store)
   }
 
   /** The index's per-frame hamming budget, as persisted. */
@@ -415,63 +341,6 @@ object FrameIndex {
     requireManifest(store, name)._1.minContainment
 
   // ---------------------------------------------------------- append/remove
-
-  /** When accumulated memtable/tombstone bytes have earned their
-    * amortized rewrite — file-metadata reads, no Spark job. The floor is
-    * conf-overridable (`spark.graft.foldFloorBytes`) so growth tests can
-    * exercise folds at test scale. */
-  private def foldDue(
-      spark: SparkSession, store: TableStore, name: String,
-      m: FrameManifest): Boolean =
-    IndexTier.foldDue(
-      m.dlt.map(store.byteSizeAt(deltaTable(name), _)).getOrElse(0L) +
-        m.rmFrames.map(store.byteSizeAt(rmTable(name), _)).getOrElse(0L),
-      store.byteSizeAt(framesTable(name), m.frames),
-      spark.conf.getOption("spark.graft.foldFloorBytes")
-        .map(_.toLong).getOrElse(IvfIndex.OvlFloorBytes))
-
-  /** Amortized fold: rewrite the SERVED view — minus this batch's
-    * retirements, plus its admissions — into both bucketed tiers
-    * concurrently, clearing the tombstone and delta members in the same
-    * manifest swap. A legacy layout (no band pin) gains the projection
-    * tier here — its one full rewrite. */
-  private def foldAllTiers(
-      spark: SparkSession, store: TableStore, name: String,
-      m: FrameManifest, admitted: DataFrame,
-      retired: Option[DataFrame]): FrameManifest = {
-    val served = servedFramesAt(spark, store, name, m)
-    val keptPre = retired
-      .map(r => served.join(broadcast(r), Seq("id"), "left_anti"))
-      .getOrElse(served)
-    val kept = keptPre.unionByName(admitted)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      kept.count() // materialize once; both rewrites read the cache
-      // rebucket-at-fold: double each tier's bucket count past the
-      // per-bucket byte target ([[OverlayLock.grownSpec]]) so pruned
-      // reads stay constant-per-bucket as the corpus grows
-      val spark2 = kept.sparkSession
-      val grow = m.dlt.map(store.byteSizeAt(deltaTable(name), _)).getOrElse(0L)
-      val frameBytes = store.byteSizeAt(framesTable(name), m.frames) + grow
-      val bandBytes = m.band.map(store.byteSizeAt(bandTable(name), _))
-        .getOrElse(0L) + grow * (m.maxHamming + 1)
-      val Seq(fv, bv) = OverlayLock.inParallel(Seq(
-        () => store.writeBucketed(kept, framesTable(name),
-          OverlayLock.grownSpec(spark2,
-            IndexTier.layout(store, framesTable(name), FrameBuckets, "id"), frameBytes),
-          Some(m.frames)),
-        () => store.writeBucketed(
-          IndexTier.bandedOf(withVideoStats(kept, m.hasQuality), m.maxHamming)
-            .select(bandCols(m.hasQuality): _*),
-          bandTable(name),
-          OverlayLock.grownSpec(spark2,
-            IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
-            bandBytes),
-          m.band.orElse(store.currentVersion(bandTable(name))))))
-        .map(_.asInstanceOf[Int])
-      m.copy(frames = fv, band = Some(bv), rmFrames = None, dlt = None)
-    } finally kept.unpersist()
-  }
 
   /** Fold a frame batch into committed state — INSERT-ONLY by VIDEO id
     * (a re-sent id is a no-op for ALL its frames: frame sets are
@@ -492,7 +361,8 @@ object FrameIndex {
       screenFirst: Boolean = false,
       maxBucketSize: Int = 200): Boolean = {
     val (m, mv) = requireManifest(store, name)
-    requirePlain(m, name, "an insert-only fold")
+    IndexTier.requireLayout(s"frame index $name", m.hasQuality, keeper = false,
+      "an insert-only fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
     IndexTier.rollbackAll(store, m.tiers(name))
     // the screen-then-admit fold: drop batch videos CONTAINED in the
@@ -505,15 +375,13 @@ object FrameIndex {
     implicit val outer: CacheScope = new CacheScope
     try {
       val batch0 = outer.pin(frameShape(frames))
-      // (a legacy index has no band pin: -1 probes nothing real, and the
-      // full-derive screen ignores its cell list)
+      // (a legacy index has no band pin: its probe reads nothing real,
+      // and the full-derive screen ignores its cell list)
+      val l = lsm(name, m)
       val (idBuckets, cellBuckets) =
         if (screenFirst)
-          IndexTier.touchedBucketsPair(store, framesTable(name) -> m.frames,
-            bandTable(name) -> m.band.getOrElse(-1), probeRows(batch0, m.maxHamming))
-        else (IndexTier.touchedBuckets(store, framesTable(name), m.frames,
-            batch0.select(col("id"))),
-          Seq.empty[Int])
+          l.probePair(store, l.projections.head, probeRows(batch0, m.maxHamming))
+        else (l.base.probe(store, batch0.select(col("id"))), Seq.empty[Int])
       val batch =
         if (!screenFirst) batch0
         else {
@@ -536,20 +404,15 @@ object FrameIndex {
         // (precomputed — for the screened path `batch` ⊆ `batch0`, so the
         // fused probe's bucket list is a superset of what the read needs)
         val fresh = batch
-          .join(indexedIdsForBuckets(spark, store, name, m, idBuckets),
-            Seq("id"), "left_anti")
+          .join(l.indexed(spark, store, idBuckets).select(col("id")), Seq("id"), "left_anti")
           // at most one signature per (id, frame): a batch carrying a
           // frame twice (two staged files in one trigger) indexes the
           // smallest sig — deterministic under any partitioning (the
           // PerceptualIndex.appendStamped canonicalization)
           .groupBy(col("id"), col("frame")).agg(min(col("sig")).as("sig"))
-        val next =
-          if (foldDue(spark, store, name, m))
-            foldAllTiers(spark, store, name, m, fresh, None)
-          else m.copy(dlt = Some(IndexTier.appendDelta(spark, store,
-            deltaTable(name), m.dlt, fresh)))
         IndexTier.commitManifest(store, manifestTable(name),
-          next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
+          pinned(m, l.drain(spark, store, fresh, None))
+            .copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
         true
       } finally if (screenFirst) batch.unpersist()
     } finally outer.release()
@@ -569,30 +432,16 @@ object FrameIndex {
       val (m, mv) = requireManifest(store, name)
       IndexTier.rollbackAll(store, m.tiers(name))
       val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
-      val stored = servedFramesAt(spark, store, name, m)
-      val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val before = stored.select(col("id")).distinct().count()
-        val keptN = kept.select(col("id")).distinct().count()
-        // the rewrite serves from the SERVED view, so pending
-        // retirements + the memtable fold in here and the pins clear
-        val Seq(fv, bv) = OverlayLock.inParallel(Seq(
-          () => store.writeBucketed(kept, framesTable(name),
-            IndexTier.layout(store, framesTable(name), FrameBuckets, "id"),
-            Some(m.frames)),
-          () => store.writeBucketed(
-            IndexTier.bandedOf(withVideoStats(kept, m.hasQuality), m.maxHamming)
-              .select(bandCols(m.hasQuality): _*),
-            bandTable(name),
-            IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
-            m.band.orElse(store.currentVersion(bandTable(name))))))
-          .map(_.asInstanceOf[Int])
-        IndexTier.commitManifest(store, manifestTable(name),
-          m.copy(frames = fv, band = Some(bv), rmFrames = None, dlt = None),
-          Some(mv))
-        before - keptN
-      } finally kept.unpersist()
+      // the rewrite serves from the SERVED view, so pending retirements +
+      // the memtable fold in here and the pins clear
+      val l = lsm(name, m)
+      val stored = l.served(spark, store)
+      val before = stored.select(col("id")).distinct().count()
+      val (next, keptN) = l.rewrite(spark, store,
+        stored.join(drop, stored("id") === col("_rm_id"), "left_anti"), fold = false)(
+        _.select(col("id")).distinct().count())
+      IndexTier.commitManifest(store, manifestTable(name), pinned(m, next), Some(mv))
+      before - keptN
     }
 
   // --------------------------------------------------------------- admission
@@ -737,7 +586,8 @@ object FrameIndex {
       store: TableStore, name: String, stamp: Option[Long],
       maxBucketSize: Int, preDedupBatch: Boolean = false): Boolean = {
     val (m, mv) = requireManifest(store, name)
-    requirePlain(m, name, "a supersede fold")
+    IndexTier.requireLayout(s"frame index $name", m.hasQuality, keeper = false,
+      "a supersede fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
     IndexTier.rollbackAll(store, m.tiers(name))
     implicit val scope: CacheScope = new CacheScope
@@ -749,13 +599,12 @@ object FrameIndex {
     // until the fold) + the in-batch (id, frame) canonicalization —
     // appendStamped's contracts; the id screen reads only the batch's
     // id-buckets
+    val l = lsm(name, m)
     val batch0pre = scope.pin(frameShape(frames))
-    val (idBuckets, cellBuckets) = IndexTier.touchedBucketsPair(store,
-      framesTable(name) -> m.frames, bandTable(name) -> m.band.getOrElse(-1),
-      probeRows(batch0pre, m.maxHamming))
+    val (idBuckets, cellBuckets) =
+      l.probePair(store, l.projections.head, probeRows(batch0pre, m.maxHamming))
     val batch0 = batch0pre
-      .join(indexedIdsForBuckets(spark, store, name, m, idBuckets),
-        Seq("id"), "left_anti")
+      .join(l.indexed(spark, store, idBuckets).select(col("id")), Seq("id"), "left_anti")
       .groupBy(col("id"), col("frame")).agg(min(col("sig")).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val batch =
@@ -786,27 +635,11 @@ object FrameIndex {
             .select(col("stored_id").as("id")).distinct()
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            val next =
-              if (foldDue(spark, store, name, m))
-                foldAllTiers(spark, store, name, m, admitted, Some(removedIds))
-              else {
-                // O(batch ∪ tombstones): admissions are ONE plain
-                // memtable append, retirements merge into the small
-                // tombstone member — two independent tables, committed
-                // concurrently. The emptiness gate runs as ONE serial
-                // narrow count first: it materializes the whole pinned
-                // screen chain at full drain width, so the concurrent
-                // commits read the cache instead of contending on
-                // uncached pins inside a coalesced write (measured on
-                // the text keeper: fusing the gate into the commit
-                // branches cost +0.5 s/drain).
-                val (dv, rv) = IndexTier.commitDeltaAndRm(spark, store,
-                  deltaTable(name) -> m.dlt, rmTable(name) -> m.rmFrames, admitted,
-                  removedIds, noRetired = IndexTier.narrowCount(removedIds) == 0L)
-                m.copy(dlt = Some(dv), rmFrames = rv)
-              }
+            // the amortized fold when due, else O(batch ∪ tombstones)
+            // memtable + tombstone commits ([[IndexTier.Lsm.drain]])
             IndexTier.commitManifest(store, manifestTable(name),
-              next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)),
+              pinned(m, l.drain(spark, store, admitted, Some(removedIds)))
+                .copy(lastBatchId = stamp.getOrElse(m.lastBatchId)),
               Some(mv))
             true
           } finally removedIds.unpersist()
@@ -869,7 +702,8 @@ object FrameIndex {
       store: TableStore, name: String, stamp: Option[Long],
       maxBucketSize: Int): Boolean = {
     val (m, mv) = requireManifest(store, name)
-    requireQuality(m, name, "a replace-if-better fold")
+    IndexTier.requireLayout(s"frame index $name", m.hasQuality, keeper = true,
+      "a replace-if-better fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
     IndexTier.rollbackAll(store, m.tiers(name))
     implicit val scope: CacheScope = new CacheScope
@@ -878,13 +712,12 @@ object FrameIndex {
     // against the INDEXED id set + in-batch (id, frame) canonicalization
     // (min sig; quality folds to the max per id — one score per video);
     // the id screen reads only the batch's id-buckets
+    val l = lsm(name, m)
     val batchPre = scope.pin(frameQualityShape(frames))
-    val (idBuckets, cellBuckets) = IndexTier.touchedBucketsPair(store,
-      framesTable(name) -> m.frames, bandTable(name) -> m.band.getOrElse(-1),
-      probeRows(batchPre, m.maxHamming))
+    val (idBuckets, cellBuckets) =
+      l.probePair(store, l.projections.head, probeRows(batchPre, m.maxHamming))
     val batch = batchPre
-      .join(indexedIdsForBuckets(spark, store, name, m, idBuckets),
-        Seq("id"), "left_anti")
+      .join(l.indexed(spark, store, idBuckets).select(col("id")), Seq("id"), "left_anti")
       .groupBy(col("id"), col("frame"))
       .agg(min(col("sig")).as("sig"), max(col("q")).as("q"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -919,22 +752,9 @@ object FrameIndex {
             .select(col("stored_id").as("id")).distinct()
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            val next =
-              if (foldDue(spark, store, name, m))
-                foldAllTiers(spark, store, name, m, admitted, Some(removedIds))
-              else {
-                // admissions → memtable, retirements → tombstones; two
-                // independent tables, committed concurrently — the
-                // emptiness gate is ONE serial narrow count that
-                // materializes the pinned screen chain first (the
-                // [[supersedeStamped]] note)
-                val (dv, rv) = IndexTier.commitDeltaAndRm(spark, store,
-                  deltaTable(name) -> m.dlt, rmTable(name) -> m.rmFrames, admitted,
-                  removedIds, noRetired = IndexTier.narrowCount(removedIds) == 0L)
-                m.copy(dlt = Some(dv), rmFrames = rv)
-              }
             IndexTier.commitManifest(store, manifestTable(name),
-              next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)),
+              pinned(m, l.drain(spark, store, admitted, Some(removedIds)))
+                .copy(lastBatchId = stamp.getOrElse(m.lastBatchId)),
               Some(mv))
             true
           } finally removedIds.unpersist()

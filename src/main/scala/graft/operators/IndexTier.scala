@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** The control plane every persisted index family shares
   * ([[SignatureIndex]], [[PerceptualIndex]], [[FrameIndex]],
   * [[PostingsIndex]], [[IvfIndex]] and [[CorpusProfile]]): member tables
-  * pinned by one manifest, read bucket-pruned. Two decisions live here and
-  * nowhere else.
+  * pinned by one manifest, read bucket-pruned. Three decisions live here
+  * and nowhere else.
   *
   *  - THE BUCKET-PRUNED TIER READ. A member tier pinned at version N is
   *    probed and pruned with the bucket layout version N was WRITTEN with
@@ -27,6 +27,13 @@ import org.apache.spark.sql.functions._
   *    version number, -1 for an absent tier; an absent key decodes to the
   *    field's default (`None` for a pin), so a manifest written before a
   *    tier existed stays readable.
+  *  - THE LSM MEMBER SET of the signature families ([[SignatureIndex]],
+  *    [[PerceptualIndex]], [[FrameIndex]]): a bucketed base tier,
+  *    bucketed projection tiers derived from it, a plain `_delta`
+  *    memtable and an `_rm` tombstone member. A family describes its set
+  *    once as an [[Lsm]]; how that set is served (base ∪ delta ∖
+  *    tombstones, whole or pruned), how a drain commits into it and how
+  *    a fold or takedown rewrites it are the [[Lsm]]'s.
   */
 private[graft] object IndexTier {
 
@@ -205,46 +212,6 @@ private[graft] object IndexTier {
       floor: Long = IvfIndex.OvlFloorBytes): Boolean =
     pendingBytes > math.max(floor.toDouble, IvfIndex.OvlFrac * baseBytes)
 
-  /** The memtable write: commit `fresh` to the plain delta member as ONE
-    * linked append — no shuffle, no bucketing, O(batch) bytes — folding a
-    * small compacting rewrite in once file counts creep
-    * ([[OverlayLock.appendOrCompact]]). */
-  def appendDelta(
-      spark: SparkSession, store: TableStore, table: String, pin: Option[Int],
-      fresh: DataFrame): Int =
-    pin match {
-      case Some(p) => OverlayLock.appendOrCompact(store, table, p,
-        store.snapshotAt(spark, table, p), fresh.coalesce(4))
-      case None => store.write(fresh.coalesce(4), table, store.currentVersion(table))
-    }
-
-  /** Merge retired `ids` into the small tombstone member. */
-  def mergeRm(
-      spark: SparkSession, store: TableStore, table: String, pin: Option[Int],
-      ids: DataFrame): Int =
-    pin match {
-      case Some(p) => store.write(
-        store.snapshotAt(spark, table, p).select(col("id"))
-          .unionByName(ids).distinct().coalesce(4), table, Some(p))
-      case None => store.write(ids.coalesce(4), table, store.currentVersion(table))
-    }
-
-  /** One drain's O(batch ∪ tombstones) member commits: admissions ride ONE
-    * plain linked append into the delta member, retirements merge into the
-    * tombstone member — independent tables, committed concurrently. The
-    * caller publishes the returned (delta, tombstone) pins in one manifest
-    * swap. `noRetired` skips the tombstone commit. */
-  def commitDeltaAndRm(
-      spark: SparkSession, store: TableStore,
-      delta: (String, Option[Int]), rm: (String, Option[Int]),
-      admitted: DataFrame, retired: DataFrame, noRetired: Boolean): (Int, Option[Int]) = {
-    val res = OverlayLock.inParallel(
-      Seq(() => appendDelta(spark, store, delta._1, delta._2, admitted)) ++
-        (if (noRetired) Nil else Seq(() => mergeRm(spark, store, rm._1, rm._2, retired))))
-    (res.head.asInstanceOf[Int],
-      if (noRetired) rm._2 else Some(res.last.asInstanceOf[Int]))
-  }
-
   /** Rewrite a revision overlay member: old overlay minus the batch's keys
     * plus the batch — at most one row-set per key, so the read-time merge
     * needs no recency bookkeeping. The overlay is policy-bounded small, so
@@ -260,6 +227,185 @@ private[graft] object IndexTier {
         table, Some(p))
       case None => store.write(rows.coalesce(8), table)
     }
+
+  // --------------------------------------------------------- LSM member sets
+
+  /** One bucketed tier of an [[Lsm]]: its table and pin (`None` for a
+    * tier not written yet — a legacy index's missing projection, which the
+    * next rewrite creates), the family-default layout (`buckets` hashed on
+    * `keys`), how the tier derives from base rows, and its bytes per delta
+    * byte (a fold's growth projection). The base tier derives by
+    * `identity` at 1. */
+  final case class Tier(
+      table: String, pin: Option[Int], buckets: Int, keys: Seq[String],
+      derive: DataFrame => DataFrame = identity, byteMult: Long = 1L) {
+    /** The buckets `rows` hash into at the pin; none for an unwritten tier,
+      * whose read ignores the list. */
+    def probe(store: TableStore, rows: DataFrame): Seq[Int] =
+      pin.map(touchedBuckets(store, table, _, rows)).getOrElse(Nil)
+  }
+
+  /** A signature family's LSM member set as one manifest pins it: the
+    * bucketed `base` tier, the bucketed `projections` derived from it, the
+    * plain `delta` memtable and the `rm` tombstone member (table, pin).
+    * Every operation reads at these pins; a commit or rewrite returns the
+    * set at its new pins for the caller to publish in one manifest swap. */
+  final case class Lsm(
+      base: Tier, projections: Seq[Tier],
+      delta: (String, Option[Int]), rm: (String, Option[Int])) {
+
+    private def basePin: Int = base.pin.get // a built set always pins its base
+
+    private def deltaRows(spark: SparkSession, store: TableStore): Option[DataFrame] =
+      deltaFrame(spark, store, delta._1, delta._2)
+
+    /** The SERVED rows: (base ∪ delta) ∖ tombstoned ids — the
+      * manifest-consistent view every fold, takedown and full read
+      * derives from. */
+    def served(spark: SparkSession, store: TableStore): DataFrame = {
+      val b = store.snapshotAt(spark, base.table, basePin)
+      minusRm(spark, store, rm._1, rm._2)(
+        deltaRows(spark, store).map(b.unionByName(_)).getOrElse(b))
+    }
+
+    /** The base tier's and `t`'s touched buckets from ONE narrow job
+      * ([[touchedBucketsPair]]); an unwritten `t` probes nothing real. */
+    def probePair(store: TableStore, t: Tier, rows: DataFrame): (Seq[Int], Seq[Int]) =
+      touchedBucketsPair(store, base.table -> basePin, t.table -> t.pin.getOrElse(-1), rows)
+
+    /** Indexed base rows of the `touched` buckets: base ∪ delta WITHOUT the
+      * tombstone subtraction — a retired id may not re-enter under its own
+      * name until the fold forgets it. The insert-only screen's read and
+      * the candidate fetch-back. */
+    def indexed(spark: SparkSession, store: TableStore, touched: Seq[Int]): DataFrame =
+      prunedWithDelta(spark, store, base.table, basePin, touched,
+        deltaRows(spark, store), identity)
+
+    /** Tier `t` of the SERVED view restricted to its `touched` buckets: the
+      * pruned read ∪ the same projection derived in-plan from the delta,
+      * tombstones subtracted — exactly the rows `t.derive(served)` holds in
+      * those buckets (a cell's rows all live in one bucket, so candidates
+      * and hot-cell counts match). An unwritten tier (a legacy index)
+      * derives from the full served view until its next rewrite. */
+    def projected(
+        spark: SparkSession, store: TableStore, t: Tier, touched: Seq[Int]): DataFrame =
+      t.pin match {
+        case None => t.derive(served(spark, store))
+        case Some(pin) => minusRm(spark, store, rm._1, rm._2)(
+          prunedWithDelta(spark, store, t.table, pin, touched,
+            deltaRows(spark, store), t.derive))
+      }
+
+    /** A full (re)build: `rows` become the base tier and every projection
+      * derives from the COMMITTED base (a parquet read, so the caller's
+      * input chain runs once); tier i gets `buckets(i)` buckets, base
+      * first. The corpus is replaced wholesale, so the delta and tombstone
+      * members clear. */
+    def build(
+        spark: SparkSession, store: TableStore, rows: DataFrame,
+        buckets: Seq[Int]): Lsm = {
+      def write(t: Tier, n: Int, df: DataFrame): Tier =
+        t.copy(pin = Some(store.writeBucketed(df, t.table, keyed(n, t.keys: _*))))
+      val b = write(base, buckets.head, rows)
+      val committed = store.snapshotAt(spark, b.table, b.pin.get)
+      Lsm(b, projections.zip(buckets.tail).map { case (t, n) =>
+        write(t, n, t.derive(committed)) }, delta._1 -> None, rm._1 -> None)
+    }
+
+    /** ONE concurrent rewrite of the base and every projection from `kept`
+      * (the next served rows), persisted here and materialized first by
+      * `materialize` — whose result comes back with the set — so every tier
+      * write reads the cache. A FOLD grows each tier's recorded layout past
+      * the per-bucket byte target ([[OverlayLock.grownSpec]], projected
+      * from the pre-fold bytes plus the delta's times the tier's multiplier
+      * — within 2x is enough, the next fold corrects), so pruned reads stay
+      * constant-per-bucket as the corpus grows; a takedown keeps the
+      * recorded [[layout]]. The delta and tombstone members clear. */
+    def rewrite[A](
+        spark: SparkSession, store: TableStore, kept: DataFrame, fold: Boolean)(
+        materialize: DataFrame => A): (Lsm, A) = {
+      val cached = kept.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val a = materialize(cached)
+        val grow = delta._2.map(store.byteSizeAt(delta._1, _)).getOrElse(0L)
+        val tiers = OverlayLock.inParallel((base +: projections).map { t => () =>
+          val spec = layout(store, t.table, t.buckets, t.keys: _*)
+          t.copy(pin = Some(store.writeBucketed(t.derive(cached), t.table,
+            if (!fold) spec
+            else OverlayLock.grownSpec(spark, spec,
+              t.pin.map(store.byteSizeAt(t.table, _)).getOrElse(0L) + grow * t.byteMult),
+            t.pin.orElse(store.currentVersion(t.table)))))
+        }).map(_.asInstanceOf[Tier])
+        (Lsm(tiers.head, tiers.tail, delta._1 -> None, rm._1 -> None), a)
+      } finally cached.unpersist()
+    }
+
+    /** One drain's O(batch ∪ tombstones) member commits: `admitted` rides
+      * ONE plain linked append into the delta member — no shuffle, no
+      * bucketing, a small compacting rewrite folded in once file counts
+      * creep ([[OverlayLock.appendOrCompact]]) — and `retired` ids, when
+      * given, merge into the tombstone member concurrently (independent
+      * tables). */
+    def commit(
+        spark: SparkSession, store: TableStore, admitted: DataFrame,
+        retired: Option[DataFrame]): Lsm = {
+      def appendDelta(): Int = delta._2 match {
+        case Some(p) => OverlayLock.appendOrCompact(store, delta._1, p,
+          store.snapshotAt(spark, delta._1, p), admitted.coalesce(4))
+        case None => store.write(admitted.coalesce(4), delta._1,
+          store.currentVersion(delta._1))
+      }
+      def mergeRm(ids: DataFrame): Int = rm._2 match {
+        case Some(p) => store.write(
+          store.snapshotAt(spark, rm._1, p).select(col("id"))
+            .unionByName(ids).distinct().coalesce(4), rm._1, Some(p))
+        case None => store.write(ids.coalesce(4), rm._1, store.currentVersion(rm._1))
+      }
+      retired match {
+        case None => copy(delta = delta._1 -> Some(appendDelta()))
+        case Some(r) =>
+          val Seq(dv, rv) = OverlayLock.inParallel(Seq(() => appendDelta(), () => mergeRm(r)))
+          copy(delta = delta._1 -> Some(dv.asInstanceOf[Int]),
+            rm = rm._1 -> Some(rv.asInstanceOf[Int]))
+      }
+    }
+
+    /** One drain under the byte-priced fold policy: once the pending delta
+      * + tombstone bytes pass [[foldDue]] (file-metadata sizes, no Spark
+      * job; the floor is conf-overridable as `spark.graft.foldFloorBytes`
+      * so tests can fold at toy scale), the served view minus `retired`
+      * plus `admitted` is rewritten into every tier; otherwise [[commit]].
+      * Its emptiness gate on `retired` is ONE serial narrow count that
+      * materializes the pinned screen chain at full drain width first, so
+      * the concurrent commits read the cache instead of contending on
+      * uncached pins inside a coalesced write (measured on the text
+      * keeper: fusing the gate into the commit branches cost +0.5 s per
+      * drain). */
+    def drain(
+        spark: SparkSession, store: TableStore, admitted: DataFrame,
+        retired: Option[DataFrame]): Lsm =
+      if (foldDue(
+          Seq(delta, rm).map { case (t, p) => p.map(store.byteSizeAt(t, _)).getOrElse(0L) }.sum,
+          store.byteSizeAt(base.table, basePin),
+          spark.conf.getOption("spark.graft.foldFloorBytes")
+            .map(_.toLong).getOrElse(IvfIndex.OvlFloorBytes))) {
+        val s = served(spark, store)
+        rewrite(spark, store,
+          retired.map(r => s.join(broadcast(r), Seq("id"), "left_anti")).getOrElse(s)
+            .unionByName(admitted), fold = true)(_.count())._1
+      } else commit(spark, store, admitted, retired.filter(narrowCount(_) > 0L))
+  }
+
+  /** The layout guard of the keeper-capable families: a plain fold on a
+    * quality-carrying (KEEPER) index would drop its quality column, and a
+    * replace-if-better fold needs one — the two layouts never mix.
+    * `index` names the index in the message. */
+  def requireLayout(index: String, hasQuality: Boolean, keeper: Boolean, op: String): Unit =
+    require(hasQuality == keeper,
+      if (hasQuality) s"$index is a KEEPER family (quality-carrying) — $op would drop " +
+        "its quality column; admit through admitKeepBestBatch, drained with AdmissionStream.drain"
+      else s"$index is a plain family — $op needs a quality-carrying index; " +
+        "build it with buildWithQuality")
 
   // ---------------------------------------------------------------- manifests
 

@@ -122,55 +122,20 @@ object PerceptualIndex {
   private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
     OverlayLock.mutate(store, "perc", name)(attempt)
 
-  /** Indexed sigs rows of the batch's id-buckets (base ∪ delta, NO
-    * tombstone subtraction — a retired id may not re-enter under its own
-    * name until the fold forgets it): the insert-only screen's read. */
-  private def indexedSigsForIds(
-      spark: SparkSession, store: TableStore, name: String, m: PercManifest,
-      ids: DataFrame): DataFrame =
-    indexedSigsForBuckets(spark, store, name, m,
-      IndexTier.touchedBuckets(store, sigsTable(name), m.sigs, ids))
+  /** The sigs base tier, its chunk-band projection (`(id, chunk, value,
+    * sig[, q])` — `sig` and `q` ride denormalized so the verify/score tail
+    * never fetches back from the sigs tier), the memtable and the
+    * tombstones, at `m`'s pins. */
+  private def lsm(name: String, m: PercManifest): IndexTier.Lsm = IndexTier.Lsm(
+    IndexTier.Tier(sigsTable(name), Some(m.sigs), SigBuckets, Seq("id")),
+    Seq(IndexTier.Tier(bandTable(name), m.band, BandBuckets, Seq("chunk", "value"),
+      IndexTier.bandedOf(_, m.maxHamming), m.maxHamming + 1L)),
+    deltaTable(name) -> m.dlt, rmTable(name) -> m.rmSigs)
 
-  /** [[indexedSigsForIds]] with the bucket probe already done (the
-    * fused-probe callers pass their precomputed id-bucket list). */
-  private def indexedSigsForBuckets(
-      spark: SparkSession, store: TableStore, name: String, m: PercManifest,
-      touched: Seq[Int]): DataFrame =
-    IndexTier.prunedWithDelta(spark, store, sigsTable(name), m.sigs, touched,
-      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), identity)
-
-  /** The SERVED signature corpus: (base ∪ delta) ∖ tombstoned ids — the
-    * manifest-consistent view folds and full reads derive from. */
-  private def servedSigsAt(
-      spark: SparkSession, store: TableStore, name: String,
-      m: PercManifest): DataFrame = {
-    val base = store.snapshotAt(spark, sigsTable(name), m.sigs)
-    IndexTier.minusRm(spark, store, rmTable(name), m.rmSigs)(
-      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt)
-        .map(base.unionByName(_)).getOrElse(base))
-  }
-
-  /** The SERVED banding projection restricted to the batch's probe cells:
-    * a bucket-pruned read of the persisted band tier ∪ the delta's
-    * in-plan projection, tombstones subtracted — exactly the rows
-    * `bandedOf(servedSigsAt)` holds in the touched buckets (candidates
-    * and hot-cell counts match, because a cell's rows all live in one
-    * bucket). Falls back to the full served derive on a legacy
-    * pre-projection layout. */
-  private def servedBandForCells(
-      spark: SparkSession, store: TableStore, name: String, m: PercManifest,
-      batchBanded: DataFrame, cellTouched: Option[Seq[Int]] = None): DataFrame =
-    m.band match {
-      case None => // legacy layout: derive from the full served view
-        IndexTier.bandedOf(servedSigsAt(spark, store, name, m), m.maxHamming)
-      case Some(pin) =>
-        IndexTier.minusRm(spark, store, rmTable(name), m.rmSigs)(
-          IndexTier.prunedWithDelta(spark, store, bandTable(name), pin,
-            cellTouched.getOrElse(IndexTier.touchedBuckets(store, bandTable(name), pin,
-              batchBanded.select(col("chunk"), col("value")))),
-            IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt),
-            d => IndexTier.bandedOf(d, m.maxHamming)))
-    }
+  /** `m` at the pins of `l`. */
+  private def pinned(m: PercManifest, l: IndexTier.Lsm): PercManifest =
+    m.copy(sigs = l.base.pin.get, band = l.projections.head.pin, dlt = l.delta._2,
+      rmSigs = l.rm._2)
 
   // -------------------------------------------------------- pruned screens
 
@@ -192,9 +157,11 @@ object PerceptualIndex {
     val storedCols =
       if (carryQ) Seq(col("id"), col("sig"), col("q"), col("chunk"), col("value"))
       else Seq(col("id"), col("sig"), col("chunk"), col("value"))
-    val sc = caches.pin(
-      servedBandForCells(spark, store, name, m, sb, cellTouched)
-        .select(storedCols: _*))
+    val l = lsm(name, m)
+    val band = l.projections.head
+    val sc = caches.pin(l.projected(spark, store, band,
+        cellTouched.getOrElse(band.probe(store, sb.select(col("chunk"), col("value")))))
+      .select(storedCols: _*))
     def hotSide(s: DataFrame) = s.groupBy(col("chunk"), col("value"))
       .agg(count(lit(1)).as("c")).filter(col("c") > maxBucketSize)
       .select("chunk", "value")
@@ -230,32 +197,7 @@ object PerceptualIndex {
       col(qc).cast("double").as("q"))
   }
 
-  private def requirePlain(m: PercManifest, name: String, op: String): Unit =
-    require(!m.hasQuality,
-      s"perceptual index $name is a KEEPER family (quality-carrying) — " +
-        s"$op would drop its quality column; use admitKeepBestBatch/Stream")
-
-  private def requireQuality(m: PercManifest, name: String, op: String): Unit =
-    require(m.hasQuality,
-      s"perceptual index $name is a plain family — $op needs a " +
-        "quality-carrying index; build it with buildWithQuality")
-
   // ------------------------------------------------------------------ build
-
-  private def buildTiers(
-      spark: SparkSession, store: TableStore, name: String,
-      rows: DataFrame, maxHamming: Int,
-      sigBuckets: Int, bandBuckets: Int, expectedSigs: Option[Int],
-      expectedBand: Option[Int]): (Int, Int) = {
-    val sv = store.writeBucketed(rows, sigsTable(name),
-      IndexTier.keyed(sigBuckets, "id"), expectedSigs)
-    // derive the projection from the COMMITTED sigs (a parquet read) so
-    // the caller's input chain runs once, not twice
-    val committed = store.snapshotAt(spark, sigsTable(name), sv)
-    val bv = store.writeBucketed(IndexTier.bandedOf(committed, maxHamming), bandTable(name),
-      IndexTier.keyed(bandBuckets, "chunk", "value"), expectedBand)
-    (sv, bv)
-  }
 
   /** Persist `(id, sig)` rows (first two columns, any names) and the
     * screening budget. Rebuilding replaces the corpus; the admission
@@ -268,22 +210,9 @@ object PerceptualIndex {
       store: TableStore,
       name: String,
       sigBuckets: Int = SigBuckets,
-      bandBuckets: Int = BandBuckets): Unit = {
-    require(maxHamming >= 1 && maxHamming <= 31,
-      s"maxHamming must be in [1, 31], got $maxHamming")
-    mutate(store, name) {
-      val prev = readManifest(store, name)
-      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-      val spark = sigs.sparkSession
-      val (sv, bv) = buildTiers(spark, store, name, sigShape(sigs),
-        maxHamming, sigBuckets, bandBuckets,
-        prev.map(_._1.sigs), prev.flatMap(_._1.band))
-      IndexTier.commitManifest(store, manifestTable(name),
-        PercManifest(sv, maxHamming,
-          prev.map(_._1.lastBatchId).getOrElse(-1L), band = Some(bv)),
-        prev.map(_._2))
-    }
-  }
+      bandBuckets: Int = BandBuckets): Unit =
+    buildFamily(sigShape(sigs), maxHamming, store, name, sigBuckets, bandBuckets,
+      quality = false)
 
   /** [[build]] for a KEEPER family: persist `(id, sig, quality)` rows
     * (first three columns, any names) — the quality score is whatever
@@ -298,20 +227,22 @@ object PerceptualIndex {
       store: TableStore,
       name: String,
       sigBuckets: Int = SigBuckets,
-      bandBuckets: Int = BandBuckets): Unit = {
+      bandBuckets: Int = BandBuckets): Unit =
+    buildFamily(sigQualityShape(sigs), maxHamming, store, name, sigBuckets,
+      bandBuckets, quality = true)
+
+  private def buildFamily(
+      rows: DataFrame, maxHamming: Int, store: TableStore, name: String,
+      sigBuckets: Int, bandBuckets: Int, quality: Boolean): Unit = {
     require(maxHamming >= 1 && maxHamming <= 31,
       s"maxHamming must be in [1, 31], got $maxHamming")
     mutate(store, name) {
       val prev = readManifest(store, name)
       prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-      val spark = sigs.sparkSession
-      val (sv, bv) = buildTiers(spark, store, name, sigQualityShape(sigs),
-        maxHamming, sigBuckets, bandBuckets,
-        prev.map(_._1.sigs), prev.flatMap(_._1.band))
-      IndexTier.commitManifest(store, manifestTable(name),
-        PercManifest(sv, maxHamming,
-          prev.map(_._1.lastBatchId).getOrElse(-1L), hasQuality = true,
-          band = Some(bv)),
+      val fresh = PercManifest(-1, maxHamming, prev.map(_._1.lastBatchId).getOrElse(-1L),
+        hasQuality = quality)
+      IndexTier.commitManifest(store, manifestTable(name), pinned(fresh,
+        lsm(name, fresh).build(rows.sparkSession, store, rows, Seq(sigBuckets, bandBuckets))),
         prev.map(_._2))
     }
   }
@@ -320,7 +251,7 @@ object PerceptualIndex {
     * family (manifest-pinned read). */
   def signatures(spark: SparkSession, store: TableStore, name: String): DataFrame = {
     val (m, _) = requireManifest(store, name)
-    servedSigsAt(spark, store, name, m)
+    lsm(name, m).served(spark, store)
   }
 
   /** The index's screening budget, as persisted. */
@@ -329,65 +260,9 @@ object PerceptualIndex {
 
   // ---------------------------------------------------------- append/remove
 
-  /** When accumulated memtable/tombstone bytes have earned their
-    * amortized rewrite — file-metadata reads, no Spark job. The floor is
-    * conf-overridable (`spark.graft.foldFloorBytes`) so growth tests can
-    * exercise folds at test scale; the default keeps parquet's fixed
-    * per-file overhead from dominating tiny tiers. */
-  private def foldDue(
-      spark: SparkSession, store: TableStore, name: String,
-      m: PercManifest): Boolean =
-    IndexTier.foldDue(
-      m.dlt.map(store.byteSizeAt(deltaTable(name), _)).getOrElse(0L) +
-        m.rmSigs.map(store.byteSizeAt(rmTable(name), _)).getOrElse(0L),
-      store.byteSizeAt(sigsTable(name), m.sigs),
-      spark.conf.getOption("spark.graft.foldFloorBytes")
-        .map(_.toLong).getOrElse(IvfIndex.OvlFloorBytes))
-
-  /** Amortized fold: rewrite the SERVED view — minus this batch's
-    * retirements, plus its admissions — into both bucketed tiers
-    * concurrently, clearing the tombstone and delta members in the same
-    * manifest swap. A legacy layout (no band pin) gains the projection
-    * tier here — its one full rewrite. */
-  private def foldAllTiers(
-      spark: SparkSession, store: TableStore, name: String,
-      m: PercManifest, admitted: DataFrame,
-      retired: Option[DataFrame]): PercManifest = {
-    val served = servedSigsAt(spark, store, name, m)
-    val keptPre = retired
-      .map(r => served.join(broadcast(r), Seq("id"), "left_anti"))
-      .getOrElse(served)
-    val kept = keptPre.unionByName(admitted)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      kept.count() // materialize once; both rewrites read the cache
-      // rebucket-at-fold: double each tier's bucket count past the
-      // per-bucket byte target (projected from the pre-fold on-disk
-      // bytes — within 2x is enough, the next fold corrects), so pruned
-      // reads stay constant-per-bucket as the corpus grows
-      val spark2 = kept.sparkSession
-      val grow = m.dlt.map(store.byteSizeAt(deltaTable(name), _)).getOrElse(0L)
-      val sigBytes = store.byteSizeAt(sigsTable(name), m.sigs) + grow
-      val bandBytes = m.band.map(store.byteSizeAt(bandTable(name), _))
-        .getOrElse(0L) + grow * (m.maxHamming + 1)
-      val Seq(sv, bv) = OverlayLock.inParallel(Seq(
-        () => store.writeBucketed(kept, sigsTable(name),
-          OverlayLock.grownSpec(spark2,
-            IndexTier.layout(store, sigsTable(name), SigBuckets, "id"), sigBytes),
-          Some(m.sigs)),
-        () => store.writeBucketed(IndexTier.bandedOf(kept, m.maxHamming), bandTable(name),
-          OverlayLock.grownSpec(spark2,
-            IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
-            bandBytes),
-          m.band.orElse(
-            store.currentVersion(bandTable(name)))))).map(_.asInstanceOf[Int])
-      m.copy(sigs = sv, band = Some(bv), rmSigs = None, dlt = None)
-    } finally kept.unpersist()
-  }
-
   /** Fold a signature batch into committed state — INSERT-ONLY by id
     * (re-sent ids are no-ops), ONE plain O(batch) memtable commit
-    * ([[IndexTier.appendDelta]]), one manifest swap; the bucketed tiers
+    * ([[IndexTier.Lsm.commit]]), one manifest swap; the bucketed tiers
     * absorb the memtable at the amortized fold. */
   def append(
       spark: SparkSession,
@@ -405,7 +280,8 @@ object PerceptualIndex {
       maxBucketSize: Int = 200,
       preDedupBatch: Boolean = false): Boolean = {
     val (m, mv) = requireManifest(store, name)
-    requirePlain(m, name, "an insert-only fold")
+    IndexTier.requireLayout(s"perceptual index $name", m.hasQuality, keeper = false,
+      "an insert-only fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
     IndexTier.rollbackAll(store, m.tiers(name))
     // the screen-then-admit fold: drop batch items within the persisted
@@ -418,14 +294,13 @@ object PerceptualIndex {
     implicit val outer: CacheScope = new CacheScope
     try {
     val batch0 = outer.pin(sigShape(sigs))
-    // (a legacy index has no band pin: -1 probes nothing real, and the
-    // full-derive screen ignores its cell list)
+    // (a legacy index has no band pin: its probe reads nothing real, and
+    // the full-derive screen ignores its cell list)
+    val l = lsm(name, m)
     val (idBuckets, cellBuckets) =
       if (screenFirst)
-        IndexTier.touchedBucketsPair(store, sigsTable(name) -> m.sigs,
-          bandTable(name) -> m.band.getOrElse(-1), IndexTier.bandedOf(batch0, m.maxHamming))
-      else (IndexTier.touchedBuckets(store, sigsTable(name), m.sigs,
-          batch0.select(col("id"))), Seq.empty[Int])
+        l.probePair(store, l.projections.head, IndexTier.bandedOf(batch0, m.maxHamming))
+      else (l.base.probe(store, batch0.select(col("id"))), Seq.empty[Int])
     val batch =
       if (!screenFirst) batch0
       else {
@@ -462,21 +337,16 @@ object PerceptualIndex {
       // (precomputed — for the screened path `batch` ⊆ `batch0`, so the
       // fused probe's bucket list is a superset of what the read needs)
       val fresh = batch
-        .join(indexedSigsForBuckets(spark, store, name, m, idBuckets)
-          .select(col("id")), Seq("id"), "left_anti")
+        .join(l.indexed(spark, store, idBuckets).select(col("id")), Seq("id"), "left_anti")
         // at most one signature per id: a batch carrying an id twice (two
         // staged files in one trigger) indexes the smallest sig —
         // deterministic under any partitioning (the
         // PostingsIndex.tokenized canonicalization rationale; signatures
         // order directly, no digest needed)
         .groupBy(col("id")).agg(min(col("sig")).as("sig"))
-      val next =
-        if (foldDue(spark, store, name, m))
-          foldAllTiers(spark, store, name, m, fresh, None)
-        else m.copy(dlt = Some(IndexTier.appendDelta(spark, store,
-          deltaTable(name), m.dlt, fresh)))
       IndexTier.commitManifest(store, manifestTable(name),
-        next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
+        pinned(m, l.drain(spark, store, fresh, None))
+          .copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
       true
     } finally if (screenFirst) batch.unpersist()
     } finally outer.release()
@@ -499,25 +369,13 @@ object PerceptualIndex {
       // the takedown rewrite serves double duty: the SERVED view minus
       // the dropped ids folds keeper tombstones + the memtable into the
       // base, and the swap clears the pins
-      val stored = servedSigsAt(spark, store, name, m)
-      val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val before = stored.count()
-        val keptN = kept.count()
-        val Seq(sv, bv) = OverlayLock.inParallel(Seq(
-          () => store.writeBucketed(kept, sigsTable(name),
-            IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
-            Some(m.sigs)),
-          () => store.writeBucketed(IndexTier.bandedOf(kept, m.maxHamming), bandTable(name),
-            IndexTier.layout(store, bandTable(name), BandBuckets, "chunk", "value"),
-            m.band.orElse(
-              store.currentVersion(bandTable(name)))))).map(_.asInstanceOf[Int])
-        IndexTier.commitManifest(store, manifestTable(name),
-          m.copy(sigs = sv, band = Some(bv), rmSigs = None, dlt = None),
-          Some(mv))
-        before - keptN
-      } finally kept.unpersist()
+      val l = lsm(name, m)
+      val stored = l.served(spark, store)
+      val before = stored.count()
+      val (next, keptN) = l.rewrite(spark, store,
+        stored.join(drop, stored("id") === col("_rm_id"), "left_anti"), fold = false)(_.count())
+      IndexTier.commitManifest(store, manifestTable(name), pinned(m, next), Some(mv))
+      before - keptN
     }
 
   // --------------------------------------------------------------- admission
@@ -631,7 +489,8 @@ object PerceptualIndex {
       store: TableStore, name: String, stamp: Option[Long],
       maxBucketSize: Int, preDedupBatch: Boolean = false): Boolean = {
     val (m, mv) = requireManifest(store, name)
-    requireQuality(m, name, "a replace-if-better fold")
+    IndexTier.requireLayout(s"perceptual index $name", m.hasQuality, keeper = true,
+      "a replace-if-better fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
     IndexTier.rollbackAll(store, m.tiers(name))
     implicit val scope: CacheScope = new CacheScope
@@ -645,13 +504,12 @@ object PerceptualIndex {
     // pinned shaped batch + ONE fused probe job (both tiers' touched
     // buckets — the [[appendStamped]] discipline; pre-anti-join cells are
     // a superset, identical results)
+    val l = lsm(name, m)
     val batch0pre = scope.pin(sigQualityShape(sigs))
-    val (idBuckets, cellBuckets) = IndexTier.touchedBucketsPair(store,
-      sigsTable(name) -> m.sigs, bandTable(name) -> m.band.getOrElse(-1),
+    val (idBuckets, cellBuckets) = l.probePair(store, l.projections.head,
       IndexTier.bandedOf(batch0pre.select(col("id"), col("sig")), m.maxHamming))
     val batch0 = batch0pre
-      .join(indexedSigsForBuckets(spark, store, name, m, idBuckets)
-        .select(col("id")), Seq("id"), "left_anti")
+      .join(l.indexed(spark, store, idBuckets).select(col("id")), Seq("id"), "left_anti")
       .groupBy(col("id"))
       .agg(min_by(struct(col("sig"), col("q")),
         struct(-col("q"), col("sig"))).as("_w"))
@@ -698,27 +556,12 @@ object PerceptualIndex {
           .select(col("stored_id").as("id")).distinct()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val next =
-            if (foldDue(spark, store, name, m))
-              // amortized fold: the served view minus this batch's
-              // retirements plus its admissions, memtable + tombstone
-              // pins cleared
-              foldAllTiers(spark, store, name, m, admitted, Some(removedIds))
-            else {
-              // O(batch ∪ tombstones): admissions are ONE plain memtable
-              // append, retirements merge into the small tombstone member
-              // — two independent tables, committed concurrently; the
-              // emptiness gate is ONE serial narrow count that
-              // materializes the pinned screen chain at full drain width
-              // first, so the commits read the cache (the
-              // [[FrameIndex.supersedeStamped]] note)
-              val (dv, rv) = IndexTier.commitDeltaAndRm(spark, store,
-                deltaTable(name) -> m.dlt, rmTable(name) -> m.rmSigs, admitted,
-                removedIds, noRetired = IndexTier.narrowCount(removedIds) == 0L)
-              m.copy(dlt = Some(dv), rmSigs = rv)
-            }
+          // the amortized fold (served view minus this batch's retirements
+          // plus its admissions) when due, else O(batch ∪ tombstones)
+          // memtable + tombstone commits ([[IndexTier.Lsm.drain]])
           IndexTier.commitManifest(store, manifestTable(name),
-            next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)),
+            pinned(m, l.drain(spark, store, admitted, Some(removedIds)))
+              .copy(lastBatchId = stamp.getOrElse(m.lastBatchId)),
             Some(mv))
           true
         } finally removedIds.unpersist()

@@ -123,16 +123,6 @@ object SignatureIndex {
       bandTable(name) -> Some(band), rmTable(name) -> rm, deltaTable(name) -> dlt)
   }
 
-  private def requirePlain(m: SigManifest, name: String, op: String): Unit =
-    require(!m.hasQuality,
-      s"signature index $name is a KEEPER family (quality-carrying) — " +
-        s"$op would drop its quality column; use admitKeepBestBatch/Stream")
-
-  private def requireQuality(m: SigManifest, name: String, op: String): Unit =
-    require(m.hasQuality,
-      s"signature index $name is a plain family — $op needs a " +
-        "quality-carrying index; build it with buildWithQuality")
-
   /** Absent keys: `dlt_v`/`n_dlt` predate the delta member (no memtable),
     * `has_quality` predates keeper families (a plain family). */
   private[graft] def readManifest(
@@ -203,34 +193,21 @@ object SignatureIndex {
         .as(Seq("band", "bucket")))
   }
 
-  /** A projection tier of the SERVED view pruned to `touched` buckets: the
-    * pruned base read ∪ the same projection derived in-plan from the delta
-    * member, minus tombstoned ids ([[IndexTier.prunedWithDelta]]). */
-  private def servedTier(
-      spark: SparkSession, store: TableStore, name: String, m: SigManifest,
-      table: String, pin: Int, touched: Seq[Int],
-      fromDelta: DataFrame => DataFrame): DataFrame =
-    IndexTier.minusRm(spark, store, rmTable(name), m.rm)(
-      IndexTier.prunedWithDelta(spark, store, table, pin, touched,
-        IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), fromDelta))
+  /** The sigs base tier, its position and banding projections, the
+    * memtable and the tombstones, at `m`'s pins. */
+  private def lsm(name: String, m: SigManifest): IndexTier.Lsm = IndexTier.Lsm(
+    IndexTier.Tier(sigsTable(name), Some(m.sigs), SigBuckets, Seq("id")),
+    Seq(IndexTier.Tier(posTable(name), Some(m.pos), PosBuckets, Seq("i", "v"),
+        positionsOf, m.numHashes.toLong),
+      IndexTier.Tier(bandTable(name), Some(m.band), BandBuckets, Seq("band", "bucket"),
+        bandedOf(_, m.params), m.bands.toLong)),
+    deltaTable(name) -> m.dlt, rmTable(name) -> m.rm)
 
-  /** Indexed sigs rows (base ∪ delta, NO tombstone subtraction — a
-    * retired id may not re-enter under its own name until the fold
-    * forgets it) pruned to the buckets `ids` can hash into — the keyed
-    * read behind the insert-only screen and the candidate fetch-back. */
-  private def indexedSigsForIds(
-      spark: SparkSession, store: TableStore, name: String, m: SigManifest,
-      ids: DataFrame): DataFrame =
-    indexedSigsForBuckets(spark, store, name, m,
-      IndexTier.touchedBuckets(store, sigsTable(name), m.sigs, ids))
-
-  /** [[indexedSigsForIds]] with the bucket probe already done — the
-    * fused-probe callers pass their precomputed id-bucket list. */
-  private def indexedSigsForBuckets(
-      spark: SparkSession, store: TableStore, name: String, m: SigManifest,
-      touched: Seq[Int]): DataFrame =
-    IndexTier.prunedWithDelta(spark, store, sigsTable(name), m.sigs, touched,
-      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt), identity)
+  /** `m` at the pins of `l`. */
+  private def pinned(m: SigManifest, l: IndexTier.Lsm): SigManifest = {
+    val Seq(pos, band) = l.projections.map(_.pin.get)
+    m.copy(sigs = l.base.pin.get, pos = pos, band = band, dlt = l.delta._2, rm = l.rm._2)
+  }
 
   // ------------------------------------------------------------------ build
 
@@ -249,24 +226,8 @@ object SignatureIndex {
       sigBuckets: Int = SigBuckets,
       posBuckets: Int = PosBuckets,
       bandBuckets: Int = BandBuckets): Unit =
-    mutate(store, name) {
-      val prev = readManifest(store, name)
-      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-      val spark = df.sparkSession
-      val sv = store.writeBucketed(signaturesOf(df, idCol, textCol, p),
-        sigsTable(name), IndexTier.keyed(sigBuckets, "id"))
-      // derive the projections from the COMMITTED sigs (a parquet read)
-      // so the shingle+hash chain runs once, not three times
-      val committed = store.snapshotAt(spark, sigsTable(name), sv)
-      val pv = store.writeBucketed(positionsOf(committed), posTable(name),
-        IndexTier.keyed(posBuckets, "i", "v"))
-      val bv = store.writeBucketed(bandedOf(committed, p), bandTable(name),
-        IndexTier.keyed(bandBuckets, "band", "bucket"))
-      val n = committed.count()
-      IndexTier.commitManifest(store, manifestTable(name),
-        SigManifest(sv, pv, bv, p.shingleN, p.numHashes, p.bands, n, 0L,
-          prev.map(_._1.lastBatchId).getOrElse(-1L)), prev.map(_._2))
-    }
+    buildFamily(signaturesOf(df, idCol, textCol, p), p, store, name,
+      Seq(sigBuckets, posBuckets, bandBuckets), quality = false)
 
   /** [[build]] for a KEEPER family: the sigs tier carries `(id, sig,
     * n_sh, q)` — `qCol` is the per-doc quality score the replace-if-
@@ -283,23 +244,22 @@ object SignatureIndex {
       sigBuckets: Int = SigBuckets,
       posBuckets: Int = PosBuckets,
       bandBuckets: Int = BandBuckets): Unit =
+    buildFamily(signaturesOfQ(df, idCol, textCol, qCol, p), p, store, name,
+      Seq(sigBuckets, posBuckets, bandBuckets), quality = true)
+
+  /** The projections derive from the COMMITTED sigs (a parquet read), so
+    * the shingle+hash chain runs once, not three times. */
+  private def buildFamily(
+      sigs: DataFrame, p: Params, store: TableStore, name: String,
+      buckets: Seq[Int], quality: Boolean): Unit =
     mutate(store, name) {
       val prev = readManifest(store, name)
       prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
-      val spark = df.sparkSession
-      val sv = store.writeBucketed(
-        signaturesOfQ(df, idCol, textCol, qCol, p),
-        sigsTable(name), IndexTier.keyed(sigBuckets, "id"))
-      val committed = store.snapshotAt(spark, sigsTable(name), sv)
-      val pv = store.writeBucketed(positionsOf(committed), posTable(name),
-        IndexTier.keyed(posBuckets, "i", "v"))
-      val bv = store.writeBucketed(bandedOf(committed, p), bandTable(name),
-        IndexTier.keyed(bandBuckets, "band", "bucket"))
-      val n = committed.count()
-      IndexTier.commitManifest(store, manifestTable(name),
-        SigManifest(sv, pv, bv, p.shingleN, p.numHashes, p.bands, n, 0L,
-          prev.map(_._1.lastBatchId).getOrElse(-1L),
-          hasQuality = true), prev.map(_._2))
+      val fresh = SigManifest(-1, -1, -1, p.shingleN, p.numHashes, p.bands, 0L, 0L,
+        prev.map(_._1.lastBatchId).getOrElse(-1L), hasQuality = quality)
+      val built = lsm(name, fresh).build(sigs.sparkSession, store, sigs, buckets)
+      IndexTier.commitManifest(store, manifestTable(name), pinned(fresh, built)
+        .copy(nLive = built.served(sigs.sparkSession, store).count()), prev.map(_._2))
     }
 
   /** The index's model parameters, as persisted in the manifest. */
@@ -311,73 +271,13 @@ object SignatureIndex {
     * read). */
   def signatures(spark: SparkSession, store: TableStore, name: String): DataFrame = {
     val (m, _) = requireManifest(store, name)
-    servedView(spark, store, name, m)
-  }
-
-  /** Base ∪ delta minus tombstones — the manifest-consistent served view
-    * every fold and every full read derives from. */
-  private def servedView(
-      spark: SparkSession, store: TableStore, name: String,
-      m: SigManifest): DataFrame = {
-    val base = store.snapshotAt(spark, sigsTable(name), m.sigs)
-    IndexTier.minusRm(spark, store, rmTable(name), m.rm)(
-      IndexTier.deltaFrame(spark, store, deltaTable(name), m.dlt)
-        .map(base.unionByName(_)).getOrElse(base))
+    lsm(name, m).served(spark, store)
   }
 
   /** When accumulated memtable/tombstone rows have earned their amortized
     * rewrite — the manifest-counter-priced policy shared by every drain
     * face (no corpus-sized count job ever runs). */
   private def foldBound(m: SigManifest): Long = math.max(1024L, m.nLive / 8)
-
-  /** Amortized fold: rewrite the SERVED view of the ALREADY-COMMITTED
-    * next member state (`mNew` carries the drain's new delta/rm pins and
-    * updated counters) into all three bucketed tiers CONCURRENTLY, and
-    * publish ONE manifest swap that clears the tombstone and delta
-    * members. The fold runs AFTER the drain's O(batch) member commits —
-    * that ordering is what lets the drain's row counters come from the
-    * committed files' footers instead of a pre-commit count job — and
-    * the served content is identical either way: servedView(mNew) =
-    * (base ∪ delta_old ∪ admitted) ∖ (rm_old ∪ retired), exactly the
-    * old fold's kept set (admitted ids are disjoint from the tombstones
-    * by the insert-only screen). The interim member versions are
-    * unpublished orphans this swap supersedes. */
-  private def foldServed(
-      spark: SparkSession, store: TableStore, name: String,
-      mNew: SigManifest, mv: Int): Unit = {
-    val p = mNew.params
-    val kept = servedView(spark, store, name, mNew)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      kept.count() // materialize once; the three rewrites read the cache
-      // rebucket-at-fold: double each tier's bucket count past the
-      // per-bucket byte target ([[OverlayLock.grownSpec]]) so pruned
-      // reads stay constant-per-bucket as the corpus grows (projected
-      // from the pre-fold on-disk bytes — within 2x is enough, the next
-      // fold corrects)
-      val grow = mNew.dlt.map(store.byteSizeAt(deltaTable(name), _)).getOrElse(0L)
-      def projected(table: String, pin: Int, mult: Long): Long =
-        store.byteSizeAt(table, pin) + grow * mult
-      val Seq(sv, pv, bv) = OverlayLock.inParallel(Seq(
-        () => store.writeBucketed(kept, sigsTable(name),
-          OverlayLock.grownSpec(spark,
-            IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
-            projected(sigsTable(name), mNew.sigs, 1L)), Some(mNew.sigs)),
-        () => store.writeBucketed(positionsOf(kept), posTable(name),
-          OverlayLock.grownSpec(spark,
-            IndexTier.layout(store, posTable(name), PosBuckets, "i", "v"),
-            projected(posTable(name), mNew.pos, p.numHashes.toLong)),
-          Some(mNew.pos)),
-        () => store.writeBucketed(bandedOf(kept, p), bandTable(name),
-          OverlayLock.grownSpec(spark,
-            IndexTier.layout(store, bandTable(name), BandBuckets, "band", "bucket"),
-            projected(bandTable(name), mNew.band, p.bands.toLong)),
-          Some(mNew.band)))).map(_.asInstanceOf[Int])
-      IndexTier.commitManifest(store, manifestTable(name),
-        mNew.copy(sigs = sv, pos = pv, band = bv,
-          nRm = 0L, rm = None, dlt = None, nDelta = 0L), Some(mv))
-    } finally kept.unpersist()
-  }
 
   // ----------------------------------------------------------- append/remove
 
@@ -406,7 +306,8 @@ object SignatureIndex {
       spark: SparkSession, batch: DataFrame, idCol: String, textCol: String,
       store: TableStore, name: String, stamp: Option[Long]): Boolean = {
     val (m, mv) = requireManifest(store, name)
-    requirePlain(m, name, "an insert-only fold")
+    IndexTier.requireLayout(s"signature index $name", m.hasQuality, keeper = false,
+      "an insert-only fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
     IndexTier.rollbackAll(store, m.tiers(name))
     // pinned: the probe job and the delta write both consume the
@@ -419,8 +320,9 @@ object SignatureIndex {
       // the buckets its ids hash into); in-batch duplicate ids fold to
       // the signature with the smallest array hash (deterministic under
       // any partitioning — the PostingsIndex.tokenized canonicalization)
+      val l = lsm(name, m)
       val fresh = batchSigs
-        .join(indexedSigsForIds(spark, store, name, m, batchSigs).select(col("id")),
+        .join(l.indexed(spark, store, l.base.probe(store, batchSigs)).select(col("id")),
           Seq("id"), "left_anti")
         .groupBy(col("id"))
         .agg(min_by(struct(col("sig"), col("n_sh")),
@@ -433,17 +335,7 @@ object SignatureIndex {
         // the write materialize the chain itself is slower — the
         // countAdmittedRetired note)
         val n = fresh.count()
-        // O(batch): ONE plain linked append into the delta member — the
-        // projection tiers are served union-style until the fold
-        val mNew = m.copy(dlt = Some(IndexTier.appendDelta(spark, store,
-            deltaTable(name), m.dlt, fresh)),
-          nDelta = m.nDelta + n, nLive = m.nLive + n,
-          lastBatchId = stamp.getOrElse(m.lastBatchId))
-        if (mNew.nDelta > foldBound(m))
-          // the memtable earned its rewrite: absorb the (just-committed)
-          // delta into the bucketed tiers, clearing delta and tombstones
-          foldServed(spark, store, name, mNew, mv)
-        else IndexTier.commitManifest(store, manifestTable(name), mNew, Some(mv))
+        commitDrain(spark, store, name, m, mv, fresh, n, None, 0L, stamp)
         true
       } finally fresh.unpersist()
     } finally batchSigs.unpersist()
@@ -504,7 +396,8 @@ object SignatureIndex {
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
       IndexTier.rollbackAll(store, m.tiers(name))
-      val served = servedView(spark, store, name, m)
+      val l = lsm(name, m)
+      val served = l.served(spark, store)
       // cast the drop list to the STORED id type before any bucket math:
       // equality joins would survive a type mismatch via implicit casts,
       // but Murmur3 bucket hashes differ by input type, so an uncast
@@ -513,30 +406,15 @@ object SignatureIndex {
       val drop = broadcast(
         ids.select(col(ids.columns.head).cast(idType).as("_rm_id")).distinct())
       // the dropped-count read is keyed: only the drop list's buckets
-      val removed = IndexTier.minusRm(spark, store, rmTable(name), m.rm)(
-        indexedSigsForIds(spark, store, name, m, drop.select(col("_rm_id").as("id"))))
+      val removed = l.projected(spark, store, l.base,
+          l.base.probe(store, drop.select(col("_rm_id").as("id"))))
         .join(drop, col("id") === col("_rm_id"), "left_semi")
         .count()
-      val kept = served.join(drop, served("id") === col("_rm_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        kept.count() // materialize once; the three rewrites read the cache
-        val Seq(sv, pv, bv) = OverlayLock.inParallel(Seq(
-          () => store.writeBucketed(kept, sigsTable(name),
-            IndexTier.layout(store, sigsTable(name), SigBuckets, "id"),
-            Some(m.sigs)),
-          () => store.writeBucketed(positionsOf(kept), posTable(name),
-            IndexTier.layout(store, posTable(name), PosBuckets, "i", "v"),
-            Some(m.pos)),
-          () => store.writeBucketed(bandedOf(kept, m.params), bandTable(name),
-            IndexTier.layout(store, bandTable(name), BandBuckets, "band", "bucket"),
-            Some(m.band)))).map(_.asInstanceOf[Int])
-        IndexTier.commitManifest(store, manifestTable(name),
-          m.copy(sigs = sv, pos = pv, band = bv,
-            nLive = m.nLive - removed, nRm = 0L, rm = None,
-            dlt = None, nDelta = 0L), Some(mv))
-        removed
-      } finally kept.unpersist()
+      val (next, _) = l.rewrite(spark, store,
+        served.join(drop, served("id") === col("_rm_id"), "left_anti"), fold = false)(_.count())
+      IndexTier.commitManifest(store, manifestTable(name),
+        pinned(m, next).copy(nLive = m.nLive - removed, nRm = 0L, nDelta = 0L), Some(mv))
+      removed
     }
 
   // ---------------------------------------------------------------- screens
@@ -571,13 +449,12 @@ object SignatureIndex {
       maxBucketSize: Int = 200)(implicit caches: CacheScope): DataFrame = {
     val (m, _) = requireManifest(store, name)
     val p = m.params
+    val l = lsm(name, m)
+    val band = l.projections(1)
     val batchSigs = caches.pin(signaturesOf(batch, idCol, textCol, p))
     val sb = caches.pin(bandedOf(batchSigs, p))
-    val storedBand = caches.pin(servedTier(spark, store, name, m,
-      bandTable(name), m.band,
-      IndexTier.touchedBuckets(store, bandTable(name), m.band,
-        sb.select(col("band"), col("bucket"))),
-      d => bandedOf(d, p)))
+    val storedBand = caches.pin(l.projected(spark, store, band,
+      band.probe(store, sb.select(col("band"), col("bucket")))))
     val hot = hotCells(sb, Seq("band", "bucket"), maxBucketSize)
       .union(hotCells(storedBand, Seq("band", "bucket"), maxBucketSize)).distinct()
     val coldB = sb.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
@@ -589,8 +466,8 @@ object SignatureIndex {
       .select(col("a.id").as("batch_id"), col("b.id").as("stored_id"))
       .distinct())
     // fetch-back: candidate stored signatures from their id-buckets only
-    val storedSigs = indexedSigsForIds(spark, store, name, m,
-      cand.select(col("stored_id").as("id")))
+    val storedSigs = l.indexed(spark, store,
+      l.base.probe(store, cand.select(col("stored_id").as("id"))))
     val dropIds = cand
       .join(batchSigs.select(col("id").as("batch_id"), col("sig").as("_bs")),
         Seq("batch_id"))
@@ -656,14 +533,14 @@ object SignatureIndex {
       batchSigs: DataFrame, minContainment: Double, maxBucketSize: Int,
       posTouched: Option[Seq[Int]] = None)(
       implicit caches: CacheScope): DataFrame = {
+    val l = lsm(name, m)
+    val pos = l.projections.head
     val pb = caches.pin(positionsOf(batchSigs))
-    val ps = caches.pin(servedTier(spark, store, name, m, posTable(name), m.pos,
-      posTouched.getOrElse(IndexTier.touchedBuckets(store, posTable(name), m.pos,
-        pb.select(col("i"), col("v")))),
-      d => positionsOf(d)))
+    val ps = caches.pin(l.projected(spark, store, pos,
+      posTouched.getOrElse(pos.probe(store, pb.select(col("i"), col("v"))))))
     val cand = caches.pin(candidatePairs(pb, ps, maxBucketSize))
-    val storedSigs = indexedSigsForIds(spark, store, name, m,
-      cand.select(col("stored_id").as("id")))
+    val storedSigs = l.indexed(spark, store,
+      l.base.probe(store, cand.select(col("stored_id").as("id"))))
     containmentScores(cand, batchSigs, storedSigs, m.params, minContainment)
   }
 
@@ -749,36 +626,36 @@ object SignatureIndex {
     (a.asInstanceOf[Long], r.asInstanceOf[Long])
   }
 
-  /** Publish one screen-fold drain — shared by [[supersede]] and
+  /** Publish one drain — shared by [[append]], [[supersede]] and
     * [[admitKeepBestBatch]]: admissions land as ONE plain linked append
     * into the delta member (the memtable — screens serve base ∪ delta
-    * union-style), retirements merge into the tombstone member, ONE
-    * manifest swap carries rows + counters + the batchId; past the
-    * manifest-counter policy bound ([[foldBound]] tombstones OR delta
-    * rows) the drain rides one amortized fold that rewrites the served
-    * view into all bucketed tiers and clears both small members.
-    * `admitted` carries the family's full sigs-tier schema (with `q`
-    * for a keeper family — the projection derivations select their own
-    * columns). */
-  private def commitScreenFold(
+    * union-style), `retired` ids (when any) merge into the tombstone
+    * member concurrently, and ONE manifest swap carries rows + counters +
+    * the batchId. Past the manifest-counter policy bound ([[foldBound]]
+    * tombstones OR delta rows — no corpus-sized count job) the drain
+    * rides one amortized fold instead: the served view of the
+    * just-committed members is rewritten into all bucketed tiers and the
+    * swap clears both small members. The fold runs AFTER the O(batch)
+    * commits so the row counters come from the drain's own counts; the
+    * served content equals (base ∪ delta ∪ admitted) ∖ (rm ∪ retired)
+    * either way (admitted ids are disjoint from the tombstones by the
+    * insert-only screen), and the interim member versions are
+    * unpublished orphans the swap supersedes. `admitted` carries the
+    * family's full sigs-tier schema (with `q` for a keeper family — the
+    * projection derivations select their own columns). */
+  private def commitDrain(
       spark: SparkSession, store: TableStore, name: String,
-      m: SigManifest, mv: Int,
-      admitted: DataFrame, retired: DataFrame,
-      admittedN: Long, retiredN: Long, stamp: Option[Long]): Unit = {
-    // O(batch ∪ tombstones): admissions ride ONE plain linked append into
-    // the delta member, retirements merge into the small tombstone member
-    // — independent tables, committed CONCURRENTLY
-    val (dv, rv) = IndexTier.commitDeltaAndRm(spark, store,
-      deltaTable(name) -> m.dlt, rmTable(name) -> m.rm, admitted, retired,
-      noRetired = retiredN == 0L)
-    val mNew = m.copy(dlt = Some(dv), nDelta = m.nDelta + admittedN,
-      nLive = m.nLive + admittedN - retiredN, nRm = m.nRm + retiredN, rm = rv,
+      m: SigManifest, mv: Int, admitted: DataFrame, admittedN: Long,
+      retired: Option[DataFrame], retiredN: Long, stamp: Option[Long]): Unit = {
+    val l = lsm(name, m).commit(spark, store, admitted, retired)
+    val mNew = pinned(m, l).copy(nDelta = m.nDelta + admittedN,
+      nLive = m.nLive + admittedN - retiredN, nRm = m.nRm + retiredN,
       lastBatchId = stamp.getOrElse(m.lastBatchId))
-    // fold policy priced from the MANIFEST counters (no corpus jobs); ONE
-    // manifest swap publishes either way
-    if (m.nRm + retiredN > foldBound(m) || m.nDelta + admittedN > foldBound(m))
-      foldServed(spark, store, name, mNew, mv)
-    else IndexTier.commitManifest(store, manifestTable(name), mNew, Some(mv))
+    if (mNew.nRm > foldBound(m) || mNew.nDelta > foldBound(m)) {
+      val (folded, _) = l.rewrite(spark, store, l.served(spark, store), fold = true)(_.count())
+      IndexTier.commitManifest(store, manifestTable(name),
+        pinned(mNew, folded).copy(nRm = 0L, nDelta = 0L), Some(mv))
+    } else IndexTier.commitManifest(store, manifestTable(name), mNew, Some(mv))
   }
 
   /** SUPERSEDE admission — the text keeper, [[FrameIndex
@@ -837,7 +714,8 @@ object SignatureIndex {
       preDedupBatch: Boolean = false)(implicit caches: CacheScope): DataFrame =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      requirePlain(m, name, "a supersede fold")
+      IndexTier.requireLayout(s"signature index $name", m.hasQuality, keeper = false,
+        "a supersede fold")
       IndexTier.rollbackAll(store, m.tiers(name))
       val p = m.params
       // ONE probe job over the batch's pinned signatures: the sigs
@@ -847,9 +725,10 @@ object SignatureIndex {
       // reads whole extra cells, a cell the (anti-joined) batch never
       // probes produces no candidate pairs, and per-cell hot counts
       // are exact for every read cell either way — results identical.
+      val l = lsm(name, m)
       val sigAll = caches.pin(signaturesOf(batch, idCol, textCol, p))
-      val (idBuckets, posBuckets) = IndexTier.touchedBucketsPair(store,
-        sigsTable(name) -> m.sigs, posTable(name) -> m.pos, positionsOf(sigAll))
+      val (idBuckets, posBuckets) =
+        l.probePair(store, l.projections.head, positionsOf(sigAll))
       // insert-only against the INDEXED id set (base ∪ delta, ⊇
       // tombstoned ids until the fold — a retired id can never re-enter
       // under its own name and be hidden by the subtraction), read from
@@ -857,8 +736,7 @@ object SignatureIndex {
       // smallest-hash signature
       val batchSigs0 = caches.pin(
         sigAll
-          .join(indexedSigsForBuckets(spark, store, name, m, idBuckets)
-            .select(col("id")), Seq("id"), "left_anti")
+          .join(l.indexed(spark, store, idBuckets).select(col("id")), Seq("id"), "left_anti")
           .groupBy(col("id"))
           .agg(min_by(struct(col("sig"), col("n_sh")),
             xxhash64(col("sig"))).as("_w"))
@@ -882,8 +760,8 @@ object SignatureIndex {
           "left_semi")
         .select(col("stored_id").as("id")).distinct())
       val (admittedN, retiredN) = countAdmittedRetired(admitted, retired)
-      commitScreenFold(spark, store, name, m, mv, admitted, retired,
-        admittedN, retiredN, stamp = None)
+      commitDrain(spark, store, name, m, mv, admitted, admittedN,
+        Some(retired).filter(_ => retiredN > 0L), retiredN, stamp = None)
       // admitted rows pass through with their original columns; docs
       // too short to shingle never entered the gate — pass them too
       val keptIds = admitted.select(col("id").as("_adm_id"))
@@ -918,7 +796,13 @@ object SignatureIndex {
     * commits O(batch ∪ tombstones) with bucket-pruned reads — the
     * candidate generation is the persisted band tier, the fetch-back
     * the candidates' id-buckets, the fold policy the manifest counters.
-    * Returns the admitted batch rows, original columns. */
+    *
+    * Returns the admitted batch rows, original columns — LAZY rows pinned
+    * in the caller's implicit [[CacheScope]], unlike the other families'
+    * keeper folds, which manage their own pins and return a Boolean. The
+    * fold itself commits eagerly; the caller releases the scope after
+    * consuming the rows (q147's drain, which has no sink, opens one scope
+    * per micro-batch and releases it right after the fold). */
   def admitKeepBestBatch(
       spark: SparkSession,
       batch: DataFrame,
@@ -935,7 +819,10 @@ object SignatureIndex {
         threshold, maxBucketSize, Some(batchId))
     }
 
-  /** [[admitKeepBestBatch]] without the gate — the ad-hoc fold. */
+  /** [[admitKeepBestBatch]] without the gate — the ad-hoc fold. Same
+    * scope contract: the returned rows are lazy and pinned in the
+    * caller's implicit [[CacheScope]], which the caller releases after
+    * consuming them. */
   def keepBest(
       spark: SparkSession,
       batch: DataFrame,
@@ -959,7 +846,8 @@ object SignatureIndex {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val (m, mv) = requireManifest(store, name)
-    requireQuality(m, name, "a replace-if-better fold")
+    IndexTier.requireLayout(s"signature index $name", m.hasQuality, keeper = true,
+      "a replace-if-better fold")
     val p = m.params
     if (stamp.exists(_ <= m.lastBatchId))
       return batch.filter(lit(false)) // replayed batchId: nothing folds
@@ -969,16 +857,16 @@ object SignatureIndex {
     // from the PRE-anti-join signatures is superset-safe (the
     // [[supersede]] note — extra whole cells never pair, hot counts
     // exact per read cell)
+    val l = lsm(name, m)
+    val band = l.projections(1)
     val sigAll = caches.pin(signaturesOfQ(batch, idCol, textCol, qCol, p))
-    val (idBuckets, bandBuckets) = IndexTier.touchedBucketsPair(store,
-      sigsTable(name) -> m.sigs, bandTable(name) -> m.band, bandedOf(sigAll, p))
+    val (idBuckets, bandBuckets) = l.probePair(store, band, bandedOf(sigAll, p))
     // insert-only against the INDEXED id set (base ∪ delta); in-batch
     // duplicate ids fold to the (highest-quality, smallest-hash) row —
     // deterministic under any partitioning
     val batchSigs = caches.pin(
       sigAll
-        .join(indexedSigsForBuckets(spark, store, name, m, idBuckets)
-          .select(col("id")), Seq("id"), "left_anti")
+        .join(l.indexed(spark, store, idBuckets).select(col("id")), Seq("id"), "left_anti")
         .groupBy(col("id"))
         .agg(min_by(struct(col("sig"), col("n_sh"), col("q")),
           struct(-col("q"), xxhash64(col("sig")))).as("_w"))
@@ -988,8 +876,7 @@ object SignatureIndex {
     // banding), pruned to the batch's cells; stored (sig, q) fetch-back
     // from the candidates' id-buckets
     val sb = caches.pin(bandedOf(batchSigs, p))
-    val storedBand = caches.pin(servedTier(spark, store, name, m,
-      bandTable(name), m.band, bandBuckets, d => bandedOf(d, p)))
+    val storedBand = caches.pin(l.projected(spark, store, band, bandBuckets))
     val hot = hotCells(sb, Seq("band", "bucket"), maxBucketSize)
       .union(hotCells(storedBand, Seq("band", "bucket"), maxBucketSize))
       .distinct()
@@ -1001,8 +888,8 @@ object SignatureIndex {
       .filter(col("a.id") =!= col("b.id"))
       .select(col("a.id").as("batch_id"), col("b.id").as("stored_id"))
       .distinct())
-    val storedSigs = indexedSigsForIds(spark, store, name, m,
-      cand.select(col("stored_id").as("id")))
+    val storedSigs = l.indexed(spark, store,
+      l.base.probe(store, cand.select(col("stored_id").as("id"))))
     val matches = caches.pin(cand
       .join(batchSigs.select(col("id").as("batch_id"), col("sig").as("_bs")),
         Seq("batch_id"))
@@ -1024,8 +911,8 @@ object SignatureIndex {
         "left_semi")
       .select(col("stored_id").as("id")).distinct())
     val (admittedN, retiredN) = countAdmittedRetired(admitted, retired)
-    commitScreenFold(spark, store, name, m, mv, admitted, retired,
-      admittedN, retiredN, stamp)
+    commitDrain(spark, store, name, m, mv, admitted, admittedN,
+      Some(retired).filter(_ => retiredN > 0L), retiredN, stamp)
     val keptIds = admitted.select(col("id").as("_adm_id"))
     val shingleable = batch
       .filter(size(hashedShingleSet(col(textCol), p.shingleN)) > 0)

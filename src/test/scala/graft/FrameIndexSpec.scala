@@ -177,17 +177,8 @@ class FrameIndexSpec extends SparkSpec {
       frameDf(Seq((310L, 0, sig(61, 0, 1)), (310L, 1, sig(61, 1, 1))) ++
         video(62, id = 311L)),
       frameDf(video(63, id = 320L)))
-    val stageDir = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(root, "stage"))
-    drains.zipWithIndex.foreach { case (d, k) =>
-      val part = s"$root/_p$k"
-      d.coalesce(1).write.mode("overwrite").parquet(part)
-      val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-      try f.iterator().forEachRemaining { p =>
-        if (p.getFileName.toString.startsWith("part-"))
-          java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-      } finally f.close()
-    }
+    SparkEntry.stageDrains(root, drains)
+    val stageDir = java.nio.file.Paths.get(root, "stage")
     val schema = spark.read.parquet(stageDir.toString).schema
     AdmissionStream.drain(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
@@ -287,17 +278,8 @@ class FrameIndexSpec extends SparkSpec {
       frameDf(video(8, id = 710L, perturb = 1) ++   // supersedes clip 80
         video(9, id = 711L, perturb = 2)),          // re-encode of full 90: rejects
       frameDf(video(85, id = 720L)))                // novel
-    val stageDir = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(root, "stage"))
-    drains.zipWithIndex.foreach { case (d, k) =>
-      val part = s"$root/_p$k"
-      d.coalesce(1).write.mode("overwrite").parquet(part)
-      val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-      try f.iterator().forEachRemaining { p =>
-        if (p.getFileName.toString.startsWith("part-"))
-          java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-      } finally f.close()
-    }
+    SparkEntry.stageDrains(root, drains)
+    val stageDir = java.nio.file.Paths.get(root, "stage")
     val schema = spark.read.parquet(stageDir.toString).schema
     AdmissionStream.drain(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
@@ -391,15 +373,18 @@ class FrameIndexSpec extends SparkSpec {
     assert(ids() === Set(20L, 30L, 40L, 904L, 910L),
       "the drain-1 arrival replaced drain-0's admission; the worse copy lost")
     // plain ops refuse the quality layout (and vice versa)
-    intercept[IllegalArgumentException] {
+    val keeper = intercept[IllegalArgumentException] {
       FrameIndex.append(spark, frameDf(video(99, id = 995L)), store, "vid")
     }
     val plain = new TableStore(tmpDir("frame-keep-plain"))
     FrameIndex.build(stored(2), maxHamming = 6, minContainment = 0.99,
       plain, "vid")
-    intercept[IllegalArgumentException] {
+    val plainErr = intercept[IllegalArgumentException] {
       FrameIndex.admitKeepBestBatch(spark,
         qframes(video(1, id = 997L), 10.0), 0L, plain, "vid")
     }
+    // the message names only entry points that exist: no admit*Stream face does
+    for (e <- Seq(keeper, plainErr))
+      assert("""admit\w*Stream""".r.findFirstIn(e.getMessage).isEmpty, e.getMessage)
   }
 }

@@ -304,16 +304,19 @@ class PerceptualIndexSpec extends SparkSpec {
     val store = new TableStore(tmpDir("perc-guard"))
     PerceptualIndex.buildWithQuality(qualStored(5), maxHamming = 6, store, "img")
     val s = spark; import s.implicits._
-    intercept[IllegalArgumentException] {
+    val keeper = intercept[IllegalArgumentException] {
       PerceptualIndex.append(spark, Seq((900L, sig(50))).toDF("id", "sig"),
         store, "img")
     }
     val plain = new TableStore(tmpDir("perc-guard-plain"))
     PerceptualIndex.build(stored(5), maxHamming = 6, plain, "img")
-    intercept[IllegalArgumentException] {
+    val plainErr = intercept[IllegalArgumentException] {
       PerceptualIndex.admitKeepBestBatch(spark,
         qdf(Seq((900L, sig(50), 1.0))), 0L, plain, "img")
     }
+    // the message names only entry points that exist: no admit*Stream face does
+    for (e <- Seq(keeper, plainErr))
+      assert("""admit\w*Stream""".r.findFirstIn(e.getMessage).isEmpty, e.getMessage)
   }
 
   test("streamed keeper drains ≡ the same admitKeepBestBatch folds") {
@@ -325,17 +328,8 @@ class PerceptualIndexSpec extends SparkSpec {
       qdf(Seq((300L, sig(2, 1), 50.0), (301L, sig(61), 4.0))),
       qdf(Seq((310L, sig(2, 3), 20.0))), // worse than 300's 50 — rejects
       qdf(Seq((320L, sig(2, 4), 90.0)))) // better than 300 — replaces it
-    val stageDir = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(root, "stage"))
-    drains.zipWithIndex.foreach { case (d, k) =>
-      val part = s"$root/_p$k"
-      d.coalesce(1).write.mode("overwrite").parquet(part)
-      val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-      try f.iterator().forEachRemaining { p =>
-        if (p.getFileName.toString.startsWith("part-"))
-          java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-      } finally f.close()
-    }
+    SparkEntry.stageDrains(root, drains)
+    val stageDir = java.nio.file.Paths.get(root, "stage")
     val schema = spark.read.parquet(stageDir.toString).schema
     AdmissionStream.drain(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
@@ -363,18 +357,8 @@ class PerceptualIndexSpec extends SparkSpec {
     val store = new TableStore(s"$root/idx")
     PerceptualIndex.build(stored(10), maxHamming = 6, store, "img")
     // stage three single-row parquet files
-    val stageDir = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(root, "stage"))
-    (0 until 3).foreach { k =>
-      val part = s"$root/_p$k"
-      sigDf(Seq((300L + k, sig(60 + k)))).coalesce(1)
-        .write.mode("overwrite").parquet(part)
-      val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-      try f.iterator().forEachRemaining { p =>
-        if (p.getFileName.toString.startsWith("part-"))
-          java.nio.file.Files.move(p, stageDir.resolve(s"b$k.parquet"))
-      } finally f.close()
-    }
+    SparkEntry.stageDrains(root, (0 until 3).map(k => sigDf(Seq((300L + k, sig(60 + k))))))
+    val stageDir = java.nio.file.Paths.get(root, "stage")
     val schema = spark.read.parquet(stageDir.toString).schema
     AdmissionStream.drain(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)

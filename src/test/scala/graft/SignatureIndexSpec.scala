@@ -354,16 +354,19 @@ class SignatureIndexSpec extends SparkSpec {
       "doc_id", "text", "q", store, "c", threshold = 0.5).count() === 0)
     assert(!ids().contains(10L))
     // layout guards both ways
-    intercept[IllegalArgumentException] {
+    val keeper = intercept[IllegalArgumentException] {
       SignatureIndex.append(spark, Seq((900L, doc("e"))).toDF("doc_id", "text"),
         "doc_id", "text", store, "c")
     }
     val plain = new TableStore(tmpDir("sigidx-keep-plain"))
     SignatureIndex.build(corpus(), "doc_id", "text", p, plain, "c")
-    intercept[IllegalArgumentException] {
+    val plainErr = intercept[IllegalArgumentException] {
       SignatureIndex.admitKeepBestBatch(spark, qdf((901L, doc("f"), 1.0)), 0L,
         "doc_id", "text", "q", plain, "c", threshold = 0.5).count()
     }
+    // the message names only entry points that exist: no admit*Stream face does
+    for (e <- Seq(keeper, plainErr))
+      assert("""admit\w*Stream""".r.findFirstIn(e.getMessage).isEmpty, e.getMessage)
     scope.release()
   }
 
@@ -405,17 +408,8 @@ class SignatureIndexSpec extends SparkSpec {
       docsDf(Seq((100L, fullA))),                       // supersedes snippet 1
       docsDf(Seq((110L, fullA.split(" ").take(15).mkString(" ")), // clip of drain-1 admission → reject
         (111L, words("f", 0, 30)))))                    // novel → admit
-    val stageDir = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(root, "stage"))
-    drains.zipWithIndex.foreach { case (d, k) =>
-      val part = s"$root/_p$k"
-      d.coalesce(1).write.mode("overwrite").parquet(part)
-      val f = java.nio.file.Files.list(java.nio.file.Paths.get(part))
-      try f.iterator().forEachRemaining { q =>
-        if (q.getFileName.toString.startsWith("part-"))
-          java.nio.file.Files.move(q, stageDir.resolve(s"b$k.parquet"))
-      } finally f.close()
-    }
+    SparkEntry.stageDrains(root, drains)
+    val stageDir = java.nio.file.Paths.get(root, "stage")
     val schema = spark.read.parquet(stageDir.toString).schema
     val sunk = scala.collection.mutable.Set[Long]()
     graft.streaming.AdmissionStream.startSupersede(
