@@ -154,7 +154,7 @@ private[graft] object IndexTier {
     * must see exactly what a served-view projection would hold (hot-cell
     * counts included — a cell's rows all live in one bucket, so a
     * bucket-pruned read sees every cell it reads EXACTLY). */
-  def minusRm(
+  private def minusRm(
       spark: SparkSession, store: TableStore, rmTable: String,
       pin: Option[Int])(df: DataFrame): DataFrame =
     pin match {
