@@ -49,10 +49,10 @@ import graft.functions.TextFunctions._
   *    runs a count job over the corpus tier) + the streaming gate's
   *    `last_batch_id`.
   *
-  * Every projection tier is maintained INCREMENTALLY in the same commit
-  * as the rows it projects: appends land O(batch) linked rows in each
-  * tier's touched buckets ([[TableStore.appendRowsBucketed]]), and the
-  * amortized folds/takedowns rewrite all tiers together. Readers may see
+  * The tiers form one LSM member set ([[IndexTier.Lsm]]): drains append
+  * O(batch) rows to the delta memtable, which every read projects
+  * in-plan beside the pruned tiers, and the amortized folds/takedowns
+  * rewrite all tiers together from the served view. Readers may see
   * projection rows of tombstoned ids (the tiers are supersets until the
   * fold); every screen subtracts the broadcast tombstone set before
   * counting or joining, so results are exactly those of a projection
@@ -282,11 +282,10 @@ object SignatureIndex {
   // ----------------------------------------------------------- append/remove
 
   /** Hash an admitted batch with the STORED parameters and commit the new
-    * signatures + their projection rows as O(batch) linked appends into
-    * each tier's touched buckets — a billion-doc tier is never rewritten
-    * to admit a micro-batch, and the per-bucket file-count creep folds
-    * into bucket-granular compaction ([[OverlayLock
-    * .appendOrCompactBucketed]]). IDEMPOTENT by id: ids already in the
+    * signatures as ONE O(batch) linked append into the delta memtable
+    * ([[IndexTier.Lsm.commit]]) — a billion-doc tier is never rewritten
+    * to admit a micro-batch; the tiers absorb the memtable at the
+    * amortized fold ([[commitDrain]]). IDEMPOTENT by id: ids already in the
     * BASE (including tombstoned ids, which may not re-enter under their
     * own name until the fold forgets them) are skipped via a read of the
     * batch's own id-buckets, so a replayed micro-batch (the foreachBatch
