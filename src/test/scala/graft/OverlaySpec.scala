@@ -395,6 +395,9 @@ class OverlaySpec extends SparkSpec {
     try {
       IvfIndex.build(wdf(1 to 500), "vec_id", "embedding",
         nCells = 4, iterations = 1, store, "emb")
+      // every sibling tier built, so the fold rewrites int8 and PQ too
+      IvfIndex.quantizeStored(spark, store, "emb")
+      PqIndex.buildStored(spark, store, "emb", m = 4, nCodes = 8, iterations = 1)
       // upsert #1: lands in the overlay (pre-batch overlay is empty)
       IvfIndex.upsert(spark, wdf(1000 to 4999, bump = 0.2),
         "vec_id", "embedding", store, "emb")
@@ -418,6 +421,15 @@ class OverlaySpec extends SparkSpec {
       val v2k = served.filter(col("id") === 2000L).select(col("v")).head().getSeq[Double](0)
       assert(v2k(0) === (math.sin(2000 * 31) + 0.2).toFloat.toDouble,
         "the folded overlay's rows serve from the base")
+      // the siblings folded the same batch: complete, and id 12's int8
+      // scale is the folding revision's max |component| / 127
+      val q = IvfIndex.quantizedVectors(spark, store, "emb")
+      assert(q.count() === 4500)
+      assert(PqIndex.codes(spark, store, "emb").count() === 4500)
+      val scale12 = q.filter(col("id") === 12L).select(col("scale")).head().getDouble(0)
+      val want12 = (0 until 64).map(d =>
+        math.abs((math.sin(12 * 31 + d * 7) + 0.7).toFloat.toDouble)).max / 127.0
+      assert(math.abs(scale12 - want12) < 1e-12, s"int8 scale $scale12 != $want12")
     } finally scope.release()
   }
 
