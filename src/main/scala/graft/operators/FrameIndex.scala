@@ -84,9 +84,6 @@ object FrameIndex {
       "has_quality" -> (if (hasQuality) 1 else 0),
       "rm_frames_v" -> rmFrames.getOrElse(-1), "band_v" -> band.getOrElse(-1),
       "dlt_v" -> dlt.getOrElse(-1), "last_batch_id" -> lastBatchId)
-    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
-      framesTable(name) -> Some(frames), bandTable(name) -> band,
-      rmTable(name) -> rmFrames, deltaTable(name) -> dlt)
   }
 
   /** Absent keys predate the tombstone/quality/projection tiers (older
@@ -314,7 +311,7 @@ object FrameIndex {
       s"minContainment must be in (0, 1], got $minContainment")
     mutate(store, name) {
       val prev = readManifest(store, name)
-      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, lsm(name, m).members) }
       // a rebuild replaces the corpus wholesale — prior retirements are
       // moot, the tombstone and memtable pins clear
       val fresh = FrameManifest(-1, maxHamming, minContainment,
@@ -364,7 +361,7 @@ object FrameIndex {
     IndexTier.requireLayout(s"frame index $name", m.hasQuality, keeper = false,
       "an insert-only fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    IndexTier.rollbackAll(store, m.tiers(name))
+    IndexTier.rollbackAll(store, lsm(name, m).members)
     // the screen-then-admit fold: drop batch videos CONTAINED in the
     // stored corpus (the persisted budgets), admit the rest whole —
     // both halves read the SAME pinned stored version, so the loop is
@@ -430,7 +427,7 @@ object FrameIndex {
       name: String): Long =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      IndexTier.rollbackAll(store, m.tiers(name))
+      IndexTier.rollbackAll(store, lsm(name, m).members)
       val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
       // the rewrite serves from the SERVED view, so pending retirements +
       // the memtable fold in here and the pins clear
@@ -589,7 +586,7 @@ object FrameIndex {
     IndexTier.requireLayout(s"frame index $name", m.hasQuality, keeper = false,
       "a supersede fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    IndexTier.rollbackAll(store, m.tiers(name))
+    IndexTier.rollbackAll(store, lsm(name, m).members)
     implicit val scope: CacheScope = new CacheScope
     // the shaped batch is pinned ONCE (probe + anti-join share one
     // materialization of the raw input chain) and the probe job collects
@@ -705,7 +702,7 @@ object FrameIndex {
     IndexTier.requireLayout(s"frame index $name", m.hasQuality, keeper = true,
       "a replace-if-better fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    IndexTier.rollbackAll(store, m.tiers(name))
+    IndexTier.rollbackAll(store, lsm(name, m).members)
     implicit val scope: CacheScope = new CacheScope
     // pinned shaped batch + ONE fused probe job (both tiers' touched
     // buckets — the [[supersedeStamped]] discipline); insert-only

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** The control plane every persisted index family shares
   * ([[SignatureIndex]], [[PerceptualIndex]], [[FrameIndex]],
   * [[PostingsIndex]], [[IvfIndex]] and [[CorpusProfile]]): member tables
-  * pinned by one manifest, read bucket-pruned. Three decisions live here
+  * pinned by one manifest, read bucket-pruned. Four decisions live here
   * and nowhere else.
   *
   *  - THE BUCKET-PRUNED TIER READ. A member tier pinned at version N is
@@ -34,6 +34,16 @@ import org.apache.spark.sql.functions._
   *    once as an [[Lsm]]; how that set is served (base ∪ delta ∖
   *    tombstones, whole or pruned), how a drain commits into it and how
   *    a fold or takedown rewrites it are the [[Lsm]]'s.
+  *  - THE REVISION-OVERLAY MEMBER SET of the upsert families
+  *    ([[IvfIndex]], [[PostingsIndex]]): each base member has an `_ovl`
+  *    member whose keys shadow it at read time. A family describes its
+  *    set once as an [[Overlay]]; the served read, the insert-only
+  *    overlay screen, the upsert commit and the takedown are the
+  *    [[Overlay]]'s, and so is its ONE compaction rule: a fold writes
+  *    each member's served view (minus and plus the folding batch, if
+  *    any), grows bucketed layouts past the per-bucket byte target and
+  *    clears the overlays; compaction is the fold with no batch, keeping
+  *    at its pin any member whose overlay is empty.
   */
 private[graft] object IndexTier {
 
@@ -164,22 +174,6 @@ private[graft] object IndexTier {
         Seq("id"), "left_anti")
     }
 
-  /** base ∖ overlay-keys ∪ overlay — the read-time merge a revision
-    * overlay serves through: an overlay row shadows its base row by `key`,
-    * keys only in the overlay are inserts. The overlay is
-    * compaction-bounded, so its key set broadcasts into the anti-join —
-    * the merge costs the base scan plus one broadcast, never a shuffle. */
-  def mergedWithOverlay(
-      spark: SparkSession, store: TableStore, base: DataFrame,
-      ovlTable: String, ovlPin: Option[Int], key: String): DataFrame =
-    ovlPin match {
-      case None => base
-      case Some(pin) =>
-        val ovl = store.snapshotAt(spark, ovlTable, pin)
-        base.join(broadcast(ovl.select(col(key)).distinct()), Seq(key), "left_anti")
-          .unionByName(ovl)
-    }
-
   // ------------------------------------------------------------ chunk banding
 
   /** The chunk columns of the 64-bit-signature pigeonhole
@@ -205,28 +199,17 @@ private[graft] object IndexTier {
   /** The amortized-fold policy of every overlay, delta and tombstone
     * member: fold into the base once the pending bytes pass both `floor`
     * (parquet's fixed per-file overhead must not force tiny tiers to fold
-    * every batch) and [[IvfIndex.OvlFrac]] of the base tier's bytes —
-    * bounded write amplification, the classic LSM trade. Callers pass
-    * file-metadata sizes, so the check runs no Spark job. */
+    * every batch) and [[OvlFrac]] of the base tier's bytes. At the 1/8
+    * ratio a fold costs ≤ 9/8 base-tier writes amortized over ≥ 1/8
+    * base-tier bytes of admitted rows — bounded write amplification, the
+    * classic LSM trade. Callers pass file-metadata sizes, so the check
+    * runs no Spark job. */
   def foldDue(pendingBytes: Long, baseBytes: Long,
-      floor: Long = IvfIndex.OvlFloorBytes): Boolean =
-    pendingBytes > math.max(floor.toDouble, IvfIndex.OvlFrac * baseBytes)
+      floor: Long = OvlFloorBytes): Boolean =
+    pendingBytes > math.max(floor.toDouble, OvlFrac * baseBytes)
 
-  /** Rewrite a revision overlay member: old overlay minus the batch's keys
-    * plus the batch — at most one row-set per key, so the read-time merge
-    * needs no recency bookkeeping. The overlay is policy-bounded small, so
-    * the wholesale rewrite is O(overlay), never O(corpus); few files per
-    * version, since inheriting the batch's shuffle partitioning would
-    * creep file counts for no scan benefit. */
-  def overlayWrite(
-      spark: SparkSession, store: TableStore, table: String, pin: Option[Int],
-      batchKeys: DataFrame, key: String, rows: DataFrame): Int =
-    pin match {
-      case Some(p) => store.write(store.snapshotAt(spark, table, p)
-        .join(batchKeys, Seq(key), "left_anti").unionByName(rows).coalesce(8),
-        table, Some(p))
-      case None => store.write(rows.coalesce(8), table)
-    }
+  private[graft] val OvlFloorBytes: Long = 1L << 20
+  private[graft] val OvlFrac: Double = 0.125
 
   // --------------------------------------------------------- LSM member sets
 
@@ -255,6 +238,10 @@ private[graft] object IndexTier {
       delta: (String, Option[Int]), rm: (String, Option[Int])) {
 
     private def basePin: Int = base.pin.get // a built set always pins its base
+
+    /** Every member (table, pin) — the set's part of a rollback list. */
+    def members: Seq[(String, Option[Int])] =
+      (base +: projections).map(t => t.table -> t.pin) ++ Seq(delta, rm)
 
     private def deltaRows(spark: SparkSession, store: TableStore): Option[DataFrame] =
       deltaFrame(spark, store, delta._1, delta._2)
@@ -388,12 +375,156 @@ private[graft] object IndexTier {
           Seq(delta, rm).map { case (t, p) => p.map(store.byteSizeAt(t, _)).getOrElse(0L) }.sum,
           store.byteSizeAt(base.table, basePin),
           spark.conf.getOption("spark.graft.foldFloorBytes")
-            .map(_.toLong).getOrElse(IvfIndex.OvlFloorBytes))) {
+            .map(_.toLong).getOrElse(OvlFloorBytes))) {
         val s = served(spark, store)
         rewrite(spark, store,
           retired.map(r => s.join(broadcast(r), Seq("id"), "left_anti")).getOrElse(s)
             .unionByName(admitted), fold = true)(_.count())._1
       } else commit(spark, store, admitted, retired.filter(narrowCount(_) > 0L))
+  }
+
+  // ------------------------------------------------ revision-overlay sets
+
+  /** One member of an [[Overlay]] set: the base `table` at `pin`, its
+    * revision overlay `ovl` (table, pin; `None` = empty), the family
+    * default layout (`None` = a plain member) and how the member's rows
+    * derive from the family's batch rows. */
+  final case class Shadowed(
+      table: String, pin: Int, ovl: (String, Option[Int]),
+      default: Option[BucketSpec], derive: DataFrame => DataFrame)
+
+  /** A revision-overlay family's member set as one manifest pins it: each
+    * member's overlay rows SHADOW its base rows by `key` at read time
+    * (`base ∖ overlay-keys ∪ overlay`), so an upsert commits O(batch ∪
+    * overlay) bytes. The head member's overlay prices the fold. Every
+    * operation reads at these pins; a commit or rewrite returns the set
+    * at its new pins for the caller to publish in one manifest swap. */
+  final case class Overlay(key: String, tiers: Seq[Shadowed]) {
+
+    def apply(table: String): Shadowed = tiers.find(_.table == table).getOrElse(
+      throw new IllegalStateException(s"$table is not built — its index has no such tier yet"))
+
+    /** Every member (table, pin), overlays included — the set's part of a
+      * rollback list. */
+    def members: Seq[(String, Option[Int])] =
+      tiers.flatMap(t => Seq(t.table -> Some(t.pin), t.ovl))
+
+    /** Whether any member's overlay holds rows. */
+    def live: Boolean = tiers.exists(_.ovl._2.isDefined)
+
+    /** The ids to drop, `ids`' first column renamed to the key —
+      * broadcast, as takedown lists are small by nature. */
+    def keysOf(ids: DataFrame): DataFrame =
+      broadcast(ids.select(col(ids.columns.head).as(key)).distinct())
+
+    /** The SERVED rows of member `table`: base ∖ overlay-keys ∪ overlay. */
+    def served(spark: SparkSession, store: TableStore, table: String): DataFrame =
+      merged(spark, store, table, store.snapshotAt(spark, table, this(table).pin))
+
+    /** `base` — a (pruned) read of member `table`'s base — with the
+      * overlay merged in. The overlay is compaction-bounded, so its key
+      * set broadcasts into the anti-join: the merge costs the base scan
+      * plus one broadcast, never a shuffle. */
+    def merged(
+        spark: SparkSession, store: TableStore, table: String, base: DataFrame): DataFrame =
+      this(table).ovl match {
+        case (_, None) => base
+        case (ovlTable, Some(pin)) => screen(spark, store, table, base)
+          .unionByName(store.snapshotAt(spark, ovlTable, pin))
+      }
+
+    /** `rows` minus the keys of member `table`'s overlay — the merge's
+      * shadowing, and the overlay half of the insert-only screen: an id
+      * living only in the overlay must not re-enter the base, or the
+      * overlay's shadow would hide the newer row behind the stale
+      * re-append. */
+    def screen(
+        spark: SparkSession, store: TableStore, table: String, rows: DataFrame): DataFrame =
+      this(table).ovl match {
+        case (_, None) => rows
+        case (ovlTable, Some(pin)) => rows.join(broadcast(
+          store.snapshotAt(spark, ovlTable, pin).select(col(key)).distinct()),
+          Seq(key), "left_anti")
+      }
+
+    /** Replace-or-insert `rows` (one per `batchKeys` key). Priced on the
+      * head member's PRE-batch overlay (file-metadata sizes, no job): past
+      * [[foldDue]] the batch rides the amortized [[fold]]; below it every
+      * member's overlay is rewritten concurrently — old overlay minus the
+      * batch's keys plus the batch, at most one row-set per key, so the
+      * read-time merge needs no recency bookkeeping. The overlay is small
+      * by policy, so the wholesale rewrite is O(overlay), never O(corpus);
+      * few files per version, since inheriting the batch's shuffle
+      * partitioning would creep file counts for no scan benefit. */
+    def upsert(
+        spark: SparkSession, store: TableStore, batchKeys: DataFrame,
+        rows: DataFrame): Overlay = {
+      val head = tiers.head
+      if (head.ovl._2.exists(p => foldDue(store.byteSizeAt(head.ovl._1, p),
+          store.byteSizeAt(head.table, head.pin))))
+        fold(spark, store, Some(batchKeys -> rows))
+      else copy(tiers = OverlayLock.inParallel(tiers.map { t => () =>
+        val (ovlTable, pin) = t.ovl
+        val next = pin match {
+          case Some(p) => store.snapshotAt(spark, ovlTable, p)
+            .join(batchKeys, Seq(key), "left_anti").unionByName(t.derive(rows))
+          case None => t.derive(rows)
+        }
+        t.copy(ovl = ovlTable -> Some(store.write(next.coalesce(8), ovlTable,
+          pin.orElse(store.currentVersion(ovlTable)))))
+      }).map(_.asInstanceOf[Shadowed]))
+    }
+
+    /** THE FOLD, the one amortized corpus-sized rewrite the overlay design
+      * pays: each member's served view minus the batch's keys plus its
+      * derived batch rows is written, and the overlays clear. A bucketed
+      * member grows its recorded layout past the per-bucket byte target
+      * ([[OverlayLock.grownSpec]], projected from base + overlay bytes),
+      * so pruned reads stay constant-per-bucket as the corpus grows; a
+      * legacy plain tier upgrades to the family layout. With no batch this
+      * is compaction, which keeps at its pin any member whose overlay is
+      * empty. */
+    def fold(
+        spark: SparkSession, store: TableStore,
+        batch: Option[(DataFrame, DataFrame)]): Overlay =
+      rewrite(spark, store, tiers.filter(t => batch.isDefined || t.ovl._2.isDefined),
+        batch.map(_._1), batch.map(_._2)) { t =>
+        recorded(store, t).map(OverlayLock.grownSpec(spark, _,
+          store.byteSizeAt(t.table, t.pin) +
+            t.ovl._2.map(store.byteSizeAt(t.ovl._1, _)).getOrElse(0L)))
+      }
+
+    /** THE TAKEDOWN: each member's served view minus `keys` (a frame of the
+      * key column, see [[keysOf]]) is written with its recorded layout, and
+      * the overlays clear — a takedown rewrites every corpus-sized member
+      * anyway, so the overlay folds in for free. */
+    def takedown(spark: SparkSession, store: TableStore, keys: DataFrame): Overlay =
+      rewrite(spark, store, tiers, Some(keys), None)(recorded(store, _))
+
+    /** A bucketed member's recorded layout, or its family default for a
+      * legacy plain tier the rewrite upgrades; `None` for a plain member. */
+    private def recorded(store: TableStore, t: Shadowed): Option[BucketSpec] =
+      t.default.map(store.bucketSpec(t.table).getOrElse(_))
+
+    /** Write `members`' served views `∖ minus ∪ derive(plus)` concurrently
+      * (independent tables, no shared CAS), each bucketed by `spec` or
+      * plain; the rewritten members' overlays clear. */
+    private def rewrite(
+        spark: SparkSession, store: TableStore, members: Seq[Shadowed],
+        minus: Option[DataFrame], plus: Option[DataFrame])(
+        spec: Shadowed => Option[BucketSpec]): Overlay = {
+      val pins = OverlayLock.inParallel(members.map { t => () =>
+        val s = served(spark, store, t.table)
+        val kept = minus.map(s.join(_, Seq(key), "left_anti")).getOrElse(s)
+        val next = plus.map(r => kept.unionByName(t.derive(r))).getOrElse(kept)
+        t.table -> (spec(t) match {
+          case Some(b) => store.writeBucketed(next, t.table, b, Some(t.pin))
+          case None => store.write(next, t.table, Some(t.pin))
+        })
+      }).map(_.asInstanceOf[(String, Int)]).toMap
+      copy(tiers = tiers.map(t => pins.get(t.table)
+        .map(v => t.copy(pin = v, ovl = t.ovl._1 -> None)).getOrElse(t)))
+    }
   }
 
   /** The layout guard of the keeper-capable families: a plain fold on a

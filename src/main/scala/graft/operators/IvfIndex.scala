@@ -52,8 +52,7 @@ import graft.functions.VectorFunctions._
 object IvfIndex {
 
   private def centroidsTable(name: String) = s"${name}_centroids"
-  private[operators] def vectorsTableName(name: String) = s"${name}_vectors"
-  private def vectorsTable(name: String) = vectorsTableName(name)
+  private[operators] def vectorsTable(name: String) = s"${name}_vectors"
   private def qVectorsTable(name: String) = s"${name}_qvectors"
   // revision-overlay members (one per data tier): the REPLACEMENT rows a
   // [[upsert]] admits, shadowing their base-tier ids at read time — the
@@ -61,18 +60,8 @@ object IvfIndex {
   // instead of a rewrite of every corpus-sized tier
   private def ovlVectorsTable(name: String) = s"${name}_vectors_ovl"
   private def ovlQVectorsTable(name: String) = s"${name}_qvectors_ovl"
-  private[operators] def ovlPqCodesTable(name: String) = s"${name}_pq_codes_ovl"
+  private def ovlPqCodesTable(name: String) = s"${name}_pq_codes_ovl"
   private[operators] def manifestTable(name: String) = s"${name}_manifest"
-
-  /** Overlay-compaction policy: fold the overlay into the base tiers when
-    * it exceeds `OvlFrac` of the base float tier's bytes AND the
-    * `OvlFloorBytes` floor (the floor keeps parquet's fixed per-file
-    * overhead from forcing tiny corpora to compact every batch). At the
-    * 1/8 ratio a fold costs ≤ 9/8 base-tier writes amortized over ≥ 1/8
-    * base-tier bytes of admitted revisions — bounded write amplification,
-    * the classic LSM trade. Both probes are file-metadata reads. */
-  private[graft] val OvlFloorBytes: Long = 1L << 20
-  private[graft] val OvlFrac: Double = 0.125
 
   /** Default STARTING cell-hash bucket count for the FLOAT tier — the
     * bucket-pruned-read discipline applied to the vector family: every
@@ -110,11 +99,6 @@ object IvfIndex {
       "ovl_vectors_v" -> ovlVectors.getOrElse(-1),
       "ovl_qvectors_v" -> ovlQvectors.getOrElse(-1),
       "ovl_pq_codes_v" -> ovlPqCodes.getOrElse(-1), "last_batch_id" -> lastBatchId)
-    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
-      centroidsTable(name) -> Some(centroids), vectorsTable(name) -> Some(vectors),
-      qVectorsTable(name) -> qvectors, PqIndex.codebookTableName(name) -> pqCodebook,
-      PqIndex.codesTableName(name) -> pqCodes, ovlVectorsTable(name) -> ovlVectors,
-      ovlQVectorsTable(name) -> ovlQvectors, ovlPqCodesTable(name) -> ovlPqCodes)
   }
 
   /** The manifest and the manifest TABLE's version (the CAS anchor a
@@ -136,6 +120,44 @@ object IvfIndex {
 
   private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
     OverlayLock.mutate(store, "ivf", name)(attempt)
+
+  /** The revision-overlay set at `m`'s pins, keyed by `id`: the float tier
+    * bucketed on `cell`, then the plain int8 and PQ tiers when built. Each
+    * derives from assigned `(id, v, cell)` rows — int8 re-quantizes, PQ
+    * encodes against the committed codebook (refit-free). */
+  private[operators] def overlay(
+      store: TableStore, name: String, m: IvfManifest): IndexTier.Overlay =
+    IndexTier.Overlay("id",
+      IndexTier.Shadowed(vectorsTable(name), m.vectors, ovlVectorsTable(name) -> m.ovlVectors,
+        Some(IndexTier.keyed(VecBuckets, "cell")), _.select(col("id"), col("v"), col("cell"))) +:
+      (m.qvectors.map(IndexTier.Shadowed(qVectorsTable(name), _,
+        ovlQVectorsTable(name) -> m.ovlQvectors, None, quantized)).toSeq ++
+      m.pqCodes.map(IndexTier.Shadowed(PqIndex.codesTableName(name), _,
+        ovlPqCodesTable(name) -> m.ovlPqCodes, None, rows =>
+          PqIndex.encodeAssigned(rows.sparkSession, rows, PqIndex.codebookAt(
+            rows.sparkSession, store, name, m)))).toSeq))
+
+  /** `m` at the pins of `o`. */
+  private def pinned(name: String, m: IvfManifest, o: IndexTier.Overlay): IvfManifest = {
+    def at(table: String) = o.tiers.find(_.table == table)
+    val (q, pq) = (at(qVectorsTable(name)), at(PqIndex.codesTableName(name)))
+    m.copy(vectors = o.tiers.head.pin, ovlVectors = o.tiers.head.ovl._2,
+      qvectors = q.map(_.pin), ovlQvectors = q.flatMap(_.ovl._2),
+      pqCodes = pq.map(_.pin), ovlPqCodes = pq.flatMap(_.ovl._2))
+  }
+
+  /** `set` with its int8 and PQ siblings re-derived from the float `rows`
+    * as fresh versions, their overlays cleared. */
+  private def rederived(
+      store: TableStore, set: IndexTier.Overlay, rows: DataFrame): IndexTier.Overlay =
+    set.copy(tiers = set.tiers.head +: set.tiers.tail.map(t => t.copy(
+      pin = store.write(t.derive(rows), t.table), ovl = t.ovl._1 -> None)))
+
+  /** Roll every member back to its pin: the overlay set, the model and
+    * the PQ codebook. */
+  private[operators] def rollback(store: TableStore, name: String, m: IvfManifest): Unit =
+    IndexTier.rollbackAll(store, (centroidsTable(name) -> Some(m.centroids)) +:
+      (PqIndex.codebookTableName(name) -> m.pqCodebook) +: overlay(store, name, m).members)
 
   // ------------------------------------------------------------------ build
 
@@ -162,7 +184,7 @@ object IvfIndex {
     mutate(store, name) {
       val spark = df.sparkSession
       val prev = readManifest(store, name)
-      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      prev.foreach { case (m, _) => rollback(store, name, m) }
       val fitted = KMeans.fit(df, idCol, vecCol, nCells, iterations)
       val cv = store.write(fitted, centroidsTable(name))
       // float tier CELL-bucketed so probes read only the probed cells'
@@ -174,25 +196,14 @@ object IvfIndex {
       // sibling tiers re-derive from the COMMITTED new float rows (a
       // parquet read — the assignment pass is never recomputed per tier)
       val storedNew = store.snapshotAt(spark, vectorsTable(name), vv)
-      val qv = prev.flatMap(_._1.qvectors).map { _ =>
-        val (scale, qvc) = quantizeCols(col("v"))
-        store.write(storedNew.select(col("id"), col("cell"),
-          scale.as("scale"), qvc.as("qv")), qVectorsTable(name))
-      }
-      val (cbPin, pcV) = prev.map(_._1) match {
-        case Some(m) if m.pqCodebook.isDefined && m.pqCodes.isDefined =>
-          val cbRows = store.snapshotAt(spark,
-            PqIndex.codebookTableName(name), m.pqCodebook.get)
-          (m.pqCodebook, Some(store.write(
-            PqIndex.encodeAssigned(spark, storedNew, cbRows),
-            PqIndex.codesTableName(name))))
-        case _ => (None, None)
-      }
+      val sib = prev.map { case (m, _) =>
+        pinned(name, m, rederived(store, overlay(store, name, m), storedNew)) }
       // the admission gate survives a rebuild: already-admitted batch
       // ids stay admitted, so a live admitBatch drain resumes cleanly
       // against the refitted family
-      IndexTier.commitManifest(store, manifestTable(name), IvfManifest(cv, vv, qv, cbPin, pcV,
-        prev.map(_._1.lastBatchId).getOrElse(-1L)), prev.map(_._2))
+      IndexTier.commitManifest(store, manifestTable(name), IvfManifest(cv, vv,
+        sib.flatMap(_.qvectors), sib.filter(_.pqCodes.isDefined).flatMap(_.pqCodebook),
+        sib.flatMap(_.pqCodes), prev.map(_._1.lastBatchId).getOrElse(-1L)), prev.map(_._2))
       fitted
     }
 
@@ -211,20 +222,8 @@ object IvfIndex {
     * overlay-merged: revision rows shadow their base ids). */
   def vectors(spark: SparkSession, store: TableStore, name: String): DataFrame = {
     val (m, _) = requireManifest(store, name)
-    vectorsAt(spark, store, name, m)
+    overlay(store, name, m).served(spark, store, vectorsTable(name))
   }
-
-  /** The served float tier: base ∖ overlay-ids ∪ overlay. */
-  private[operators] def vectorsAt(
-      spark: SparkSession, store: TableStore, name: String, m: IvfManifest): DataFrame =
-    IndexTier.mergedWithOverlay(spark, store, baseVectorsAt(spark, store, name, m),
-      ovlVectorsTable(name), m.ovlVectors, "id")
-
-  /** The base float tier ONLY — the linked-append target; serving always
-    * goes through [[vectorsAt]]. */
-  private def baseVectorsAt(
-      spark: SparkSession, store: TableStore, name: String, m: IvfManifest): DataFrame =
-    store.snapshotAt(spark, vectorsTable(name), m.vectors)
 
   /** The SERVED float tier PRUNED to the buckets the probed cells hash
     * into: ONE narrow bounded collect over the (batch-bounded) probe
@@ -236,10 +235,9 @@ object IvfIndex {
   private def vectorsForCells(
       spark: SparkSession, store: TableStore, name: String, m: IvfManifest,
       probeCellRows: DataFrame): DataFrame =
-    IndexTier.mergedWithOverlay(spark, store,
+    overlay(store, name, m).merged(spark, store, vectorsTable(name),
       IndexTier.prunedAt(spark, store, vectorsTable(name), m.vectors,
-        IndexTier.touchedBuckets(store, vectorsTable(name), m.vectors, probeCellRows)),
-      ovlVectorsTable(name), m.ovlVectors, "id")
+        IndexTier.touchedBuckets(store, vectorsTable(name), m.vectors, probeCellRows)))
 
   private def centroidVectorsOf(fittedLongForm: DataFrame): DataFrame =
     KMeans.centroidVectors(fittedLongForm)
@@ -305,63 +303,39 @@ object IvfIndex {
       store: TableStore, name: String, stamp: Option[Long]): Boolean = {
     val (m, mv) = requireManifest(store, name)
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    IndexTier.rollbackAll(store, m.tiers(name))
-    // pinned: three tier commits below each consume the assignment —
+    rollback(store, name, m)
+    // pinned: the tier commits below each consume the assignment —
     // unpinned, every tier would re-run the batch × broadcast(centroids)
     // argmax chain end-to-end (the PostingsIndex.appendStamped hygiene)
     val assigned = assign(batch, idCol, vecCol, centroidsAt(spark, store, name, m))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // insert-only means absent from the SERVED view: base ids AND the
-      // revision overlay's ids both screen the batch (an id living only
-      // in the overlay must not re-enter the base, or the overlay's
-      // shadow would hide the newer row behind the stale re-append)
-      val ovlIds = m.ovlVectors.map(pin => broadcast(
-        store.snapshotAt(spark, ovlVectorsTable(name), pin)
-          .select(col("id")).distinct()))
-      def screenOvl(df: DataFrame): DataFrame =
-        ovlIds.map(ids => df.join(ids, Seq("id"), "left_anti")).getOrElse(df)
-      val stored = baseVectorsAt(spark, store, name, m)
-      // O(batch) member commits: only the fresh rows are written; the
-      // pinned version's files carry forward as links (appendOrCompact
-      // folds a compacting rewrite in when file counts creep)
-      val fresh = screenOvl(
-        assigned.join(stored.select(col("id")), Seq("id"), "left_anti"))
-        .select(col("id"), col("v"), col("cell")) // stored column order
-      // materialize the pinned assignment once, then commit the three
+      // materialize the pinned assignment once, then commit the
       // independent tiers concurrently (different tables, no shared CAS —
       // the [[OverlayLock.inParallel]] rationale: serializing them stacks
-      // three fixed job latencies onto every micro-batch drain)
+      // three fixed job latencies onto every micro-batch drain). Every
+      // sibling is SERVING state and sees the same append, or quantized
+      // and PQ probes silently miss everything admitted since their build
       assigned.count()
-      val results = OverlayLock.inParallel(Seq(
+      val set = overlay(store, name, m)
+      val pins = OverlayLock.inParallel(set.tiers.map { t => () =>
+        val stored = store.snapshotAt(spark, t.table, t.pin)
+        // insert-only means absent from the SERVED view: base ids AND the
+        // revision overlay's ids both screen the batch. O(batch) member
+        // commits: only the fresh rows are written; the pinned version's
+        // files carry forward as links (appendOrCompact folds a compacting
+        // rewrite in when file counts creep)
+        val fresh = set.screen(spark, store, t.table,
+          t.derive(assigned).join(stored.select(col("id")), Seq("id"), "left_anti"))
         // bucket layout preserved across appends (legacy plain tiers keep
         // the linked-append path until a full rewrite)
-        () => if (store.bucketSpec(vectorsTable(name)).isDefined)
-          OverlayLock.appendOrCompactBucketed(spark, store,
-            vectorsTable(name), m.vectors, fresh)
-        else OverlayLock.appendOrCompact(store, vectorsTable(name),
-          m.vectors, stored, fresh)) ++
-        // the int8 sibling is SERVING state — it must see the same append,
-        // or quantized probes silently miss everything admitted since the
-        // last quantizeStored
-        m.qvectors.map(qPin => () => {
-          val (scale, qvc) = quantizeCols(col("v"))
-          val qStored = store.snapshotAt(spark, qVectorsTable(name), qPin)
-          val qFresh = screenOvl(
-            assigned.join(qStored.select(col("id")), Seq("id"), "left_anti"))
-            .select(col("id"), col("cell"), scale.as("scale"), qvc.as("qv"))
-          OverlayLock.appendOrCompact(store, qVectorsTable(name), qPin, qStored, qFresh)
-        }).toSeq ++
-        // the PQ tier too — encoded against the COMMITTED codebook
-        // (refit-free, like the int8 re-quantization)
-        m.pqCodes.map(pin =>
-          () => PqIndex.appendEncodedAt(spark, assigned, store, name, m, pin)).toSeq)
-      val vv = results.head.asInstanceOf[Int]
-      val qv = m.qvectors.map(_ => results(1).asInstanceOf[Int])
-      val pcV = m.pqCodes.map(_ => results.last.asInstanceOf[Int])
+        t.copy(pin = if (store.bucketSpec(t.table).isDefined)
+          OverlayLock.appendOrCompactBucketed(spark, store, t.table, t.pin, fresh)
+        else OverlayLock.appendOrCompact(store, t.table, t.pin, stored, fresh))
+      }).map(_.asInstanceOf[IndexTier.Shadowed])
       IndexTier.commitManifest(store, manifestTable(name),
-        m.copy(vectors = vv, qvectors = qv, pqCodes = pcV,
-          lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
+        pinned(name, m, set.copy(tiers = pins))
+          .copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
       true
     } finally assigned.unpersist()
   }
@@ -459,7 +433,7 @@ object IvfIndex {
     * Cost shape: committed bytes are O(batch ∪ overlay), NEVER
     * O(corpus) — the corpus-sized tiers are untouched, so a live
     * revision stream ([[admitUpsertBatch]]) writes only what it admits.
-    * When the overlay outgrows the [[OvlFrac]]/[[OvlFloorBytes]] policy
+    * When the overlay outgrows the [[IndexTier.foldDue]] policy
     * it folds into the base tiers (the one amortized corpus rewrite,
     * still a single swap). Returns how many ids were replaced (present
     * before the upsert) — a corpus semi-join scan paid only by this
@@ -486,110 +460,24 @@ object IvfIndex {
       store: TableStore, name: String, stamp: Option[Long]): (Boolean, Long) = {
     val (m, mv) = requireManifest(store, name)
     if (stamp.exists(_ <= m.lastBatchId)) return (false, 0L)
-    IndexTier.rollbackAll(store, m.tiers(name))
+    rollback(store, name, m)
     val assigned = assign(batch, idCol, vecCol, centroidsAt(spark, store, name, m))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      val set = overlay(store, name, m)
       val batchIds = broadcast(assigned.select(col("id")).distinct())
       val replaced =
         if (stamp.isDefined) 0L
-        else vectorsAt(spark, store, name, m)
+        else set.served(spark, store, vectorsTable(name))
           .join(batchIds, Seq("id"), "left_semi").count()
-      // fold-vs-overlay decided on the PRE-batch overlay size (two file-
-      // metadata reads): past the policy bound this batch rides the
-      // amortized fold into the base; below it, only overlay bytes commit
-      val overlayFull = m.ovlVectors.exists(pin => IndexTier.foldDue(
-        store.byteSizeAt(ovlVectorsTable(name), pin),
-        store.byteSizeAt(vectorsTable(name), m.vectors)))
-      val next =
-        if (overlayFull) foldTiers(spark, store, name, m, Some((assigned, batchIds)))
-        else {
-          // overlay rewrite: old overlay minus the batch's ids plus the
-          // batch ([[IndexTier.overlayWrite]])
-          def ovlWrite(table: String, pin: Option[Int], rows: DataFrame): Int =
-            IndexTier.overlayWrite(spark, store, table, pin, batchIds, "id", rows)
-          // materialize the pinned assignment once, then rewrite the
-          // three independent overlay members concurrently (different
-          // tables, no shared CAS — the [[OverlayLock.inParallel]]
-          // rationale on the revision path)
-          assigned.count()
-          val results = OverlayLock.inParallel(Seq(
-            () => ovlWrite(ovlVectorsTable(name), m.ovlVectors,
-              assigned.select(col("id"), col("v"), col("cell")))) ++
-            m.qvectors.map(_ => () => {
-              val (scale, qvc) = quantizeCols(col("v"))
-              ovlWrite(ovlQVectorsTable(name), m.ovlQvectors,
-                assigned.select(col("id"), col("cell"),
-                  scale.as("scale"), qvc.as("qv")))
-            }).toSeq ++
-            m.pqCodes.map(_ => () => {
-              val cbRows = store.snapshotAt(spark, PqIndex.codebookTableName(name),
-                m.pqCodebook.getOrElse(throw new IllegalStateException(
-                  s"index $name has PQ codes but no codebook pin")))
-              ovlWrite(ovlPqCodesTable(name), m.ovlPqCodes,
-                PqIndex.encodeAssigned(spark, assigned, cbRows)
-                  .select(col("id"), col("cell"), col("n_codes")))
-            }).toSeq)
-          val oqv = m.qvectors.map(_ => results(1).asInstanceOf[Int])
-          val opc = m.pqCodes.map(_ => results.last.asInstanceOf[Int])
-          m.copy(ovlVectors = Some(results.head.asInstanceOf[Int]),
-            ovlQvectors = oqv, ovlPqCodes = opc)
-        }
+      // materialize the pinned assignment once, then commit every tier's
+      // overlay (or the amortized fold) concurrently
+      assigned.count()
       IndexTier.commitManifest(store, manifestTable(name),
-        next.copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
+        pinned(name, m, set.upsert(spark, store, batchIds, assigned))
+          .copy(lastBatchId = stamp.getOrElse(m.lastBatchId)), Some(mv))
       (true, replaced)
     } finally assigned.unpersist()
-  }
-
-  /** Fold the revision overlay (plus, optionally, one more assigned
-    * batch) into the base tiers: each tier commits its SERVED view —
-    * `base ∖ (overlay ∪ batch) ids ∪ overlay ∪ batch` — as one member
-    * version, and the returned manifest clears every overlay pin. The
-    * caller publishes it in its single swap. This is the one amortized
-    * corpus-sized rewrite the overlay design pays. */
-  private def foldTiers(
-      spark: SparkSession, store: TableStore, name: String, m: IvfManifest,
-      extra: Option[(DataFrame, DataFrame)]): IvfManifest = {
-    def foldOne(mergedBase: DataFrame, rows: DataFrame => DataFrame): DataFrame =
-      extra match {
-        case Some((assigned, batchIds)) =>
-          mergedBase.join(batchIds, Seq("id"), "left_anti")
-            .unionByName(rows(assigned))
-        case None => mergedBase
-      }
-    // the amortized fold is the one wholesale rewrite — rebucket the
-    // float tier's cell layout past the per-bucket byte target here
-    // (a legacy plain tier upgrades to the bucketed layout too)
-    val vv = store.writeBucketed(
-      foldOne(vectorsAt(spark, store, name, m),
-        _.select(col("id"), col("v"), col("cell"))),
-      vectorsTable(name),
-      OverlayLock.grownSpec(spark,
-        IndexTier.layout(store, vectorsTable(name), VecBuckets, "cell"),
-        store.byteSizeAt(vectorsTable(name), m.vectors) +
-          m.ovlVectors.map(store.byteSizeAt(ovlVectorsTable(name), _))
-            .getOrElse(0L)),
-      Some(m.vectors))
-    val qv = m.qvectors.map { qPin =>
-      val (scale, qvc) = quantizeCols(col("v"))
-      store.write(
-        foldOne(qVectorsAt(spark, store, name, m),
-          _.select(col("id"), col("cell"), scale.as("scale"), qvc.as("qv"))),
-        qVectorsTable(name), Some(qPin))
-    }
-    val pcV = m.pqCodes.map { pin =>
-      val encode = (assigned: DataFrame) => {
-        val cbRows = store.snapshotAt(spark, PqIndex.codebookTableName(name),
-          m.pqCodebook.getOrElse(throw new IllegalStateException(
-            s"index $name has PQ codes but no codebook pin")))
-        PqIndex.encodeAssigned(spark, assigned, cbRows)
-          .select(col("id"), col("cell"), col("n_codes"))
-      }
-      store.write(foldOne(pqCodesAt(spark, store, name, m), encode),
-        PqIndex.codesTableName(name), Some(pin))
-    }
-    m.copy(vectors = vv, qvectors = qv, pqCodes = pcV,
-      ovlVectors = None, ovlQvectors = None, ovlPqCodes = None)
   }
 
   /** Maintenance operator: fold the revision overlay into the base tiers
@@ -599,11 +487,11 @@ object IvfIndex {
   def compactOverlay(spark: SparkSession, store: TableStore, name: String): Unit =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      if (m.ovlVectors.isDefined || m.ovlQvectors.isDefined ||
-          m.ovlPqCodes.isDefined) {
-        IndexTier.rollbackAll(store, m.tiers(name))
+      val set = overlay(store, name, m)
+      if (set.live) {
+        rollback(store, name, m)
         IndexTier.commitManifest(store, manifestTable(name),
-          foldTiers(spark, store, name, m, None), Some(mv))
+          pinned(name, m, set.fold(spark, store, None)), Some(mv))
       }
     }
 
@@ -641,33 +529,14 @@ object IvfIndex {
       name: String): Long =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      IndexTier.rollbackAll(store, m.tiers(name))
-      val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
-      // a takedown rewrites every corpus-sized tier anyway, so the
-      // revision overlay folds in for free: each tier commits its
-      // SERVED view minus the dropped ids, and the swap clears the
-      // overlay pins
-      val stored = vectorsAt(spark, store, name, m)
-      val kept = stored.join(drop, stored("id") === col("_rm_id"), "left_anti")
-      val before = stored.count()
-      val keptN = kept.count()
-      val vv = store.writeBucketed(kept, vectorsTable(name),
-        IndexTier.layout(store, vectorsTable(name), VecBuckets, "cell"),
-        Some(m.vectors))
-      val qv = m.qvectors.map { qPin =>
-        val qStored = qVectorsAt(spark, store, name, m)
-        store.write(qStored.join(drop, qStored("id") === col("_rm_id"), "left_anti"),
-          qVectorsTable(name), Some(qPin))
-      }
-      val pcV = m.pqCodes.map { pin =>
-        val codes = pqCodesAt(spark, store, name, m)
-        store.write(codes.join(drop, codes("id") === col("_rm_id"), "left_anti"),
-          PqIndex.codesTableName(name), Some(pin))
-      }
+      rollback(store, name, m)
+      val set = overlay(store, name, m)
+      val drop = set.keysOf(ids)
+      val removed = set.served(spark, store, vectorsTable(name))
+        .join(drop, Seq("id"), "left_semi").count()
       IndexTier.commitManifest(store, manifestTable(name),
-        m.copy(vectors = vv, qvectors = qv, pqCodes = pcV,
-          ovlVectors = None, ovlQvectors = None, ovlPqCodes = None), Some(mv))
-      before - keptN
+        pinned(name, m, set.takedown(spark, store, drop)), Some(mv))
+      removed
     }
 
   /** Per-cell occupancy of the stored corpus — the index's health metric,
@@ -695,7 +564,7 @@ object IvfIndex {
     val (m, _) = requireManifest(store, name)
     val nModel = store.snapshotAt(spark, centroidsTable(name), m.centroids)
       .select(col("cell")).distinct().count().toInt
-    val occ = vectorsAt(spark, store, name, m)
+    val occ = overlay(store, name, m).served(spark, store, vectorsTable(name))
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .collect().map(_.getLong(1))
     CellBalance(
@@ -768,32 +637,15 @@ object IvfIndex {
   def repairTiers(spark: SparkSession, store: TableStore, name: String): Unit =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      IndexTier.rollbackAll(store, m.tiers(name))
+      rollback(store, name, m)
       // siblings re-derive from the SERVED float view (base ∪ overlay),
       // so each rebuilt sibling is complete and its own overlay clears;
       // the float overlay itself is untouched — it keeps shadowing the
       // float base, and the rebuilt siblings already contain its rows
-      val stored = vectorsAt(spark, store, name, m)
-      val qv = m.qvectors.map { _ =>
-        val (scale, qvc) = quantizeCols(col("v"))
-        store.write(stored.select(col("id"), col("cell"),
-          scale.as("scale"), qvc.as("qv")), qVectorsTable(name))
-      }
-      val pcV = (m.pqCodebook, m.pqCodes) match {
-        case (Some(cbPin), Some(_)) =>
-          val cbRows = store.snapshotAt(spark,
-            PqIndex.codebookTableName(name), cbPin)
-          Some(store.write(PqIndex.encodeAssigned(spark, stored, cbRows),
-            PqIndex.codesTableName(name)))
-        case _ => None
-      }
-      if (qv.isDefined || pcV.isDefined)
-        IndexTier.commitManifest(store, manifestTable(name),
-          m.copy(qvectors = qv.orElse(m.qvectors),
-            pqCodes = pcV.orElse(m.pqCodes),
-            ovlQvectors = if (qv.isDefined) None else m.ovlQvectors,
-            ovlPqCodes = if (pcV.isDefined) None else m.ovlPqCodes),
-          Some(mv))
+      val set = overlay(store, name, m)
+      if (set.tiers.size > 1)
+        IndexTier.commitManifest(store, manifestTable(name), pinned(name, m,
+          rederived(store, set, set.served(spark, store, vectorsTable(name)))), Some(mv))
     }
 
   // -------------------------------------------------------------------
@@ -810,11 +662,11 @@ object IvfIndex {
     * component maps to exactly ±127 (scale is derived from it), so the
     * clamp only ever guards float jitter — no clipping error; per-component
     * dequantization error is ≤ scale/2. */
-  private def quantizeCols(v: Column): (Column, Column) = {
-    val scale = array_max(transform(v, abs(_))) / lit(127.0)
-    val qv = transform(v, x =>
+  private def quantized(rows: DataFrame): DataFrame = {
+    val scale = array_max(transform(col("v"), abs(_))) / lit(127.0)
+    val qv = transform(col("v"), x =>
       greatest(lit(-127L), least(lit(127L), floor(x / scale + lit(0.5)))).cast("byte"))
-    (scale, qv)
+    rows.select(col("id"), col("cell"), scale.as("scale"), qv.as("qv"))
   }
 
   /** Quantize the index's stored vectors into the int8 sibling table
@@ -829,15 +681,11 @@ object IvfIndex {
   def quantizeStored(spark: SparkSession, store: TableStore, name: String): Unit =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      m.qvectors.foreach(OverlayLock.rollbackIfAhead(store, qVectorsTable(name), _))
-      m.ovlQvectors.foreach(
-        OverlayLock.rollbackIfAhead(store, ovlQVectorsTable(name), _))
+      rollback(store, name, m)
       // quantize the SERVED float view: the fresh int8 base then covers
       // any revision-overlay floats, so the int8 overlay clears
-      val stored = vectorsAt(spark, store, name, m)
-      val (scale, qvc) = quantizeCols(col("v"))
       val qv = store.write(
-        stored.select(col("id"), col("cell"), scale.as("scale"), qvc.as("qv")),
+        quantized(overlay(store, name, m).served(spark, store, vectorsTable(name))),
         qVectorsTable(name))
       IndexTier.commitManifest(store, manifestTable(name),
         m.copy(qvectors = Some(qv), ovlQvectors = None), Some(mv))
@@ -847,27 +695,16 @@ object IvfIndex {
     * (manifest-pinned read). */
   def quantizedVectors(spark: SparkSession, store: TableStore, name: String): DataFrame = {
     val (m, _) = requireManifest(store, name)
-    qVectorsAt(spark, store, name, m)
+    qServed(spark, store, name, m)
   }
 
-  private def qVectorsAt(
-      spark: SparkSession, store: TableStore, name: String, m: IvfManifest): DataFrame =
-    IndexTier.mergedWithOverlay(spark, store,
-      store.snapshotAt(spark, qVectorsTable(name),
-        m.qvectors.getOrElse(throw new IllegalStateException(
-          s"index $name has no int8 tier — run quantizeStored first"))),
-      ovlQVectorsTable(name), m.ovlQvectors, "id")
-
-  /** The served PQ-codes tier (base ∖ overlay-ids ∪ overlay) — the read
-    * every PQ consumer shares ([[PqIndex.topKRefined]], [[remove]],
-    * compaction). */
-  private[operators] def pqCodesAt(
-      spark: SparkSession, store: TableStore, name: String, m: IvfManifest): DataFrame =
-    IndexTier.mergedWithOverlay(spark, store,
-      store.snapshotAt(spark, PqIndex.codesTableName(name),
-        m.pqCodes.getOrElse(throw new IllegalStateException(
-          s"index $name has no PQ tier — run PqIndex.buildStored first"))),
-      ovlPqCodesTable(name), m.ovlPqCodes, "id")
+  /** The served int8 tier; an index without one says how to build it. */
+  private def qServed(
+      spark: SparkSession, store: TableStore, name: String, m: IvfManifest): DataFrame = {
+    if (m.qvectors.isEmpty) throw new IllegalStateException(
+      s"index $name has no int8 tier — run quantizeStored first")
+    overlay(store, name, m).served(spark, store, qVectorsTable(name))
+  }
 
   /** Dequantized view `(id, cell, v)` of [[quantizedVectors]] — the scoring
     * input. A nonzero vector's max component quantizes to ±127, so the
@@ -909,7 +746,7 @@ object IvfIndex {
       .select(col("q_id"), col("q_v"), col("q_nrm"), col("cell"))
     store.bucketSpecAt(vectorsTable(name), m.vectors) match {
       case None => // legacy plain layout: the old full-read join
-        topKFromProbes(probes, vectorsAt(spark, store, name, m), k)
+        topKFromProbes(probes, overlay(store, name, m).served(spark, store, vectorsTable(name)), k)
       case Some(_) =>
         topKFromProbes(broadcast(probes),
           vectorsForCells(spark, store, name, m, probes.select(col("cell"))), k)
@@ -933,7 +770,7 @@ object IvfIndex {
     val (m, _) = requireManifest(store, name)
     topKAgainst(batch, idCol, vecCol, k, nProbe,
       centroidsAt(spark, store, name, m),
-      dequantized(qVectorsAt(spark, store, name, m)))
+      dequantized(qServed(spark, store, name, m)))
   }
 
   /** Two-stage QUALITY serving from the persisted index (the
@@ -964,12 +801,12 @@ object IvfIndex {
     val (m, _) = requireManifest(store, name)
     val short = topKAgainst(batch, idCol, vecCol, shortlist, nProbe,
         centroidsAt(spark, store, name, m),
-        dequantized(qVectorsAt(spark, store, name, m)))
+        dequantized(qServed(spark, store, name, m)))
       .select(col("vec_id"), col("neighbor_id"))
     val q = batch
       .select(col(idCol).as("vec_id"), toDouble(col(vecCol)).as("q_v"))
       .withColumn("q_nrm", l2Norm(col("q_v")))
-    val corpus = vectorsAt(spark, store, name, m)
+    val corpus = overlay(store, name, m).served(spark, store, vectorsTable(name))
       .select(col("id").as("neighbor_id"), col("v").as("n_v"))
       .withColumn("n_nrm", l2Norm(col("n_v")))
     Similarity.exactRerank(short, q, corpus, k)

@@ -58,7 +58,7 @@ import org.apache.spark.sql.functions._
   * delta append; every screen reads a bounded set of constant-size
   * buckets (∝ the batch's probe cells, independent of stored-corpus
   * size — [[graft.PrunedScreenSpec]] measures it); the amortized fold
-  * is the one stored-size rewrite, paid every ~`OvlFrac` of growth. A
+  * is the one stored-size rewrite, paid every ~[[IndexTier.OvlFrac]] of growth. A
   * legacy index persisted before the band tier existed (no `band_v` pin)
   * falls back to deriving the projection from the full sigs read until
   * its next full rewrite.
@@ -100,9 +100,6 @@ object PerceptualIndex {
       "max_hamming" -> maxHamming, "has_quality" -> (if (hasQuality) 1 else 0),
       "rm_sigs_v" -> rmSigs.getOrElse(-1), "band_v" -> band.getOrElse(-1),
       "dlt_v" -> dlt.getOrElse(-1), "last_batch_id" -> lastBatchId)
-    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
-      sigsTable(name) -> Some(sigs), bandTable(name) -> band,
-      rmTable(name) -> rmSigs, deltaTable(name) -> dlt)
   }
 
   /** Absent keys predate the quality/tombstone/projection tiers (older
@@ -238,7 +235,7 @@ object PerceptualIndex {
       s"maxHamming must be in [1, 31], got $maxHamming")
     mutate(store, name) {
       val prev = readManifest(store, name)
-      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, lsm(name, m).members) }
       val fresh = PercManifest(-1, maxHamming, prev.map(_._1.lastBatchId).getOrElse(-1L),
         hasQuality = quality)
       IndexTier.commitManifest(store, manifestTable(name), pinned(fresh,
@@ -283,7 +280,7 @@ object PerceptualIndex {
     IndexTier.requireLayout(s"perceptual index $name", m.hasQuality, keeper = false,
       "an insert-only fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    IndexTier.rollbackAll(store, m.tiers(name))
+    IndexTier.rollbackAll(store, lsm(name, m).members)
     // the screen-then-admit fold: drop batch items within the persisted
     // budget of ANY stored signature, admit the rest — both halves read
     // the SAME pinned stored version, so the loop is one atomic decision.
@@ -364,7 +361,7 @@ object PerceptualIndex {
       name: String): Long =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      IndexTier.rollbackAll(store, m.tiers(name))
+      IndexTier.rollbackAll(store, lsm(name, m).members)
       val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
       // the takedown rewrite serves double duty: the SERVED view minus
       // the dropped ids folds keeper tombstones + the memtable into the
@@ -492,7 +489,7 @@ object PerceptualIndex {
     IndexTier.requireLayout(s"perceptual index $name", m.hasQuality, keeper = true,
       "a replace-if-better fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    IndexTier.rollbackAll(store, m.tiers(name))
+    IndexTier.rollbackAll(store, lsm(name, m).members)
     implicit val scope: CacheScope = new CacheScope
     // in-batch id duplicates: highest quality wins, ties to smallest sig
     // (deterministic under any partitioning); a re-sent EXISTING id is a

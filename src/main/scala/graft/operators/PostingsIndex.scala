@@ -136,10 +136,6 @@ object PostingsIndex {
       "sum_dl" -> sumDl, "ovl_postings_v" -> ovlPostings.getOrElse(-1),
       "ovl_docs_v" -> ovlDocs.getOrElse(-1),
       "dlt_termstats_v" -> dltTermStats.getOrElse(-1), "last_batch_id" -> lastBatchId)
-    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
-      postingsTable(name) -> Some(postings), docsTable(name) -> Some(docs),
-      termStatsTable(name) -> Some(termStats), ovlPostingsTable(name) -> ovlPostings,
-      ovlDocsTable(name) -> ovlDocs, dltTermStatsTable(name) -> dltTermStats)
   }
 
   /** `(count, Σdl)` of a `(doc_id, dl, ...)` frame — one tiny aggregate,
@@ -166,20 +162,28 @@ object PostingsIndex {
   private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
     OverlayLock.mutate(store, "bm25", name)(attempt)
 
-  /** The served postings `(doc_id, dl, term, tf)`: base ∖ overlay ∪
-    * overlay. */
-  private def postingsAt(
-      spark: SparkSession, store: TableStore, name: String, m: BmManifest): DataFrame =
-    IndexTier.mergedWithOverlay(spark, store,
-      store.snapshotAt(spark, postingsTable(name), m.postings),
-      ovlPostingsTable(name), m.ovlPostings, "doc_id")
+  /** The revision-overlay set at `m`'s pins, keyed by `doc_id`: the
+    * postings `(doc_id, dl, term, tf)` bucketed on `term`, then the docs
+    * `(doc_id, dl, terms)` bucketed on `doc_id`, both derived from
+    * tokenized `(doc_id, _toks, dl)` rows. */
+  private def overlay(name: String, m: BmManifest): IndexTier.Overlay =
+    IndexTier.Overlay("doc_id", Seq(
+      IndexTier.Shadowed(postingsTable(name), m.postings, ovlPostingsTable(name) -> m.ovlPostings,
+        Some(IndexTier.keyed(PostBuckets, "term")), postingsOf),
+      IndexTier.Shadowed(docsTable(name), m.docs, ovlDocsTable(name) -> m.ovlDocs,
+        Some(IndexTier.keyed(DocBuckets, "doc_id")), docRowsOf)))
 
-  /** The served docs `(doc_id, dl, terms)`. */
-  private def docsAt(
-      spark: SparkSession, store: TableStore, name: String, m: BmManifest): DataFrame =
-    IndexTier.mergedWithOverlay(spark, store,
-      store.snapshotAt(spark, docsTable(name), m.docs),
-      ovlDocsTable(name), m.ovlDocs, "doc_id")
+  /** `m` at the pins of `o`. */
+  private def pinned(name: String, m: BmManifest, o: IndexTier.Overlay): BmManifest = {
+    val (p, d) = (o(postingsTable(name)), o(docsTable(name)))
+    m.copy(postings = p.pin, ovlPostings = p.ovl._2, docs = d.pin, ovlDocs = d.ovl._2)
+  }
+
+  /** Roll every member back to its pin: the overlay set, termstats and its
+    * delta. */
+  private def rollback(store: TableStore, name: String, m: BmManifest): Unit =
+    IndexTier.rollbackAll(store, overlay(name, m).members ++ Seq(
+      termStatsTable(name) -> Some(m.termStats), dltTermStatsTable(name) -> m.dltTermStats))
 
   /** Raw `(term, df)` rows of base ∪ delta, UNMERGED and UNCLAMPED — the
     * single source every served/folded df view groups and clamps ONCE
@@ -239,9 +243,8 @@ object PostingsIndex {
   private def postingsForBuckets(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
       touched: Seq[Int]): DataFrame =
-    IndexTier.mergedWithOverlay(spark, store,
-      IndexTier.prunedAt(spark, store, postingsTable(name), m.postings, touched),
-      ovlPostingsTable(name), m.ovlPostings, "doc_id")
+    overlay(name, m).merged(spark, store, postingsTable(name),
+      IndexTier.prunedAt(spark, store, postingsTable(name), m.postings, touched))
 
   /** Commit a per-term df adjustment (`delta` — positive and/or negative
     * rows, already grouped by term) under the overlay discipline: the
@@ -317,9 +320,8 @@ object PostingsIndex {
       batchIds: DataFrame, touched: Seq[Int],
       idPredicate: Option[org.apache.spark.sql.Column]): DataFrame = {
     val base = IndexTier.prunedAt(spark, store, docsTable(name), m.docs, touched)
-    IndexTier.mergedWithOverlay(spark, store,
-      idPredicate.map(base.filter).getOrElse(base),
-      ovlDocsTable(name), m.ovlDocs, "doc_id")
+    overlay(name, m).merged(spark, store, docsTable(name),
+      idPredicate.map(base.filter).getOrElse(base))
       .join(batchIds, Seq("doc_id"), "left_semi")
   }
 
@@ -381,7 +383,7 @@ object PostingsIndex {
       docBuckets: Int = DocBuckets): Unit =
     mutate(store, name) {
       val prev = readManifest(store, name)
-      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      prev.foreach { case (m, _) => rollback(store, name, m) }
       val spark = df.sparkSession
       // pinned: the docs write and the postings write would otherwise
       // each re-run the tokenize + dedupe chain end-to-end
@@ -429,15 +431,7 @@ object PostingsIndex {
       store: TableStore, name: String, stamp: Option[Long]): Boolean = {
     val (m, mv) = requireManifest(store, name)
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    IndexTier.rollbackAll(store, m.tiers(name))
-    // insert-only against the SERVED id set: base docs AND the revision
-    // overlay's (an id living only in the overlay must not re-enter the
-    // base, or the overlay's shadow would hide the stale re-append)
-    val ovlIds = m.ovlDocs.map(pin => broadcast(
-      store.snapshotAt(spark, ovlDocsTable(name), pin)
-        .select(col("doc_id")).distinct()))
-    def screenOvl(df: DataFrame): DataFrame =
-      ovlIds.map(ids => df.join(ids, Seq("doc_id"), "left_anti")).getOrElse(df)
+    rollback(store, name, m)
     // pinned twice: tok feeds the bucket-list collect AND the screen;
     // fresh's four consumers below (docs append, postings, termstats
     // delta, counters) would otherwise each re-run the tokenize +
@@ -445,9 +439,11 @@ object PostingsIndex {
     // rationale as bm25Against's postings pin
     val tok = tokenized(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the stored-ids screen reads ONLY the buckets the batch's ids hash
-    // into — a batch can only collide with history inside its own buckets
-    val fresh = screenOvl(tok.join(
+    // insert-only against the SERVED id set: base docs AND the revision
+    // overlay's. The stored-ids screen reads ONLY the buckets the batch's
+    // ids hash into — a batch can only collide with history inside its
+    // own buckets
+    val fresh = overlay(name, m).screen(spark, store, docsTable(name), tok.join(
         baseDocsForKeys(spark, store, name, m, tok).select(col("doc_id")),
         Seq("doc_id"), "left_anti"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -531,7 +527,7 @@ object PostingsIndex {
       store: TableStore, name: String, stamp: Option[Long]): (Boolean, Long) = {
     val (m, mv) = requireManifest(store, name)
     if (stamp.exists(_ <= m.lastBatchId)) return (false, 0L)
-    IndexTier.rollbackAll(store, m.tiers(name))
+    rollback(store, name, m)
     val fresh = tokenized(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -568,7 +564,6 @@ object PostingsIndex {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
       val (rmN, rmSdl) = docCounters(replacedDocs)
-      val freshPostings = postingsOf(fresh)
       // termstats: df delta = fresh − removed, cell-wise (exact
       // subtraction, the remove-path arithmetic composed with append's
       // merge), committed O(batch-terms) into the delta member; the
@@ -577,73 +572,22 @@ object PostingsIndex {
       val removedTermDf = replacedDocs
         .select(explode(col("terms")).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val termDelta = termStatsOf(freshPostings)
+      val termDelta = termStatsOf(postingsOf(fresh))
         .unionByName(removedTermDf.withColumn("df", -col("df")))
         .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      // fold-vs-overlay on the PRE-batch overlay size (file-metadata
-      // reads) — the IvfIndex.upsertStamped policy on the postings tier
-      val overlayFull = m.ovlPostings.exists(pin => IndexTier.foldDue(
-        store.byteSizeAt(ovlPostingsTable(name), pin),
-        store.byteSizeAt(postingsTable(name), m.postings)))
-      // the termstats-delta commit and the two postings/docs-tier commits
-      // are independent tables (no shared CAS) — run each branch's three
-      // member commits concurrently instead of stacking their fixed job
-      // latencies onto every revision drain (fresh and replacedDocs are
-      // pinned AND materialized above, so the concurrent jobs read the
-      // cache rather than racing to compute it)
-      val next =
-        if (overlayFull) {
-          // amortized fold: commit each corpus tier's served view with
-          // the batch replaced, clear the overlay pins
-          val Seq(tvA, pvA, dvA) = OverlayLock.inParallel(Seq(
-            () => commitTermDelta(spark, store, name, m, termDelta),
-            // the amortized fold is the one wholesale rewrite — rebucket
-            // the term layout past the per-bucket byte target here (a
-            // legacy plain tier upgrades to the bucketed layout too)
-            () => store.writeBucketed(
-              postingsAt(spark, store, name, m)
-                .join(batchIds, Seq("doc_id"), "left_anti")
-                .unionByName(freshPostings),
-              postingsTable(name),
-              OverlayLock.grownSpec(spark,
-                IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
-                store.byteSizeAt(postingsTable(name), m.postings) +
-                  m.ovlPostings.map(store.byteSizeAt(ovlPostingsTable(name), _))
-                    .getOrElse(0L)),
-              Some(m.postings)),
-            () => store.writeBucketed(
-              docsAt(spark, store, name, m)
-                .join(batchIds, Seq("doc_id"), "left_anti")
-                .unionByName(docRowsOf(fresh)),
-              docsTable(name),
-              // rebucket-at-fold (OverlayLock.grownSpec): hold the
-              // per-bucket byte target as the corpus grows
-              OverlayLock.grownSpec(spark,
-                IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"),
-                store.byteSizeAt(docsTable(name), m.docs) +
-                  m.ovlDocs.map(store.byteSizeAt(ovlDocsTable(name), _))
-                    .getOrElse(0L)),
-              Some(m.docs))))
-          val (tv, dltv) = tvA.asInstanceOf[(Int, Option[Int])]
-          m.copy(postings = pvA.asInstanceOf[Int], docs = dvA.asInstanceOf[Int],
-            ovlPostings = None, ovlDocs = None,
-            termStats = tv, dltTermStats = dltv)
-        } else {
-          // overlay rewrite: old overlay minus the batch's ids plus the
-          // batch ([[IndexTier.overlayWrite]]), O(overlay) bytes
-          def ovlWrite(table: String, pin: Option[Int], rows: DataFrame): Int =
-            IndexTier.overlayWrite(spark, store, table, pin, batchIds, "doc_id", rows)
-          val Seq(tvA, opvA, odvA) = OverlayLock.inParallel(Seq(
-            () => commitTermDelta(spark, store, name, m, termDelta),
-            () => ovlWrite(ovlPostingsTable(name), m.ovlPostings, freshPostings),
-            () => ovlWrite(ovlDocsTable(name), m.ovlDocs, docRowsOf(fresh))))
-          val (tv, dltv) = tvA.asInstanceOf[(Int, Option[Int])]
-          m.copy(ovlPostings = Some(opvA.asInstanceOf[Int]),
-            ovlDocs = Some(odvA.asInstanceOf[Int]),
-            termStats = tv, dltTermStats = dltv)
-        }
+      // the termstats-delta commit and the overlay set's commit (its
+      // overlay rewrites, or the amortized fold) are independent tables
+      // (no shared CAS) — run them concurrently instead of stacking their
+      // fixed job latencies onto every revision drain (fresh and
+      // replacedDocs are pinned AND materialized above, so the concurrent
+      // jobs read the cache rather than racing to compute it)
+      val Seq(tvA, setA) = OverlayLock.inParallel(Seq(
+        () => commitTermDelta(spark, store, name, m, termDelta),
+        () => overlay(name, m).upsert(spark, store, batchIds, fresh)))
+      val (tv, dltv) = tvA.asInstanceOf[(Int, Option[Int])]
       IndexTier.commitManifest(store, manifestTable(name),
-        next.copy(
+        pinned(name, m, setA.asInstanceOf[IndexTier.Overlay]).copy(
+          termStats = tv, dltTermStats = dltv,
           nDocs = m.nDocs + addN - rmN, sumDl = m.sumDl + addSdl - rmSdl,
           lastBatchId = stamp.getOrElse(m.lastBatchId)),
         Some(mv))
@@ -659,20 +603,9 @@ object PostingsIndex {
   def compactOverlay(spark: SparkSession, store: TableStore, name: String): Unit =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      if (m.ovlPostings.isDefined || m.ovlDocs.isDefined ||
-          m.dltTermStats.isDefined) {
-        IndexTier.rollbackAll(store, m.tiers(name))
-        val pv =
-          if (m.ovlPostings.isEmpty) m.postings
-          else store.writeBucketed(postingsAt(spark, store, name, m),
-            postingsTable(name),
-            IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
-            Some(m.postings))
-        val dv =
-          if (m.ovlDocs.isEmpty) m.docs
-          else store.writeBucketed(docsAt(spark, store, name, m),
-            docsTable(name),
-            IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"), Some(m.docs))
+      val set = overlay(name, m)
+      if (set.live || m.dltTermStats.isDefined) {
+        rollback(store, name, m)
         val tv =
           if (m.dltTermStats.isEmpty) m.termStats
           else store.writeBucketed(termDfAt(spark, store, name, m),
@@ -680,9 +613,8 @@ object PostingsIndex {
             IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
             Some(m.termStats))
         IndexTier.commitManifest(store, manifestTable(name),
-          m.copy(postings = pv, docs = dv, termStats = tv,
-            ovlPostings = None, ovlDocs = None, dltTermStats = None),
-          Some(mv))
+          pinned(name, m, set.fold(spark, store, None))
+            .copy(termStats = tv, dltTermStats = None), Some(mv))
       }
     }
 
@@ -699,24 +631,13 @@ object PostingsIndex {
       name: String): Long =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      IndexTier.rollbackAll(store, m.tiers(name))
-      val drop = broadcast(ids.select(col(ids.columns.head).as("_rm_id")).distinct())
-      // a takedown rewrites the corpus-sized tiers anyway, so the
-      // revision overlay folds in for free: each tier commits its
-      // SERVED view minus the dropped ids, and the swap clears the pins
-      val docsStored = docsAt(spark, store, name, m)
-      val keptDocs = docsStored.join(drop, docsStored("doc_id") === col("_rm_id"), "left_anti")
-      val removedDocs = docsStored.join(drop,
-        docsStored("doc_id") === col("_rm_id"), "left_semi")
+      rollback(store, name, m)
+      val set = overlay(name, m)
+      val drop = set.keysOf(ids)
+      val removedDocs = set.served(spark, store, docsTable(name))
+        .join(drop, Seq("doc_id"), "left_semi")
       val (rmN, rmSdl) = docCounters(removedDocs)
-      val dv = store.writeBucketed(keptDocs, docsTable(name),
-        IndexTier.layout(store, docsTable(name), DocBuckets, "doc_id"), Some(m.docs))
-      val postStored = postingsAt(spark, store, name, m)
-      val pv = store.writeBucketed(
-        postStored.join(drop, postStored("doc_id") === col("_rm_id"), "left_anti"),
-        postingsTable(name),
-        IndexTier.layout(store, postingsTable(name), PostBuckets, "term"),
-        Some(m.postings))
+      val next = pinned(name, m, set.takedown(spark, store, drop))
       // df subtraction from the removed docs' stored term lists — a
       // takedown rewrites the authoritative table anyway, so the
       // termstats delta folds in here and its pin clears; merged from
@@ -733,9 +654,8 @@ object PostingsIndex {
         IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
         Some(m.termStats))
       IndexTier.commitManifest(store, manifestTable(name),
-        m.copy(postings = pv, docs = dv, termStats = tv,
-          nDocs = m.nDocs - rmN, sumDl = m.sumDl - rmSdl,
-          ovlPostings = None, ovlDocs = None, dltTermStats = None), Some(mv))
+        next.copy(termStats = tv, dltTermStats = None,
+          nDocs = m.nDocs - rmN, sumDl = m.sumDl - rmSdl), Some(mv))
       rmN
     }
 
@@ -784,7 +704,7 @@ object PostingsIndex {
     * revision-overlay merged). */
   def postings(spark: SparkSession, store: TableStore, name: String): DataFrame = {
     val (m, _) = requireManifest(store, name)
-    postingsAt(spark, store, name, m)
+    overlay(name, m).served(spark, store, postingsTable(name))
   }
 
   /** Top-`k` stored documents for EVERY probe, served entirely from

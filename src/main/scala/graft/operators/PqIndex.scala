@@ -48,17 +48,20 @@ object PqIndex {
 
   /** The stored codebook `(sub, code, c_v)` as committed
     * (manifest-pinned read). */
-  def codebook(spark: SparkSession, store: TableStore, name: String): DataFrame = {
-    val (m, _) = IvfIndex.requireManifest(store, name)
-    store.snapshotAt(spark, codebookTableName(name),
-      m.pqCodebook.getOrElse(noTier(name)))
-  }
+  def codebook(spark: SparkSession, store: TableStore, name: String): DataFrame =
+    codebookAt(spark, store, name, IvfIndex.requireManifest(store, name)._1)
+
+  private[operators] def codebookAt(
+      spark: SparkSession, store: TableStore, name: String,
+      m: IvfIndex.IvfManifest): DataFrame =
+    store.snapshotAt(spark, codebookTableName(name), m.pqCodebook.getOrElse(noTier(name)))
 
   /** The encoded corpus `(id, cell, n_codes)` as served (manifest-pinned,
     * revision-overlay merged). */
   def codes(spark: SparkSession, store: TableStore, name: String): DataFrame = {
     val (m, _) = IvfIndex.requireManifest(store, name)
-    IvfIndex.pqCodesAt(spark, store, name, m)
+    if (m.pqCodes.isEmpty) noTier(name)
+    IvfIndex.overlay(store, name, m).served(spark, store, codesTableName(name))
   }
 
   private def noTier(name: String): Nothing =
@@ -82,16 +85,12 @@ object PqIndex {
       iterations: Int)(implicit caches: CacheScope): Unit =
     OverlayLock.mutate(store, "ivf", name) {
       val (man, mv) = IvfIndex.requireManifest(store, name)
-      man.pqCodebook.foreach(
-        OverlayLock.rollbackIfAhead(store, codebookTableName(name), _))
-      man.pqCodes.foreach(
-        OverlayLock.rollbackIfAhead(store, codesTableName(name), _))
-      man.ovlPqCodes.foreach(
-        OverlayLock.rollbackIfAhead(store, IvfIndex.ovlPqCodesTable(name), _))
+      IvfIndex.rollback(store, name, man)
       // train + encode over the SERVED float view: revision-overlay rows
       // are first-class corpus, and the fresh codes tier covering them
       // lets its own overlay clear in the same swap
-      val stored = IvfIndex.vectorsAt(spark, store, name, man)
+      val stored = IvfIndex.overlay(store, name, man)
+        .served(spark, store, IvfIndex.vectorsTable(name))
       val dim = stored.select(size(col("v"))).head().getInt(0)
       require(dim % m == 0, s"dim $dim must divide into $m subspaces")
       val subDim = dim / m
@@ -135,9 +134,9 @@ object PqIndex {
 
   /** Encode an already-cell-assigned `(id, v, cell)` frame against a
     * committed codebook frame → `(id, cell, n_codes)`. Refit-free and
-    * deterministic; shared by [[IvfIndex.append]] (batch encode),
-    * [[IvfIndex.build]]/[[IvfIndex.repairTiers]] (full re-encode after a
-    * refit) and [[buildStored]]'s own initial encode. */
+    * deterministic; the PQ member's derive in [[IvfIndex.overlay]] — a
+    * batch encode on append, upsert and fold, a full re-encode in
+    * [[IvfIndex.build]]/[[IvfIndex.repairTiers]] after a refit. */
   private[operators] def encodeAssigned(
       spark: SparkSession,
       assigned: DataFrame,
@@ -149,38 +148,6 @@ object PqIndex {
       Pq.assignCodes(subs, broadcast(Pq.codebookFrame(spark, cb))))
     arr.join(unit.select(col("id"), col("cell")), Seq("id"))
       .select(col("id"), col("cell"), col("n_codes"))
-  }
-
-  /** Member-commit half of the PQ append — called by [[IvfIndex.append]]
-    * inside ITS manifest swap: encode the assigned batch against the
-    * pinned codebook, union into the pinned codes version (insert-only
-    * by id, like every tier) and return the new member version. The
-    * caller publishes it. */
-  private[operators] def appendEncodedAt(
-      spark: SparkSession,
-      assigned: DataFrame,
-      store: TableStore,
-      name: String,
-      man: IvfIndex.IvfManifest,
-      pin: Int): Int = {
-    val cbRows = store.snapshotAt(spark, codebookTableName(name),
-      man.pqCodebook.getOrElse(noTier(name)))
-    val batchCodes = encodeAssigned(spark, assigned, cbRows)
-    val stored = store.snapshotAt(spark, codesTableName(name), pin)
-    // insert-only against the SERVED id set: base codes AND the revision
-    // overlay's (an id living only in the overlay must not re-enter the
-    // base — IvfIndex.appendStamped's screen, applied to this tier)
-    val screened = man.ovlPqCodes match {
-      case Some(oPin) => batchCodes.join(broadcast(
-          store.snapshotAt(spark, IvfIndex.ovlPqCodesTable(name), oPin)
-            .select(col("id")).distinct()), Seq("id"), "left_anti")
-      case None => batchCodes
-    }
-    val freshCodes = screened
-      .join(stored.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("cell"), col("n_codes")) // stored column order
-    // O(batch): only the fresh code rows are written (see appendOrCompact)
-    OverlayLock.appendOrCompact(store, codesTableName(name), pin, stored, freshCodes)
   }
 
   /** Two-stage QUALITY serving from the PQ tier (the [[Pq.topKRefined]]
@@ -206,9 +173,7 @@ object PqIndex {
       shortlist: Int): DataFrame = {
     require(shortlist >= k && k >= 1, s"need shortlist $shortlist >= k $k >= 1")
     val (man, _) = IvfIndex.requireManifest(store, name)
-    val cbRows = store.snapshotAt(spark, codebookTableName(name),
-      man.pqCodebook.getOrElse(noTier(name)))
-    val (cb, m, stride, subDim) = loadCodebookRows(cbRows)
+    val (cb, m, stride, subDim) = loadCodebookRows(codebookAt(spark, store, name, man))
     val flat = Pq.flatCodebook(cb, m, stride, subDim)
 
     val q = IvfIndex.probeQueries(batch, idCol, vecCol)
@@ -221,7 +186,8 @@ object PqIndex {
     // candidates: one row per (query, stored code row) in the probed
     // cells — a stored vector lives in exactly one cell, so each pair
     // arises once; scoring is the codegen ADC fold, no per-pair state
-    val codeRows = IvfIndex.pqCodesAt(spark, store, name, man)
+    val set = IvfIndex.overlay(store, name, man)
+    val codeRows = set.served(spark, store, codesTableName(name))
     val scored = probes.join(codeRows, Seq("cell"))
       .filter(col("q_id") =!= col("id"))
       .select(col("q_id").as("vec_id"), col("id").as("neighbor_id"),
@@ -235,7 +201,7 @@ object PqIndex {
       .select(col("vec_id"), col("e.neighbor_id").as("neighbor_id"))
 
     // exact re-rank of the shortlist on the stored float tier
-    val corpus = IvfIndex.vectorsAt(spark, store, name, man)
+    val corpus = set.served(spark, store, IvfIndex.vectorsTable(name))
       .select(col("id").as("neighbor_id"), col("v").as("n_v"))
       .withColumn("n_nrm", l2Norm(col("n_v")))
     Similarity.exactRerank(short,

@@ -118,9 +118,6 @@ object SignatureIndex {
       "shingle_n" -> shingleN, "num_hashes" -> numHashes, "bands" -> bands,
       "has_quality" -> (if (hasQuality) 1 else 0), "n_live" -> nLive,
       "n_rm" -> nRm, "n_dlt" -> nDelta, "last_batch_id" -> lastBatchId)
-    def tiers(name: String): Seq[(String, Option[Int])] = Seq(
-      sigsTable(name) -> Some(sigs), posTable(name) -> Some(pos),
-      bandTable(name) -> Some(band), rmTable(name) -> rm, deltaTable(name) -> dlt)
   }
 
   /** Absent keys: `dlt_v`/`n_dlt` predate the delta member (no memtable),
@@ -254,7 +251,7 @@ object SignatureIndex {
       buckets: Seq[Int], quality: Boolean): Unit =
     mutate(store, name) {
       val prev = readManifest(store, name)
-      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, m.tiers(name)) }
+      prev.foreach { case (m, _) => IndexTier.rollbackAll(store, lsm(name, m).members) }
       val fresh = SigManifest(-1, -1, -1, p.shingleN, p.numHashes, p.bands, 0L, 0L,
         prev.map(_._1.lastBatchId).getOrElse(-1L), hasQuality = quality)
       val built = lsm(name, fresh).build(sigs.sparkSession, store, sigs, buckets)
@@ -308,7 +305,7 @@ object SignatureIndex {
     IndexTier.requireLayout(s"signature index $name", m.hasQuality, keeper = false,
       "an insert-only fold")
     if (stamp.exists(_ <= m.lastBatchId)) return false
-    IndexTier.rollbackAll(store, m.tiers(name))
+    IndexTier.rollbackAll(store, lsm(name, m).members)
     // pinned: the probe job and the delta write both consume the
     // shingle+hash chain
     val batchSigs = signaturesOf(batch, idCol, textCol, m.params)
@@ -368,7 +365,7 @@ object SignatureIndex {
       maxFilesPerBucket: Int = 8): Unit =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      IndexTier.rollbackAll(store, m.tiers(name))
+      IndexTier.rollbackAll(store, lsm(name, m).members)
       val sv = store.compact(spark, sigsTable(name), maxFilesPerBucket)
       val pv = store.compact(spark, posTable(name), maxFilesPerBucket)
       val bv = store.compact(spark, bandTable(name), maxFilesPerBucket)
@@ -394,7 +391,7 @@ object SignatureIndex {
       name: String): Long =
     mutate(store, name) {
       val (m, mv) = requireManifest(store, name)
-      IndexTier.rollbackAll(store, m.tiers(name))
+      IndexTier.rollbackAll(store, lsm(name, m).members)
       val l = lsm(name, m)
       val served = l.served(spark, store)
       // cast the drop list to the STORED id type before any bucket math:
@@ -715,7 +712,7 @@ object SignatureIndex {
       val (m, mv) = requireManifest(store, name)
       IndexTier.requireLayout(s"signature index $name", m.hasQuality, keeper = false,
         "a supersede fold")
-      IndexTier.rollbackAll(store, m.tiers(name))
+      IndexTier.rollbackAll(store, lsm(name, m).members)
       val p = m.params
       // ONE probe job over the batch's pinned signatures: the sigs
       // tier's id-buckets AND the position tier's (i, v)-cell buckets
@@ -850,7 +847,7 @@ object SignatureIndex {
     val p = m.params
     if (stamp.exists(_ <= m.lastBatchId))
       return batch.filter(lit(false)) // replayed batchId: nothing folds
-    IndexTier.rollbackAll(store, m.tiers(name))
+    IndexTier.rollbackAll(store, lsm(name, m).members)
     // ONE probe job over the batch's pinned signatures: id-buckets and
     // band-cell buckets fused ([[IndexTier.touchedBucketsPair]]); probing cells
     // from the PRE-anti-join signatures is superset-safe (the

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{CacheScope, FrameIndex, IvfIndex, PerceptualIndex, PostingsIndex, PqIndex, TableStore}
+import graft.operators.{CacheScope, FrameIndex, IndexTier, IvfIndex, PerceptualIndex, PostingsIndex, PqIndex, TableStore}
 
 /** The revision overlay's cost and semantics contracts (VERDICT r14 #1):
   *
@@ -404,7 +404,7 @@ class OverlaySpec extends SparkSpec {
       val (m1, _) = IvfIndex.readManifest(store, "emb").get
       assert(m1.ovlVectors.isDefined, "first revision batch lands in the overlay")
       assert(store.byteSizeAt("emb_vectors_ovl", m1.ovlVectors.get) >
-        IvfIndex.OvlFloorBytes, "fixture sized past the policy floor")
+        IndexTier.OvlFloorBytes, "fixture sized past the policy floor")
       // upsert #2: the PRE-batch overlay exceeds the policy -> this batch
       // rides the amortized fold; every overlay pin clears
       IvfIndex.upsert(spark, wdf(10 to 14, bump = 0.7),
