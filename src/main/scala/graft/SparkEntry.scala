@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.TextFunctions
 import graft.functions.VectorFunctions
-import graft.operators.{ChangeApplier, Dedup, Similarity}
+import graft.operators.{ChangeApplier, Dedup, Similarity, TableStore}
 import graft.streaming.AdmissionStream
 
 /** Driver contract — the declared operator surface (SURVEY §2) as named,
@@ -349,6 +350,21 @@ object SparkEntry {
         try java.nio.file.Files.createLink(q, p)
         catch { case _: Exception => java.nio.file.Files.copy(p, q) }
     } finally stream.close()
+  }
+
+  /** One seeded drain run: copy the seed index `<seedRoot>/idx` into a
+    * fresh run root, stream the staged files `<seedRoot>/stage` one per
+    * micro-batch, start the drain with `start(stream, store, checkpoint)`
+    * and wait for it to finish. Returns the drained store. */
+  private def seededDrain(s: SparkSession, seedRoot: String, run: String)(
+      start: (DataFrame, TableStore, String) => StreamingQuery): TableStore = {
+    val root = newTmpDir(run).toString
+    copyTree(s"$seedRoot/idx", s"$root/idx")
+    val store = new TableStore(s"$root/idx")
+    start(s.readStream.schema(s.read.parquet(s"$seedRoot/stage").schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage"), store, s"$root/chk")
+      .awaitTermination()
+    store
   }
 
   /** Stage `drains`, in order, as deterministic single-file parquet
@@ -2416,17 +2432,11 @@ object SparkEntry {
     // union. Serving the q60 batch against the streamed index must match
     // hash-exactly.
     "q110_stream_index" -> ((s, dir) => {
-      val seedRoot = q110SeedRoot(s, dir)
-      val root = newTmpDir("graft_q110run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.IvfIndex.admitBatch(b.sparkSession, b, id,
-          "vec_id", "embedding", store, "emb_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, q110SeedRoot(s, dir), "graft_q110run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.IvfIndex.admitBatch(b.sparkSession, b, id,
+            "vec_id", "embedding", store, "emb_idx")
+        })
       val batch = t(s, dir, "embeddings").filter(pmod(col("vec_id"), lit(10)) === 0)
       graft.operators.IvfIndex.topK(s, batch, "vec_id", "embedding",
           store, "emb_idx", k = 3, nProbe = 2)
@@ -2448,17 +2458,11 @@ object SparkEntry {
     // measured price of refit-free maintenance). Budget:quality tiers
     // for the live index: q110 = budget (0.57), this = quality (0.95).
     "q123_stream_quality" -> ((s, dir) => {
-      val seedRoot = q110SeedRoot(s, dir)
-      val root = newTmpDir("graft_q123run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.IvfIndex.admitBatch(b.sparkSession, b, id,
-          "vec_id", "embedding", store, "emb_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, q110SeedRoot(s, dir), "graft_q123run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.IvfIndex.admitBatch(b.sparkSession, b, id,
+            "vec_id", "embedding", store, "emb_idx")
+        })
       val batch = t(s, dir, "embeddings").filter(pmod(col("vec_id"), lit(10)) === 0)
       graft.operators.IvfIndex.topK(s, batch, "vec_id", "embedding",
           store, "emb_idx", k = 3, nProbe = 6)
@@ -3092,17 +3096,11 @@ object SparkEntry {
     // serving q97's probes must hash-match q97's full-corpus oracle
     // (SHARED verbatim), the strongest statement the gate can make.
     "q113_stream_bm25" -> ((s, dir) => {
-      val seedRoot = q113SeedRoot(s, dir)
-      val root = newTmpDir("graft_q113run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.PostingsIndex.admitBatch(b.sparkSession, b, id,
-          "doc_id", "text", store, "bm_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, q113SeedRoot(s, dir), "graft_q113run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.PostingsIndex.admitBatch(b.sparkSession, b, id,
+            "doc_id", "text", store, "bm_idx")
+        })
       val probes = t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("probe_id"),
           slice(filter(graft.functions.TextFunctions.tokens(col("text")),
@@ -3125,17 +3123,11 @@ object SparkEntry {
     // statement the upsert-fold can make (exact df subtraction, dl
     // replacement, counter updates all land in the hash).
     "q126_stream_bm25_upsert" -> ((s, dir) => {
-      val seedRoot = q126SeedRoot(s, dir)
-      val root = newTmpDir("graft_q126run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.PostingsIndex.admitUpsertBatch(b.sparkSession, b, id,
-          "doc_id", "text", store, "bm_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, q126SeedRoot(s, dir), "graft_q126run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.PostingsIndex.admitUpsertBatch(b.sparkSession, b, id,
+            "doc_id", "text", store, "bm_idx")
+        })
       // probes read the REVISED corpus (same CASE as the oracle's d CTE)
       val revised = when(pmod(col("doc_id"), lit(10)) === 0,
         concat(col("text"), lit(" revised edition"))).otherwise(col("text"))
@@ -3406,16 +3398,10 @@ object SparkEntry {
     // q130's SQL verbatim — canonicity: the managed index changes WHERE
     // the signatures live, never what the screen computes.
     "q133_image_screen_indexed" -> ((s, dir) => {
-      val seedRoot = q133SeedRoot(s, dir)
-      val root = newTmpDir("graft_q133run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.PerceptualIndex.admitBatch(b.sparkSession, b, id, store, "img_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, q133SeedRoot(s, dir), "graft_q133run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.PerceptualIndex.admitBatch(b.sparkSession, b, id, store, "img_idx")
+        })
       def hashed(n: Int, vs: Seq[Int]) =
         graft.operators.Multimodal.dHashes(perceptualCards(s, dir, n, vs))
       val storedIds = graft.operators.PerceptualIndex
@@ -3465,15 +3451,10 @@ object SparkEntry {
     // oracle as an unrolled reachability chain over the hamming pairs.
     "q139_image_admission_loop" -> ((s, dir) => {
       val seedRoot = q139SeedRoot(s, dir)
-      val root = newTmpDir("graft_q139run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.PerceptualIndex.admitNovelBatch(b.sparkSession, b, id, store, "img_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, seedRoot, "graft_q139run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.PerceptualIndex.admitNovelBatch(b.sparkSession, b, id, store, "img_idx")
+        })
       val staged = s.read.parquet(s"$seedRoot/stage").select(col("id"))
       val finalIds = graft.operators.PerceptualIndex
         .signatures(s, store, "img_idx").select(col("id").as("_in_id"))
@@ -3550,16 +3531,10 @@ object SparkEntry {
     // no takedown). The final screen is q138's function of the same
     // video universe, so the oracle is q138's SQL verbatim.
     "q140_video_screen_indexed" -> ((s, dir) => {
-      val seedRoot = q140SeedRoot(s, dir)
-      val root = newTmpDir("graft_q140run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.FrameIndex.admitNovelBatch(b.sparkSession, b, id, store, "vid_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, q140SeedRoot(s, dir), "graft_q140run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.FrameIndex.admitNovelBatch(b.sparkSession, b, id, store, "vid_idx")
+        })
       val sigs = graft.operators.Multimodal.dHashes(videoFrameCards(s, dir))
         .select(expr("item_id div 10").as("id"),
           pmod(col("item_id"), lit(10)).cast("int").as("frame"),
@@ -3593,15 +3568,10 @@ object SparkEntry {
     // because the odd-lag filterbank moves every band under the flip.
     "q141_audio_admission_loop" -> ((s, dir) => {
       val seedRoot = q141SeedRoot(s, dir)
-      val root = newTmpDir("graft_q141run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.PerceptualIndex.admitNovelBatch(b.sparkSession, b, id, store, "sfp_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, seedRoot, "graft_q141run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.PerceptualIndex.admitNovelBatch(b.sparkSession, b, id, store, "sfp_idx")
+        })
       val staged = s.read.parquet(s"$seedRoot/stage").select(col("id"))
       val finalIds = graft.operators.PerceptualIndex
         .signatures(s, store, "sfp_idx").select(col("id").as("_in_id"))
@@ -3623,16 +3593,11 @@ object SparkEntry {
     // replaced seed bases read 0, their upscale replacements 1.
     "q142_image_keeper_admission" -> ((s, dir) => {
       val seedRoot = q142SeedRoot(s, dir)
-      val root = newTmpDir("graft_q142run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.PerceptualIndex.admitKeepBestBatch(b.sparkSession, b, id,
-          store, "keep_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, seedRoot, "graft_q142run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.PerceptualIndex.admitKeepBestBatch(b.sparkSession, b, id,
+            store, "keep_idx")
+        })
       val seeds = t(s, dir, "documents").select(col("doc_id").as("g"))
         .orderBy(col("g")).limit(30)
         .withColumn("gi", row_number().over(
@@ -3664,15 +3629,10 @@ object SparkEntry {
     // machinery with BOTH directed denominators.
     "q143_video_supersede_admission" -> ((s, dir) => {
       val seedRoot = q143SeedRoot(s, dir)
-      val root = newTmpDir("graft_q143run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.FrameIndex.admitSupersedeBatch(b.sparkSession, b, id, store, "sup_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, seedRoot, "graft_q143run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.FrameIndex.admitSupersedeBatch(b.sparkSession, b, id, store, "sup_idx")
+        })
       val seeds = t(s, dir, "documents").select(col("doc_id").as("g"))
         .orderBy(col("g")).limit(30)
         .withColumn("gi", row_number().over(
@@ -3706,15 +3666,10 @@ object SparkEntry {
     // the containment formula + 3-drain set logic.
     "q144_text_supersede_admission" -> ((s, dir) => {
       val seedRoot = q144SeedRoot(s, dir)
-      val root = newTmpDir("graft_q144run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.startSupersede(stream,
-        "doc_id", "text", store, "txt_idx", minContainment = 0.75,
-        s"$root/chk", _ => ()).awaitTermination()
+      val store = seededDrain(s, seedRoot, "graft_q144run")((stream, store, chk) =>
+        AdmissionStream.startSupersede(stream,
+          "doc_id", "text", store, "txt_idx", minContainment = 0.75,
+          chk, _ => ()))
       val derived = q144Derived(s, dir)
       val seedIds = derived.filter(col("gi").between(1, 8))
         .select((col("g") * 10 + 1).as("doc_id"))
@@ -3743,16 +3698,11 @@ object SparkEntry {
     // IVF chain + the probe/cosine screen + 3-drain set logic.
     "q145_semantic_admission_loop" -> ((s, dir) => {
       val seedRoot = q145SeedRoot(s, dir)
-      val root = newTmpDir("graft_q145run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.IvfIndex.admitNovelBatch(b.sparkSession, b, id,
-          "vec_id", "embedding", store, "emb_idx", threshold = 0.95, nProbe = 2)
-      }.awaitTermination()
+      val store = seededDrain(s, seedRoot, "graft_q145run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.IvfIndex.admitNovelBatch(b.sparkSession, b, id,
+            "vec_id", "embedding", store, "emb_idx", threshold = 0.95, nProbe = 2)
+        })
       val staged = s.read.parquet(s"$seedRoot/stage").select(col("vec_id"))
       val finalIds = graft.operators.IvfIndex
         .vectors(s, store, "emb_idx").select(col("id").as("_in_id"))
@@ -3775,15 +3725,10 @@ object SparkEntry {
     // quality-keeper set logic over 3 drains.
     "q146_video_keeper_admission" -> ((s, dir) => {
       val seedRoot = q146SeedRoot(s, dir)
-      val root = newTmpDir("graft_q146run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        graft.operators.FrameIndex.admitKeepBestBatch(b.sparkSession, b, id, store, "keep_idx")
-      }.awaitTermination()
+      val store = seededDrain(s, seedRoot, "graft_q146run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          graft.operators.FrameIndex.admitKeepBestBatch(b.sparkSession, b, id, store, "keep_idx")
+        })
       val seeds = t(s, dir, "documents").select(col("doc_id").as("g"))
         .orderBy(col("g")).limit(30)
         .withColumn("gi", row_number().over(
@@ -3816,21 +3761,16 @@ object SparkEntry {
     // threshold) + quality-keeper set logic over 3 drains.
     "q147_text_keeper_admission" -> ((s, dir) => {
       val seedRoot = q147SeedRoot(s, dir)
-      val root = newTmpDir("graft_q147run").toString
-      copyTree(s"$seedRoot/idx", s"$root/idx")
-      val store = new graft.operators.TableStore(s"$root/idx")
-      val streamSchema = s.read.parquet(s"$seedRoot/stage").schema
-      val stream = s.readStream.schema(streamSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$seedRoot/stage")
-      AdmissionStream.drain(stream, s"$root/chk") { (b, id) =>
-        // the fold commits EAGERLY inside admitKeepBestBatch; its returned
-        // pass-through rows are for callers with a sink — this loop has
-        // none, so evaluating them would re-scan the batch for nothing
-        implicit val scope: graft.operators.CacheScope = new graft.operators.CacheScope
-        try graft.operators.SignatureIndex.admitKeepBestBatch(b.sparkSession, b, id,
-          "doc_id", "text", "q", store, "keep_idx", threshold = 0.5)
-        finally scope.release()
-      }.awaitTermination()
+      val store = seededDrain(s, seedRoot, "graft_q147run")((stream, store, chk) =>
+        AdmissionStream.drain(stream, chk) { (b, id) =>
+          // the fold commits EAGERLY inside admitKeepBestBatch; its returned
+          // pass-through rows are for callers with a sink — this loop has
+          // none, so evaluating them would re-scan the batch for nothing
+          implicit val scope: graft.operators.CacheScope = new graft.operators.CacheScope
+          try graft.operators.SignatureIndex.admitKeepBestBatch(b.sparkSession, b, id,
+            "doc_id", "text", "q", store, "keep_idx", threshold = 0.5)
+          finally scope.release()
+        })
       val seedIds = t(s, dir, "documents")
         .filter(size(split(col("text"), " ")) >= 40)
         .select(col("doc_id").as("g"))
