@@ -814,7 +814,7 @@ object IvfIndex {
 
   /** Queries in probe shape: `(q_id, q_v, q_nrm)` with zero-norm
     * (directionless) rows dropped. */
-  private[operators] def probeQueries(
+  private[graft] def probeQueries(
       batch: DataFrame, idCol: String, vecCol: String): DataFrame =
     batch
       .select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_v"))
@@ -823,7 +823,7 @@ object IvfIndex {
 
   /** A centroid-vectors frame in probe shape: `(cell, c_v, c_nrm)`,
     * zero-norm cells dropped. */
-  private[operators] def probeCentroidsOf(centroidVectors: DataFrame): DataFrame =
+  private[graft] def probeCentroidsOf(centroidVectors: DataFrame): DataFrame =
     centroidVectors
       .select(col("cell"), col("c_v"))
       .withColumn("c_nrm", l2Norm(col("c_v")))
@@ -834,7 +834,7 @@ object IvfIndex {
     * (one definition, so the (cosine desc, cell asc) tie-break can never
     * diverge between tiers). `q` carries `q_id`/`q_v`/`q_nrm` plus any
     * extra columns, which pass through; returns `q`'s columns + `cell`. */
-  private[operators] def probeCells(
+  private[graft] def probeCells(
       q: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
     val probeW = Window.partitionBy(col("q_id"))
       .orderBy(col("c_sim").desc, col("cell").asc)

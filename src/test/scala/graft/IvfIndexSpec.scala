@@ -79,6 +79,34 @@ class IvfIndexSpec extends SparkSpec {
     scope.release()
   }
 
+  test("probeCells ranks cells by cosine desc then cell asc, drops zero norms, cuts at nProbe") {
+    val s = spark; import s.implicits._
+    // cells 1 and 2 are identical; cell 3 has no direction
+    val cents = Seq(
+      0 -> Array(1.0, 0.0, 0.0), 1 -> Array(0.0, 1.0, 0.0), 2 -> Array(0.0, 1.0, 0.0),
+      3 -> Array(0.0, 0.0, 0.0), 4 -> Array(1.0, 1.0, 0.0)).toDF("cell", "c_v")
+    // 10 ties on cells 1/2; 11 has no direction; 12 is orthogonal to every cell
+    val queries = Seq(
+      (10L, Array(0.0f, 1.0f, 0.0f), "a"), (11L, Array(0.0f, 0.0f, 0.0f), "b"),
+      (12L, Array(0.0f, 0.0f, 1.0f), "c")).toDF("vec_id", "embedding", "tag")
+    def probed(nProbe: Int): Map[Long, Set[(Int, String)]] = {
+      val q = IvfIndex.probeQueries(queries, "vec_id", "embedding")
+        .withColumn("tag", lit("x"))
+      IvfIndex.probeCells(q, IvfIndex.probeCentroidsOf(cents), nProbe)
+        .select(col("q_id"), col("cell"), col("tag")).as[(Long, Int, String)].collect()
+        .groupBy(_._1).map { case (id, rows) => id -> rows.map(r => r._2 -> r._3).toSet }
+    }
+    def cells(nProbe: Int): Map[Long, Set[Int]] = probed(nProbe).map { case (id, r) => id -> r.map(_._1) }
+    assert(cells(1) === Map(10L -> Set(1), 12L -> Set(0)))
+    assert(cells(2) === Map(10L -> Set(1, 2), 12L -> Set(0, 1)))
+    assert(cells(3) === Map(10L -> Set(1, 2, 4), 12L -> Set(0, 1, 2)))
+    // nProbe ≥ nCells: every live cell, the zero-norm one never
+    assert(cells(5) === Map(10L -> Set(0, 1, 2, 4), 12L -> Set(0, 1, 2, 4)))
+    assert(cells(50) === cells(5))
+    // extra query columns pass through
+    assert(probed(1)(10L) === Set(1 -> "x"))
+  }
+
   test("topK under partial probe returns only probed-cell neighbours, ranked") {
     implicit val scope: CacheScope = new CacheScope
     val store = new TableStore(tmpDir("ivfidx"))
