@@ -1,8 +1,9 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ProbeCells
 import graft.functions.VectorFunctions._
 
 /** Persisted IVF index over an embedding corpus — the embedding-side
@@ -34,7 +35,8 @@ import graft.functions.VectorFunctions._
   *    and re-derives.
   *
   * Scale shape (unchanged from [[Similarity.ivfTopKWithCentroids]]):
-  * centroids BROADCAST everywhere they appear; assignment is one narrow
+  * centroids BROADCAST everywhere they appear (the serve probe's model
+  * once per pinned version, [[centroidModel]]); assignment is one narrow
   * pass over the batch (argmax as a partial-combining max_by aggregate —
   * the exchange ships one row per vector, never batch × nCells);
   * [[append]] commits ONLY the batch's narrow `(id, v, cell)` rows — the
@@ -214,9 +216,22 @@ object IvfIndex {
     centroidsAt(spark, store, name, m)
   }
 
-  private[operators] def centroidsAt(
+  private def centroidsAt(
       spark: SparkSession, store: TableStore, name: String, m: IvfManifest): DataFrame =
     centroidVectorsOf(store.snapshotAt(spark, centroidsTable(name), m.centroids))
+
+  private val models = new TableStore.VersionMemo[Broadcast[ProbeCells.Model]](16)
+
+  /** The model at `m`'s pin in probe shape — the [[probeCentroidsOf]] rows
+    * of [[centroidsAt]] — collected and broadcast ONCE per pinned version
+    * (keyed like the store's pinned readers), so a warm probe reads no
+    * centroid table and aggregates nothing. The bytes shipped are the
+    * model's, as a per-request centroid broadcast would ship them. */
+  private[graft] def centroidModel(
+      spark: SparkSession, store: TableStore, name: String,
+      m: IvfManifest): Broadcast[ProbeCells.Model] =
+    models(store, spark, centroidsTable(name), m.centroids)(
+      probeModelOf(centroidsAt(spark, store, name, m)))
 
   /** The indexed corpus `(id, v, cell)` as served (manifest-pinned read,
     * overlay-merged: revision rows shadow their base ids). */
@@ -225,19 +240,17 @@ object IvfIndex {
     overlay(store, name, m).served(spark, store, vectorsTable(name))
   }
 
-  /** The SERVED float tier PRUNED to the buckets the probed cells hash
-    * into: ONE narrow bounded collect over the (batch-bounded) probe
-    * cell rows, then a directory-level `_bucket isin(...)` read of the
-    * base — bytes read ∝ the probed cells' buckets, never the corpus —
-    * with the compaction-bounded revision overlay merged in unpruned
-    * (rows outside the probed cells are dropped by the cell equi-join,
-    * so results are exact). A legacy plain layout serves the full read. */
+  /** The SERVED float tier PRUNED to the `touched` buckets: a
+    * directory-level `_bucket isin(...)` read of the base — bytes read ∝
+    * the probed cells' buckets, never the corpus — with the
+    * compaction-bounded revision overlay merged in unpruned (rows outside
+    * the probed cells are dropped by the cell equi-join, so results are
+    * exact). */
   private def vectorsForCells(
       spark: SparkSession, store: TableStore, name: String, m: IvfManifest,
-      probeCellRows: DataFrame): DataFrame =
+      touched: Seq[Int]): DataFrame =
     overlay(store, name, m).merged(spark, store, vectorsTable(name),
-      IndexTier.prunedAt(spark, store, vectorsTable(name), m.vectors,
-        IndexTier.touchedBuckets(store, vectorsTable(name), m.vectors, probeCellRows)))
+      IndexTier.prunedAt(spark, store, vectorsTable(name), m.vectors, touched))
 
   private def centroidVectorsOf(fittedLongForm: DataFrame): DataFrame =
     KMeans.centroidVectors(fittedLongForm)
@@ -716,14 +729,20 @@ object IvfIndex {
   /** Top-k stored neighbours for each batch vector, probing the `nProbe`
     * nearest stored cells. Self-matches are excluded by id equality —
     * callers indexing and querying overlapping id spaces from different
-    * tables should disambiguate ids first.
+    * tables should disambiguate ids first. Batch ids should be distinct:
+    * rows repeating an id each probe their own `nProbe` cells and share
+    * one top-k over the candidates of all of them.
     *
-    * Plan: batch × broadcast(centroids) ranks probe cells (window over the
-    * batch's own nCells candidate rows); candidates are an equi-join on
-    * `cell` against the stored `(id, v, cell)` rows — dir-pruned to probed
-    * cells' data by the join itself; scoring happens inside the join so
-    * the aggregation exchange carries `(id, id, double)`, and the partial
-    * top-k aggregate ships k rows per (query, partition). */
+    * Plan: each batch row ranks its `nProbe` cells against the pinned,
+    * broadcast centroid model ([[probeCells]], one narrow pass). On a
+    * cell-bucketed float tier the probe rows — batch × nProbe, the
+    * batch-bounded side — are collected ONCE: the driver derives the
+    * touched buckets from them (no job) and the same rows broadcast into
+    * the candidate join against the bucket-pruned stored `(id, v, cell)`
+    * rows, so the stored side never shuffles. A legacy plain layout joins
+    * the probe plan against the full served read. Scoring happens inside
+    * the join so the aggregation exchange carries `(id, id, double)`, and
+    * the partial top-k aggregate ships k rows per (query, partition). */
   def topK(
       spark: SparkSession,
       batch: DataFrame,
@@ -734,22 +753,21 @@ object IvfIndex {
       k: Int,
       nProbe: Int): DataFrame = {
     val (m, _) = requireManifest(store, name)
-    // the float tier is cell-bucketed: collect the probed cells' bucket
-    // list (ONE narrow bounded job over the batch-bounded probe rows)
-    // and read only those buckets ([[vectorsForCells]]); the probe side
-    // is trigger/probe-table-bounded, so broadcast it explicitly — size
-    // estimates over a bucket-pruned scan are too coarse to pick the
-    // build side, and the stored side must never shuffle for a serve
-    val q = probeQueries(batch, idCol, vecCol)
-    val probes = probeCells(q, probeCentroidsOf(centroidsAt(spark, store, name, m)),
-        nProbe)
+    val probes = probeCells(probeQueries(batch, idCol, vecCol),
+        centroidModel(spark, store, name, m), nProbe)
       .select(col("q_id"), col("q_v"), col("q_nrm"), col("cell"))
     store.bucketSpecAt(vectorsTable(name), m.vectors) match {
       case None => // legacy plain layout: the old full-read join
         topKFromProbes(probes, overlay(store, name, m).served(spark, store, vectorsTable(name)), k)
-      case Some(_) =>
-        topKFromProbes(broadcast(probes),
-          vectorsForCells(spark, store, name, m, probes.select(col("cell"))), k)
+      case Some(spec) =>
+        // broadcast explicitly: size estimates over a bucket-pruned scan
+        // are too coarse to pick the build side, and the stored side must
+        // never shuffle for a serve
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(probes.collect(): _*), probes.schema)
+        val touched = local.select(spec.bucketColumn).collect().map(_.getInt(0)).distinct
+        topKFromProbes(broadcast(local),
+          vectorsForCells(spark, store, name, m, touched.toSeq), k)
     }
   }
 
@@ -769,7 +787,7 @@ object IvfIndex {
       nProbe: Int): DataFrame = {
     val (m, _) = requireManifest(store, name)
     topKAgainst(batch, idCol, vecCol, k, nProbe,
-      centroidsAt(spark, store, name, m),
+      centroidModel(spark, store, name, m),
       dequantized(qServed(spark, store, name, m)))
   }
 
@@ -800,7 +818,7 @@ object IvfIndex {
     require(shortlist >= k && k >= 1, s"need shortlist $shortlist >= k $k >= 1")
     val (m, _) = requireManifest(store, name)
     val short = topKAgainst(batch, idCol, vecCol, shortlist, nProbe,
-        centroidsAt(spark, store, name, m),
+        centroidModel(spark, store, name, m),
         dequantized(qServed(spark, store, name, m)))
       .select(col("vec_id"), col("neighbor_id"))
     val q = batch
@@ -823,27 +841,32 @@ object IvfIndex {
 
   /** A centroid-vectors frame in probe shape: `(cell, c_v, c_nrm)`,
     * zero-norm cells dropped. */
-  private[graft] def probeCentroidsOf(centroidVectors: DataFrame): DataFrame =
+  private def probeCentroidsOf(centroidVectors: DataFrame): DataFrame =
     centroidVectors
       .select(col("cell"), col("c_v"))
       .withColumn("c_nrm", l2Norm(col("c_v")))
       .filter(col("c_nrm") > 0)
 
-  /** Rank each query's `nProbe` nearest cells against the BROADCAST
-    * centroids — the probe stage every persisted-index searcher shares
-    * (one definition, so the (cosine desc, cell asc) tie-break can never
-    * diverge between tiers). `q` carries `q_id`/`q_v`/`q_nrm` plus any
-    * extra columns, which pass through; returns `q`'s columns + `cell`. */
-  private[graft] def probeCells(
-      q: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("cell").asc)
-    q.crossJoin(broadcast(cents))
-      .withColumn("c_sim", dot(col("q_v"), col("c_v")) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("c_rank", row_number().over(probeW))
-      .filter(col("c_rank") <= nProbe)
-      .select(q.columns.map(col).toIndexedSeq :+ col("cell"): _*)
+  /** A centroid-vectors frame as a broadcast probe model: its
+    * [[probeCentroidsOf]] rows, collected (≤ nCells rows). */
+  private[graft] def probeModelOf(centroidVectors: DataFrame): Broadcast[ProbeCells.Model] = {
+    val rows = probeCentroidsOf(centroidVectors).collect()
+    centroidVectors.sparkSession.sparkContext.broadcast(ProbeCells.Model(
+      rows.map(_.getInt(0)), rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2))))
   }
+
+  /** Rank each query row's `nProbe` nearest cells against the broadcast
+    * centroid `model` — the probe stage every persisted-index searcher
+    * shares (one definition, so the (cosine desc, cell asc) tie-break can
+    * never diverge between tiers). One narrow per-row pass
+    * ([[ProbeCells]]): no cross join, no exchange. Each row ranks its own
+    * cells, so rows repeating a query id each probe their own `nProbe`.
+    * `q` carries `q_id`/`q_v`/`q_nrm` ([[probeQueries]]) plus any extra
+    * columns, which pass through; returns `q`'s columns + `cell`. */
+  private[graft] def probeCells(
+      q: DataFrame, model: Broadcast[ProbeCells.Model], nProbe: Int): DataFrame =
+    q.select(q.columns.map(col).toIndexedSeq :+ explode(
+      ProbeCells.probe_cells(col("q_v"), col("q_nrm"), model, nProbe)).as("cell"): _*)
 
   private def topKAgainst(
       batch: DataFrame,
@@ -851,10 +874,10 @@ object IvfIndex {
       vecCol: String,
       k: Int,
       nProbe: Int,
-      centroidVectors: DataFrame,
+      model: Broadcast[ProbeCells.Model],
       corpusVectors: DataFrame): DataFrame = {
     val q = probeQueries(batch, idCol, vecCol)
-    val probes = probeCells(q, probeCentroidsOf(centroidVectors), nProbe)
+    val probes = probeCells(q, model, nProbe)
       .select(col("q_id"), col("q_v"), col("q_nrm"), col("cell"))
     topKFromProbes(probes, corpusVectors, k)
   }

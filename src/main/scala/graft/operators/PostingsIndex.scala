@@ -361,10 +361,12 @@ object PostingsIndex {
       .groupBy(col("doc_id"), col("dl"), col("term")) // dl functional on doc_id
       .agg(count(lit(1)).as("tf"))
 
-  /** `(term, df)` of a postings frame — postings are unique per
-    * (doc, term), so df is a row count. */
-  private def termStatsOf(postings: DataFrame): DataFrame =
-    postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
+  /** `(term, df)` of a tokenized frame — one row per doc, so df counts
+    * each doc's DISTINCT terms in one term-keyed aggregate, without the
+    * postings' (doc, term) exchange. */
+  private def termDfOf(tok: DataFrame): DataFrame =
+    tok.select(explode(array_distinct(col("_toks"))).as("term"))
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
 
   // ------------------------------------------------------------------ build
 
@@ -396,10 +398,7 @@ object PostingsIndex {
         // query's term buckets ([[postingsForTerms]])
         val pv = store.writeBucketed(postingsOf(tok), postingsTable(name),
           IndexTier.keyed(PostBuckets, "term"))
-        // derive df from the COMMITTED postings (a parquet read) so the
-        // tokenize+explode chain is never recomputed for the third table
-        val tv = store.writeBucketed(
-          termStatsOf(store.snapshotAt(spark, postingsTable(name), pv)),
+        val tv = store.writeBucketed(termDfOf(tok),
           termStatsTable(name), IndexTier.keyed(TermBuckets, "term"))
         val (n, sdl) = docCounters(store.snapshotAt(spark, docsTable(name), dv))
         IndexTier.commitManifest(store, manifestTable(name),
@@ -473,7 +472,7 @@ object PostingsIndex {
           store.snapshotAt(spark, postingsTable(name), m.postings), freshPostings),
         // df merge is CELL-WISE SUM — the one sketch-free mergeable tier;
         // committed as an O(batch-terms) delta, folded amortized
-        () => commitTermDelta(spark, store, name, m, termStatsOf(freshPostings))))
+        () => commitTermDelta(spark, store, name, m, termDfOf(fresh))))
       val dv = dvA.asInstanceOf[Int]
       val pv = pvA.asInstanceOf[Int]
       val (tv, dltv) = tvA.asInstanceOf[(Int, Option[Int])]
@@ -572,7 +571,7 @@ object PostingsIndex {
       val removedTermDf = replacedDocs
         .select(explode(col("terms")).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val termDelta = termStatsOf(postingsOf(fresh))
+      val termDelta = termDfOf(fresh)
         .unionByName(removedTermDf.withColumn("df", -col("df")))
         .groupBy(col("term")).agg(sum(col("df")).as("df"))
       // the termstats-delta commit and the overlay set's commit (its

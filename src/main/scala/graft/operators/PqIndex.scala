@@ -178,9 +178,7 @@ object PqIndex {
 
     val q = IvfIndex.probeQueries(batch, idCol, vecCol)
       .withColumn("q_u", transform(col("q_v"), x => x / col("q_nrm")))
-    val probes = IvfIndex.probeCells(
-        q, IvfIndex.probeCentroidsOf(
-          IvfIndex.centroidsAt(spark, store, name, man)), nProbe)
+    val probes = IvfIndex.probeCells(q, IvfIndex.centroidModel(spark, store, name, man), nProbe)
       .select(col("q_id"), col("q_u"), col("cell"))
 
     // candidates: one row per (query, stored code row) in the probed

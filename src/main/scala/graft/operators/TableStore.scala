@@ -82,6 +82,24 @@ object TableStore {
     * either committed — the dir would be renamed away — or died) and are
     * swept on the next prune. Generous vs any plausible parquet write. */
   val StaleStagingMs: Long = 30L * 60 * 1000
+
+  /** A memo of values derived from one committed table version, per
+    * session. A committed version dir is immutable, but a version NUMBER
+    * is not: a rollback (the CAS-retry path) recreates `vN` with different
+    * files, so the key carries the dir's mtime and a recreated version
+    * never serves a stale value; the key is re-derived on every lookup, so
+    * a dir [[TableStore.prune]] deleted fails loudly instead of hitting.
+    * Bounded by wholesale clear past `bound` entries. */
+  final class VersionMemo[A](bound: Int) {
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, A]()
+
+    def apply(store: TableStore, spark: SparkSession, name: String, v: Int)(
+        derive: => A): A = {
+      val key = store.versionKey(spark, name, v)
+      if (memo.size > bound) memo.clear()
+      memo.computeIfAbsent(key, _ => derive)
+    }
+  }
 }
 
 class TableStore(val root: String) {
@@ -163,34 +181,33 @@ class TableStore(val root: String) {
     else None
   }
 
-  /** Version-pinned parquet readers, memoized per (session, table,
-    * version): a committed version dir is immutable, but building a
-    * reader over it is NOT free — the file listing, footer schema read
-    * and relation resolution cost tens of milliseconds of driver time
-    * (sometimes a schema-inference job), and a single admission drain
-    * builds the same pinned reads many times over. The key carries the
-    * dir's mtime so a version number recreated after a rollback (same
-    * `vN`, different files — the CAS-retry path) never serves a stale
-    * file list; existence is re-checked on every hit because [[prune]]
-    * deletes superseded dirs. Bounded by wholesale clear — entries are
-    * plans, not data, and stores are per-overlay-root. */
-  private val readerMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def parquetAt(spark: SparkSession, name: String, v: Int): DataFrame = {
+  /** The [[TableStore.VersionMemo]] key of `name` at `v`: the session,
+    * the version dir (which names the store) and the dir's mtime. Fails
+    * when the version does not exist. */
+  private[graft] def versionKey(spark: SparkSession, name: String, v: Int): String = {
     val dir = versionPath(name, v)
     if (!Files.exists(dir))
       throw new IllegalStateException(
         s"table $name has no version v$v under $root (pruned or never committed)")
-    val key = System.identityHashCode(spark) + "#" + name + "#" + v + "#" +
-      Files.getLastModifiedTime(dir).toMillis
-    if (readerMemo.size > 256) readerMemo.clear()
-    readerMemo.computeIfAbsent(key, _ =>
-      declaredSchemaAt(name, v) match {
-        case Some(s) => spark.read.schema(s).parquet(dir.toString)
-        case None => spark.read.parquet(dir.toString)
-      })
+    System.identityHashCode(spark) + "#" + dir + "#" + Files.getLastModifiedTime(dir).toMillis
   }
+
+  /** Version-pinned parquet readers, memoized per (session, table,
+    * version): building a reader over a version dir is NOT free — the
+    * file listing, footer schema read and relation resolution cost tens
+    * of milliseconds of driver time (sometimes a schema-inference job),
+    * and a single admission drain builds the same pinned reads many times
+    * over. Entries are plans, not data. */
+  private val readerMemo = new TableStore.VersionMemo[DataFrame](256)
+
+  private def parquetAt(spark: SparkSession, name: String, v: Int): DataFrame =
+    readerMemo(this, spark, name, v) {
+      val dir = versionPath(name, v).toString
+      declaredSchemaAt(name, v) match {
+        case Some(s) => spark.read.schema(s).parquet(dir)
+        case None => spark.read.parquet(dir)
+      }
+    }
 
   /** Read the table with its logical schema (the `_bucket` layout column,
     * when present, stays internal). */

@@ -92,7 +92,7 @@ class IvfIndexSpec extends SparkSpec {
     def probed(nProbe: Int): Map[Long, Set[(Int, String)]] = {
       val q = IvfIndex.probeQueries(queries, "vec_id", "embedding")
         .withColumn("tag", lit("x"))
-      IvfIndex.probeCells(q, IvfIndex.probeCentroidsOf(cents), nProbe)
+      IvfIndex.probeCells(q, IvfIndex.probeModelOf(cents), nProbe)
         .select(col("q_id"), col("cell"), col("tag")).as[(Long, Int, String)].collect()
         .groupBy(_._1).map { case (id, rows) => id -> rows.map(r => r._2 -> r._3).toSet }
     }
@@ -105,6 +105,39 @@ class IvfIndexSpec extends SparkSpec {
     assert(cells(50) === cells(5))
     // extra query columns pass through
     assert(probed(1)(10L) === Set(1 -> "x"))
+    // rows repeating a query id each rank their own cells
+    val twice = Seq((10L, Array(0.0f, 1.0f, 0.0f)), (10L, Array(1.0f, 0.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    assert(IvfIndex.probeCells(IvfIndex.probeQueries(twice, "vec_id", "embedding"),
+      IvfIndex.probeModelOf(cents), 1).select(col("cell")).as[Int].collect().sorted === Array(0, 1))
+  }
+
+  test("a warm topK on a bucketed index runs at most 4 Spark jobs") {
+    implicit val scope: CacheScope = new CacheScope
+    val store = new TableStore(tmpDir("ivfidx"))
+    IvfIndex.build(corpus(), "vec_id", "embedding", 2, 2, store, "emb")
+    def serve() = IvfIndex.topK(spark, batch(), "vec_id", "embedding",
+      store, "emb", k = 3, nProbe = 1).collect()
+    val cold = serve()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val group = "ivf-warm-topk"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "warm topK")
+      val warm = try serve() finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBusAccess.drain(sc)
+      assert(warm.toSet === cold.toSet)
+      info(s"a warm topK ran ${jobs.get} Spark jobs")
+      assert(jobs.get <= 4, s"a warm topK ran ${jobs.get} Spark jobs")
+    } finally sc.removeSparkListener(listener)
+    scope.release()
   }
 
   test("topK under partial probe returns only probed-cell neighbours, ranked") {
