@@ -765,9 +765,8 @@ object IvfIndex {
         // never shuffle for a serve
         val local = spark.createDataFrame(
           java.util.Arrays.asList(probes.collect(): _*), probes.schema)
-        val touched = local.select(spec.bucketColumn).collect().map(_.getInt(0)).distinct
-        topKFromProbes(broadcast(local),
-          vectorsForCells(spark, store, name, m, touched.toSeq), k)
+        val touched = local.select(spec.bucketColumn).collect().map(_.getInt(0)).distinct.toSeq
+        topKFromProbes(broadcast(local), vectorsForCells(spark, store, name, m, touched), k)
     }
   }
 

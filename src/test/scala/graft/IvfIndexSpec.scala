@@ -86,9 +86,8 @@ class IvfIndexSpec extends SparkSpec {
       0 -> Array(1.0, 0.0, 0.0), 1 -> Array(0.0, 1.0, 0.0), 2 -> Array(0.0, 1.0, 0.0),
       3 -> Array(0.0, 0.0, 0.0), 4 -> Array(1.0, 1.0, 0.0)).toDF("cell", "c_v")
     // 10 ties on cells 1/2; 11 has no direction; 12 is orthogonal to every cell
-    val queries = Seq(
-      (10L, Array(0.0f, 1.0f, 0.0f), "a"), (11L, Array(0.0f, 0.0f, 0.0f), "b"),
-      (12L, Array(0.0f, 0.0f, 1.0f), "c")).toDF("vec_id", "embedding", "tag")
+    val queries = Seq(10L -> Array(0.0f, 1.0f, 0.0f), 11L -> Array(0.0f, 0.0f, 0.0f),
+      12L -> Array(0.0f, 0.0f, 1.0f)).toDF("vec_id", "embedding")
     def probed(nProbe: Int): Map[Long, Set[(Int, String)]] = {
       val q = IvfIndex.probeQueries(queries, "vec_id", "embedding")
         .withColumn("tag", lit("x"))
