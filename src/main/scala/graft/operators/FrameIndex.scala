@@ -43,9 +43,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: admission commits ONE plain O(batch) memtable append;
   * every screen reads a bounded set of constant-size buckets (∝ the
   * batch's probe cells — [[graft.PrunedScreenSpec]] measures it); the
-  * amortized fold is the one stored-size rewrite. A legacy index (no
-  * `band_v` pin) falls back to deriving the projection from the full
-  * frames read until its next full rewrite.
+  * amortized fold is the one stored-size rewrite.
   */
 object FrameIndex {
 
@@ -71,9 +69,8 @@ object FrameIndex {
     * ids. `hasQuality` marks a KEEPER family ([[buildWithQuality]]): the
     * frames member carries a per-video quality column and mutates through
     * [[admitKeepBestBatch]]'s replace-if-better fold — the two layouts
-    * never mix (the [[PerceptualIndex.PercManifest]] guard). `band =
-    * None` marks a legacy pre-projection index (full-derive fallback);
-    * `dlt = None` ⇔ empty memtable. */
+    * never mix (the [[PerceptualIndex.PercManifest]] guard). `dlt = None`
+    * ⇔ empty memtable. */
   private[graft] final case class FrameManifest(
       frames: Int, maxHamming: Int, minContainment: Double,
       lastBatchId: Long = -1L, rmFrames: Option[Int] = None,
@@ -87,8 +84,7 @@ object FrameIndex {
   }
 
   /** Absent keys predate the tombstone/quality/projection tiers (older
-    * persisted index): no tombstones, a plain family, the legacy
-    * full-derive layout. */
+    * persisted index): no tombstones, a plain family, no band pin. */
   private[graft] def readManifest(
       store: TableStore, name: String): Option[(FrameManifest, Int)] =
     IndexTier.readManifest(store, manifestTable(name), "frame-index manifest") { f =>
@@ -134,17 +130,18 @@ object FrameIndex {
     * n_frames[, _vq], chunk, value)` — the per-video stats re-derived over
     * whatever rows it derives from, so a delta's projection is
     * batch-sized), the memtable and the VIDEO-id tombstones, at `m`'s
-    * pins. */
+    * pins ([[IndexTier.bandPin]] refuses a manifest with no band pin). */
   private def lsm(name: String, m: FrameManifest): IndexTier.Lsm = IndexTier.Lsm(
-    IndexTier.Tier(framesTable(name), Some(m.frames), FrameBuckets, Seq("id")),
-    Seq(IndexTier.Tier(bandTable(name), m.band, BandBuckets, Seq("chunk", "value"),
+    IndexTier.Tier(framesTable(name), m.frames, Seq("id")),
+    Seq(IndexTier.Tier(bandTable(name), IndexTier.bandPin(s"frame index $name", m.band),
+      Seq("chunk", "value"),
       rows => IndexTier.bandedOf(withVideoStats(rows, m.hasQuality), m.maxHamming)
         .select(bandCols(m.hasQuality): _*), m.maxHamming + 1L)),
     deltaTable(name) -> m.dlt, rmTable(name) -> m.rmFrames)
 
   /** `m` at the pins of `l`. */
   private def pinned(m: FrameManifest, l: IndexTier.Lsm): FrameManifest =
-    m.copy(frames = l.base.pin.get, band = l.projections.head.pin, dlt = l.delta._2,
+    m.copy(frames = l.base.pin, band = Some(l.projections.head.pin), dlt = l.delta._2,
       rmFrames = l.rm._2)
 
   // -------------------------------------------------------- pruned screens
@@ -315,7 +312,7 @@ object FrameIndex {
       // a rebuild replaces the corpus wholesale — prior retirements are
       // moot, the tombstone and memtable pins clear
       val fresh = FrameManifest(-1, maxHamming, minContainment,
-        prev.map(_._1.lastBatchId).getOrElse(-1L), hasQuality = quality)
+        prev.map(_._1.lastBatchId).getOrElse(-1L), hasQuality = quality, band = Some(-1))
       IndexTier.commitManifest(store, manifestTable(name), pinned(fresh,
         lsm(name, fresh).build(rows.sparkSession, store, rows, Seq(frameBuckets, bandBuckets))),
         prev.map(_._2))
@@ -372,8 +369,6 @@ object FrameIndex {
     implicit val outer: CacheScope = new CacheScope
     try {
       val batch0 = outer.pin(frameShape(frames))
-      // (a legacy index has no band pin: its probe reads nothing real,
-      // and the full-derive screen ignores its cell list)
       val l = lsm(name, m)
       val (idBuckets, cellBuckets) =
         if (screenFirst)

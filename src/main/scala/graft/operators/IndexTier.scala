@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   *    probed and pruned with the bucket layout version N was WRITTEN with
   *    ([[TableStore.bucketSpecAt]]), never the table's current layout — a
   *    reader racing a rebucket (or a rollback across one) still opens
-  *    every bucket its keys live in. A version written as a legacy plain
-  *    layout has no `_bucket` to prune on and serves the full pinned read
-  *    (pruning is an optimization, so the full read is result-identical).
+  *    every bucket its keys live in. Every build writes its tiers
+  *    bucketed, so a plain version is not an index tier: a pruned read of
+  *    one fails ([[bucketedAt]]).
   *    A small delta member (the LSM memtable) joins the pruned base
   *    filtered by the same bucket rule, so readers see exactly the rows a
   *    fold-merged tier would hold in the touched buckets.
@@ -53,20 +53,20 @@ private[graft] object IndexTier {
     * — the layout every index tier uses. */
   def keyed(n: Int, keys: String*): BucketSpec = BucketSpec(n, keys, sortCols = keys)
 
-  /** The layout a REWRITE of `table` keeps: the recorded one, or the
-    * family default `keyed(n, keys)` for a legacy plain tier the rewrite
-    * upgrades. */
-  def layout(store: TableStore, table: String, n: Int, keys: String*): BucketSpec =
-    store.bucketSpec(table).getOrElse(keyed(n, keys: _*))
+  /** The layout bucketed member `table` was written with at `pin` — the
+    * one every probe, pruned read and rewrite of it uses. A plain version
+    * is not an index tier: it fails loudly. */
+  def bucketedAt(store: TableStore, table: String, pin: Int): BucketSpec =
+    store.bucketSpecAt(table, pin).getOrElse(throw new IllegalStateException(
+      s"$table v$pin is plain — not a bucketed index tier"))
 
   // ------------------------------------------------------------ bucket probes
 
   /** The buckets `keys` hash into under `table`'s layout at `pin` — a
-    * bounded collect, at most nBuckets distinct values. Empty, with no
-    * job, for a plain layout (whose read ignores the list). */
+    * bounded collect, at most nBuckets distinct values. */
   def touchedBuckets(
       store: TableStore, table: String, pin: Int, keys: DataFrame): Seq[Int] =
-    probe(Seq(store.bucketSpecAt(table, pin)), keys).head
+    probe(Seq(bucketedAt(store, table, pin)), keys).head
 
   /** BOTH tiers' touched buckets from ONE narrow job over `rows`, which
     * exposes the key columns of both layouts — two probes of a drain
@@ -77,7 +77,7 @@ private[graft] object IndexTier {
       store: TableStore, a: (String, Int), b: (String, Int),
       rows: DataFrame): (Seq[Int], Seq[Int]) = {
     val Seq(ta, tb) = probe(
-      Seq(store.bucketSpecAt(a._1, a._2), store.bucketSpecAt(b._1, b._2)), rows)
+      Seq(bucketedAt(store, a._1, a._2), bucketedAt(store, b._1, b._2)), rows)
     (ta, tb)
   }
 
@@ -85,24 +85,18 @@ private[graft] object IndexTier {
     * the collected sets instead of `distinct().collect()` — the distinct's
     * exchange would cost two extra stage launches per probe, and each
     * partition contributes at most nBuckets ints per layout, so the
-    * collected merge is bounded at any batch size. A plain layout rides a
-    * constant column. */
-  private def probe(specs: Seq[Option[BucketSpec]], rows: DataFrame): Seq[Seq[Int]] =
-    if (specs.forall(_.isEmpty)) specs.map(_ => Nil)
-    else {
-      val n = specs.size
-      val parts = rows
-        .select(specs.zipWithIndex.map { case (s, i) =>
-          s.map(_.bucketColumn).getOrElse(lit(0)).as(s"_b$i")
-        }: _*)
-        .queryExecution.toRdd.mapPartitions { it =>
-          val sets = Array.fill(n)(new scala.collection.mutable.HashSet[Int])
-          it.foreach(r => (0 until n).foreach(i => sets(i).add(r.getInt(i))))
-          Iterator.single(sets.map(_.toArray))
-        }.collect()
-      specs.indices.map(i =>
-        if (specs(i).isEmpty) Nil else parts.flatMap(_(i)).distinct.toSeq)
-    }
+    * collected merge is bounded at any batch size. */
+  private def probe(specs: Seq[BucketSpec], rows: DataFrame): Seq[Seq[Int]] = {
+    val n = specs.size
+    val parts = rows
+      .select(specs.zipWithIndex.map { case (s, i) => s.bucketColumn.as(s"_b$i") }: _*)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val sets = Array.fill(n)(new scala.collection.mutable.HashSet[Int])
+        it.foreach(r => (0 until n).foreach(i => sets(i).add(r.getInt(i))))
+        Iterator.single(sets.map(_.toArray))
+      }.collect()
+    specs.indices.map(i => parts.flatMap(_(i)).distinct.toSeq)
+  }
 
   /** ONE narrow count (per-partition sizes, collected and summed — no
     * aggregation exchange); also materializes the frame's cache pin. */
@@ -129,24 +123,16 @@ private[graft] object IndexTier {
     * filtered by the exact bucket rule the directory pruning applied
     * (hot-cell exactness included: a cell's base and delta rows share one
     * bucket id). No extra job: the delta is a one-to-few-file scan inside
-    * the same plan. A plain layout at `pin` serves the FULL pinned read ∪
-    * the unfiltered delta projection. */
+    * the same plan. */
   def prunedWithDelta(
       spark: SparkSession, store: TableStore, table: String, pin: Int,
       touched: Seq[Int], delta: Option[DataFrame],
       fromDelta: DataFrame => DataFrame): DataFrame = {
-    val spec = store.bucketSpecAt(table, pin)
-    val base = spec match {
-      case None => store.snapshotAt(spark, table, pin)
-      case Some(_) =>
-        inBuckets(store.snapshotRawAt(spark, table, pin), col("_bucket"), touched)
-          .drop("_bucket")
-    }
-    delta.map(fromDelta) match {
-      case None => base
-      case Some(d) =>
-        base.unionByName(spec.map(s => inBuckets(d, s.bucketColumn, touched)).getOrElse(d))
-    }
+    val spec = bucketedAt(store, table, pin)
+    val base = inBuckets(store.snapshotRawAt(spark, table, pin), col("_bucket"), touched)
+      .drop("_bucket")
+    delta.map(d => base.unionByName(inBuckets(fromDelta(d), spec.bucketColumn, touched)))
+      .getOrElse(base)
   }
 
   private def inBuckets(df: DataFrame, bucket: Column, touched: Seq[Int]): DataFrame =
@@ -213,20 +199,23 @@ private[graft] object IndexTier {
 
   // --------------------------------------------------------- LSM member sets
 
-  /** One bucketed tier of an [[Lsm]]: its table and pin (`None` for a
-    * tier not written yet — a legacy index's missing projection, which the
-    * next rewrite creates), the family-default layout (`buckets` hashed on
-    * `keys`), how the tier derives from base rows, and its bytes per delta
-    * byte (a fold's growth projection). The base tier derives by
-    * `identity` at 1. */
+  /** One bucketed tier of an [[Lsm]]: its table and pin (-1 before the
+    * build writes it), the key columns a build hashes it on, how the tier
+    * derives from base rows, and its bytes per delta byte (a fold's growth
+    * projection). The base tier derives by `identity` at 1. */
   final case class Tier(
-      table: String, pin: Option[Int], buckets: Int, keys: Seq[String],
+      table: String, pin: Int, keys: Seq[String],
       derive: DataFrame => DataFrame = identity, byteMult: Long = 1L) {
-    /** The buckets `rows` hash into at the pin; none for an unwritten tier,
-      * whose read ignores the list. */
+    /** The buckets `rows` hash into at the pin. */
     def probe(store: TableStore, rows: DataFrame): Seq[Int] =
-      pin.map(touchedBuckets(store, table, _, rows)).getOrElse(Nil)
+      touchedBuckets(store, table, pin, rows)
   }
+
+  /** The band-projection pin `index`'s manifest records. A manifest with
+    * none predates the band tier every screen reads and is refused. */
+  def bandPin(index: String, band: Option[Int]): Int =
+    band.getOrElse(throw new IllegalStateException(s"$index has no band_v pin — its " +
+      "manifest predates the band tier; build the corpus into a new index"))
 
   /** A signature family's LSM member set as one manifest pins it: the
     * bucketed `base` tier, the bucketed `projections` derived from it, the
@@ -237,11 +226,9 @@ private[graft] object IndexTier {
       base: Tier, projections: Seq[Tier],
       delta: (String, Option[Int]), rm: (String, Option[Int])) {
 
-    private def basePin: Int = base.pin.get // a built set always pins its base
-
     /** Every member (table, pin) — the set's part of a rollback list. */
     def members: Seq[(String, Option[Int])] =
-      (base +: projections).map(t => t.table -> t.pin) ++ Seq(delta, rm)
+      (base +: projections).map(t => t.table -> Some(t.pin)) ++ Seq(delta, rm)
 
     private def deltaRows(spark: SparkSession, store: TableStore): Option[DataFrame] =
       deltaFrame(spark, store, delta._1, delta._2)
@@ -250,38 +237,33 @@ private[graft] object IndexTier {
       * manifest-consistent view every fold, takedown and full read
       * derives from. */
     def served(spark: SparkSession, store: TableStore): DataFrame = {
-      val b = store.snapshotAt(spark, base.table, basePin)
+      val b = store.snapshotAt(spark, base.table, base.pin)
       minusRm(spark, store, rm._1, rm._2)(
         deltaRows(spark, store).map(b.unionByName(_)).getOrElse(b))
     }
 
     /** The base tier's and `t`'s touched buckets from ONE narrow job
-      * ([[touchedBucketsPair]]); an unwritten `t` probes nothing real. */
+      * ([[touchedBucketsPair]]). */
     def probePair(store: TableStore, t: Tier, rows: DataFrame): (Seq[Int], Seq[Int]) =
-      touchedBucketsPair(store, base.table -> basePin, t.table -> t.pin.getOrElse(-1), rows)
+      touchedBucketsPair(store, base.table -> base.pin, t.table -> t.pin, rows)
 
     /** Indexed base rows of the `touched` buckets: base ∪ delta WITHOUT the
       * tombstone subtraction — a retired id may not re-enter under its own
       * name until the fold forgets it. The insert-only screen's read and
       * the candidate fetch-back. */
     def indexed(spark: SparkSession, store: TableStore, touched: Seq[Int]): DataFrame =
-      prunedWithDelta(spark, store, base.table, basePin, touched,
+      prunedWithDelta(spark, store, base.table, base.pin, touched,
         deltaRows(spark, store), identity)
 
     /** Tier `t` of the SERVED view restricted to its `touched` buckets: the
       * pruned read ∪ the same projection derived in-plan from the delta,
       * tombstones subtracted — exactly the rows `t.derive(served)` holds in
       * those buckets (a cell's rows all live in one bucket, so candidates
-      * and hot-cell counts match). An unwritten tier (a legacy index)
-      * derives from the full served view until its next rewrite. */
+      * and hot-cell counts match). */
     def projected(
         spark: SparkSession, store: TableStore, t: Tier, touched: Seq[Int]): DataFrame =
-      t.pin match {
-        case None => t.derive(served(spark, store))
-        case Some(pin) => minusRm(spark, store, rm._1, rm._2)(
-          prunedWithDelta(spark, store, t.table, pin, touched,
-            deltaRows(spark, store), t.derive))
-      }
+      minusRm(spark, store, rm._1, rm._2)(prunedWithDelta(spark, store, t.table, t.pin,
+        touched, deltaRows(spark, store), t.derive))
 
     /** A full (re)build: `rows` become the base tier and every projection
       * derives from the COMMITTED base (a parquet read, so the caller's
@@ -292,9 +274,9 @@ private[graft] object IndexTier {
         spark: SparkSession, store: TableStore, rows: DataFrame,
         buckets: Seq[Int]): Lsm = {
       def write(t: Tier, n: Int, df: DataFrame): Tier =
-        t.copy(pin = Some(store.writeBucketed(df, t.table, keyed(n, t.keys: _*))))
+        t.copy(pin = store.writeBucketed(df, t.table, keyed(n, t.keys: _*)))
       val b = write(base, buckets.head, rows)
-      val committed = store.snapshotAt(spark, b.table, b.pin.get)
+      val committed = store.snapshotAt(spark, b.table, b.pin)
       Lsm(b, projections.zip(buckets.tail).map { case (t, n) =>
         write(t, n, t.derive(committed)) }, delta._1 -> None, rm._1 -> None)
     }
@@ -306,8 +288,9 @@ private[graft] object IndexTier {
       * the per-bucket byte target ([[OverlayLock.grownSpec]], projected
       * from the pre-fold bytes plus the delta's times the tier's multiplier
       * — within 2x is enough, the next fold corrects), so pruned reads stay
-      * constant-per-bucket as the corpus grows; a takedown keeps the
-      * recorded [[layout]]. The delta and tombstone members clear. */
+      * constant-per-bucket as the corpus grows; a takedown keeps each
+      * tier's layout at its pin ([[bucketedAt]]). The delta and tombstone
+      * members clear. */
     def rewrite[A](
         spark: SparkSession, store: TableStore, kept: DataFrame, fold: Boolean)(
         materialize: DataFrame => A): (Lsm, A) = {
@@ -316,12 +299,12 @@ private[graft] object IndexTier {
         val a = materialize(cached)
         val grow = delta._2.map(store.byteSizeAt(delta._1, _)).getOrElse(0L)
         val tiers = OverlayLock.inParallel((base +: projections).map { t => () =>
-          val spec = layout(store, t.table, t.buckets, t.keys: _*)
-          t.copy(pin = Some(store.writeBucketed(t.derive(cached), t.table,
+          val spec = bucketedAt(store, t.table, t.pin)
+          t.copy(pin = store.writeBucketed(t.derive(cached), t.table,
             if (!fold) spec
             else OverlayLock.grownSpec(spark, spec,
-              t.pin.map(store.byteSizeAt(t.table, _)).getOrElse(0L) + grow * t.byteMult),
-            t.pin.orElse(store.currentVersion(t.table)))))
+              store.byteSizeAt(t.table, t.pin) + grow * t.byteMult),
+            Some(t.pin)))
         }).map(_.asInstanceOf[Tier])
         (Lsm(tiers.head, tiers.tail, delta._1 -> None, rm._1 -> None), a)
       } finally cached.unpersist()
@@ -373,7 +356,7 @@ private[graft] object IndexTier {
         retired: Option[DataFrame]): Lsm =
       if (foldDue(
           Seq(delta, rm).map { case (t, p) => p.map(store.byteSizeAt(t, _)).getOrElse(0L) }.sum,
-          store.byteSizeAt(base.table, basePin),
+          store.byteSizeAt(base.table, base.pin),
           spark.conf.getOption("spark.graft.foldFloorBytes")
             .map(_.toLong).getOrElse(OvlFloorBytes))) {
         val s = served(spark, store)
@@ -386,12 +369,13 @@ private[graft] object IndexTier {
   // ------------------------------------------------ revision-overlay sets
 
   /** One member of an [[Overlay]] set: the base `table` at `pin`, its
-    * revision overlay `ovl` (table, pin; `None` = empty), the family
-    * default layout (`None` = a plain member) and how the member's rows
-    * derive from the family's batch rows. */
+    * revision overlay `ovl` (table, pin; `None` = empty) and how the
+    * member's rows derive from the family's batch rows. A member's layout
+    * is the one its pinned version was written with: bucketed, or plain
+    * for a member that is plain by design. */
   final case class Shadowed(
       table: String, pin: Int, ovl: (String, Option[Int]),
-      default: Option[BucketSpec], derive: DataFrame => DataFrame)
+      derive: DataFrame => DataFrame)
 
   /** A revision-overlay family's member set as one manifest pins it: each
     * member's overlay rows SHADOW its base rows by `key` at read time
@@ -480,45 +464,39 @@ private[graft] object IndexTier {
       * derived batch rows is written, and the overlays clear. A bucketed
       * member grows its recorded layout past the per-bucket byte target
       * ([[OverlayLock.grownSpec]], projected from base + overlay bytes),
-      * so pruned reads stay constant-per-bucket as the corpus grows; a
-      * legacy plain tier upgrades to the family layout. With no batch this
-      * is compaction, which keeps at its pin any member whose overlay is
-      * empty. */
+      * so pruned reads stay constant-per-bucket as the corpus grows. With
+      * no batch this is compaction, which keeps at its pin any member
+      * whose overlay is empty. */
     def fold(
         spark: SparkSession, store: TableStore,
         batch: Option[(DataFrame, DataFrame)]): Overlay =
       rewrite(spark, store, tiers.filter(t => batch.isDefined || t.ovl._2.isDefined),
-        batch.map(_._1), batch.map(_._2)) { t =>
-        recorded(store, t).map(OverlayLock.grownSpec(spark, _,
-          store.byteSizeAt(t.table, t.pin) +
-            t.ovl._2.map(store.byteSizeAt(t.ovl._1, _)).getOrElse(0L)))
-      }
+        batch.map(_._1), batch.map(_._2), grow = true)
 
     /** THE TAKEDOWN: each member's served view minus `keys` (a frame of the
-      * key column, see [[keysOf]]) is written with its recorded layout, and
-      * the overlays clear — a takedown rewrites every corpus-sized member
-      * anyway, so the overlay folds in for free. */
+      * key column, see [[keysOf]]) is written with its layout at its pin,
+      * and the overlays clear — a takedown rewrites every corpus-sized
+      * member anyway, so the overlay folds in for free. */
     def takedown(spark: SparkSession, store: TableStore, keys: DataFrame): Overlay =
-      rewrite(spark, store, tiers, Some(keys), None)(recorded(store, _))
-
-    /** A bucketed member's recorded layout, or its family default for a
-      * legacy plain tier the rewrite upgrades; `None` for a plain member. */
-    private def recorded(store: TableStore, t: Shadowed): Option[BucketSpec] =
-      t.default.map(store.bucketSpec(t.table).getOrElse(_))
+      rewrite(spark, store, tiers, Some(keys), None, grow = false)
 
     /** Write `members`' served views `∖ minus ∪ derive(plus)` concurrently
-      * (independent tables, no shared CAS), each bucketed by `spec` or
-      * plain; the rewritten members' overlays clear. */
+      * (independent tables, no shared CAS), each in the layout its pinned
+      * version was written with — grown past the byte target when `grow` —
+      * or plain; the rewritten members' overlays clear. */
     private def rewrite(
         spark: SparkSession, store: TableStore, members: Seq[Shadowed],
-        minus: Option[DataFrame], plus: Option[DataFrame])(
-        spec: Shadowed => Option[BucketSpec]): Overlay = {
+        minus: Option[DataFrame], plus: Option[DataFrame], grow: Boolean): Overlay = {
       val pins = OverlayLock.inParallel(members.map { t => () =>
         val s = served(spark, store, t.table)
         val kept = minus.map(s.join(_, Seq(key), "left_anti")).getOrElse(s)
         val next = plus.map(r => kept.unionByName(t.derive(r))).getOrElse(kept)
-        t.table -> (spec(t) match {
-          case Some(b) => store.writeBucketed(next, t.table, b, Some(t.pin))
+        t.table -> (store.bucketSpecAt(t.table, t.pin) match {
+          case Some(b) => store.writeBucketed(next, t.table,
+            if (!grow) b
+            else OverlayLock.grownSpec(spark, b, store.byteSizeAt(t.table, t.pin) +
+              t.ovl._2.map(store.byteSizeAt(t.ovl._1, _)).getOrElse(0L)),
+            Some(t.pin))
           case None => store.write(next, t.table, Some(t.pin))
         })
       }).map(_.asInstanceOf[(String, Int)]).toMap

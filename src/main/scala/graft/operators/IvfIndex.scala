@@ -131,11 +131,11 @@ object IvfIndex {
       store: TableStore, name: String, m: IvfManifest): IndexTier.Overlay =
     IndexTier.Overlay("id",
       IndexTier.Shadowed(vectorsTable(name), m.vectors, ovlVectorsTable(name) -> m.ovlVectors,
-        Some(IndexTier.keyed(VecBuckets, "cell")), _.select(col("id"), col("v"), col("cell"))) +:
+        _.select(col("id"), col("v"), col("cell"))) +:
       (m.qvectors.map(IndexTier.Shadowed(qVectorsTable(name), _,
-        ovlQVectorsTable(name) -> m.ovlQvectors, None, quantized)).toSeq ++
+        ovlQVectorsTable(name) -> m.ovlQvectors, quantized)).toSeq ++
       m.pqCodes.map(IndexTier.Shadowed(PqIndex.codesTableName(name), _,
-        ovlPqCodesTable(name) -> m.ovlPqCodes, None, rows =>
+        ovlPqCodesTable(name) -> m.ovlPqCodes, rows =>
           PqIndex.encodeAssigned(rows.sparkSession, rows, PqIndex.codebookAt(
             rows.sparkSession, store, name, m)))).toSeq))
 
@@ -340,9 +340,9 @@ object IvfIndex {
         // rewrite in when file counts creep)
         val fresh = set.screen(spark, store, t.table,
           t.derive(assigned).join(stored.select(col("id")), Seq("id"), "left_anti"))
-        // bucket layout preserved across appends (legacy plain tiers keep
-        // the linked-append path until a full rewrite)
-        t.copy(pin = if (store.bucketSpec(t.table).isDefined)
+        // each member appends in the layout its pinned version was
+        // written with: the float tier bucketed, int8 and PQ plain
+        t.copy(pin = if (store.bucketSpecAt(t.table, t.pin).isDefined)
           OverlayLock.appendOrCompactBucketed(spark, store, t.table, t.pin, fresh)
         else OverlayLock.appendOrCompact(store, t.table, t.pin, stored, fresh))
       }).map(_.asInstanceOf[IndexTier.Shadowed])
@@ -739,8 +739,7 @@ object IvfIndex {
     * batch-bounded side — are collected ONCE: the driver derives the
     * touched buckets from them (no job) and the same rows broadcast into
     * the candidate join against the bucket-pruned stored `(id, v, cell)`
-    * rows, so the stored side never shuffles. A legacy plain layout joins
-    * the probe plan against the full served read. Scoring happens inside
+    * rows, so the stored side never shuffles. Scoring happens inside
     * the join so the aggregation exchange carries `(id, id, double)`, and
     * the partial top-k aggregate ships k rows per (query, partition). */
   def topK(
@@ -756,18 +755,14 @@ object IvfIndex {
     val probes = probeCells(probeQueries(batch, idCol, vecCol),
         centroidModel(spark, store, name, m), nProbe)
       .select(col("q_id"), col("q_v"), col("q_nrm"), col("cell"))
-    store.bucketSpecAt(vectorsTable(name), m.vectors) match {
-      case None => // legacy plain layout: the old full-read join
-        topKFromProbes(probes, overlay(store, name, m).served(spark, store, vectorsTable(name)), k)
-      case Some(spec) =>
-        // broadcast explicitly: size estimates over a bucket-pruned scan
-        // are too coarse to pick the build side, and the stored side must
-        // never shuffle for a serve
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(probes.collect(): _*), probes.schema)
-        val touched = local.select(spec.bucketColumn).collect().map(_.getInt(0)).distinct.toSeq
-        topKFromProbes(broadcast(local), vectorsForCells(spark, store, name, m, touched), k)
-    }
+    val spec = IndexTier.bucketedAt(store, vectorsTable(name), m.vectors)
+    // broadcast explicitly: size estimates over a bucket-pruned scan are
+    // too coarse to pick the build side, and the stored side must never
+    // shuffle for a serve
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(probes.collect(): _*), probes.schema)
+    val touched = local.select(spec.bucketColumn).collect().map(_.getInt(0)).distinct.toSeq
+    topKFromProbes(broadcast(local), vectorsForCells(spark, store, name, m, touched), k)
   }
 
   /** [[topK]] served from the int8 table — same probe ranking (the model

@@ -125,8 +125,7 @@ private[graft] object OverlayLock {
       fresh: org.apache.spark.sql.DataFrame,
       maxFilesPerBucket: Int = 8): Int = {
     import org.apache.spark.sql.functions.col
-    val spec = store.bucketSpecAt(table, pin).getOrElse(throw new IllegalStateException(
-      s"$table is not bucketed — use appendOrCompact"))
+    val spec = IndexTier.bucketedAt(store, table, pin)
     // rebucket-on-append: an APPEND-ONLY tier never passes through an
     // amortized fold, so [[grownSpec]]'s per-bucket byte invariant must
     // hook the append path itself or per-bucket bytes grow without bound

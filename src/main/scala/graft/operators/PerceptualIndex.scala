@@ -58,10 +58,7 @@ import org.apache.spark.sql.functions._
   * delta append; every screen reads a bounded set of constant-size
   * buckets (∝ the batch's probe cells, independent of stored-corpus
   * size — [[graft.PrunedScreenSpec]] measures it); the amortized fold
-  * is the one stored-size rewrite, paid every ~[[IndexTier.OvlFrac]] of growth. A
-  * legacy index persisted before the band tier existed (no `band_v` pin)
-  * falls back to deriving the projection from the full sigs read until
-  * its next full rewrite.
+  * is the one stored-size rewrite, paid every ~[[IndexTier.OvlFrac]] of growth.
   */
 object PerceptualIndex {
 
@@ -89,9 +86,8 @@ object PerceptualIndex {
     * carries a per-item quality column and mutates through
     * [[admitKeepBestBatch]]'s replace-if-better fold — the two layouts
     * never mix (plain folds on a quality index, or vice versa, fail
-    * loudly instead of corrupting the member schema). `band = None`
-    * marks a legacy pre-projection index (full-derive fallback);
-    * `dlt = None` ⇔ empty memtable. */
+    * loudly instead of corrupting the member schema). `dlt = None` ⇔
+    * empty memtable. */
   private[graft] final case class PercManifest(
       sigs: Int, maxHamming: Int, lastBatchId: Long = -1L,
       hasQuality: Boolean = false, rmSigs: Option[Int] = None,
@@ -103,8 +99,7 @@ object PerceptualIndex {
   }
 
   /** Absent keys predate the quality/tombstone/projection tiers (older
-    * persisted index): a plain family, no tombstones, the legacy
-    * full-derive layout. */
+    * persisted index): a plain family, no tombstones, no band pin. */
   private[graft] def readManifest(
       store: TableStore, name: String): Option[(PercManifest, Int)] =
     IndexTier.readManifest(store, manifestTable(name), "perceptual-index manifest") { f =>
@@ -122,16 +117,18 @@ object PerceptualIndex {
   /** The sigs base tier, its chunk-band projection (`(id, chunk, value,
     * sig[, q])` — `sig` and `q` ride denormalized so the verify/score tail
     * never fetches back from the sigs tier), the memtable and the
-    * tombstones, at `m`'s pins. */
+    * tombstones, at `m`'s pins ([[IndexTier.bandPin]] refuses a manifest
+    * with no band pin). */
   private def lsm(name: String, m: PercManifest): IndexTier.Lsm = IndexTier.Lsm(
-    IndexTier.Tier(sigsTable(name), Some(m.sigs), SigBuckets, Seq("id")),
-    Seq(IndexTier.Tier(bandTable(name), m.band, BandBuckets, Seq("chunk", "value"),
+    IndexTier.Tier(sigsTable(name), m.sigs, Seq("id")),
+    Seq(IndexTier.Tier(bandTable(name), IndexTier.bandPin(s"perceptual index $name", m.band),
+      Seq("chunk", "value"),
       IndexTier.bandedOf(_, m.maxHamming), m.maxHamming + 1L)),
     deltaTable(name) -> m.dlt, rmTable(name) -> m.rmSigs)
 
   /** `m` at the pins of `l`. */
   private def pinned(m: PercManifest, l: IndexTier.Lsm): PercManifest =
-    m.copy(sigs = l.base.pin.get, band = l.projections.head.pin, dlt = l.delta._2,
+    m.copy(sigs = l.base.pin, band = Some(l.projections.head.pin), dlt = l.delta._2,
       rmSigs = l.rm._2)
 
   // -------------------------------------------------------- pruned screens
@@ -237,7 +234,7 @@ object PerceptualIndex {
       val prev = readManifest(store, name)
       prev.foreach { case (m, _) => IndexTier.rollbackAll(store, lsm(name, m).members) }
       val fresh = PercManifest(-1, maxHamming, prev.map(_._1.lastBatchId).getOrElse(-1L),
-        hasQuality = quality)
+        hasQuality = quality, band = Some(-1))
       IndexTier.commitManifest(store, manifestTable(name), pinned(fresh,
         lsm(name, fresh).build(rows.sparkSession, store, rows, Seq(sigBuckets, bandBuckets))),
         prev.map(_._2))
@@ -291,8 +288,6 @@ object PerceptualIndex {
     implicit val outer: CacheScope = new CacheScope
     try {
     val batch0 = outer.pin(sigShape(sigs))
-    // (a legacy index has no band pin: its probe reads nothing real, and
-    // the full-derive screen ignores its cell list)
     val l = lsm(name, m)
     val (idBuckets, cellBuckets) =
       if (screenFirst)

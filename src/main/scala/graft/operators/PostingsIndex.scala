@@ -169,9 +169,9 @@ object PostingsIndex {
   private def overlay(name: String, m: BmManifest): IndexTier.Overlay =
     IndexTier.Overlay("doc_id", Seq(
       IndexTier.Shadowed(postingsTable(name), m.postings, ovlPostingsTable(name) -> m.ovlPostings,
-        Some(IndexTier.keyed(PostBuckets, "term")), postingsOf),
+        postingsOf),
       IndexTier.Shadowed(docsTable(name), m.docs, ovlDocsTable(name) -> m.ovlDocs,
-        Some(IndexTier.keyed(DocBuckets, "doc_id")), docRowsOf)))
+        docRowsOf)))
 
   /** `m` at the pins of `o`. */
   private def pinned(name: String, m: BmManifest, o: IndexTier.Overlay): BmManifest = {
@@ -220,8 +220,7 @@ object PostingsIndex {
     * every served term's df is exact, and the vocabulary-sized
     * base⊕delta merge never runs at query time. At 100 TB the
     * vocabulary is billions of terms (Heaps' law); this keeps the last
-    * per-query vocab-sized read off the serve path. A legacy plain layout
-    * serves the full merge. */
+    * per-query vocab-sized read off the serve path. */
   private def termDfForBuckets(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
       touched: Seq[Int]): DataFrame = {
@@ -238,8 +237,7 @@ object PostingsIndex {
     * terms' postings buckets): the base read opens only those buckets —
     * never Σ dl rows per probe batch — and the compaction-bounded
     * revision overlay merges in unpruned (small by policy; rows outside
-    * the query's terms are dropped by the scoring join). A legacy plain
-    * layout serves the full merged read. */
+    * the query's terms are dropped by the scoring join). */
   private def postingsForBuckets(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
       touched: Seq[Int]): DataFrame =
@@ -277,7 +275,7 @@ object PostingsIndex {
           .filter(col("df") > 0),
         termStatsTable(name),
         OverlayLock.grownSpec(spark,
-          IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"), projected),
+          IndexTier.bucketedAt(store, termStatsTable(name), m.termStats), projected),
         Some(m.termStats))
       (tv, None)
     } else {
@@ -299,8 +297,7 @@ object PostingsIndex {
     * keyed read every per-batch bookkeeping path goes through:
     * `_bucket isin(...)` prunes at the directory level, so unread
     * buckets are never opened and the bytes read are ∝ the batch's
-    * buckets rather than the corpus ([[PrunedReadSpec]] measures it).
-    * A pre-r16 plain layout falls back to the full scan. */
+    * buckets rather than the corpus ([[PrunedReadSpec]] measures it). */
   private def baseDocsForKeys(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
       keys: DataFrame): DataFrame =
@@ -310,11 +307,10 @@ object PostingsIndex {
   /** SERVED (overlay-merged) docs rows of exactly `batchIds`' ids — ONE
     * bucket-pruned keyed read feeding both the replaced-doc counters and
     * the exact-df subtraction. `touched` is the batch's precomputed
-    * bucket list (ignored by a plain pre-r16 layout's full scan);
-    * `idPredicate` is the batch's pushed key predicate (an In set or a
-    * min-max range — superset-safe, so applying it before the semi-join
-    * only prunes), which the sorted-within-bucket layout turns into
-    * parquet row-group skips. */
+    * bucket list; `idPredicate` is the batch's pushed key predicate (an
+    * In set or a min-max range — superset-safe, so applying it before the
+    * semi-join only prunes), which the sorted-within-bucket layout turns
+    * into parquet row-group skips. */
   private def servedDocsForIds(
       spark: SparkSession, store: TableStore, name: String, m: BmManifest,
       batchIds: DataFrame, touched: Seq[Int],
@@ -463,13 +459,8 @@ object PostingsIndex {
       val Seq(dvA, pvA, tvA) = OverlayLock.inParallel(Seq(
         () => OverlayLock.appendOrCompactBucketed(spark, store,
           docsTable(name), m.docs, docRowsOf(fresh)),
-        // term-bucketed layout preserved across appends (legacy plain
-        // postings keep the linked-append path until a full rewrite)
-        () => if (store.bucketSpec(postingsTable(name)).isDefined)
-          OverlayLock.appendOrCompactBucketed(spark, store,
-            postingsTable(name), m.postings, freshPostings)
-        else OverlayLock.appendOrCompact(store, postingsTable(name), m.postings,
-          store.snapshotAt(spark, postingsTable(name), m.postings), freshPostings),
+        () => OverlayLock.appendOrCompactBucketed(spark, store,
+          postingsTable(name), m.postings, freshPostings),
         // df merge is CELL-WISE SUM — the one sketch-free mergeable tier;
         // committed as an O(batch-terms) delta, folded amortized
         () => commitTermDelta(spark, store, name, m, termDfOf(fresh))))
@@ -533,10 +524,9 @@ object PostingsIndex {
       val batchIds = broadcast(fresh.select(col("doc_id")).distinct())
       // one control-plane action over the (pinned) batch: its counters
       // AND its bucket list — collect_set is bounded by the bucket count
-      val bucketExpr = store.bucketSpecAt(docsTable(name), m.docs).map(_.bucketColumn)
       val freshStats = fresh.agg(
         count(lit(1)), coalesce(sum(col("dl")), lit(0L)),
-        collect_set(bucketExpr.getOrElse(lit(-1))),
+        collect_set(IndexTier.bucketedAt(store, docsTable(name), m.docs).bucketColumn),
         min(col("doc_id")), max(col("doc_id"))).head()
       val (addN, addSdl) = (freshStats.getLong(0), freshStats.getLong(1))
       val touched = freshStats.getSeq[Int](2)
@@ -609,7 +599,7 @@ object PostingsIndex {
           if (m.dltTermStats.isEmpty) m.termStats
           else store.writeBucketed(termDfAt(spark, store, name, m),
             termStatsTable(name),
-            IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
+            IndexTier.bucketedAt(store, termStatsTable(name), m.termStats),
             Some(m.termStats))
         IndexTier.commitManifest(store, manifestTable(name),
           pinned(name, m, set.fold(spark, store, None))
@@ -650,7 +640,7 @@ object PostingsIndex {
           .groupBy(col("term")).agg(greatest(sum(col("df")), lit(0L)).as("df"))
           .filter(col("df") > 0),
         termStatsTable(name),
-        IndexTier.layout(store, termStatsTable(name), TermBuckets, "term"),
+        IndexTier.bucketedAt(store, termStatsTable(name), m.termStats),
         Some(m.termStats))
       IndexTier.commitManifest(store, manifestTable(name),
         next.copy(termStats = tv, dltTermStats = None,

@@ -131,21 +131,9 @@ object SignatureIndex {
         f.flag("has_quality"), f.pin("dlt_v"), f.longOr("n_dlt", 0L))
     }
 
-  /** MIGRATION NOTE: indexes persisted by the pre-manifest layout (a bare
-    * `_sigs` + `_params` pair, no `_manifest` member) are not readable by
-    * this version — the manifest pins the projection tiers every screen
-    * now reads, and those tiers don't exist in a legacy index. The
-    * supported migration is an explicit [[build]] from the corpus text
-    * (one full shingle+hash pass — the same cost the legacy build paid),
-    * which replaces every member and writes the manifest. */
   private def requireManifest(store: TableStore, name: String): (SigManifest, Int) =
     readManifest(store, name).getOrElse(throw new IllegalStateException(
-      s"signature index $name has no manifest — build it first" +
-        (if (store.exists(s"${name}_params"))
-          s" (a legacy pre-manifest ${name}_params layout exists: this " +
-            "version adds persisted projection tiers a legacy index lacks — " +
-            "rebuild from the corpus text with build())"
-         else "")))
+      s"signature index $name has no manifest — build it first"))
 
   private def mutate[A](store: TableStore, name: String)(attempt: => A): A =
     OverlayLock.mutate(store, "sig", name)(attempt)
@@ -193,17 +181,17 @@ object SignatureIndex {
   /** The sigs base tier, its position and banding projections, the
     * memtable and the tombstones, at `m`'s pins. */
   private def lsm(name: String, m: SigManifest): IndexTier.Lsm = IndexTier.Lsm(
-    IndexTier.Tier(sigsTable(name), Some(m.sigs), SigBuckets, Seq("id")),
-    Seq(IndexTier.Tier(posTable(name), Some(m.pos), PosBuckets, Seq("i", "v"),
+    IndexTier.Tier(sigsTable(name), m.sigs, Seq("id")),
+    Seq(IndexTier.Tier(posTable(name), m.pos, Seq("i", "v"),
         positionsOf, m.numHashes.toLong),
-      IndexTier.Tier(bandTable(name), Some(m.band), BandBuckets, Seq("band", "bucket"),
+      IndexTier.Tier(bandTable(name), m.band, Seq("band", "bucket"),
         bandedOf(_, m.params), m.bands.toLong)),
     deltaTable(name) -> m.dlt, rmTable(name) -> m.rm)
 
   /** `m` at the pins of `l`. */
   private def pinned(m: SigManifest, l: IndexTier.Lsm): SigManifest = {
-    val Seq(pos, band) = l.projections.map(_.pin.get)
-    m.copy(sigs = l.base.pin.get, pos = pos, band = band, dlt = l.delta._2, rm = l.rm._2)
+    val Seq(pos, band) = l.projections.map(_.pin)
+    m.copy(sigs = l.base.pin, pos = pos, band = band, dlt = l.delta._2, rm = l.rm._2)
   }
 
   // ------------------------------------------------------------------ build

@@ -124,15 +124,11 @@ class TableStore(val root: String) {
 
   /** The bucketing version `v` was WRITTEN with — the layout a reader
     * pinned at `v` must prune with, which a later rebucket or rollback
-    * does not change. Each commit records it as `v<N>/_spec` (empty for a
-    * plain version); a version committed before that file existed falls
-    * back to the table's current manifest line. */
-  def bucketSpecAt(name: String, v: Int): Option[BucketSpec] = {
-    val f = versionPath(name, v).resolve("_spec")
-    if (Files.exists(f))
-      parseSpec(new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim)
-    else bucketSpec(name)
-  }
+    * does not change. Every commit records it as `v<N>/_spec` (empty for
+    * a plain version). */
+  def bucketSpecAt(name: String, v: Int): Option[BucketSpec] =
+    parseSpec(new String(Files.readAllBytes(versionPath(name, v).resolve("_spec")),
+      StandardCharsets.UTF_8).trim)
 
   private def parseSpec(line: String): Option[BucketSpec] =
     Some(line).collect {

@@ -63,6 +63,24 @@ class FrameIndexSpec extends SparkSpec {
     } finally scope.release()
   }
 
+  test("a manifest without band_v is refused, naming build, before any Spark job") {
+    val store = new TableStore(tmpDir("frame-no-band"))
+    store.commitFile("vid_manifest", "manifest.json",
+      ("{\"frames_v\":1,\"max_hamming\":6,\"min_containment\":0.99," +
+        "\"last_batch_id\":-1}").getBytes("UTF-8"), None)
+    implicit val scope: CacheScope = new CacheScope
+    val (_, jobs) = jobsRunBy("frame-no-band") {
+      for (call <- Seq(
+          () => FrameIndex.screen(spark, frameDf(video(1)), store, "vid"),
+          () => FrameIndex.frames(spark, store, "vid"))) {
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains("build"), e.getMessage)
+      }
+    }
+    scope.release()
+    assert(jobs === 0)
+  }
+
   test("append is insert-only by VIDEO id; in-batch duplicate (id, frame) folds once") {
     val store = new TableStore(tmpDir("frame-append"))
     FrameIndex.build(stored(10), maxHamming = 6, minContainment = 0.99,

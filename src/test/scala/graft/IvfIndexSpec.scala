@@ -118,24 +118,10 @@ class IvfIndexSpec extends SparkSpec {
     def serve() = IvfIndex.topK(spark, batch(), "vec_id", "embedding",
       store, "emb", k = 3, nProbe = 1).collect()
     val cold = serve()
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val group = "ivf-warm-topk"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "warm topK")
-      val warm = try serve() finally sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBusAccess.drain(sc)
-      assert(warm.toSet === cold.toSet)
-      info(s"a warm topK ran ${jobs.get} Spark jobs")
-      assert(jobs.get <= 4, s"a warm topK ran ${jobs.get} Spark jobs")
-    } finally sc.removeSparkListener(listener)
+    val (warm, jobs) = jobsRunBy("ivf-warm-topk")(serve())
+    assert(warm.toSet === cold.toSet)
+    info(s"a warm topK ran $jobs Spark jobs")
+    assert(jobs <= 4, s"a warm topK ran $jobs Spark jobs")
     scope.release()
   }
 

@@ -430,6 +430,22 @@ class OverlaySpec extends SparkSpec {
       val want12 = (0 until 64).map(d =>
         math.abs((math.sin(12 * 31 + d * 7) + 0.7).toFloat.toDouble)).max / 127.0
       assert(math.abs(scale12 - want12) < 1e-12, s"int8 scale $scale12 != $want12")
+      // each member keeps the layout its pinned version was written with:
+      // the float tier cell-bucketed, int8 and PQ plain — after the fold
+      // and after a takedown
+      def assertLayouts(m: IvfIndex.IvfManifest, after: String): Unit = {
+        assert(store.bucketSpecAt("emb_vectors", m.vectors).isDefined,
+          s"float tier bucketed after the $after")
+        assert(store.bucketSpecAt("emb_qvectors", m.qvectors.get).isEmpty,
+          s"int8 tier plain after the $after")
+        assert(store.bucketSpecAt("emb_pq_codes", m.pqCodes.get).isEmpty,
+          s"PQ tier plain after the $after")
+      }
+      assertLayouts(m2, "fold")
+      assert(IvfIndex.remove(spark, Seq(12L, 2000L).toDF("id"), store, "emb") === 2L)
+      val (m3, _) = IvfIndex.readManifest(store, "emb").get
+      assert(m3.vectors > m2.vectors, "the takedown rewrote the float tier")
+      assertLayouts(m3, "takedown")
     } finally scope.release()
   }
 

@@ -44,6 +44,23 @@ class PerceptualIndexSpec extends SparkSpec {
     } finally scope.release()
   }
 
+  test("a manifest without band_v is refused, naming build, before any Spark job") {
+    val store = new TableStore(tmpDir("perc-no-band"))
+    store.commitFile("img_manifest", "manifest.json",
+      "{\"sigs_v\":1,\"max_hamming\":6,\"last_batch_id\":-1}".getBytes("UTF-8"), None)
+    implicit val scope: CacheScope = new CacheScope
+    val (_, jobs) = jobsRunBy("perc-no-band") {
+      for (call <- Seq(
+          () => PerceptualIndex.screen(spark, sigDf(Seq((1L, sig(0)))), store, "img"),
+          () => PerceptualIndex.signatures(spark, store, "img"))) {
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains("build"), e.getMessage)
+      }
+    }
+    scope.release()
+    assert(jobs === 0)
+  }
+
   test("append is insert-only and O(batch)-linked; in-batch duplicate ids fold once") {
     val store = new TableStore(tmpDir("perc-append"))
     PerceptualIndex.build(stored(20), maxHamming = 6, store, "img")

@@ -23,4 +23,14 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `body`'s result and how many Spark jobs it started on this thread,
+    * counted by job group once the listener bus has delivered every event. */
+  def jobsRunBy[A](group: String)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    val a = try body finally sc.clearJobGroup()
+    org.apache.spark.graft.ListenerBusAccess.drain(sc)
+    (a, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 }
