@@ -271,4 +271,26 @@ class TableStoreSnapshotSpec extends SparkSpec {
     store.write(rows, "t")
     assert(store.snapshotAt(spark, "t", 1).columns.toSeq === Seq("id", "payload"))
   }
+
+  test("snapshot and read drop _bucket by the version they read, not a later _current") {
+    // the layout lookup commits a plain rewrite once before it answers: a
+    // reader that resolves its version and then asks _current for the
+    // layout sees "plain" and leaks the bucketed version's _bucket column
+    val rows = (0 until 20).map(i => (i, s"p$i")).toDF("id", "payload")
+    val store = new TableStore(tmpDir("spec-at-read")) {
+      @volatile var rewriteOnce = false
+      override def bucketSpec(name: String): Option[BucketSpec] = {
+        if (rewriteOnce) { rewriteOnce = false; write(rows, name) }
+        super.bucketSpec(name)
+      }
+    }
+    val v1 = store.writeBucketed(rows, "t", BucketSpec(4, Seq("id")))
+    store.rewriteOnce = true
+    val (snap, v) = store.snapshot(spark, "t")
+    assert(v === v1)
+    assert(snap.columns.toSeq === Seq("id", "payload"))
+    store.writeBucketed(rows, "t", BucketSpec(4, Seq("id")))
+    store.rewriteOnce = true
+    assert(store.read(spark, "t").columns.toSeq === Seq("id", "payload"))
+  }
 }
