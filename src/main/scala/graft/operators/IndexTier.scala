@@ -311,17 +311,17 @@ private[graft] object IndexTier {
     }
 
     /** One drain's O(batch ∪ tombstones) member commits: `admitted` rides
-      * ONE plain linked append into the delta member — no shuffle, no
-      * bucketing, a small compacting rewrite folded in once file counts
-      * creep ([[OverlayLock.appendOrCompact]]) — and `retired` ids, when
-      * given, merge into the tombstone member concurrently (independent
-      * tables). */
+      * ONE linked append into the delta member at its pin
+      * ([[OverlayLock.appendOrCompact]]; the delta is written plain, so no
+      * shuffle, no bucketing, a small compacting rewrite folded in once
+      * file counts creep) — and `retired` ids, when given, merge into the
+      * tombstone member concurrently (independent tables). */
     def commit(
         spark: SparkSession, store: TableStore, admitted: DataFrame,
         retired: Option[DataFrame]): Lsm = {
       def appendDelta(): Int = delta._2 match {
-        case Some(p) => OverlayLock.appendOrCompact(store, delta._1, p,
-          store.snapshotAt(spark, delta._1, p), admitted.coalesce(4))
+        case Some(p) => OverlayLock.appendOrCompact(spark, store, delta._1, p,
+          admitted.coalesce(4))
         case None => store.write(admitted.coalesce(4), delta._1,
           store.currentVersion(delta._1))
       }

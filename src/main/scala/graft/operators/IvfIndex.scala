@@ -336,15 +336,12 @@ object IvfIndex {
         // insert-only means absent from the SERVED view: base ids AND the
         // revision overlay's ids both screen the batch. O(batch) member
         // commits: only the fresh rows are written; the pinned version's
-        // files carry forward as links (appendOrCompact folds a compacting
-        // rewrite in when file counts creep)
+        // files carry forward as links, in the layout the pinned version
+        // was written with (appendOrCompact folds a compacting rewrite in
+        // when file counts creep)
         val fresh = set.screen(spark, store, t.table,
           t.derive(assigned).join(stored.select(col("id")), Seq("id"), "left_anti"))
-        // each member appends in the layout its pinned version was
-        // written with: the float tier bucketed, int8 and PQ plain
-        t.copy(pin = if (store.bucketSpecAt(t.table, t.pin).isDefined)
-          OverlayLock.appendOrCompactBucketed(spark, store, t.table, t.pin, fresh)
-        else OverlayLock.appendOrCompact(store, t.table, t.pin, stored, fresh))
+        t.copy(pin = OverlayLock.appendOrCompact(spark, store, t.table, t.pin, fresh))
       }).map(_.asInstanceOf[IndexTier.Shadowed])
       IndexTier.commitManifest(store, manifestTable(name),
         pinned(name, m, set.copy(tiers = pins))

@@ -82,75 +82,67 @@ private[graft] object OverlayLock {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Commit an overlay member's append as an O(batch) linked write
-    * ([[TableStore.appendRows]]: new part files + hard links of the
-    * pinned version — a 100 TB member never gets rewritten to admit a
-    * micro-batch), EXCEPT when the pinned version's part-file count has
-    * crept past `maxFiles`: then the append folds into a compacting full
-    * rewrite of stored ∪ fresh at `targetFiles` files — the same swap,
-    * amortized to one rewrite every ~`maxFiles` appends, so streaming
-    * admission never hits the small-file wall. The caller publishes the
-    * returned version via its manifest swap as usual. */
-  def appendOrCompact(
-      store: TableStore,
-      table: String,
-      pin: Int,
-      stored: => org.apache.spark.sql.DataFrame, // by-name: only the rare
-      // compaction branch reads the stored snapshot — callers without
-      // another use for it (the postings append) never pay for building it
-      fresh: org.apache.spark.sql.DataFrame,
-      maxFiles: Int = 64,
-      targetFiles: Int = 8): Int =
-    if (store.fileCount(table) > maxFiles)
-      store.write(stored.unionByName(fresh).repartition(targetFiles),
-        table, Some(pin))
-    else store.appendRows(fresh, table, pin)
+  /** A bucket holding this many part files at an append's pin is
+    * compacted by that append ([[appendOrCompact]]). */
+  private val MaxFilesPerBucket = 8
 
-  /** [[appendOrCompact]] for a BUCKETED member: the common path is an
-    * O(batch) linked append that preserves the bucket layout
-    * ([[TableStore.appendRowsBucketed]]); when any bucket's part-file
-    * count has crept past `maxFilesPerBucket`, the append instead rides
-    * a bucket-granular compaction — ONLY the oversized buckets plus the
-    * batch's own buckets are read and rewritten (one file each), every
-    * healthy bucket carries as hard links ([[TableStore.commitBucketMerge]]).
-    * Amortized one touched-bucket rewrite every ~`maxFilesPerBucket`
-    * appends, never a full-corpus rewrite of cold buckets. One version
-    * step either way, so the caller's manifest pin stays inside the
-    * prune retention window. */
-  def appendOrCompactBucketed(
+  /** Commit an overlay member's append at its manifest `pin`, in the
+    * layout that version was written with ([[TableStore.bucketSpecAt]]).
+    * The common path is an O(batch) linked write ([[TableStore.appendRows]]:
+    * new part files + hard links of the pinned version — a 100 TB member
+    * never gets rewritten to admit a micro-batch). Once the pinned
+    * version's files creep, the append folds a compaction in instead:
+    *  - plain: past `maxFiles` part files, a compacting full rewrite of
+    *    stored ∪ fresh at `targetFiles` files — amortized to one rewrite
+    *    every ~`maxFiles` appends;
+    *  - bucketed: once any bucket holds [[MaxFilesPerBucket]] files, ONLY
+    *    the oversized buckets plus the batch's own buckets are read and
+    *    rewritten (one file each) while every healthy bucket carries as
+    *    hard links ([[TableStore.commitBucketMerge]]) — never a
+    *    full-corpus rewrite of cold buckets.
+    * One version step either way, so the caller's manifest pin stays
+    * inside the prune retention window; the caller publishes the returned
+    * version via its manifest swap as usual. */
+  def appendOrCompact(
       spark: org.apache.spark.sql.SparkSession,
       store: TableStore,
       table: String,
       pin: Int,
       fresh: org.apache.spark.sql.DataFrame,
-      maxFilesPerBucket: Int = 8): Int = {
+      maxFiles: Int = 64,
+      targetFiles: Int = 8): Int = {
     import org.apache.spark.sql.functions.col
-    val spec = IndexTier.bucketedAt(store, table, pin)
-    // rebucket-on-append: an APPEND-ONLY tier never passes through an
-    // amortized fold, so [[grownSpec]]'s per-bucket byte invariant must
-    // hook the append path itself or per-bucket bytes grow without bound
-    // (the pure-append corpus case). The check is one file-metadata walk;
-    // growth rehashes every bucket id, so it rides a full rewrite at the
-    // grown layout — amortized the same way as the fold-side growth
-    // (bytes double between rewrites).
-    val grown = grownSpec(spark, spec, store.byteSizeAt(table, pin))
-    if (grown.nBuckets != spec.nBuckets)
-      return store.writeBucketed(
-        store.snapshotAt(spark, table, pin).unionByName(fresh),
-        table, grown, Some(pin))
-    val oversized = store.bucketFileCounts(table)
-      .filter(_._2 >= maxFilesPerBucket).keySet
-    if (oversized.isEmpty) store.appendRowsBucketed(fresh, table, pin)
-    else {
-      val freshB = fresh.withColumn("_bucket", spec.bucketColumn)
-      // bounded collect: at most nBuckets distinct values
-      val freshBuckets = freshB.select(col("_bucket")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val touched = oversized ++ freshBuckets
-      val storedTouched = store.snapshotRawAt(spark, table, pin)
-        .filter(col("_bucket").isin(touched.toSeq.map(Integer.valueOf): _*))
-      store.commitBucketMerge(storedTouched.unionByName(freshB), table,
-        touched, 1, pin)
+    store.bucketSpecAt(table, pin) match {
+      case None =>
+        if (store.partFiles(table, pin).size <= maxFiles) store.appendRows(fresh, table, pin)
+        else store.write(store.snapshotAt(spark, table, pin).unionByName(fresh)
+          .repartition(targetFiles), table, Some(pin))
+      case Some(spec) =>
+        // rebucket-on-append: an APPEND-ONLY tier never passes through an
+        // amortized fold, so [[grownSpec]]'s per-bucket byte invariant must
+        // hook the append path itself or per-bucket bytes grow without
+        // bound (the pure-append corpus case). The check is one
+        // file-metadata walk; growth rehashes every bucket id, so it rides
+        // a full rewrite at the grown layout — amortized the same way as
+        // the fold-side growth (bytes double between rewrites).
+        val grown = grownSpec(spark, spec, store.byteSizeAt(table, pin))
+        lazy val oversized = store.bucketFileCountsAt(table, pin)
+          .filter(_._2 >= MaxFilesPerBucket).keySet
+        if (grown.nBuckets != spec.nBuckets)
+          store.writeBucketed(store.snapshotAt(spark, table, pin).unionByName(fresh),
+            table, grown, Some(pin))
+        else if (oversized.isEmpty) store.appendRows(fresh, table, pin)
+        else {
+          val freshB = fresh.withColumn("_bucket", spec.bucketColumn)
+          // bounded collect: at most nBuckets distinct values
+          val freshBuckets = freshB.select(col("_bucket")).distinct()
+            .collect().map(_.getInt(0)).toSet
+          val touched = oversized ++ freshBuckets
+          val storedTouched = store.snapshotRawAt(spark, table, pin)
+            .filter(col("_bucket").isin(touched.toSeq.map(Integer.valueOf): _*))
+          store.commitBucketMerge(storedTouched.unionByName(freshB), table,
+            touched, 1, pin)
+        }
     }
   }
 

@@ -449,7 +449,7 @@ object PostingsIndex {
       val (dn, dsdl) = docCounters(fresh)
       // O(batch) member commits for the corpus-sized tables: only the
       // fresh rows are written, the pinned version's files carry as links
-      // (the compacting variants fold a rewrite in when counts creep);
+      // (appendOrCompact folds a rewrite in when counts creep);
       // termstats rides its O(batch-terms) delta member. The three
       // members are independent tables (no shared CAS), so their commits
       // run concurrently — serializing them stacks three fixed job
@@ -457,9 +457,9 @@ object PostingsIndex {
       // [[OverlayLock.inParallel]] rationale).
       val freshPostings = postingsOf(fresh)
       val Seq(dvA, pvA, tvA) = OverlayLock.inParallel(Seq(
-        () => OverlayLock.appendOrCompactBucketed(spark, store,
+        () => OverlayLock.appendOrCompact(spark, store,
           docsTable(name), m.docs, docRowsOf(fresh)),
-        () => OverlayLock.appendOrCompactBucketed(spark, store,
+        () => OverlayLock.appendOrCompact(spark, store,
           postingsTable(name), m.postings, freshPostings),
         // df merge is CELL-WISE SUM — the one sketch-free mergeable tier;
         // committed as an O(batch-terms) delta, folded amortized

@@ -340,31 +340,6 @@ object SignatureIndex {
       appendStamped(spark, batch, idCol, textCol, store, name, Some(batchId))
     }
 
-  /** Bound the members' per-bucket file counts — the maintenance call a
-    * per-micro-batch append cadence needs. Appends already fold bucket
-    * compaction in ([[OverlayLock.appendOrCompactBucketed]]), so this is
-    * the explicit form: each member compacts its oversized buckets and
-    * the manifest repins in one swap. The no-op case is a directory
-    * listing per member. */
-  def compact(
-      spark: SparkSession,
-      store: TableStore,
-      name: String,
-      maxFilesPerBucket: Int = 8): Unit =
-    mutate(store, name) {
-      val (m, mv) = requireManifest(store, name)
-      IndexTier.rollbackAll(store, lsm(name, m).members)
-      val sv = store.compact(spark, sigsTable(name), maxFilesPerBucket)
-      val pv = store.compact(spark, posTable(name), maxFilesPerBucket)
-      val bv = store.compact(spark, bandTable(name), maxFilesPerBucket)
-      val dv = m.dlt.flatMap(_ => store.compactPlain(spark, deltaTable(name)))
-      if (sv.isDefined || pv.isDefined || bv.isDefined || dv.isDefined)
-        IndexTier.commitManifest(store, manifestTable(name),
-          m.copy(sigs = sv.getOrElse(m.sigs), pos = pv.getOrElse(m.pos),
-            band = bv.getOrElse(m.band),
-            dlt = dv.orElse(m.dlt)), Some(mv))
-    }
-
   /** Takedown: commit next versions of every tier WITHOUT the given ids
     * (model parameters untouched). After removal, a future arrival
     * resembling only the removed docs is admitted again — the screen's

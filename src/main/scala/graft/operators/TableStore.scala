@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod, xxhash64}
 
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod, xxhash64}
   *
   * `sortCols` (optional) records a WITHIN-BUCKET sort order that every
   * writer of the table maintains ([[TableStore.writeBucketed]],
-  * [[TableStore.appendRowsBucketed]], [[TableStore.commitBucketMerge]]):
+  * [[TableStore.appendRows]], [[TableStore.commitBucketMerge]]):
   * rows land sorted by these columns inside each written file, so the
   * parquet row-group min/max statistics are tight and a keyed read that
   * pushes a predicate on them (`doc_id BETWEEN lo AND hi`, a small `IN`
@@ -56,6 +57,10 @@ final class VersionConflictException(msg: String) extends IllegalStateException(
   * the swap (best-effort; a reader already holding v(N)'s file list
   * finishes safely on local/HDFS-like stores — and hard-linked bucket
   * files survive the prune of the version that first wrote them).
+  * Appends and copy-on-write merges ([[TableStore.appendRows]],
+  * [[TableStore.commitBucketMerge]]) write only their new files and carry
+  * the rest of the version they anchor at as hard links, in the layout
+  * that version was written with.
   *
   * Concurrent writers: every commit carries the version the writer
   * RESOLVED when it started (its read snapshot) and is compare-and-swapped
@@ -207,21 +212,20 @@ class TableStore(val root: String) {
 
   /** Read the table with its logical schema (the `_bucket` layout column,
     * when present, stays internal). */
-  def read(spark: SparkSession, name: String): DataFrame = {
-    val df = readRaw(spark, name)
-    if (bucketSpec(name).isDefined) df.drop("_bucket") else df
-  }
+  def read(spark: SparkSession, name: String): DataFrame =
+    snapshot(spark, name)._1
 
   /** Snapshot read for read-modify-write: resolve the manifest ONCE and
     * return both the DataFrame pinned to that version's files and the
     * version number — the `expected` a later [[write]] must CAS against.
     * Resolving again at write time (the old default) opens a window where
     * a commit landing between read and write passes the version check and
-    * the concurrent winner's rows are silently lost. */
+    * the concurrent winner's rows are silently lost. The `_bucket` layout
+    * column is dropped by that version's own layout ([[snapshotAt]]),
+    * never by a second `_current` read a concurrent rewrite can move. */
   def snapshot(spark: SparkSession, name: String): (DataFrame, Int) = {
     val v = requireVersion(name)
-    val df = parquetAt(spark, name, v)
-    (if (bucketSpec(name).isDefined) df.drop("_bucket") else df, v)
+    (snapshotAt(spark, name, v), v)
   }
 
   /** [[snapshot]] keeping the `_bucket` layout column — the
@@ -312,11 +316,9 @@ class TableStore(val root: String) {
       name: String,
       extra: Seq[org.apache.spark.sql.types.StructField]): Int = {
     require(extra.nonEmpty, "widenSchema needs at least one new column")
-    val cur = currentVersion(name).getOrElse(
-      throw new IllegalStateException(s"table $name does not exist"))
-    val curDir = tableDir(name).resolve(s"v$cur")
-    val current = declaredSchema(name)
-      .getOrElse(spark.read.parquet(curDir.toString).schema)
+    val cur = requireVersion(name)
+    val current = declaredSchemaAt(name, cur)
+      .getOrElse(spark.read.parquet(pathAt(name, cur)).schema)
     val clash = extra.map(_.name).intersect(current.fieldNames.toSeq)
     require(clash.isEmpty, s"widenSchema collision on ${clash.mkString(", ")}")
     val (dataCols, partCols) = current.fields.toSeq.partition(_.name != "_bucket")
@@ -324,25 +326,54 @@ class TableStore(val root: String) {
       dataCols ++ extra.map(_.copy(nullable = true)) ++ partCols)
     val dest = newStaging(name)
     stagingWrite(dest) {
-      linkTree(curDir, dest)
+      carry(name, cur, dest)
       Files.write(dest.resolve("_schema.json"),
         widened.json.getBytes(StandardCharsets.UTF_8))
     }
-    commitStaged(name, Some(cur), dest, bucketSpec(name))
+    commitStaged(name, Some(cur), dest, bucketSpecAt(name, cur))
   }
 
-  /** Mirror `src`'s version layout into `dst` as hard links (copy
-    * fallback): top-level and `_bucket=N` part-files. */
-  private def linkTree(src: Path, dst: Path): Unit = {
-    Files.createDirectories(dst)
-    val stream = Files.list(src)
-    try stream.iterator().forEachRemaining { f =>
-      val n = f.getFileName.toString
-      if (Files.isDirectory(f)) {
-        if (n.startsWith("_bucket=")) linkTree(f, dst.resolve(n))
-      } else if (n.startsWith("part-")) linkOrCopy(f, dst.resolve(n))
-    } finally stream.close()
-  }
+  /** Run `body`, a writer's read of its anchor version `expected`, turning
+    * a pruned anchor into the conflict the caller's retry loop understands:
+    * a concurrent writer advancing the table TWICE while this one staged
+    * lets prune delete `expected`'s dir — a version conflict, not an IO
+    * bug. */
+  private def atAnchor[A](name: String, expected: Int)(body: => A): A =
+    try body catch {
+      case e: java.nio.file.NoSuchFileException =>
+        throw new VersionConflictException(
+          s"table $name v$expected was pruned while this writer staged " +
+            s"(concurrent writers advanced the table) — re-read and retry: $e")
+    }
+
+  /** Carry version `expected` into `staging` — the linked half of every
+    * append and copy-on-write commit: each part file (top-level and
+    * `_bucket=N`, except the buckets in `skip`, which the caller rewrote)
+    * becomes a hard link (copy fallback), and a declared schema stays in
+    * force for the carried pre-widen files. Runs AFTER the caller's Spark
+    * write ("overwrite" clears pre-existing staging files); part-file
+    * names embed the writing job's UUID, so links never collide with the
+    * fresh files inside a shared `_bucket=N` dir. */
+  private def carry(
+      name: String, expected: Int, staging: Path, skip: Set[Int] = Set.empty): Unit =
+    atAnchor(name, expected) {
+      Files.createDirectories(staging)
+      partFiles(name, expected).foreach { case (bucket, f) =>
+        if (!bucket.exists(skip)) {
+          val dir = bucket.fold(staging)(b => staging.resolve(s"_bucket=$b"))
+          Files.createDirectories(dir)
+          linkOrCopy(f, dir.resolve(f.getFileName.toString))
+        }
+      }
+      val sf = versionPath(name, expected).resolve("_schema.json")
+      if (Files.exists(sf))
+        Files.copy(sf, staging.resolve("_schema.json"), StandardCopyOption.REPLACE_EXISTING)
+    }
+
+  /** Write a frame carrying `_bucket` into `dir` as `_bucket=N` partition
+    * dirs, each file sorted by the spec's declared within-bucket order. */
+  private def writeBuckets(df: DataFrame, spec: BucketSpec, dir: Path): Unit =
+    spec.sortedForWrite(df).write.mode("overwrite").partitionBy("_bucket").parquet(dir.toString)
 
   /** Write `df` as the next version and atomically swap the manifest.
     *
@@ -363,103 +394,44 @@ class TableStore(val root: String) {
     commitStaged(name, expected, staging, None)
   }
 
-  /** Append-only commit for a PLAIN table: write ONLY `rows` as new part
-    * files and carry every part file of the `expected` version into the
-    * next version as a hard link (copy fallback) — the LSM discipline
-    * that makes maintaining a large corpus-sized table O(batch) per
-    * append instead of O(corpus): the [[IvfIndex]]/[[PostingsIndex]]
-    * member unions previously re-wrote the whole stored table for every
-    * admitted micro-batch, which a 100 TB index cannot pay. The caller's
-    * read snapshot (`expected`) is both the link source and the CAS
-    * anchor, exactly like [[commitBucketMerge]]. `rows`' schema must
-    * match the stored files' (same writer, same shape — the family
-    * operators guarantee it).
+  /** Append-only commit: write ONLY `rows` as new part files and carry
+    * every part file of the `expected` version into the next version as a
+    * hard link (copy fallback) — the LSM discipline that makes maintaining
+    * a large corpus-sized table O(batch) per append instead of O(corpus):
+    * a 100 TB index member never gets rewritten to admit a micro-batch.
+    * The caller's read snapshot (`expected`) is the link source, the CAS
+    * anchor AND the layout: a version written bucketed gets the batch
+    * bucketed into its `_bucket=N` dirs (keyed readers keep their
+    * directory-level pruning across appends), a plain one a plain write.
+    * `rows`' schema must match the stored files' (same writer, same shape
+    * — the family operators guarantee it).
     *
-    * File counts grow by the batch write's partitioning each append;
-    * [[compactPlain]] (already wired into the admission paths) bounds
-    * them. Returns the new version. */
+    * File counts grow by ~1 per touched bucket (or by the batch write's
+    * partitioning, plain) each append;
+    * [[graft.operators.OverlayLock.appendOrCompact]] bounds them. Returns
+    * the new version. */
   def appendRows(rows: DataFrame, name: String, expected: Int): Int = {
-    // a bucketed table's data lives in _bucket=N/ subdirs: the top-level
-    // part-file carry below would silently drop every bucket (and the
-    // spec=None commit would lose the layout) — fail loudly instead
-    require(bucketSpec(name).isEmpty,
-      s"$name is bucketed — appendRows only supports plain tables; " +
-        "use commitBucketMerge for copy-on-write bucket appends")
-    val curDir = versionPath(name, expected)
+    val spec = atAnchor(name, expected)(bucketSpecAt(name, expected))
     val staging = newStaging(name)
     stagingWrite(staging) {
-      rows.write.mode("overwrite").parquet(staging.toString)
-      // carry the old parts AFTER the write: "overwrite" would have
-      // cleared pre-existing files from the staging dir. A concurrent
-      // writer advancing the table TWICE during our Spark write lets
-      // prune delete the expected version's dir — that is the version
-      // conflict the caller's retry loop understands, not an IO bug
-      try {
-        val stream = Files.list(curDir)
-        try stream.iterator().forEachRemaining { f =>
-          val n = f.getFileName.toString
-          if (n.startsWith("part-")) linkOrCopy(f, staging.resolve(n))
-        } finally stream.close()
-        // declared schema stays in force for the carried pre-widen files
-        val sf = curDir.resolve("_schema.json")
-        if (Files.exists(sf))
-          Files.copy(sf, staging.resolve("_schema.json"), StandardCopyOption.REPLACE_EXISTING)
-      } catch {
-        case e: java.nio.file.NoSuchFileException =>
-          throw new VersionConflictException(
-            s"table $name v$expected was pruned while this append staged " +
-              s"(concurrent writers advanced the table) — re-read and retry: $e")
+      spec match {
+        case None => rows.write.mode("overwrite").parquet(staging.toString)
+        // pinned partition count, capped below nBuckets: an append writes
+        // at most one file per touched bucket either way, and its cost is
+        // dominated by per-TASK parquet writer setup (~150 ms measured) on
+        // one end and by serialized per-FILE writer opens (~20 ms each) on
+        // the other — 1 task serializes ~nBuckets opens (measured ~1.3 s),
+        // nBuckets tasks pay nBuckets setups. 16 tasks × a few opens each
+        // is the measured sweet spot for micro-batch appends, and a bulk
+        // append still splits by bucket across those tasks. NOT an
+        // AQE-coalesced adaptive count: size-based coalescing sees "tiny"
+        // and serializes the opens.
+        case Some(b) => writeBuckets(rows.withColumn("_bucket", b.bucketColumn)
+          .repartition(math.min(b.nBuckets, 16), col("_bucket")), b, staging)
       }
+      carry(name, expected, staging)
     }
-    commitStaged(name, Some(expected), staging, None)
-  }
-
-  /** [[appendRows]] for a BUCKETED table: write ONLY `rows` (the
-    * `_bucket` layout column is computed here) as new part files inside
-    * their bucket dirs and carry every part file of the `expected`
-    * version — all buckets — into the next version as hard links (copy
-    * fallback). O(batch) data written + O(files) metadata ops, exactly
-    * [[appendRows]]'s LSM discipline with the bucket layout preserved,
-    * so keyed readers keep their directory-level pruning across appends.
-    * Per-bucket file counts grow by ~1 per append;
-    * [[graft.operators.OverlayLock.appendOrCompactBucketed]] bounds them.
-    * Returns the new version. */
-  def appendRowsBucketed(rows: DataFrame, name: String, expected: Int): Int = {
-    val spec = bucketSpec(name).getOrElse(throw new IllegalStateException(
-      s"$name is not bucketed — use appendRows for plain tables"))
-    val curDir = versionPath(name, expected)
-    val staging = newStaging(name)
-    stagingWrite(staging) {
-      // pinned partition count, capped below nBuckets: an append writes at
-      // most one file per touched bucket either way, and its cost is
-      // dominated by per-TASK parquet writer setup (~150 ms measured) on
-      // one end and by serialized per-FILE writer opens (~20 ms each) on
-      // the other — 1 task serializes ~nBuckets opens (measured ~1.3 s),
-      // nBuckets tasks pay nBuckets setups. 16 tasks × a few opens each is
-      // the measured sweet spot for micro-batch appends, and a bulk append
-      // still splits by bucket across those tasks. NOT an AQE-coalesced
-      // adaptive count: size-based coalescing sees "tiny" and serializes
-      // the opens.
-      spec.sortedForWrite(rows.withColumn("_bucket", spec.bucketColumn)
-          .repartition(math.min(spec.nBuckets, 16), col("_bucket")))
-        .write.mode("overwrite").partitionBy("_bucket").parquet(staging.toString)
-      // carry the old parts AFTER the write (the appendRows rationale:
-      // "overwrite" clears pre-existing staging files); part-file names
-      // embed the writing job's UUID, so links never collide with the
-      // batch's fresh files inside a shared _bucket=N dir
-      try {
-        linkTree(curDir, staging)
-        val sf = curDir.resolve("_schema.json")
-        if (Files.exists(sf))
-          Files.copy(sf, staging.resolve("_schema.json"), StandardCopyOption.REPLACE_EXISTING)
-      } catch {
-        case e: java.nio.file.NoSuchFileException =>
-          throw new VersionConflictException(
-            s"table $name v$expected was pruned while this append staged " +
-              s"(concurrent writers advanced the table) — re-read and retry: $e")
-      }
-    }
-    commitStaged(name, Some(expected), staging, Some(spec))
+    commitStaged(name, Some(expected), staging, spec)
   }
 
   /** Commit a DRIVER-written single file as the table's next version —
@@ -487,9 +459,8 @@ class TableStore(val root: String) {
       df: DataFrame, name: String, spec: BucketSpec, expected: Option[Int]): Int = {
     val staging = newStaging(name)
     stagingWrite(staging) {
-      spec.sortedForWrite(df.withColumn("_bucket", spec.bucketColumn)
-          .repartition(spec.nBuckets, col("_bucket")))
-        .write.mode("overwrite").partitionBy("_bucket").parquet(staging.toString)
+      writeBuckets(df.withColumn("_bucket", spec.bucketColumn)
+        .repartition(spec.nBuckets, col("_bucket")), spec, staging)
     }
     commitStaged(name, expected, staging, Some(spec))
   }
@@ -513,23 +484,17 @@ class TableStore(val root: String) {
     * scale this step is the manifest-level file reuse every table format
     * does; on a local/HDFS store links give the same O(files) cost.
     *
-    * `filesPerBucket` is the write-parallelism knob: 1 (default) writes one
-    * file per touched bucket — right at test scale; at cluster scale a
-    * touched bucket can be ~10 GB, so callers raise it to split each
-    * bucket's write across that many tasks (sub-splitting by PK hash).
-    * File counts then grow per merge — [[compact]] bounds them. */
-  def commitBucketMerge(
-      rewritten: DataFrame,
-      name: String,
-      touched: Set[Int],
-      filesPerBucket: Int = 1): Int =
-    commitBucketMerge(rewritten, name, touched, filesPerBucket, requireVersion(name))
-
-  /** As above with an explicit CAS anchor: `expected` is the version the
-    * caller's `rewritten` rows were derived from ([[snapshot]]) — both the
-    * carried-bucket link source and the commit's compare-and-swap use it,
-    * so a concurrent commit between the caller's read and this write
-    * conflicts instead of being silently merged over. */
+    * `expected` is the version the caller's `rewritten` rows were derived
+    * from ([[snapshot]]): the carried-bucket link source, the layout and
+    * the commit's compare-and-swap all use it, so a concurrent commit
+    * between the caller's read and this write conflicts instead of being
+    * silently merged over.
+    *
+    * `filesPerBucket` is the write-parallelism knob: 1 writes one file per
+    * touched bucket — right at test scale; at cluster scale a touched
+    * bucket can be ~10 GB, so callers raise it to split each bucket's
+    * write across that many tasks (sub-splitting by PK hash). File counts
+    * then grow per merge — [[compact]] bounds them. */
   def commitBucketMerge(
       rewritten: DataFrame,
       name: String,
@@ -537,10 +502,8 @@ class TableStore(val root: String) {
       filesPerBucket: Int,
       expected: Int): Int = {
     require(filesPerBucket >= 1, "filesPerBucket must be >= 1")
-    val spec = bucketSpec(name).getOrElse(
-      throw new IllegalStateException(s"$name is not bucketed"))
-    val cur = expected
-    val curDir = tableDir(name).resolve(s"v$cur")
+    val spec = atAnchor(name, expected)(bucketSpecAt(name, expected)).getOrElse(
+      throw new IllegalStateException(s"$name v$expected is not bucketed"))
     val dest = newStaging(name)
     val distributed =
       if (filesPerBucket == 1)
@@ -552,108 +515,55 @@ class TableStore(val root: String) {
         rewritten.repartition(math.max(1, touched.size) * filesPerBucket,
           col("_bucket"), pmod(xxhash64(spec.pks.map(col): _*), lit(filesPerBucket.toLong)))
     stagingWrite(dest) {
-      spec.sortedForWrite(distributed)
-        .write.mode("overwrite").partitionBy("_bucket").parquet(dest.toString)
-      (0 until spec.nBuckets).filterNot(touched).foreach { b =>
-        val src = curDir.resolve(s"_bucket=$b")
-        if (Files.isDirectory(src)) {
-          val dst = dest.resolve(s"_bucket=$b")
-          Files.createDirectories(dst)
-          val stream = Files.list(src)
-          try stream.iterator().forEachRemaining { f =>
-            if (f.getFileName.toString.startsWith("part-")) linkOrCopy(f, dst.resolve(f.getFileName))
-          } finally stream.close()
-        }
-      }
-      // carry a declared schema forward: linked pre-widen buckets still lack
-      // the widened columns, so the read-time null fill must stay in force
-      val sf = curDir.resolve("_schema.json")
-      if (Files.exists(sf))
-        Files.copy(sf, dest.resolve("_schema.json"), StandardCopyOption.REPLACE_EXISTING)
+      writeBuckets(distributed, spec, dest)
+      carry(name, expected, dest, skip = touched)
     }
-    commitStaged(name, Some(cur), dest, Some(spec))
+    commitStaged(name, Some(expected), dest, Some(spec))
   }
 
-  /** Part-file count of the current version of a PLAIN (unbucketed)
-    * table — the health metric [[compactPlain]] reads. Pure file-metadata
-    * op, O(files). */
-  def fileCount(name: String): Int = {
-    val verDir = Paths.get(path(name))
-    val stream = Files.list(verDir)
-    try {
-      var n = 0
-      stream.iterator().forEachRemaining(f =>
-        if (f.getFileName.toString.startsWith("part-")) n += 1)
-      n
-    } finally stream.close()
-  }
-
-  /** Total part-file bytes of a SPECIFIC committed version (top-level and
-    * `_bucket=N` files) — the size probe overlay-compaction policies read.
-    * Pure file-metadata op, O(files); never opens a parquet footer. */
-  def byteSizeAt(name: String, version: Int): Long = {
-    def walk(dir: Path): Long = {
-      if (!Files.isDirectory(dir)) return 0L
+  /** Version `v`'s part files, each with its bucket (None for a top-level
+    * file) — the one listing behind the file counts, the size probe and
+    * the linked carry. Empty when the version dir does not exist. Pure
+    * file-metadata op, O(files); never opens a parquet footer. */
+  private[graft] def partFiles(name: String, v: Int): Seq[(Option[Int], Path)] = {
+    def list(dir: Path): Seq[Path] = {
       val stream = Files.list(dir)
-      try {
-        var total = 0L
-        stream.iterator().forEachRemaining { f =>
-          val n = f.getFileName.toString
-          if (Files.isDirectory(f)) { if (n.startsWith("_bucket=")) total += walk(f) }
-          else if (n.startsWith("part-")) total += Files.size(f)
-        }
-        total
-      } finally stream.close()
+      try stream.iterator().asScala.toVector finally stream.close()
     }
-    walk(versionPath(name, version))
+    val dir = versionPath(name, v)
+    if (!Files.isDirectory(dir)) Nil
+    else list(dir).flatMap { f =>
+      val n = f.getFileName.toString
+      if (Files.isDirectory(f)) {
+        if (!n.startsWith("_bucket=")) Nil
+        else {
+          val b = Some(n.stripPrefix("_bucket=").toInt)
+          list(f).filter(_.getFileName.toString.startsWith("part-")).map(b -> _)
+        }
+      } else if (n.startsWith("part-")) Seq(None -> f)
+      else Nil
+    }
   }
 
-  /** Compaction for PLAIN tables — the sibling of [[compact]] for tables
-    * maintained by whole-version rewrites (e.g. a signature index under a
-    * per-micro-batch append cadence, where each union write inherits the
-    * previous version's scan partitions and file counts creep upward):
-    * when the current version holds more than `maxFiles` part files,
-    * rewrite the same rows into `targetFiles` files as a CAS-protected
-    * next version. The check is a directory listing — cheap enough to run
-    * after every append — and a concurrent writer beats the compaction at
-    * the CAS rather than losing rows to it.
-    *
-    * @return the new version, or None when already within the bound */
-  def compactPlain(
-      spark: SparkSession,
-      name: String,
-      maxFiles: Int = 64,
-      targetFiles: Int = 8): Option[Int] = {
-    require(bucketSpec(name).isEmpty,
-      s"$name is bucketed — use compact(), which preserves the layout")
-    require(targetFiles >= 1 && maxFiles >= targetFiles,
-      s"need maxFiles >= targetFiles >= 1, got $maxFiles/$targetFiles")
-    if (fileCount(name) <= maxFiles) None
-    else {
-      val (df, readVersion) = snapshot(spark, name)
-      Some(write(df.repartition(targetFiles), name, Some(readVersion)))
-    }
-  }
+  /** Part-file count of the current version. */
+  def fileCount(name: String): Int = partFiles(name, requireVersion(name)).size
+
+  /** Total part-file bytes of a SPECIFIC committed version — the size
+    * probe overlay-compaction policies read. */
+  def byteSizeAt(name: String, version: Int): Long =
+    partFiles(name, version).map(f => Files.size(f._2)).sum
 
   /** Per-bucket part-file counts of the current version — the health
-    * metric compaction decisions read. Pure file-metadata op, O(files). */
-  def bucketFileCounts(name: String): Map[Int, Int] = {
-    val spec = bucketSpec(name).getOrElse(
-      throw new IllegalStateException(s"$name is not bucketed"))
-    val verDir = Paths.get(path(name))
-    (0 until spec.nBuckets).flatMap { b =>
-      val dir = verDir.resolve(s"_bucket=$b")
-      if (!Files.isDirectory(dir)) None
-      else {
-        val stream = Files.list(dir)
-        try Some(b -> {
-          var n = 0
-          stream.iterator().forEachRemaining(f =>
-            if (f.getFileName.toString.startsWith("part-")) n += 1)
-          n
-        }) finally stream.close()
-      }
-    }.toMap
+    * metric compaction decisions read. */
+  def bucketFileCounts(name: String): Map[Int, Int] =
+    bucketFileCountsAt(name, requireVersion(name))
+
+  /** [[bucketFileCounts]] of a SPECIFIC version; throws for a plain one. */
+  private[graft] def bucketFileCountsAt(name: String, v: Int): Map[Int, Int] = {
+    if (bucketSpecAt(name, v).isEmpty)
+      throw new IllegalStateException(s"$name v$v is not bucketed")
+    partFiles(name, v).collect { case (Some(b), _) => b }
+      .groupMapReduce(identity)(_ => 1)(_ + _)
   }
 
   /** Compaction — the maintenance operator every copy-on-write layout needs
@@ -672,16 +582,16 @@ class TableStore(val root: String) {
       spark: SparkSession,
       name: String,
       maxFilesPerBucket: Int = 8): Option[Int] = {
-    val oversized = bucketFileCounts(name).filter(_._2 > maxFilesPerBucket).keySet
+    // the counts, the rows and the CAS anchor all come from one resolved
+    // version (compact racing a merge must lose, not clobber)
+    val v = requireVersion(name)
+    val oversized = bucketFileCountsAt(name, v).filter(_._2 > maxFilesPerBucket).keySet
     if (oversized.isEmpty) None
     else {
-      // dir-level pruning: only oversized buckets are opened and rewritten;
-      // snapshot so the commit CASes against the version the counts and
-      // rows came from (compact racing a merge must lose, not clobber)
-      val (raw, readVersion) = snapshotRaw(spark, name)
-      val rows = raw
+      // dir-level pruning: only oversized buckets are opened and rewritten
+      val rows = snapshotRawAt(spark, name, v)
         .filter(col("_bucket").isin(oversized.toSeq.map(Integer.valueOf): _*))
-      Some(commitBucketMerge(rows, name, oversized, 1, readVersion))
+      Some(commitBucketMerge(rows, name, oversized, 1, v))
     }
   }
 

@@ -28,7 +28,7 @@ import graft.operators.{CacheScope, Dedup, DrainConf, SignatureIndex, TableStore
   *
   * Small-file accumulation is bounded INSIDE the append path: every tier
   * of the index is hash-bucketed, and [[graft.operators.OverlayLock
-  * .appendOrCompactBucketed]] folds a bucket-granular compaction into any
+  * .appendOrCompact]] folds a bucket-granular compaction into any
   * drain whose touched buckets have crept past the per-bucket bound — no
   * separate maintenance call in the loop.
   */

@@ -97,7 +97,7 @@ class AdmissionStreamSpec extends SparkSpec {
 
     // distinct vocabulary per doc → everything is admitted, every batch
     // link-appends into each tier's touched buckets; the fold-in bucket
-    // compaction (OverlayLock.appendOrCompactBucketed) must keep the
+    // compaction (OverlayLock.appendOrCompact) must keep the
     // per-bucket file counts flat — 20 one-pair drains would otherwise
     // average 20*32/64 = 10 files per pos-tier bucket vs the bound of 8
     def novelDoc(i: Long) = Doc(100L + i,

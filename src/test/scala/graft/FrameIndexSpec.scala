@@ -117,18 +117,6 @@ class FrameIndexSpec extends SparkSpec {
     } finally scope.release()
   }
 
-  /** Fails the NEXT commit of one named table — the crash window between
-    * the member commit and the manifest swap. */
-  private class CrashStore(root: String) extends TableStore(root) {
-    @volatile var failTable: Option[String] = None
-    override def appendRows(rows: org.apache.spark.sql.DataFrame,
-        name: String, expected: Int): Int = {
-      if (failTable.contains(name))
-        throw new RuntimeException(s"injected crash on $name commit")
-      super.appendRows(rows, name, expected)
-    }
-  }
-
   test("admission gate: replay refused; crash mid-fold invisible; redelivery folds once") {
     val store = new CrashStore(tmpDir("frame-adm"))
     FrameIndex.build(stored(10), maxHamming = 6, minContainment = 0.99,

@@ -60,25 +60,8 @@ class IvfAdmissionSpec extends SparkSpec {
     assert(served(store).length === 290)
   }
 
-  /** A store that fails the NEXT commit of one named table — the crash
-    * window between the family's member commits. */
-  private class TierCrashStore(root: String) extends TableStore(root) {
-    @volatile var failTable: Option[String] = None
-    private def check(name: String): Unit =
-      if (failTable.contains(name))
-        throw new RuntimeException(s"injected crash on $name commit")
-    override def write(df: org.apache.spark.sql.DataFrame, name: String,
-        expected: Option[Int]): Int = {
-      check(name); super.write(df, name, expected)
-    }
-    override def appendRows(rows: org.apache.spark.sql.DataFrame,
-        name: String, expected: Int): Int = {
-      check(name); super.appendRows(rows, name, expected)
-    }
-  }
-
   test("crash mid-admission is invisible; the redelivered batch folds exactly once") {
-    val store = new TierCrashStore(tmpDir("ivfadm-crash"))
+    val store = new CrashStore(tmpDir("ivfadm-crash"))
     buildSeed(store)
     IvfIndex.quantizeStored(spark, store, "emb")
     assert(IvfIndex.admitBatch(spark, df(201 to 230), 0L,

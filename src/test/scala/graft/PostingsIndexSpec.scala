@@ -179,34 +179,6 @@ class PostingsIndexSpec extends SparkSpec {
       "crash + redelivery must be bit-equal to a clean admission chain")
   }
 
-  private class CrashStore(root: String) extends TableStore(root) {
-    @volatile var failTable: Option[String] = None
-    private def check(name: String): Unit =
-      if (failTable.contains(name))
-        throw new RuntimeException(s"injected crash on $name commit")
-    override def write(df: org.apache.spark.sql.DataFrame, name: String,
-        expected: Option[Int]): Int = {
-      check(name); super.write(df, name, expected)
-    }
-    override def appendRows(rows: org.apache.spark.sql.DataFrame,
-        name: String, expected: Int): Int = {
-      check(name); super.appendRows(rows, name, expected)
-    }
-    override def appendRowsBucketed(rows: org.apache.spark.sql.DataFrame,
-        name: String, expected: Int): Int = {
-      check(name); super.appendRowsBucketed(rows, name, expected)
-    }
-    override def writeBucketed(df: org.apache.spark.sql.DataFrame, name: String,
-        spec: graft.operators.BucketSpec, expected: Option[Int]): Int = {
-      check(name); super.writeBucketed(df, name, spec, expected)
-    }
-    override def commitBucketMerge(rewritten: org.apache.spark.sql.DataFrame,
-        name: String, touched: Set[Int], filesPerBucket: Int, expected: Int): Int = {
-      check(name)
-      super.commitBucketMerge(rewritten, name, touched, filesPerBucket, expected)
-    }
-  }
-
   test("streamed admission over any micro-batch split equals batch appends") {
     val s = spark; import s.implicits._
     implicit val sq = spark.sqlContext

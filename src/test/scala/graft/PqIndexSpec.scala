@@ -140,25 +140,8 @@ class PqIndexSpec extends SparkSpec {
     scope.release()
   }
 
-  /** A store that fails the NEXT commit of one named table — the crash
-    * window between the index's per-tier commits. */
-  private class TierCrashStore(root: String) extends TableStore(root) {
-    @volatile var failTable: Option[String] = None
-    private def check(name: String): Unit =
-      if (failTable.contains(name))
-        throw new RuntimeException(s"injected crash on $name commit")
-    override def write(df: org.apache.spark.sql.DataFrame, name: String,
-        expected: Option[Int]): Int = {
-      check(name); super.write(df, name, expected)
-    }
-    override def appendRows(rows: org.apache.spark.sql.DataFrame,
-        name: String, expected: Int): Int = {
-      check(name); super.appendRows(rows, name, expected)
-    }
-  }
-
   test("a crashed multi-tier append is invisible; retry folds it exactly once") {
-    val store = new TierCrashStore(tmpDir("pqidx-crash"))
+    val store = new CrashStore(tmpDir("pqidx-crash"))
     buildPq(store)
     IvfIndex.quantizeStored(spark, store, "emb") // int8 sibling present too
     val fresh = corpus(3, offset = 60000L)
@@ -195,7 +178,7 @@ class PqIndexSpec extends SparkSpec {
   test("a crashed rebalance leaves the OLD family serving coherently; retry converges") {
     implicit val scope: CacheScope = new CacheScope
     val s = spark; import s.implicits._
-    val store = new TierCrashStore(tmpDir("pqidx-rbcrash"))
+    val store = new CrashStore(tmpDir("pqidx-rbcrash"))
     // the drift fixture from the rebalance test: x-cluster corpus + a
     // y-direction batch pushes the 2-cell model past the skew bound
     val xCorpus = (1 to 10).map(i =>

@@ -89,7 +89,7 @@ class RebucketSpec extends SparkSpec {
 
   test("an APPEND-ONLY bucketed tier also grows past the per-bucket target") {
     // the docs tier of a postings index mutates only through
-    // OverlayLock.appendOrCompactBucketed — it never rides an amortized
+    // OverlayLock.appendOrCompact — it never rides an amortized
     // fold, so growth must hook the append path itself or per-bucket
     // bytes grow without bound on a pure-append corpus
     val s = spark; import s.implicits._

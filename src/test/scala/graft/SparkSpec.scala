@@ -34,3 +34,17 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (a, sc.statusTracker.getJobIdsForGroup(group).length)
   }
 }
+
+/** A store that fails every commit of one named table while `failTable`
+  * names it — the crash window between an overlay's member commits and
+  * its manifest swap. It throws from [[graft.operators.TableStore.newStaging]],
+  * which every commit path calls before it writes, so each commit of the
+  * table fails the same way whichever write, append or merge it is. */
+class CrashStore(root: String) extends graft.operators.TableStore(root) {
+  @volatile var failTable: Option[String] = None
+  override private[graft] def newStaging(name: String): java.nio.file.Path = {
+    if (failTable.contains(name))
+      throw new RuntimeException(s"injected crash on $name commit")
+    super.newStaging(name)
+  }
+}

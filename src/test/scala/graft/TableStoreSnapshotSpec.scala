@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import graft.operators.{BucketSpec, IndexTier, OverlayLock, TableStore, VersionConflictException}
@@ -203,25 +204,42 @@ class TableStoreSnapshotSpec extends SparkSpec {
   // ---- appendRows: the O(batch) linked commit (r12) ----
 
   test("appendRows writes only the batch; stored files carry as links; CAS holds") {
-    val root = tmpDir("tstore-append")
-    val store = new TableStore(root)
-    val v1 = store.write((1 to 100).map(i => (i, s"p$i")).toDF("id", "payload"), "t")
-    val v2 = store.appendRows(
-      (101 to 120).map(i => (i, s"p$i")).toDF("id", "payload"), "t", v1)
-    assert(v2 === v1 + 1)
-    val read = store.read(spark, "t")
-    assert(read.count() === 120)
-    assert(read.select("id").distinct().count() === 120,
-      "linked old parts + new parts must union without duplication")
-    // stale CAS anchor: a concurrent writer moved the table first
-    intercept[VersionConflictException] {
-      store.appendRows(oneRow("x"), "t", v1)
+    def rowsOf(ids: Range) = ids.map(i => (i, s"p$i")).toDF("id", "payload")
+    // one linked append serves both layouts: the pinned version's own
+    for (spec <- Seq(None, Some(BucketSpec(4, Seq("id"))))) {
+      val store = new TableStore(tmpDir("tstore-append"))
+      val v1 = spec.fold(store.write(rowsOf(1 to 100), "t"))(
+        store.writeBucketed(rowsOf(1 to 100), "t", _))
+      val v2 = store.appendRows(rowsOf(101 to 120), "t", v1)
+      assert(v2 === v1 + 1)
+      assert(store.bucketSpecAt("t", v2) === spec, "the append keeps the pinned layout")
+      // part files by (bucket, name) -> the inode they link to
+      def fileKeys(v: Int) = store.partFiles("t", v).map { case (b, f) =>
+        (b, f.getFileName.toString) ->
+          Files.readAttributes(f, classOf[BasicFileAttributes]).fileKey()
+      }.toMap
+      val (old, next) = (fileKeys(v1), fileKeys(v2))
+      assert(old.forall { case (k, key) => next.get(k).contains(key) },
+        s"every part file of v$v1 must carry into v$v2 as a link ($spec)")
+      val written = store.partFiles("t", v2).filterNot { case (b, f) =>
+        old.contains((b, f.getFileName.toString))
+      }.map(_._2.toString)
+      assert(spark.read.parquet(written: _*).count() === 20,
+        "the new part files hold the batch and nothing else")
+      val read = store.read(spark, "t")
+      assert(read.count() === 120)
+      assert(read.select("id").distinct().count() === 120,
+        "linked old parts + new parts must union without duplication")
+      // stale CAS anchor: a concurrent writer moved the table first
+      intercept[VersionConflictException] {
+        store.appendRows(oneRow("x"), "t", v1)
+      }
+      // an EMPTY append still commits a valid, complete next version
+      val v3 = store.appendRows(
+        Seq.empty[(Int, String)].toDF("id", "payload"), "t", v2)
+      assert(store.read(spark, "t").count() === 120)
+      assert(v3 === v2 + 1)
     }
-    // an EMPTY append still commits a valid, complete next version
-    val v3 = store.appendRows(
-      Seq.empty[(Int, String)].toDF("id", "payload"), "t", v2)
-    assert(store.read(spark, "t").count() === 120)
-    assert(v3 === v2 + 1)
   }
 
   test("appendOrCompact folds a compacting rewrite in once file counts creep") {
@@ -231,10 +249,9 @@ class TableStoreSnapshotSpec extends SparkSpec {
     // repeated O(batch) appends grow the part-file count monotonically...
     for (i <- 1 to 6) {
       val fresh = Seq((100 + i, s"f$i")).toDF("id", "payload").repartition(2)
-      val (stored, cur) = store.snapshot(spark, "t")
-      assert(cur === v)
+      assert(store.currentVersion("t") === Some(v))
       v = graft.operators.OverlayLock.appendOrCompact(
-        store, "t", v, stored, fresh, maxFiles = 8, targetFiles = 2)
+        spark, store, "t", v, fresh, maxFiles = 8, targetFiles = 2)
     }
     // ...until the bound trips and one append rewrites to targetFiles
     assert(store.fileCount("t") <= 8 + 2,

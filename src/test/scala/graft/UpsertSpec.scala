@@ -127,23 +127,6 @@ class UpsertSpec extends SparkSpec {
     assert(newV !== oldV, "after the swap the NEW vector serves")
   }
 
-  /** Fails the NEXT commit of one named table — the crash window between
-    * member commits. */
-  private class CrashStore(root: String) extends TableStore(root) {
-    @volatile var failTable: Option[String] = None
-    private def check(name: String): Unit =
-      if (failTable.contains(name))
-        throw new RuntimeException(s"injected crash on $name commit")
-    override def write(df: org.apache.spark.sql.DataFrame, name: String,
-        expected: Option[Int]): Int = {
-      check(name); super.write(df, name, expected)
-    }
-    override def appendRows(rows: org.apache.spark.sql.DataFrame,
-        name: String, expected: Int): Int = {
-      check(name); super.appendRows(rows, name, expected)
-    }
-  }
-
   test("IVF crash mid-upsert is invisible; the retry lands bit-equal to a clean run") {
     val store = new CrashStore(tmpDir("ups-ivf-crash"))
     buildIvf(store)
