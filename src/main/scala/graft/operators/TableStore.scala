@@ -523,16 +523,15 @@ class TableStore(val root: String) {
 
   /** Version `v`'s part files, each with its bucket (None for a top-level
     * file) — the one listing behind the file counts, the size probe and
-    * the linked carry. Empty when the version dir does not exist. Pure
+    * the linked carry. Throws `NoSuchFileException` when the version dir
+    * is gone, which the carry turns into a version conflict. Pure
     * file-metadata op, O(files); never opens a parquet footer. */
   private[graft] def partFiles(name: String, v: Int): Seq[(Option[Int], Path)] = {
     def list(dir: Path): Seq[Path] = {
       val stream = Files.list(dir)
       try stream.iterator().asScala.toVector finally stream.close()
     }
-    val dir = versionPath(name, v)
-    if (!Files.isDirectory(dir)) Nil
-    else list(dir).flatMap { f =>
+    list(versionPath(name, v)).flatMap { f =>
       val n = f.getFileName.toString
       if (Files.isDirectory(f)) {
         if (!n.startsWith("_bucket=")) Nil
@@ -549,9 +548,11 @@ class TableStore(val root: String) {
   def fileCount(name: String): Int = partFiles(name, requireVersion(name)).size
 
   /** Total part-file bytes of a SPECIFIC committed version — the size
-    * probe overlay-compaction policies read. */
+    * probe overlay-compaction policies read; 0 for a version that does
+    * not exist. */
   def byteSizeAt(name: String, version: Int): Long =
-    partFiles(name, version).map(f => Files.size(f._2)).sum
+    if (!hasVersion(name, version)) 0L
+    else partFiles(name, version).map(f => Files.size(f._2)).sum
 
   /** Per-bucket part-file counts of the current version — the health
     * metric compaction decisions read. */
